@@ -1611,8 +1611,8 @@ FROM part GROUP BY p_brand
 
 
 def q_part_price_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X1: per-row outlier label vs per-brand median (groupBy median +
-    broadcast join-back)."""
+    """X1: per-row outlier label vs per-brand median (window median, no
+    join back)."""
     tune(spark)
     p = _t(spark, sf_dir, "part")
     out = outliers.mark_outliers(p, ["p_brand"], "p_retailprice", lo=0.8, hi=1.2)

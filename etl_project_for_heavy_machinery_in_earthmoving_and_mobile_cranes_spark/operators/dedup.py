@@ -452,8 +452,10 @@ def ngram_jaccard_pairs(
     min_jaccard: float = 0.0,
     max_df: int | None = None,
 ) -> DataFrame:
-    """Exact Jaccard over word-n-gram shingle sets, computed only for
-    pairs sharing ≥1 shingle (inverted-index join — never all-pairs).
+    """Jaccard on xxhash64 shingle keys (a 64-bit collision can inflate it).
+
+    Over word-n-gram shingle sets, only for pairs sharing ≥1 shingle
+    (inverted-index join — never all-pairs).
     Returns ``id_a < id_b, jaccard``.
 
     ``max_df`` caps the inverted-index fan-out: a shingle present in
@@ -519,7 +521,9 @@ def containment_pairs(
     min_containment: float = 0.0,
     max_df: int | None = None,
 ) -> DataFrame:
-    """Asymmetric n-gram set containment (Broder, "On the resemblance
+    """Containment on xxhash64 shingle keys (a 64-bit collision can inflate it).
+
+    Asymmetric n-gram set containment (Broder, "On the resemblance
     and containment of documents"): for each unordered pair sharing
     ≥1 discriminative shingle,
 
@@ -596,7 +600,9 @@ def exact_jaccard_of_pairs(
     text_col: str,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """Exact word-n-gram Jaccard computed ONLY for the given candidate
+    """Jaccard on xxhash64 shingle keys (a 64-bit collision can inflate it).
+
+    Word-n-gram Jaccard computed ONLY for the given candidate
     ``(id_a, id_b)`` pairs — the verify stage of LSH candidate→verify
     dedup.  Shingle rows are first semi-joined down to ids that appear
     in any pair (the candidate set is tiny next to the corpus), the

@@ -17,6 +17,10 @@ predicate to a hash join on exploded tokens with identical semantics.
 Priority columns are materialized in the dims at load time (ref_idx,
 kb_order, length(model)) because tie-breaks must be deterministic under
 Spark's unordered execution (SURVEY §7.3).
+
+The customs pipeline (``plans/pipeline.py``) does not join: it carries
+each KB as one broadcast row of structs sorted by the same priority and
+takes each row's first hit, so its plan never joins back onto itself.
 """
 
 from __future__ import annotations
@@ -47,13 +51,6 @@ def _pick_winner(
         .agg(F.min_by(F.struct(*[F.col(c) for c in others]), key).alias("__w"))
         .select(fact_id, "__w.*")
     )
-
-
-def pick_winner(
-    matched: DataFrame, fact_id: str, priority: Sequence[Column]
-) -> DataFrame:
-    """Public alias for the deterministic winner selection (W2)."""
-    return _pick_winner(matched, fact_id, priority)
 
 
 def containment_lookup(

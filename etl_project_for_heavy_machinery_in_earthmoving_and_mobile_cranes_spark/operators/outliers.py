@@ -1,8 +1,8 @@
 """X1 — price-outlier marking vs per-group median (prog.py:287-316).
 
-Spark shape: groupBy median → broadcast join-back on the group keys →
-one ``when`` cascade.  The median groupBy is the only shuffle; with AQE
-the join-back of the (small) medians table broadcasts automatically.
+Spark shape of ``mark_outliers``: a window median over the group keys
+→ one ``when`` cascade.  The window's exchange on the keys is the only
+shuffle; there is no join back.
 
 The reference's term-variant has asymmetric bounds (prog.py:303 filters
 by term for the upper bound but not the lower) — documented intent
@@ -12,6 +12,7 @@ by term for the upper bound but not the lower) — documented intent
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -35,9 +36,14 @@ def mark_outliers(
     lowercase 'unknown' for this column (unlike the 'UNKNOWN' sentinel
     of brand/model/type), so the compat pipeline overrides the default.
     """
-    med = df.groupBy(*keys).agg(F.median(F.col(value_col)).alias("__med"))
-    out = df.join(F.broadcast(med), on=list(keys), how="left")
     v = F.col(value_col)
+    # a row with a NULL key has no group median (equi-key semantics: NULL
+    # matches nothing), so it is judged unknown
+    keyed = reduce(lambda a, b: a & b, [F.col(k).isNotNull() for k in keys])
+    med = F.when(keyed, F.median(v).over(Window.partitionBy(*keys)))
+    # output columns: the keys first, then the rest in input order
+    out = df.select(*keys, *[c for c in df.columns if c not in keys])
+    out = out.withColumn("__med", med)
     verdict = (
         F.when(F.col("__med").isNull() | v.isNull(), unknown_label)
         .when((v >= hi * F.col("__med")) | (v <= lo * F.col("__med")), "yes")

@@ -3,13 +3,15 @@
 Reference: ``mark_unknown_model_with_exsisted_lifting_capacity``
 (prog.py:255-276) — rows with known brand+type+capacity but unknown model
 adopt the model of another row of the same brand/type whose capacity is
-within ±5%.
+within ±5%.  ``infer_unknown_models`` does this within one table as a
+window over (brand, type), with no join.
 
-Spark shape: equi join on (brand, type) with the band as a residual
-range predicate.  For skewed/huge sides, ``bucketed=True`` adds a
-log-scale bucket equi-key (each left row probes its bucket ±1), turning
-the range predicate into a hash join — the standard trick when the
-band join's equi prefix alone is not selective enough at scale.
+Spark shape of ``band_join`` (two tables): equi join on the keys with
+the band as a residual range predicate.  For skewed/huge sides,
+``bucketed=True`` adds a log-scale bucket equi-key (each left row
+probes its bucket ±1), turning the range predicate into a hash join —
+the standard trick when the band join's equi prefix alone is not
+selective enough at scale.
 """
 
 from __future__ import annotations
@@ -108,7 +110,6 @@ def band_join(
 
 def infer_unknown_models(
     df: DataFrame,
-    id_col: str = "shipment_id",
     brand: str = "brand",
     type_col: str = "type",
     model: str = "model",
@@ -118,50 +119,27 @@ def infer_unknown_models(
     """J5 end-to-end: fill NULL models from same-brand/type rows with a
     capacity within ±tol.  Winner = smallest |capacity delta|, then model
     asc (deterministic; reference takes first-iterated row).
-    """
-    known = (
-        df.filter(F.col(model).isNotNull() & F.col(capacity).isNotNull())
-        .select(
-            F.col(brand).alias("k_brand"),
-            F.col(type_col).alias("k_type"),
-            F.col(model).alias("k_model"),
-            F.col(capacity).alias("k_capacity"),
-        )
-        .dropDuplicates(["k_brand", "k_type", "k_model", "k_capacity"])
-    )
-    unknown = df.filter(
-        F.col(model).isNull()
-        & F.col(brand).isNotNull()
-        & F.col(type_col).isNotNull()
-        & F.col(capacity).isNotNull()
-    ).select(id_col, brand, type_col, capacity)
 
-    cand = unknown.join(
-        F.broadcast(known),
-        on=(
-            (F.col(brand) == F.col("k_brand"))
-            & (F.col(type_col) == F.col("k_type"))
-            & F.col("k_capacity").between(
-                F.col(capacity) * (1 - tol), F.col(capacity) * (1 + tol)
-            )
-        ),
-        how="inner",
+    Shape: one window over (brand, type) collects the group's distinct
+    known (capacity, model) pairs; each inferable row filters them to
+    its band and takes the minimum (|delta|, model).  The window's
+    exchange is the only shuffle — no self-join, no join back.
+    """
+    cap, mdl = F.col(capacity), F.col(model)
+    known = F.collect_set(
+        F.when(mdl.isNotNull() & cap.isNotNull(), F.struct(cap.alias("c"), mdl.alias("m")))
+    ).over(Window.partitionBy(brand, type_col))
+    in_band = F.filter(known, lambda k: k["c"].between(cap * (1 - tol), cap * (1 + tol)))
+    best = F.array_min(
+        F.transform(in_band, lambda k: F.struct(F.abs(k["c"] - cap).alias("d"), k["m"].alias("m")))
+    )["m"]
+    inferable = (
+        mdl.isNull() & F.col(brand).isNotNull() & F.col(type_col).isNotNull() & cap.isNotNull()
     )
-    w = Window.partitionBy(id_col).orderBy(
-        F.abs(F.col("k_capacity") - F.col(capacity)), F.col("k_model")
-    )
-    winners = (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter("__rn = 1")
-        .select(F.col(id_col), F.col("k_model").alias("__inferred_model"))
-    )
-    out = df.join(winners, on=id_col, how="left")
     return (
-        out.withColumn(
-            "__model_inferred",
-            F.col(model).isNull() & F.col("__inferred_model").isNotNull(),
-        )
-        .withColumn(model, F.coalesce(F.col(model), F.col("__inferred_model")))
+        df.withColumn("__inferred_model", F.when(inferable, best))
+        .withColumn("__model_inferred", mdl.isNull() & F.col("__inferred_model").isNotNull())
+        .withColumn(model, F.coalesce(mdl, F.col("__inferred_model")))
         .drop("__inferred_model")
     )
 

@@ -266,11 +266,12 @@ def ann_union_knn(
     ``near_dup_pairs_bucketed``): candidate rows carry ONLY the two ids
     through the union and the per-(query, neighbor) dedup exchange
     (16-byte rows), and the vectors + hoisted norms are re-attached
-    AFTERWARDS by id-keyed broadcast joins for the one exact scoring
-    pass per distinct candidate.  Previously both 64-dim vectors rode
-    the dedup exchange (~70× wider rows at candidate-mass count).  At
-    100 TB the fetch joins become shuffle hash joins on the id — the
-    candidate list stays the only candidate-mass exchange either way."""
+    AFTERWARDS by id-keyed joins for the one exact scoring pass per
+    distinct candidate.  Previously both 64-dim vectors rode the dedup
+    exchange (~70× wider rows at candidate-mass count).  The fetch joins
+    carry no broadcast hint (a hint is honoured whatever the size): the
+    planner and AQE broadcast the vector frames while they fit under the
+    broadcast threshold and shuffle-join them on the id past it."""
     if centroids is None:
         centroids = det_centroids(ivf_seed, n_cells, dim)
     planes = [_det_plane(seed, i, dim) for i in range(num_planes)]
@@ -297,7 +298,7 @@ def ann_union_knn(
         "query_id", "neighbor_id"
     )
     # per-vector norms hoisted into the fetch frames (computed once per
-    # vector at broadcast build) — bit-identical scoring, guide §1.2
+    # vector, not per candidate) — bit-identical scoring, guide §1.2
     cv = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cv"),
@@ -312,8 +313,8 @@ def ann_union_knn(
         srp_cand.unionByName(ivf_cand)
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
-        .join(F.broadcast(qv), "query_id")
-        .join(F.broadcast(cv), "neighbor_id")
+        .join(qv, "query_id")
+        .join(cv, "neighbor_id")
         .select(
             "query_id",
             "neighbor_id",

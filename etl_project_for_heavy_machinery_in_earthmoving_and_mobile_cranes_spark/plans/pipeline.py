@@ -9,13 +9,19 @@ conversion → model de-spacing.
 Internal representation uses typed NULLs (never 'UNKNOWN' sentinels);
 ``render_export`` writes sentinels at the boundary (SURVEY §1.4).
 
-Scale notes: the dims (model_ref, regex_kb, fx) broadcast; the fact
-table is never shuffled except (a) winner-selection over *matched* rows
-keyed by shipment_id and (b) the outlier median groupBy — both AQE-
-coalesced.  No Python UDFs anywhere.
+Plan shape: one linear chain; no stage joins back onto the fact table.
+Each KB (model_ref, regex_kb) is aggregated once into a one-row array
+of structs sorted by its priority key and cross-joined (broadcast) onto
+every row; a row's winner is the first array element that passes the
+row's predicate (``_first_hit``) — the predicate work of a nested loop
+join, with no shuffle and no join back.  Band inference (J5) and the
+outlier median (X1) are windows over (brand, type) and (brand, model):
+the plan's only two shuffles.  fx broadcasts.  No Python UDFs anywhere.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -87,86 +93,81 @@ def normalize(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def match_catalog(
-    df: DataFrame, model_ref: DataFrame, despace_variant: bool = True
-) -> DataFrame:
-    ref = model_ref.withColumn("model_ref", T.despace(F.upper(F.col("model"))))
+def _sorted_structs(*fields) -> Column:
+    """Aggregate: every KB row as struct(*fields), sorted ascending — the
+    leading fields are the priority key."""
+    return F.sort_array(F.collect_list(F.struct(*fields)))
 
-    # J1: first brand (by ref table order) contained in description2 OR
-    # supplier2 (prog.py:75-89)
-    brands = ref.groupBy(F.col("brand").alias("b_brand")).agg(
-        F.min("ref_idx").alias("brand_prio")
+
+def _first_hit(arr: str, pred: Callable[[Column], Column]) -> Column:
+    """The first element of the priority-sorted array column ``arr`` that
+    passes ``pred``; NULL when none does (or the array is empty)."""
+    return F.try_element_at(F.filter(F.col(arr), pred), F.lit(1))
+
+
+def match_catalog(df: DataFrame, model_ref: DataFrame) -> DataFrame:
+    ref = model_ref.withColumn("model_ref", T.despace(F.upper(F.col("model"))))
+    # the catalog as one broadcast row of two priority-sorted arrays
+    kb = ref.agg(
+        # J1 order: a brand's first row in the ref table (prog.py:75-89)
+        F.array_distinct(
+            F.transform(_sorted_structs("ref_idx", "brand"), lambda r: r["brand"])
+        ).alias("__brands"),
+        # J2 order: longest model first, ties → first ref row (prog.py:90-101)
+        _sorted_structs(
+            (-F.length("model_ref")).alias("neg_len"), "ref_idx", "brand",
+            "model_ref", "capacity", "type", "hp",
+        ).alias("__models"),
     )
-    b_hit = (F.instr(F.col("description2"), F.col("b_brand")) > 0) | (
-        F.instr(F.col("supplier2"), F.col("b_brand")) > 0
+    d2, s2 = F.col("description2"), F.col("supplier2")
+
+    # J1: first brand contained in description2 OR supplier2
+    out = df.crossJoin(F.broadcast(kb)).withColumn(
+        "brand", _first_hit("__brands", lambda b: (F.instr(d2, b) > 0) | (F.instr(s2, b) > 0))
     )
-    b_matched = df.select(ID, "description2", "supplier2").join(
-        F.broadcast(brands), on=b_hit, how="inner"
-    )
-    b_win = FJ.pick_winner(b_matched, ID, [F.col("brand_prio")]).select(
-        ID, F.col("b_brand").alias("brand")
-    )
-    out = df.join(b_win, on=ID, how="left")
 
     # J2: longest catalog model of the matched brand contained in
-    # description2 (prog.py:90-101); ties → first ref row
-    refm = ref.select(
-        F.col("brand").alias("m_brand"),
-        "ref_idx",
-        "model_ref",
-        F.col("capacity").alias("m_capacity"),
-        F.col("type").alias("m_type"),
-        F.col("hp").alias("m_hp"),
-    )
-    # containment on the raw text, plus a space-insensitive variant for
-    # catalog keys that carry no spaces while the description spells the
-    # model spaced ('MODEL 330 GC' vs key '330GC') — needed when the
-    # catalog is reconstructed from de-spaced export values.  The
-    # variant is TOKEN-ANCHORED: the key must be a prefix of the
+    # description2.  Containment on the raw text, plus a space-insensitive
+    # variant for catalog keys that carry no spaces while the description
+    # spells the model spaced ('MODEL 330 GC' vs key '330GC') — needed
+    # when the catalog is reconstructed from de-spaced export values.
+    # The variant is TOKEN-ANCHORED: the key must be a prefix of the
     # space-stripped text starting at some token boundary.  Naively
-    # de-spacing the whole text would manufacture cross-token
-    # candidates ('305' inside 'MODEL 313 05B' → '…31305B…'), which the
-    # reference (plain substring on spaced text, prog.py:93-95) never
-    # produces — caught against golden rows labeled 313.
-    m_hit = F.instr(F.col("description2"), F.col("model_ref")) > 0
-    fact_cols = [ID, "description2", "brand"]
-    base = out.filter(F.col("brand").isNotNull())
-    if despace_variant:
-        toks = F.split(F.col("description2"), " ")
-        sufjoin = F.transform(
+    # de-spacing the whole text would manufacture cross-token candidates
+    # ('305' inside 'MODEL 313 05B' → '…31305B…'), which the reference
+    # (plain substring on spaced text, prog.py:93-95) never produces —
+    # caught against golden rows labeled 313.
+    toks = F.split(d2, " ")
+    out = out.withColumn(
+        "__sufjoin",
+        F.transform(
             F.sequence(F.lit(1), F.greatest(F.size(toks), F.lit(1))),
             lambda i: F.concat_ws("", F.slice(toks, i, 1_000_000)),
-        )
-        base = base.select(*fact_cols).withColumn("__sufjoin", sufjoin)
-        m_hit = m_hit | F.exists(
-            F.col("__sufjoin"), lambda s: s.startswith(F.col("model_ref"))
-        )
-        fact_cols = fact_cols + ["__sufjoin"]
-    m_matched = (
-        base.select(*fact_cols)
-        .join(
-            F.broadcast(refm),
-            on=(F.col("brand") == F.col("m_brand")) & m_hit,
-            how="inner",
-        )
+        ),
     )
-    m_win = FJ.pick_winner(
-        m_matched, ID, [-F.length("model_ref"), F.col("ref_idx")]
-    ).select(
-        ID,
-        F.col("model_ref").alias("model"),
-        F.col("m_capacity").alias("capacity"),
-        F.col("m_type").alias("type"),
-        F.col("m_hp").alias("hp"),
+    m = _first_hit(
+        "__models",
+        lambda r: (r["brand"] == F.col("brand"))
+        & (
+            (F.instr(d2, r["model_ref"]) > 0)
+            | F.exists("__sufjoin", lambda s: s.startswith(r["model_ref"]))
+        ),
     )
-    out = out.join(m_win, on=ID, how="left")
+    out = out.withColumn("__m", m).withColumns(
+        {
+            "model": F.col("__m.model_ref"),
+            "capacity": F.col("__m.capacity"),
+            "type": F.col("__m.type"),
+            "hp": F.col("__m.hp"),
+        }
+    )
 
     remark = (
         F.when(F.col("brand").isNotNull() & F.col("model").isNotNull(), R_FULL)
         .when(F.col("brand").isNotNull(), R_BRAND_ONLY)
         .otherwise(R_NONE)
     )
-    return out.withColumn("remark", remark)
+    return out.withColumn("remark", remark).drop("__brands", "__models", "__sufjoin", "__m")
 
 
 # ---------------------------------------------------------------------------
@@ -193,74 +194,67 @@ def label_cascades(
 
 def _regex_pass(
     df: DataFrame,
-    kb: DataFrame,
     scope: Column,
     brand_scoped: bool,
     remark_unique: str,
     remark_multi: str,
 ) -> DataFrame:
-    """One search_regex pass (prog.py:167-236).  Candidates restricted to
-    the row's brand when ``brand_scoped``; LAST matching pattern in table
-    order wins (kb_order desc); extracted model = longest findall hit;
-    capacity from the winning row's capacity_regex + starting_point code.
+    """One search_regex pass (prog.py:167-236) over the in-scope rows.
+    Candidates restricted to the row's brand when ``brand_scoped``; LAST
+    matching pattern in table order wins (the ``__rx`` array is sorted
+    by kb_order desc); extracted model = longest findall hit; capacity
+    from the winning row's capacity_regex + starting_point code.
     """
-    kbx = kb.select(
-        "kb_order",
-        F.col("brand").alias("rx_brand"),
-        "model_regex",
-        "capacity_regex",
-        "category",
-        "starting_point",
-    )
-    facts = df.filter(scope).select(ID, "description2", "brand")
-    pred = F.regexp_like(F.col("description2"), F.col("model_regex"))
-    if brand_scoped:
-        pred = (F.col("brand") == F.col("rx_brand")) & pred
-    matched = facts.join(F.broadcast(kbx), on=pred, how="inner")
-    win = FJ.pick_winner(matched, ID, [-F.col("kb_order")])
+    d2 = F.col("description2")
 
-    hits = F.regexp_extract_all(F.col("description2"), F.col("model_regex"), F.lit(0))
-    new_model = FJ.longest_regex_hit(F.col("description2"), F.col("model_regex"))
+    def pred(r: Column) -> Column:
+        hit = F.regexp_like(d2, r["model_regex"])
+        return (r["brand"] == F.col("brand")) & hit if brand_scoped else hit
+
+    out = df.withColumn("__w", F.when(scope, _first_hit("__rx", pred)))
+    pattern = F.col("__w.model_regex")
+    out = out.withColumn("__rx_model", FJ.longest_regex_hit(d2, pattern))
+    new_model = F.col("__rx_model")
     new_cap = F.when(
-        F.col("starting_point") == 2, F.lit(None).cast("double")
+        F.col("__w.starting_point") == 2, F.lit(None).cast("double")
     ).otherwise(
         FJ.starting_point_capacity(
-            new_model, F.col("capacity_regex"), F.col("starting_point")
+            new_model, F.col("__w.capacity_regex"), F.col("__w.starting_point")
         )
     )
-    upd = win.select(
-        ID,
-        F.col("rx_brand"),
-        new_model.alias("rx_model"),
-        F.col("category").alias("rx_type"),
-        new_cap.alias("rx_capacity"),
-        F.when(F.size(F.array_distinct(hits)) > 1, remark_multi)
-        .otherwise(remark_unique)
-        .alias("rx_remark"),
+    hits = F.regexp_extract_all(d2, pattern, F.lit(0))
+    new_remark = F.when(F.size(F.array_distinct(hits)) > 1, remark_multi).otherwise(
+        remark_unique
     )
-    out = df.join(upd, on=ID, how="left")
-    hit = F.col("rx_model").isNotNull()
-    return (
-        out.withColumn("brand", F.when(hit, F.col("rx_brand")).otherwise(F.col("brand")))
-        .withColumn("model", F.when(hit, F.col("rx_model")).otherwise(F.col("model")))
-        .withColumn("type", F.when(hit, F.col("rx_type")).otherwise(F.col("type")))
-        .withColumn(
-            "capacity", F.when(hit, F.col("rx_capacity")).otherwise(F.col("capacity"))
-        )
-        .withColumn("remark", F.when(hit, F.col("rx_remark")).otherwise(F.col("remark")))
-        .drop("rx_brand", "rx_model", "rx_type", "rx_capacity", "rx_remark")
-    )
+    hit = new_model.isNotNull()
+    return out.withColumns(
+        {
+            c: F.when(hit, v).otherwise(F.col(c))
+            for c, v in [
+                ("brand", F.col("__w.brand")),
+                ("model", new_model),
+                ("type", F.col("__w.category")),
+                ("capacity", new_cap),
+                ("remark", new_remark),
+            ]
+        }
+    ).drop("__w", "__rx_model")
 
 
 def regex_stage(df: DataFrame, regex_kb: DataFrame) -> DataFrame:
+    # the KB as one broadcast row: patterns sorted by kb_order desc
+    kb = regex_kb.agg(
+        _sorted_structs(
+            (-F.col("kb_order")).alias("neg_order"), "brand", "model_regex",
+            "capacity_regex", "category", "starting_point",
+        ).alias("__rx")
+    )
+    out = df.crossJoin(F.broadcast(kb))
     # pass 1 (nb cell 29): brand-scoped, rows with brand but no model
-    out = _regex_pass(
-        df, regex_kb, F.col("remark") == R_BRAND_ONLY, True, R_RX_UNIQUE, R_RX_MULTI
-    )
+    out = _regex_pass(out, F.col("remark") == R_BRAND_ONLY, True, R_RX_UNIQUE, R_RX_MULTI)
     # pass 2 (nb cell 30): global, rows still unmatched
-    return _regex_pass(
-        out, regex_kb, F.col("remark") == R_NONE, False, R_RX_NB_UNIQUE, R_RX_NB_MULTI
-    )
+    out = _regex_pass(out, F.col("remark") == R_NONE, False, R_RX_NB_UNIQUE, R_RX_NB_MULTI)
+    return out.drop("__rx")
 
 
 # ---------------------------------------------------------------------------
@@ -283,10 +277,7 @@ def capacity_from_text(df: DataFrame) -> DataFrame:
 
 
 def infer_models(df: DataFrame, tol: float = 0.05) -> DataFrame:
-    out = RJ.infer_unknown_models(
-        df, id_col=ID, brand="brand", type_col="type", model="model",
-        capacity="capacity", tol=tol,
-    )
+    out = RJ.infer_unknown_models(df, tol=tol)
     return out.withColumn(
         "remark", F.when(F.col("__model_inferred"), R_INFERRED).otherwise(F.col("remark"))
     ).drop("__model_inferred")
@@ -354,31 +345,17 @@ def run_pipeline(
     min_amount: float = 10000.0,
     interval_width: int = 10,
     datasource: str | None = None,
-    persist: bool = True,
     strict_reference_compat: bool = False,
 ) -> DataFrame:
     """Full cleaning pipeline; returns the enriched DataFrame with typed
-    NULLs (call ``render_export`` for the sentinel-rendered view).
-
-    ``persist``: the match/regex/inference stages each fork the fact
-    table (winner-selection branch + main branch join back on the id).
-    Without persistence Spark recomputes the whole upstream lineage per
-    fork — multiplicative at 6 forks — so the forked frames are cached
-    (MEMORY_AND_DISK; spill-safe at cluster scale)."""
-
-    def _pin(d: DataFrame) -> DataFrame:
-        return d.persist() if persist else d
-
+    NULLs (call ``render_export`` for the sentinel-rendered view)."""
     df = coerce_and_derive(shipments, min_amount=min_amount)
-    df = _pin(normalize(df))                 # forked by J1/J2
+    df = normalize(df)
     df = match_catalog(df, model_ref)
-    df = _pin(
-        label_cascades(df, file_type=file_type, strict_reference_compat=strict_reference_compat)
-    )  # forked by J3 passes
+    df = label_cascades(df, file_type=file_type, strict_reference_compat=strict_reference_compat)
     df = regex_stage(df, regex_kb)
-    df = _pin(capacity_from_text(df))        # forked by J5 + outlier median
+    df = capacity_from_text(df)
     df = infer_models(df)
     df = mark_price_outliers(df)
     df = add_intervals(df, file_type=file_type, width=interval_width)
-    df = finalize(df, fx_rates, datasource)
-    return df
+    return finalize(df, fx_rates, datasource)

@@ -14,6 +14,11 @@ from pyspark.sql import functions as F
 
 from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark import fixtures
 from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.plans import pipeline
+from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.schemas import (
+    MODEL_REF_SCHEMA,
+    REGEX_KB_SCHEMA,
+    SHIPMENTS_SCHEMA,
+)
 
 
 @pytest.fixture(scope="module")
@@ -172,3 +177,44 @@ def test_reference_golden_snapshot_shape():
     assert t.column_names == entry._REF_PARITY_COLS
     remarks = set(t.column("remark").to_pylist())
     assert "Fully match" in remarks and "Parts" in remarks
+
+
+# ---------------------------------------------------------------------------
+# Degenerate batches: an empty result or NULL/UNKNOWN labels, never an error
+# ---------------------------------------------------------------------------
+
+
+def _export_rows(spark, shipments, model_ref=None, regex_kb=None):
+    out = pipeline.run_pipeline(
+        shipments,
+        model_ref if model_ref is not None else fixtures.model_ref_df(spark),
+        regex_kb if regex_kb is not None else fixtures.regex_kb_df(spark),
+        fixtures.fx_rates_df(spark),
+    )
+    return pipeline.render_export(out).collect()
+
+
+def test_empty_batch(spark):
+    assert _export_rows(spark, spark.createDataFrame([], SHIPMENTS_SCHEMA)) == []
+
+
+def test_batch_fully_filtered(spark):
+    # fixture rows 8 (F2 keyword) and 13 (F1 amount) only
+    shipments = fixtures.shipments_df(spark).filter(F.col("shipment_id").isin(8, 13))
+    assert shipments.count() == 2
+    assert _export_rows(spark, shipments) == []
+
+
+def test_batch_without_kb_hits(spark):
+    rows = _export_rows(
+        spark,
+        fixtures.shipments_df(spark),
+        spark.createDataFrame([], MODEL_REF_SCHEMA),
+        spark.createDataFrame([], REGEX_KB_SCHEMA),
+    )
+    assert {r["shipment_id"] for r in rows} == set(EXPECTED)
+    for r in rows:
+        assert (r["brand"], r["model"], r["outliers"]) == ("UNKNOWN", "UNKNOWN", "unknown")
+        assert r["remark"] in (pipeline.R_NONE, pipeline.R_PARTS, pipeline.R_CAPACITY)
+    # row 6 still gets its capacity from the description text
+    assert {r["shipment_id"]: r["remark"] for r in rows}[6] == pipeline.R_CAPACITY

@@ -50,10 +50,15 @@ def test_fx_join_broadcast_left_outer(spark, sf_dir):
     assert "BroadcastHashJoin LeftOuter" in p
 
 
-def test_outlier_median_join_broadcast(spark, sf_dir):
+def test_outlier_median_window_no_join(spark, sf_dir):
+    """The per-brand median is a window: no join back onto the fact
+    table, and the window's exchange on p_brand is the only shuffle."""
+    import re
+
     p = plan_of(spark, "part_price_outliers", sf_dir)
-    assert "BroadcastHashJoin" in p
+    assert "Join" not in p
     assert "CartesianProduct" not in p
+    assert re.findall(r"Arguments: (\w+)partitioning\((\w+)#", p) == [("hash", "p_brand")]
 
 
 def test_pipeline_plan_no_cartesian(spark):
@@ -64,12 +69,20 @@ def test_pipeline_plan_no_cartesian(spark):
         pipeline,
     )
 
-    df = pipeline.run_pipeline(
+    inputs = (
         fixtures.shipments_df(spark),
         fixtures.model_ref_df(spark),
         fixtures.regex_kb_df(spark),
         fixtures.fx_rates_df(spark),
     )
+    sc = spark.sparkContext
+    sc.setJobGroup("pipeline-plan", "run_pipeline build")
+    try:
+        df = pipeline.run_pipeline(*inputs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # building the plan runs nothing
+    assert list(sc.statusTracker().getJobIdsForGroup("pipeline-plan")) == []
     qe = df._jdf.queryExecution()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     p = qe.explainString(mode)
@@ -77,6 +90,10 @@ def test_pipeline_plan_no_cartesian(spark):
     # the containment/regex dims ride broadcast nested loop joins
     assert "BroadcastNestedLoopJoin" in p
     assert "BroadcastHashJoin" in p
+    # one linear plan: each input frame is read once (no stage joins back
+    # onto the fact table), and only the two windows shuffle
+    assert qe.analyzed().collectLeaves().size() == len(inputs)
+    assert p.count("Exchange hashpartitioning") <= 2
 
 
 def test_no_python_udfs_in_query_plans(spark, sf_dir):
