@@ -243,13 +243,15 @@ def test_write_retry_with_committed_txn_is_a_noop(spark, tmp_path, monkeypatch):
 
 
 def _export(spark, shipments, model_ref=None, regex_kb=None):
+    """The cleaned batch, materialized as the batch job does before its
+    upsert (which reads the batch several times)."""
     out = pipeline.run_pipeline(
         shipments,
         model_ref if model_ref is not None else fixtures.model_ref_df(spark),
         regex_kb if regex_kb is not None else fixtures.regex_kb_df(spark),
         fixtures.fx_rates_df(spark),
     )
-    return pipeline.render_export(out)
+    return pipeline.render_export(out).localCheckpoint()
 
 
 def _rows(rows) -> list:
@@ -277,28 +279,31 @@ def _reports(snap) -> dict:
 
 
 def test_degenerate_batches_through_upsert_and_reports(spark, tmp_path):
+    """Empty, fully filtered and KB-less batches upserted into an
+    844-row history (the frozen pipeline output of seed 1): the first
+    two leave the snapshot and the reports unchanged, the third
+    replaces the fixture rows with UNKNOWN-labelled ones."""
     t = str(tmp_path / "history")
     key = [pipeline.ID]
-    dl.upsert_delta(spark, t, _export(spark, fixtures.shipments_df(spark)), key)
+    golden = os.path.join(
+        os.path.dirname(__file__), "golden", "pipeline_snapshot_seed1.parquet"
+    )
+    dl.upsert_delta(spark, t, spark.read.parquet(golden), key)
     history_rows = _rows(dl.read_delta(spark, t).collect())
     history_reports = _reports(dl.read_delta(spark, t))
 
+    shipments = fixtures.shipments_df(spark)
     empty = _export(spark, spark.createDataFrame([], SHIPMENTS_SCHEMA))
-    filtered = _export(
-        spark, fixtures.shipments_df(spark).filter(F.col(pipeline.ID).isin(8, 13))
-    )
+    filtered = _export(spark, shipments.filter(F.col(pipeline.ID).isin(8, 13)))
     for batch in (empty, filtered):
         dl.upsert_delta(spark, t, batch, key)
         snap = dl.read_delta(spark, t)
         assert _rows(snap.collect()) == history_rows
         assert _reports(snap) == history_reports
 
-    shifted = fixtures.shipments_df(spark).withColumn(
-        pipeline.ID, F.col(pipeline.ID) + 1000
-    )
     no_kb = _export(
         spark,
-        shifted,
+        shipments,
         spark.createDataFrame([], MODEL_REF_SCHEMA),
         spark.createDataFrame([], REGEX_KB_SCHEMA),
     )
@@ -306,7 +311,10 @@ def test_degenerate_batches_through_upsert_and_reports(spark, tmp_path):
     assert new_rows and {r["brand"] for r in new_rows} == {"UNKNOWN"}
     dl.upsert_delta(spark, t, no_kb, key)
     snap = dl.read_delta(spark, t)
-    assert _rows(snap.collect()) == _rows(history_rows + new_rows)
+    new_ids = {r[pipeline.ID] for r in new_rows}
+    kept = [r for r in history_rows if r[pipeline.ID] not in new_ids]
+    assert len(kept) < len(history_rows)
+    assert _rows(snap.collect()) == _rows(kept + new_rows)
     reports = _reports(snap)
     assert len(reports["top3"]) <= 3
     assert "UNKNOWN" in {r["brand"] for r in reports["brand_share"]}
