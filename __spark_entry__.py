@@ -6268,25 +6268,24 @@ _UPS_BATCHES = 3
 
 
 def q_compacted_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-file compaction of a maintained table (streaming/jobs.
-    compact_maintained_table): the events table is driven through the
-    REAL keyed-upsert maintainer (apply_upsert_batch, latest-row-per-
-    user, new batch unconditionally replaces stored keys) in three
-    deterministic micro-batches — each publish writes its own spread of
-    parquet files — then the live version is compacted to ONE file and
-    republished through the same atomic protocol.  The returned frame
-    reads back through resolve_maintained_table AFTER compaction, so
-    the oracle hash proves compaction is data-identical: per user, the
-    winner is the max-ts row of that user's LAST batch (upsert replaces
-    regardless of stored ts — replayed exactly by the oracle).  ts is
-    globally unique in the testdata, so max_by is deterministic.
-    protocol='symlink' is EXPLICIT since r8: this query is the bespoke
-    protocol's compaction twin by design (auto now makes new tables
-    Delta-born; the Delta twin is delta_upsert_roundtrip +
-    delta_lite.compact)."""
+    """Small-file compaction of a maintained table (delta_lite.compact
+    on a streaming/jobs maintainer's Delta table): the events table is
+    driven through the REAL keyed-upsert maintainer (apply_upsert_batch,
+    latest-row-per-user, new batch unconditionally replaces stored
+    keys) in three deterministic micro-batches — each publish commits
+    its own touched-bucket files — then the table is compacted in one
+    layout-only OPTIMIZE commit.  The returned frame reads back through
+    read_maintained_table AFTER compaction, so the oracle hash proves
+    compaction is data-identical: per user, the winner is the max-ts
+    row of that user's LAST batch (upsert replaces regardless of stored
+    ts — replayed exactly by the oracle).  ts is globally unique in the
+    testdata, so max_by is deterministic."""
     import shutil
     import tempfile
 
+    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.sources import (
+        delta_lite,
+    )
     from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.streaming import (
         jobs,
     )
@@ -6304,11 +6303,10 @@ def q_compacted_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 b,
                 path,
                 key_cols=["user_id"],
-                protocol="symlink",
             )
-        jobs.compact_maintained_table(spark, path, n_files=1)
+        delta_lite.compact(spark, path)
         out = (
-            spark.read.parquet(jobs.resolve_maintained_table(path))
+            jobs.read_maintained_table(spark, path)
             .select(
                 "user_id",
                 F.col("event_type").alias("last_type"),
@@ -6343,7 +6341,7 @@ FROM w GROUP BY 1
 
 def q_delta_scd2_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 dimension maintained through Delta TOUCHED-FILE MERGE
-    commits (jobs.apply_scd2_batch protocol='delta' →
+    commits (jobs.apply_scd2_batch →
     delta_lite.merge_touched — VERDICT r6 #1): the event log lands in
     three time-ordered micro-batches; each batch's commit rewrites
     ONLY the key-hash buckets its users touch (remove/add actions
@@ -6381,8 +6379,7 @@ def q_delta_scd2_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         for b, ch in enumerate(chunks):
             jobs.apply_scd2_batch(
-                ch, b, path, "user_id", "ts", ["event_type"],
-                protocol="delta", n_buckets=16,
+                ch, b, path, "user_id", "ts", ["event_type"], n_buckets=16,
             )
         # at-least-once replay of an applied batch: MUST be a no-op
         jobs.apply_scd2_batch(chunks[1], 1, path, "user_id", "ts", ["event_type"])
@@ -6773,7 +6770,6 @@ def q_delta_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                 b,
                 path,
                 key_cols=["user_id"],
-                protocol="delta",
             )
         pre = delta_lite.current_version(path)
         erase = (
@@ -6924,13 +6920,13 @@ def q_delta_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Open-table-format publish (sources/delta_lite, VERDICT r5 #8;
     RE-SHAPED r7 per VERDICT r6 #1): the events table is driven
     through the REAL keyed-upsert maintainer in three deterministic
-    micro-batches with protocol='delta' — each publish is now a
+    micro-batches — each publish is a
     TOUCHED-FILE MERGE commit (delta_lite.upsert_delta: key-hash
     bucketed files, remove/add actions scoped to the buckets the batch
     touches, SetTransaction idempotence) — then a replayed batch id
     is applied (must no-op: the txn mark reads back THROUGH
     the log) and the final snapshot is read via the log replay.
-    Semantics identical to compacted_upsert's bespoke-protocol twin:
+    Semantics identical to compacted_upsert's compaction twin:
     per user, the max-ts row of that user's LAST batch; the query
     additionally asserts the log advanced exactly once per applied
     batch, so the oracle hash covers the log protocol end to end."""
@@ -6957,7 +6953,6 @@ def q_delta_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 b,
                 path,
                 key_cols=["user_id"],
-                protocol="delta",
             )
         # at-least-once replay of an applied batch: MUST be a no-op
         jobs.apply_upsert_batch(
@@ -10524,7 +10519,7 @@ def q_heavy_hitters_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 capacity=_HH_CAP,
             )
         out = (
-            spark.read.parquet(path)
+            jobs.read_maintained_table(spark, path)
             .select(
                 F.col("key").alias("user_id"),
                 F.col("n"),
@@ -10689,7 +10684,7 @@ def q_hll_user_count(spark: SparkSession, sf_dir: str) -> DataFrame:
                 key_col="user_id",
                 b=_HLL_B,
             )
-        reg = spark.read.parquet(path).drop("__last_batch_id")
+        reg = jobs.read_maintained_table(spark, path)
         out = hll_estimate_from_registers(reg, "event_type", b=_HLL_B)
         out = out.localCheckpoint(eager=True)
     finally:
@@ -15020,7 +15015,7 @@ def q_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 payload_cols=("value",),
             )
         out = (
-            spark.read.parquet(path)
+            jobs.read_maintained_table(spark, path)
             .select("event_type", "event_id", "value", F.col("__pri").alias("pri"))
             .localCheckpoint(eager=True)
         )
@@ -15566,7 +15561,7 @@ def q_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 depth=_CMS_DEPTH,
                 width=_CMS_WIDTH,
             )
-        regs = spark.read.parquet(path).select("d", "bucket", "n")
+        regs = jobs.read_maintained_table(spark, path).select("d", "bucket", "n")
         probes = (
             e.filter(F.col("user_id") < _CMS_PROBE_MAX)
             .select("user_id")

@@ -2076,12 +2076,11 @@ def upsert_delta(
     schema defines the table schema going forward (columns present in
     the stored table but absent from ``updates`` are dropped, NEW
     columns fill NULL on surviving old rows — both ride a
-    schema-evolution metaData action; the maintained-table mark-column
-    migration rides this).  NOTE: a dropped/added column's metaData
-    action applies table-wide, but only touched buckets' FILES carry
-    the new physical schema — untouched files read fine because the
-    snapshot read pins the committed schema and parquet fills absent
-    columns with NULL."""
+    schema-evolution metaData action).  NOTE: a dropped/added
+    column's metaData action applies table-wide, but only touched
+    buckets' FILES carry the new physical schema — untouched files
+    read fine because the snapshot read pins the committed schema and
+    parquet fills absent columns with NULL."""
 
     def merge_fn(cur: "DataFrame | None", batch: DataFrame) -> DataFrame:
         if cur is None:

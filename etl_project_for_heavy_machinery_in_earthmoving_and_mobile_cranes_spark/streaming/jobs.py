@@ -2,7 +2,25 @@
 
 The reference is batch-append only (history union, O3); this module is
 the streaming-native extension: watermarked tumbling/session windows,
-streaming dedup, and an idempotent foreachBatch history appender.
+streaming dedup, an idempotent foreachBatch history appender, and the
+foreachBatch MAINTAINERS of derived tables (upsert, SCD2, rollups,
+drift counts, sketches, change-feed views).
+
+Every maintained table is a Delta table (``sources/delta_lite``).  Each
+micro-batch publishes as one ``merge_touched`` commit that carries a
+``txn`` action (app ``_TXN_APP``, version = the batch id): a replay of
+an applied batch returns after a log read, and a commit that loses a
+race re-runs its merge on the winner's snapshot, so each batch lands
+exactly once.  The ``txn`` version is a high-water mark, as in
+Structured Streaming's idempotent sinks: a committed batch id marks
+every lower one applied, so the batches written to one table must
+commit in increasing id order.  Keyed tables hash-bucket their files on the key and
+rewrite only the buckets a batch touches; the snapshot maintainers keep
+one bucket.  Read a maintained table with ``read_maintained_table``;
+roll it back with ``delta_lite.restore_table`` and compact it with
+``delta_lite.compact``.  Neither removes a ``txn``, so a batch applied
+before a restore stays applied: re-ingesting a rolled-back interval
+takes new batch ids (or a fresh table), not a replay.
 
 All jobs are defined against a *streaming* DataFrame and are tested
 with the file source + ``availableNow`` trigger (exactly-once batch
@@ -11,9 +29,13 @@ drain), which is also the production pattern for catch-up processing.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..sources import delta_lite
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -232,71 +254,73 @@ def abandoned_clicks(
 
 
 _TXN_APP = "spark-graft-maintainer"
+# the snapshot maintainers (rollup, drift counts, sketches) keep their
+# table in one bucket: it is sized by its key count, and the
+# heavy-hitters truncation ranks the whole table
+_SNAPSHOT_BUCKETS = 1
 
 
-def _resolve_auto_protocol(table_path: str) -> str:
-    """``protocol='auto'`` resolution for the KEYED maintainers
-    (upsert / SCD2) — VERDICT r7 #3: a NEW table is Delta-born.
-
-    - an existing Delta table stays Delta;
-    - an existing bespoke table (symlink / version dirs / manifest /
-      plain legacy dir) keeps its protocol — auto never migrates a
-      live table under a running stream;
-    - an object-store URI path stays bespoke-manifest (``delta_lite``
-      is a local-FS log store; a real deployment swaps in
-      Delta/Iceberg proper there);
-    - otherwise (a fresh local table) → ``'delta'``: the touched-file
-      MERGE publish is the 100 TB scale path, and the default must
-      point AT it, not away from it.  Bespoke is the explicit opt-out
-      (``protocol='symlink'`` / ``'manifest'``)."""
-    import os
-
-    from ..sources import delta_lite
-
-    if delta_lite.is_delta_table(table_path):
-        return "delta"
-    if "://" in table_path:
-        return "auto"  # bespoke manifest downstream
-    # only COMMITTED bespoke state keeps the bespoke protocol: an empty
-    # directory (failed earlier run, mkdir, checkpoint scaffolding) has
-    # no published versions, so classifying it as "existing bespoke"
-    # would silently revert a new table to the O(table)-per-batch
-    # publish the Delta-born default exists to avoid
-    if _resolve_current_version(table_path) is not None:
-        return "auto"  # existing bespoke table keeps its protocol
-    if os.path.isdir(table_path) and any(
-        not name.startswith(".") for name in os.listdir(table_path)
+def _refuse_foreign(path: str) -> None:
+    """Raise ValueError, before anything is written, when ``path`` holds
+    data that is not a Delta table: a non-empty directory without a
+    ``_delta_log``, or a ``{path}.versions`` directory (a table of the
+    pre-Delta versioned-directory layout).  A maintainer must not claim
+    such a path as a new table: the next batch would reset its state.
+    A missing or empty path starts a new Delta table."""
+    if os.path.isdir(os.path.join(path, "_delta_log")):
+        return
+    if os.path.isdir(f"{path}.versions") or (
+        os.path.isdir(path)
+        and any(not name.startswith(".") for name in os.listdir(path))
     ):
-        return "auto"  # non-empty dir with unrecognized content: don't claim it
-    return "delta"
+        raise ValueError(
+            f"{path} holds data without a _delta_log; a maintained table "
+            "must be a Delta table or a new (missing or empty) path"
+        )
+
+
+def _merge(
+    spark: SparkSession,
+    path: str,
+    batch: DataFrame,
+    key_cols: list[str],
+    merge_fn,
+    batch_id: int,
+    n_buckets: int = _SNAPSHOT_BUCKETS,
+) -> None:
+    """Publish one micro-batch of a maintained table:
+    ``delta_lite.merge_touched`` with the batch's ``txn`` in the same
+    atomic commit.  A replay of a batch the log already holds returns
+    before reading any data, and a commit that loses a race re-runs
+    ``merge_fn`` on the winner's snapshot, so a batch lands exactly
+    once."""
+    _refuse_foreign(path)
+    delta_lite.merge_touched(
+        spark, path, batch, key_cols, merge_fn,
+        n_buckets=n_buckets, txn=(_TXN_APP, batch_id),
+    )
 
 
 def read_maintained_table(spark, path: str):
-    """PUBLIC reader for a maintained table regardless of publish
-    protocol: Delta-log tables get a snapshot read through the log
-    replay; bespoke tables resolve the symlink/manifest pointer.
-    Returns None when no state is committed yet.  External readers
-    must use this (or ``resolve_maintained_table`` for bespoke-only
-    paths) — a plain ``spark.read.parquet(table)`` on a Delta table
+    """Snapshot of a maintained table, read through its Delta log; None
+    when nothing is committed yet.  Raises ValueError on a path holding
+    non-Delta data (``_refuse_foreign``); any other read error
+    propagates.  External readers must use this (or
+    ``delta_lite.read_delta``): a plain ``spark.read.parquet(path)``
     would scan every superseded version's files."""
-    return _read_maintained_table(spark, path)
+    _refuse_foreign(path)
+    if not delta_lite.is_delta_table(path):
+        return None
+    return delta_lite.read_delta(spark, path)
 
 
-def _delta_batch_applied(spark, table_path: str, batch_id: int) -> bool:
-    """Idempotence check for Delta-published maintained tables: the
-    SetTransaction (``txn``) action committed atomically with each
-    batch's data, read back through the log — O(log tail), zero data
-    files scanned.  Tables written by the pre-txn full-snapshot path
-    fall back to the in-table ``__last_batch_id`` mark once."""
-    from ..sources import delta_lite
-
-    if not delta_lite.is_delta_table(table_path):
-        return False
+def _delta_batch_applied(table_path: str, batch_id: int) -> bool:
+    """Whether the log already holds this batch's ``txn``: a log read,
+    zero data files.  Only maintainers that run a Spark action before
+    their merge need it; ``merge_touched`` itself checks the ``txn``
+    on every attempt."""
     last = delta_lite.last_txn_version(table_path, _TXN_APP)
-    if last is not None:
-        return last >= batch_id
-    stored = delta_lite.read_delta(spark, table_path)
-    return _already_applied(stored, batch_id)
+    return last is not None and last >= batch_id
 
 
 def apply_upsert_batch(
@@ -304,7 +328,6 @@ def apply_upsert_batch(
     batch_id: int,
     table_path: str,
     key_cols: list[str],
-    protocol: str = "auto",
     n_buckets: int = 16,
 ) -> None:
     """One micro-batch of keyed upsert maintenance, exposed at module
@@ -313,51 +336,26 @@ def apply_upsert_batch(
     same ``batch_id`` applies once, and the replay call never touches
     the published state.
 
-    ``protocol='delta'`` routes through ``delta_lite.upsert_delta`` —
-    a MERGE INTO-style touched-file commit: the table's files are
-    hash-bucketed on ``key_cols`` and a batch touching k keys rewrites
-    only the buckets those keys hash into, O(batch + touched buckets)
-    per publish instead of the bespoke protocol's O(table) snapshot
-    rewrite.  Idempotence rides a ``txn`` action in the same atomic
-    commit (``_delta_batch_applied``), so the replay guard never reads
-    table data.  ``protocol='auto'`` (the default) resolves via
-    ``_resolve_auto_protocol``: NEW local tables are DELTA-BORN
-    (VERDICT r7 #3 — the scale path is the default, not an opt-in);
-    existing bespoke tables and object-store URI paths keep the
-    bespoke symlink/manifest full-snapshot publish, and
-    ``protocol='symlink'``/``'manifest'`` is the explicit opt-out."""
-    from ..operators.history import merge_upsert
-    from ..sources import delta_lite
-
-    spark = batch_df.sparkSession
+    The batch (latest row per key, by ``ts``) publishes through
+    ``delta_lite.upsert_delta`` — a MERGE INTO-style touched-file
+    commit: the table's files are hash-bucketed on ``key_cols`` and a
+    batch touching k keys rewrites only the buckets those keys hash
+    into, O(batch + touched buckets) per publish.  Idempotence rides a
+    ``txn`` action in the same atomic commit, so the replay guard is a
+    log read that never touches table data."""
     latest = F.max_by(
         F.struct(*[c for c in batch_df.columns if c not in key_cols]), F.col("ts")
     ).alias("__rest")
     dedup = batch_df.groupBy(*key_cols).agg(latest).select(*key_cols, "__rest.*")
-    if protocol == "auto":
-        protocol = _resolve_auto_protocol(table_path)
-    if protocol == "delta":
-        if _delta_batch_applied(spark, table_path, batch_id):
-            return  # at-least-once replay of an applied batch: no-op
-        delta_lite.upsert_delta(
-            spark,
-            table_path,
-            dedup,
-            key_cols,
-            n_buckets=n_buckets,
-            txn=(_TXN_APP, batch_id),
-        )
-        return
-    stored = _read_maintained_table(spark, table_path)
-    if _already_applied(stored, batch_id):
-        return  # at-least-once replay of an applied batch: no-op
-    if stored is not None:
-        current = stored.drop(_BATCH_MARK)
-        merged = merge_upsert(current, dedup.select(*current.columns), key_cols)
-    else:
-        merged = dedup
-    merged = merged.withColumn(_BATCH_MARK, F.lit(batch_id))
-    _commit_maintained_table(merged, table_path, batch_id, protocol=protocol)
+    _refuse_foreign(table_path)
+    delta_lite.upsert_delta(
+        batch_df.sparkSession,
+        table_path,
+        dedup,
+        key_cols,
+        n_buckets=n_buckets,
+        txn=(_TXN_APP, batch_id),
+    )
 
 
 def upsert_stream(
@@ -365,36 +363,24 @@ def upsert_stream(
     table_path: str,
     key_cols: list[str],
     checkpoint_dir: str,
-    protocol: str = "auto",
     n_buckets: int = 16,
 ):
     """Streaming MERGE: each micro-batch upserts into a keyed table via
     foreachBatch (latest row per key wins, within-batch latest picked
-    by ts).
+    by ts).  The table publishes through the Delta transaction log
+    with key-hash-bucketed files, and each micro-batch commits ONLY
+    the buckets its keys touch (``apply_upsert_batch``) — per-batch
+    publish cost is O(batch + touched buckets), flat as the table
+    grows.  Read the result back with ``read_maintained_table``.
 
-    ``protocol='delta'`` is the scale path: the table publishes
-    through the Delta transaction log with key-hash-bucketed files,
-    and each micro-batch commits ONLY the buckets its keys touch
-    (``delta_lite.merge_touched``) — per-batch publish cost is
-    O(batch + touched buckets), flat as the table grows.  Idempotence
-    rides a ``txn`` action in the same atomic commit.  This IS the
-    default for NEW local tables (``protocol='auto'`` → Delta-born,
-    VERDICT r7 #3); the bespoke symlink/manifest protocol remains for
-    existing bespoke tables, object-store URI paths, and explicit
-    ``protocol='symlink'``/``'manifest'`` opt-outs (full-snapshot
-    rewrite per batch — fine for small dims, not for a 100 TB keyed
-    table).  Read the result back with ``read_maintained_table``.
-
-    Exactly-once: the idempotence mark (``txn`` action on the Delta
-    path, ``__last_batch_id`` on the bespoke path) rides in the same
-    atomic publish, so an at-least-once replay of a batch whose commit
+    Exactly-once: the ``txn`` action rides in the same atomic commit
+    as the data, so an at-least-once replay of a batch whose commit
     already landed (crash between publish and checkpoint commit) is a
     no-op."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_upsert_batch(
-            batch_df, batch_id, table_path, key_cols,
-            protocol=protocol, n_buckets=n_buckets,
+            batch_df, batch_id, table_path, key_cols, n_buckets=n_buckets
         )
 
     return (
@@ -429,11 +415,6 @@ def apply_changes_rollup_batch(
     under restart (a double-applied delete would subtract twice).
     Double-typed measures accumulate in float addition order like any
     streaming aggregate; integer measures fold exactly."""
-    from ..sources import delta_lite
-
-    spark = batch_df.sparkSession
-    if _delta_batch_applied(spark, table_path, batch_id):
-        return  # at-least-once replay of an applied batch: no-op
     sign = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(
         F.lit(-1)
     )
@@ -459,14 +440,9 @@ def apply_changes_rollup_batch(
             )
         return merged.filter(F.col("n") != 0)
 
-    delta_lite.merge_touched(
-        spark,
-        table_path,
-        delta,
-        list(group_cols),
-        merge_fn,
-        n_buckets=n_buckets,
-        txn=(_TXN_APP, batch_id),
+    _merge(
+        batch_df.sparkSession, table_path, delta, list(group_cols), merge_fn,
+        batch_id, n_buckets=n_buckets,
     )
 
 
@@ -535,9 +511,9 @@ def apply_scd2_changes_batch(
     are wanted.  Limitation: a key DELETED upstream nets to
     delete-only and keeps its last interval open (dimension deletes
     need an explicit tombstone attribute, the standard SCD2 answer).
-    Replay of an applied batch is a no-op via the same txn guard."""
-    spark = batch_df.sparkSession
-    if _delta_batch_applied(spark, table_path, batch_id):
+    Replay of an applied batch is a no-op via the same txn guard,
+    checked before the netting runs its Spark job."""
+    if _delta_batch_applied(table_path, batch_id):
         return
     sel = [key_col, *attr_cols, "_commit_version"]
     ins = batch_df.filter(F.col("_change_type") == "insert").select(*sel)
@@ -554,7 +530,6 @@ def apply_scd2_changes_batch(
         key_col,
         "change_version",
         list(attr_cols),
-        protocol="delta",
         n_buckets=n_buckets,
     )
 
@@ -647,11 +622,10 @@ def apply_gauge_rollup_batch(
 
     Groups recomputed to zero rows are dropped.  Publishes through the
     touched-file Delta merge with ``txn`` idempotence: an at-least-once
-    replay of an applied batch is a no-op."""
-    from ..sources import delta_lite
-
+    replay of an applied batch is a no-op, checked before the batch is
+    materialized."""
     spark = batch_df.sparkSession
-    if _delta_batch_applied(spark, table_path, batch_id):
+    if _delta_batch_applied(table_path, batch_id):
         return
     batch_df = batch_df.localCheckpoint(eager=True)
     pin = batch_df.agg(F.max("_commit_version")).first()[0]
@@ -753,15 +727,7 @@ def apply_gauge_rollup_batch(
             )
         return merged.select(*gcols, *exprs)
 
-    delta_lite.merge_touched(
-        spark,
-        table_path,
-        delta,
-        gcols,
-        merge_fn,
-        n_buckets=n_buckets,
-        txn=(_TXN_APP, batch_id),
-    )
+    _merge(spark, table_path, delta, gcols, merge_fn, batch_id, n_buckets=n_buckets)
 
 
 def maintain_gauge_rollup_from_changes(
@@ -847,413 +813,6 @@ def curated_documents(docs: DataFrame, threshold: float = 0.0) -> DataFrame:
     )
 
 
-_LEGACY_VERSION = "v" + "0" * 19 + "_legacy"
-_MANIFEST = "_CURRENT"
-
-
-def _version_sort_key(name: str) -> tuple[int, int]:
-    """Total order over version-dir names for GC and newest-version
-    recovery.  The pre-protocol legacy snapshot sorts BEFORE every
-    numeric version (it is by definition the oldest state — a plain
-    lexical sort put its ``_`` suffix after every digit, so GC kept it
-    forever and deleted the true predecessor instead).  Replay-attempt
-    dirs ``v{batch}.r{k}`` sort after their base and before the next
-    batch."""
-    if name.endswith("_legacy"):
-        return (-1, 0)
-    base, _, attempt = name[1:].partition(".r")
-    try:
-        return (int(base), int(attempt) if attempt else 0)
-    except ValueError:
-        return (-2, 0)  # unknown junk: oldest, GC'd first
-
-
-def _resolve_current_version(path: str) -> "str | None":
-    """Resolve the live version dir of a maintained table WITHOUT going
-    through the ``path`` symlink: the ``_CURRENT`` manifest if present
-    (pointer-file protocol), else the newest version dir under
-    ``{path}.versions``.  None when neither exists (true first batch).
-
-    This is the crash-recovery read path: any crash window that leaves
-    ``path`` itself absent or stale (legacy-dir migration, a kill
-    between version write and publish) still has the newest fully
-    committed version on disk, and reading THAT instead of returning
-    None is what turns those windows from silent-state-reset into a
-    no-op replay."""
-    import os
-
-    vroot = f"{path}.versions"
-    manifest = os.path.join(vroot, _MANIFEST)
-    if os.path.isfile(manifest):
-        with open(manifest) as fh:
-            name = fh.read().strip()
-        vdir = os.path.join(vroot, name)
-        if name and os.path.isdir(vdir):
-            return vdir
-    if os.path.isdir(vroot):
-        # only fully committed versions count: a crash mid-write leaves
-        # a version dir without Spark's _SUCCESS marker, and recovering
-        # onto THAT would read partial state (the legacy snapshot is
-        # always eligible — it was the committed live table)
-        versions = [
-            d
-            for d in os.listdir(vroot)
-            if d.startswith("v")
-            and os.path.isdir(os.path.join(vroot, d))
-            and (
-                d.endswith("_legacy")
-                or os.path.exists(os.path.join(vroot, d, "_SUCCESS"))
-            )
-        ]
-        if versions:
-            return os.path.join(
-                vroot, max(versions, key=_version_sort_key)
-            )
-    return None
-
-
-def resolve_maintained_table(path: str) -> "str | None":
-    """Public resolver for EXTERNAL readers of a maintained table: the
-    concrete data directory to ``spark.read.parquet``.  Symlink-protocol
-    tables read through ``path`` itself; manifest-protocol tables (no
-    symlink support — object stores) resolve via the ``_CURRENT``
-    pointer file.  None when the table has no committed state yet."""
-    import os
-
-    if os.path.islink(path) and os.path.exists(path):
-        return path
-    resolved = _resolve_current_version(path)
-    if resolved is not None:
-        return resolved
-    if os.path.isdir(path):
-        return path  # pre-protocol legacy directory
-    return None
-
-
-def rollback_maintained_table(path: str) -> str:
-    """Repoint a maintained table at its PREDECESSOR version — the
-    GC-kept crash-replay margin doubling as a one-step operational
-    rollback (a maintainer bug published a bad batch; serve the last
-    good state while the bug is fixed).
-
-    Publishes with the same protocol the table currently uses
-    (symlink swap, or _CURRENT pointer replace when a manifest
-    exists).  Raises when there is no committed predecessor.
-
-    Caveat (documented, not hidden): the bad batch's checkpoint
-    commit already happened, so the STREAM will not redeliver it —
-    rollback serves stale-but-good data and must be paired with
-    reprocessing from source (or a checkpoint rewind) to re-ingest
-    the rolled-back interval.  The bad version dir is left in place
-    for forensics until normal GC passes it.
-    """
-    import os
-
-    vroot = f"{path}.versions"
-    current = _resolve_current_version(path)
-    if current is None:
-        raise ValueError(f"rollback: no committed state at {path}")
-    cur_name = os.path.basename(current)
-    versions = sorted(
-        (
-            d
-            for d in os.listdir(vroot)
-            if d.startswith("v")
-            and os.path.isdir(os.path.join(vroot, d))
-            and (
-                d.endswith("_legacy")
-                or os.path.exists(os.path.join(vroot, d, "_SUCCESS"))
-            )
-        ),
-        key=_version_sort_key,
-    )
-    older = [d for d in versions if _version_sort_key(d) < _version_sort_key(cur_name)]
-    if not older:
-        raise ValueError(f"rollback: no predecessor version for {path}")
-    target = os.path.join(vroot, older[-1])
-
-    manifest = os.path.join(vroot, _MANIFEST)
-    if os.path.isfile(manifest):
-        tmp = manifest + ".rollback"
-        with open(tmp, "w") as fh:
-            fh.write(os.path.basename(target))
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, manifest)
-    else:
-        tmp_link = f"{path}.publish.rollback"
-        if os.path.lexists(tmp_link):
-            os.remove(tmp_link)
-        os.symlink(os.path.abspath(target), tmp_link)
-        os.replace(tmp_link, path)
-    return target
-
-
-def _read_maintained_table(spark, path: str):
-    """Read a foreachBatch-maintained table; None ONLY when no state
-    exists yet (first batch).  Any other failure — corrupt footer,
-    schema-inference failure on a half-written/empty dir, permission,
-    transient FS error — propagates: a broad except here would
-    silently reset months of accumulated state to the current batch.
-
-    When ``path`` itself is missing but a committed version dir exists
-    (crash between version write and symlink publish, or mid-migration
-    of a legacy table), the newest version is read instead — the
-    publish is repaired by the next successful commit."""
-    import os
-
-    from pyspark.errors import AnalysisException
-
-    from ..sources import delta_lite
-
-    if delta_lite.is_delta_table(path):
-        # Delta-log-published table (protocol="delta"): snapshot read
-        # replays the open-format transaction log instead of resolving
-        # the bespoke symlink/manifest pointer
-        return delta_lite.read_delta(spark, path)
-    target = path
-    if not os.path.lexists(path) or (
-        os.path.islink(path) and not os.path.exists(path)
-    ):
-        recovered = _resolve_current_version(path)
-        if recovered is None:
-            return None
-        target = recovered
-    elif os.path.isdir(path) and not os.path.islink(path):
-        # pointer-file layout keeps no symlink; prefer the manifest if
-        # one exists (a plain legacy dir has none and reads directly)
-        resolved = _resolve_current_version(path)
-        if resolved is not None:
-            target = resolved
-    try:
-        return spark.read.parquet(target)
-    except AnalysisException as e:
-        cond = None
-        for meth in ("getCondition", "getErrorClass"):
-            fn = getattr(e, meth, None)
-            if fn is not None:
-                try:
-                    cond = fn()
-                except Exception:
-                    cond = None
-                if cond:
-                    break
-        if cond and "PATH_NOT_FOUND" in cond:
-            return None  # raced away between lexists and read
-        raise
-
-
-def _commit_maintained_table(
-    merged: DataFrame,
-    path: str,
-    batch_id: int,
-    n_files: int | None = None,
-    protocol: str = "auto",
-) -> None:
-    """Executor-side write + atomic publish of a foreachBatch-maintained
-    table.
-
-    The live table at ``path`` is a SYMLINK to an immutable versioned
-    directory ``{path}.versions/v{batch_id}``.  Publishing a batch is:
-
-    1. write the new version dir executor-side (plain distributed
-       parquet write — the table never routes through driver memory,
-       so an O(table)-sized dimension costs a rewrite, not a driver
-       OOM);
-    2. atomically swap the symlink (``os.symlink`` to a temp name +
-       ``os.replace`` onto ``path`` — a single atomic rename on POSIX).
-
-    A crash at ANY point leaves the previously published version live
-    and readable: before the swap the old symlink still points at the
-    old version dir; a replayed batch rewrites ``v{batch_id}`` (mode
-    overwrite) and swaps again.  This replaces the earlier
-    delete-then-write ``mode("overwrite")`` on the live path, whose
-    crash window left an empty dir that a lenient reader would have
-    treated as "first batch" (silent state reset).
-
-    Versioned dirs also break the read-write cycle: ``merged`` is a
-    lazy plan over the CURRENT version, and the write targets a NEW
-    directory, so no driver-side materialization is needed to avoid
-    overwriting the plan's own input.
-
-    PORTABILITY BOUNDARY: the symlink swap is POSIX-only (local disk /
-    NFS).  Object stores (S3/GCS/ABFS) have neither symlinks nor atomic
-    directory rename; there ``protocol="manifest"`` publishes by
-    atomically replacing a tiny ``_CURRENT`` pointer file inside the
-    versions dir instead (one small object PUT — atomic and
-    last-writer-wins on every major object store), and readers resolve
-    the pointer (``_resolve_current_version``).  ``protocol="auto"``
-    picks manifest for URI-scheme paths (``s3://…``), symlink
-    otherwise.  The local ``open``/``os.replace`` used here STAND IN
-    for the store's single-object PUT — deploying against a real
-    bucket swaps those two calls for the store client; the protocol
-    (immutable version dirs + tiny pointer object) is what carries
-    over unchanged.  The production answer at 100 TB is a table
-    format (Delta/Iceberg), whose commit log is exactly this
-    pointer-file idea generalized.
-
-    Replay safety: if the live table already resolves to this batch's
-    version dir (a replay after crash-between-publish-and-checkpoint),
-    writing ``mode("overwrite")`` into it would delete the very files
-    the lazy ``merged`` plan may still read through ``path`` — the
-    write is diverted to a fresh ``v{batch}.rK`` attempt dir instead.
-    (Guarded maintainers never reach this: ``_already_applied``
-    no-ops the replay first.  The divert protects unguarded callers.)
-
-    Legacy layout (a real directory at ``path`` from before this
-    protocol): the directory is renamed into the versions dir once,
-    then the symlink protocol takes over.  A crash inside the
-    migration window (``path`` momentarily absent) is NOT a state
-    reset: ``_read_maintained_table`` falls back to the newest
-    committed version dir, and the next successful commit repairs the
-    publish.  Old versions are garbage-collected best-effort, keeping
-    the live one and one predecessor (crash-replay safety margin);
-    the GC sort key orders the legacy snapshot oldest so it is the
-    first to go, never the true predecessor.
-    """
-    import os
-    import shutil
-
-    from ..sources import delta_lite
-
-    if protocol == "auto" and delta_lite.is_delta_table(path):
-        protocol = "delta"  # a table born Delta stays Delta
-    if protocol == "delta":
-        # open-format publish: the snapshot rides a Delta transaction
-        # log (sources/delta_lite — add/remove actions, atomic
-        # mutually-exclusive version commit).  Old data files stay on
-        # disk (still referenced by prior log versions), so the lazy
-        # ``merged`` plan over the previous snapshot is never yanked —
-        # the same read-write-cycle guarantee the version-dir protocol
-        # gives, inherited from the format instead of hand-rolled.
-        writer = merged.coalesce(n_files) if n_files else merged
-        delta_lite.write_delta(writer, path, mode="overwrite")
-        return
-
-    vroot = f"{path}.versions"
-    vdir = os.path.join(vroot, f"v{batch_id:020d}")
-    if protocol == "auto":
-        protocol = "manifest" if "://" in path else "symlink"
-
-    # replay-after-publish defense: never overwrite the dir the live
-    # table currently resolves to (it feeds the lazy `merged` plan)
-    live = _resolve_current_version(path)
-    if live is None and os.path.islink(path):
-        live = os.path.realpath(path)
-    if live is not None and os.path.realpath(live) == os.path.abspath(vdir):
-        attempt = 1
-        while os.path.lexists(f"{vdir}.r{attempt}"):
-            attempt += 1
-        vdir = f"{vdir}.r{attempt}"
-
-    writer = merged.coalesce(n_files) if n_files else merged
-    writer.write.mode("overwrite").parquet(vdir)
-
-    if os.path.lexists(path) and not os.path.islink(path) and protocol == "symlink":
-        legacy = os.path.join(vroot, _LEGACY_VERSION)
-        if os.path.lexists(legacy):
-            shutil.rmtree(legacy, ignore_errors=True)
-        os.rename(path, legacy)
-
-    if protocol == "manifest":
-        # pointer-file publish: readers resolve _CURRENT; the version
-        # name (not an absolute path) keeps the table relocatable
-        tmp = os.path.join(vroot, f"{_MANIFEST}.tmp.{batch_id}")
-        with open(tmp, "w") as fh:
-            fh.write(os.path.basename(vdir))
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, os.path.join(vroot, _MANIFEST))
-    else:
-        tmp_link = f"{path}.publish.{batch_id}"
-        if os.path.lexists(tmp_link):
-            os.remove(tmp_link)
-        os.symlink(os.path.abspath(vdir), tmp_link)
-        os.replace(tmp_link, path)
-
-    try:  # GC: keep the live version and one predecessor
-        versions = sorted(
-            (
-                d
-                for d in os.listdir(vroot)
-                if d.startswith("v") and os.path.isdir(os.path.join(vroot, d))
-            ),
-            key=_version_sort_key,
-        )
-        for stale in versions[:-2]:
-            shutil.rmtree(os.path.join(vroot, stale), ignore_errors=True)
-    except OSError:
-        pass
-
-
-def compact_maintained_table(spark, path: str, n_files: int = 1) -> str:
-    """Small-file compaction for a maintained table — the operational
-    chore every incrementally-maintained store needs: each micro-batch
-    publish writes its own parquet files, and after 10^4 batches the
-    live version is a sea of small files whose per-file open/footer
-    cost dominates scans.  Compaction rewrites the CURRENT version into
-    ``n_files`` files and republishes it through the exact same atomic
-    protocol as a batch commit (same-batch attempt dir ``v{b}.rK``,
-    symlink swap or ``_CURRENT`` manifest replace, GC keeps the
-    pre-compaction version as the crash margin).
-
-    Properties inherited from ``_commit_maintained_table``:
-    - data-identical: the rewrite is a lazy read of the live version
-      coalesced to ``n_files`` — no transformation, and the in-table
-      ``__last_batch_id`` replay guard survives untouched, so a
-      maintainer replay after compaction still no-ops;
-    - crash-safe: a kill anywhere leaves the pre-compaction version
-      live (the new dir only becomes visible at the atomic publish);
-    - rollback-able: ``rollback_maintained_table`` repoints at the
-      uncompacted predecessor.
-
-    Returns the new live version dir.  At 100 TB run this per-partition
-    rather than per-table (compact the partitions whose file census
-    crosses a threshold); the protocol is identical.
-
-    Delta-published tables route to ``delta_lite.compact`` (reading the
-    raw table root would pick up every superseded version's files)."""
-    import os
-
-    from ..sources import delta_lite
-
-    if delta_lite.is_delta_table(path):
-        delta_lite.compact(spark, path, n_files=n_files)
-        return path
-    data_dir = resolve_maintained_table(path)
-    if data_dir is None:
-        raise ValueError(f"compact: no committed state at {path}")
-    live = _resolve_current_version(path)
-    batch_id = 0
-    if live is not None:
-        name = os.path.basename(live)
-        if not name.endswith("_legacy"):
-            base, _, _ = name[1:].partition(".r")
-            batch_id = int(base)
-    stored = spark.read.parquet(data_dir)
-    manifest = os.path.join(f"{path}.versions", _MANIFEST)
-    protocol = "manifest" if os.path.isfile(manifest) else "auto"
-    _commit_maintained_table(
-        stored, path, batch_id, n_files=n_files, protocol=protocol
-    )
-    return resolve_maintained_table(path)
-
-
-_BATCH_MARK = "__last_batch_id"
-
-
-def _already_applied(stored, batch_id: int) -> bool:
-    """Exactly-once guard for foreachBatch maintainers: the stored
-    table carries the last applied batch id IN THE SAME atomic
-    overwrite, so a crash between the table write and the checkpoint
-    commit (at-least-once replay) is detected and the replayed batch
-    becomes a no-op instead of double-applying."""
-    if stored is None or _BATCH_MARK not in stored.columns:
-        return False
-    last = stored.agg(F.max(_BATCH_MARK)).first()[0]
-    return last is not None and last >= batch_id
-
-
 def apply_rollup_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -1268,24 +827,19 @@ def apply_rollup_batch(
         merge_rollups,
     )
 
-    spark = batch_df.sparkSession
-    stored = _read_maintained_table(spark, rollup_path)
-    if _already_applied(stored, batch_id):
-        return  # at-least-once replay of an applied batch: no-op
     inc = batch_df.groupBy(key_col).agg(
         F.count("*").alias("n"),
         F.sum(F.col(value_col).cast("decimal(28,6)")).alias("sum_value"),
     )
-    if stored is not None:
-        merged = merge_rollups(
-            [stored.drop(_BATCH_MARK), inc],
-            [key_col], sum_cols=("sum_value",), count_col="n",
+
+    def merge_fn(cur, batch):
+        if cur is None:
+            return batch
+        return merge_rollups(
+            [cur, batch], [key_col], sum_cols=("sum_value",), count_col="n"
         )
-    else:
-        merged = inc
-    # the rollup is |keys|-sized by contract -> one output file
-    merged = merged.withColumn(_BATCH_MARK, F.lit(batch_id))
-    _commit_maintained_table(merged, rollup_path, batch_id, n_files=1)
+
+    _merge(batch_df.sparkSession, rollup_path, inc, [key_col], merge_fn, batch_id)
 
 
 def maintain_rollup_stream(
@@ -1298,11 +852,10 @@ def maintain_rollup_stream(
     """Incremental rollup maintenance on a stream: each micro-batch's
     partial rollup (count + DECIMAL sum per key) merges into the stored
     rollup via ``history.merge_rollups`` — refresh cost is
-    O(batch + rollup), the history is never rescanned.  The rollup
-    table is rewritten atomically per batch (version-and-rename cost
-    of plain parquet; a Delta/Iceberg target would reduce it to a
-    MERGE); the checkpoint plus the ``__last_batch_id`` guard make the
-    loop exactly-once per micro-batch even under replay."""
+    O(batch + rollup), the history is never rescanned.  Each batch is
+    one Delta MERGE commit carrying its ``txn``; the checkpoint plus
+    that ``txn`` make the loop exactly-once per micro-batch even under
+    replay."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_rollup_batch(batch_df, batch_id, rollup_path, key_col, value_col)
@@ -1312,6 +865,37 @@ def maintain_rollup_stream(
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
+    )
+
+
+def _apply_drift_counts_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    counts_path: str,
+    group_col: str,
+    value_col: str,
+    lo: float,
+    hi: float,
+    n_bins: int = 10,
+) -> None:
+    """One micro-batch of ``maintain_drift_counts_stream``: the batch's
+    per-(group, bin) counts sum into the stored counts table."""
+    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators.quality import (
+        bin_counts,
+    )
+
+    def merge_fn(cur, batch):
+        if cur is None:
+            return batch
+        return (
+            cur.unionByName(batch)
+            .groupBy("__g", "__bin")
+            .agg(F.sum("__c").alias("__c"))
+        )
+
+    inc = bin_counts(batch_df, group_col, value_col, lo, hi, n_bins)
+    _merge(
+        batch_df.sparkSession, counts_path, inc, ["__g", "__bin"], merge_fn, batch_id
     )
 
 
@@ -1331,32 +915,13 @@ def maintain_drift_counts_stream(
     mergeable) sum into the stored counts table; the monitor computes
     PSI/JSD on demand from the stored table via
     ``quality.drift_from_counts`` without ever rescanning history.
-    Same atomic rewrite-per-batch contract as
-    ``maintain_rollup_stream`` (the counts table is
-    |groups|·n_bins-sized)."""
-    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators.quality import (
-        bin_counts,
-    )
-
-    spark = events.sparkSession
+    Same one-commit-per-batch contract as ``maintain_rollup_stream``
+    (the counts table is |groups|·n_bins-sized)."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        stored = _read_maintained_table(spark, counts_path)
-        if _already_applied(stored, batch_id):
-            return  # at-least-once replay of an applied batch: no-op
-        inc = bin_counts(batch_df, group_col, value_col, lo, hi, n_bins)
-        if stored is not None:
-            merged = (
-                stored.drop(_BATCH_MARK)
-                .unionByName(inc)
-                .groupBy("__g", "__bin")
-                .agg(F.sum("__c").alias("__c"))
-            )
-        else:
-            merged = inc
-        merged = merged.withColumn(_BATCH_MARK, F.lit(batch_id))
-        # |groups|*n_bins-sized by contract -> one output file
-        _commit_maintained_table(merged, counts_path, batch_id, n_files=1)
+        _apply_drift_counts_batch(
+            batch_df, batch_id, counts_path, group_col, value_col, lo, hi, n_bins
+        )
 
     return (
         events.writeStream.foreachBatch(write_batch)
@@ -1401,35 +966,33 @@ def session_transcripts_stream(
 
 
 def _scd2_merge(
-    stored: "DataFrame | None",
+    cur: "DataFrame | None",
     obs: DataFrame,
     key_col: str,
     ts_col: str,
     attr_cols: list[str],
 ) -> DataFrame:
-    """The SCD2 fold shared by both publish protocols: each affected
-    key's OPEN interval is replayed as a pseudo-event at its valid_from
-    and unioned with the batch's events, the batch-local SCD2 collapse
-    (timeseries.scd2_from_events) recomputes that key's intervals from
-    the open point forward, and the result replaces the affected keys'
-    open intervals (closed history is untouched).  ``stored`` may be
-    the whole table (bespoke path) or just the touched buckets' rows
-    (Delta path) — the fold only ever changes affected keys' rows, so
-    both slices are valid inputs."""
+    """The SCD2 fold, the ``merge_fn`` of ``apply_scd2_batch``: each
+    affected key's OPEN interval is replayed as a pseudo-event at its
+    valid_from and unioned with the batch's events, the batch-local
+    SCD2 collapse (timeseries.scd2_from_events) recomputes that key's
+    intervals from the open point forward, and the result replaces the
+    affected keys' open intervals (closed history is untouched).
+    ``cur`` is the touched buckets' rows, not the whole table: the
+    fold only ever changes affected keys' rows, and every affected key
+    lives in a touched bucket."""
     from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators.timeseries import (
         scd2_from_events,
     )
 
-    if stored is None:
+    if cur is None:
         return scd2_from_events(obs, key_col, ts_col, attr_cols)
-    if _BATCH_MARK in stored.columns:
-        stored = stored.drop(_BATCH_MARK)
     affected = obs.select(key_col).distinct()
-    open_iv = stored.filter(F.col("is_current")).join(
+    open_iv = cur.filter(F.col("is_current")).join(
         affected, key_col, "left_semi"
     )
-    keep_closed = stored.filter(~F.col("is_current"))
-    keep_other_open = stored.filter(F.col("is_current")).join(
+    keep_closed = cur.filter(~F.col("is_current"))
+    keep_other_open = cur.filter(F.col("is_current")).join(
         affected, key_col, "left_anti"
     )
     pseudo = open_iv.select(
@@ -1449,54 +1012,30 @@ def apply_scd2_batch(
     key_col: str,
     ts_col: str,
     attr_cols: list[str],
-    protocol: str = "auto",
     n_buckets: int = 16,
 ) -> None:
     """One micro-batch of SCD2 dimension maintenance, module-level for
     replay-contract testability (same pattern as apply_upsert_batch).
 
-    ``protocol='delta'`` publishes through
-    ``delta_lite.merge_touched``: the interval table's files are
-    hash-bucketed on the key, and a batch touching k keys reads +
-    rewrites only those buckets — publish cost O(batch + touched
-    buckets), flat as closed history accumulates.  ``protocol='auto'``
-    (the default) resolves via ``_resolve_auto_protocol``: NEW local
-    tables are DELTA-BORN (VERDICT r7 #3); existing bespoke tables and
-    object-store URI paths keep the atomic full-snapshot publish, and
-    ``'symlink'``/``'manifest'`` is the explicit opt-out."""
-    from ..sources import delta_lite
-
-    spark = batch_df.sparkSession
+    Publishes through ``delta_lite.merge_touched``: the interval
+    table's files are hash-bucketed on the key, and a batch touching k
+    keys reads + rewrites only those buckets — publish cost O(batch +
+    touched buckets), flat as closed history accumulates.  The batch's
+    ``txn`` makes a replay a no-op; without it the replayed events
+    would regenerate closed intervals that already exist (overlapping
+    rows)."""
     obs = batch_df.select(
         F.col(key_col), F.col(ts_col), *[F.col(a) for a in attr_cols]
     )
-    if protocol == "auto":
-        protocol = _resolve_auto_protocol(table_path)
-    if protocol == "delta":
-        if _delta_batch_applied(spark, table_path, batch_id):
-            # at-least-once replay of an applied batch: without this
-            # guard the replayed events would regenerate closed
-            # intervals that already exist (overlapping rows)
-            return
-        delta_lite.merge_touched(
-            spark,
-            table_path,
-            obs,
-            [key_col],
-            lambda cur, batch: _scd2_merge(cur, batch, key_col, ts_col, attr_cols),
-            n_buckets=n_buckets,
-            txn=(_TXN_APP, batch_id),
-        )
-        return
-    stored_raw = _read_maintained_table(spark, table_path)
-    if _already_applied(stored_raw, batch_id):
-        return  # at-least-once replay of an applied batch: no-op
-    merged = _scd2_merge(stored_raw, obs, key_col, ts_col, attr_cols)
-    merged = merged.withColumn(_BATCH_MARK, F.lit(batch_id))
-    # executor-side distributed write + atomic symlink publish: the
-    # O(table) rewrite never routes through driver memory, so a
-    # 100x-scale dimension costs IO, not a driver OOM
-    _commit_maintained_table(merged, table_path, batch_id)
+    _merge(
+        batch_df.sparkSession,
+        table_path,
+        obs,
+        [key_col],
+        lambda cur, batch: _scd2_merge(cur, batch, key_col, ts_col, attr_cols),
+        batch_id,
+        n_buckets=n_buckets,
+    )
 
 
 def maintain_scd2_stream(
@@ -1506,18 +1045,14 @@ def maintain_scd2_stream(
     key_col: str,
     ts_col: str,
     attr_cols: list[str],
-    protocol: str = "auto",
     n_buckets: int = 16,
 ):
     """Incremental SCD2 dimension maintenance on a stream: each
     micro-batch folds its attribute-change observations into the
     stored validity-interval table WITHOUT rescanning the event
     history — the lakehouse dimension-table pattern at the ingest
-    edge.  Refresh compute is O(batch + affected keys) on both
-    protocols; publish IO is O(touched buckets) on the Delta path
-    (``apply_scd2_batch``) vs O(table) on the bespoke snapshot path.
-    ``protocol='auto'`` (default) makes NEW local tables Delta-born;
-    bespoke is the explicit opt-out (see ``apply_scd2_batch``).
+    edge.  Refresh compute is O(batch + affected keys) and publish IO
+    is O(touched buckets) (``apply_scd2_batch``).
 
     Contract: events arrive in event-time order ACROSS batches per key
     (the standard CDC ingestion assumption); within a batch any order
@@ -1527,7 +1062,7 @@ def maintain_scd2_stream(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_scd2_batch(
             batch_df, batch_id, table_path, key_col, ts_col, attr_cols,
-            protocol=protocol, n_buckets=n_buckets,
+            n_buckets=n_buckets,
         )
 
     return (
@@ -1557,9 +1092,8 @@ def decontaminate_stream(
     Replay idempotence: each batch writes its own
     ``batch=<id>`` subdirectory with mode('overwrite'), so an
     at-least-once replay rewrites the same directory instead of
-    appending duplicates (the partitioned-append twin of the
-    maintainers' symlink protocol; a directory is finalized by the
-    checkpoint commit that follows it).
+    appending duplicates (a directory is finalized by the checkpoint
+    commit that follows it).
     """
     from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import (
         dedup,
@@ -1639,50 +1173,45 @@ def apply_heavy_hitters_batch(
     universe (URLs, tokens, user agents at 100 TB ingest) is the
     thing a maintainer must NOT attempt.
 
-    Same exactly-once contract as ``apply_rollup_batch``: the
-    ``__last_batch_id`` mark rides in the same atomic publish, so
-    at-least-once replays are no-ops.  The truncation window sorts
-    only the O(capacity + batch keys) summary, never the stream.
+    Same exactly-once contract as ``apply_rollup_batch``: the batch's
+    ``txn`` rides in the same atomic commit, so at-least-once replays
+    are no-ops.  The table lives in one bucket, so the merge sees the
+    whole summary; the truncation window sorts only that
+    O(capacity + batch keys) summary, never the stream.
     """
     from pyspark.sql import Window
 
-    spark = batch_df.sparkSession
-    stored = _read_maintained_table(spark, path)
-    if _already_applied(stored, batch_id):
-        return
     inc = batch_df.groupBy(F.col(key_col).alias("key")).agg(
         F.count("*").cast("bigint").alias("n")
     )
-    eps_prev = 0
-    if stored is not None:
-        eps_prev = stored.agg(F.max(_HH_EPS)).first()[0] or 0
-        prev = stored.select("key", "n")
-        merged = (
-            prev.join(inc, "key", "full_outer")
-            .select(
+
+    def merge_fn(cur, batch):
+        eps_prev = 0
+        merged = batch
+        if cur is not None:
+            eps_prev = cur.agg(F.max(_HH_EPS)).first()[0] or 0
+            prev = cur.select("key", "n")
+            merged = prev.join(batch, "key", "full_outer").select(
                 "key",
                 (
-                    F.coalesce(prev["n"], F.lit(0)) + F.coalesce(inc["n"], F.lit(0))
+                    F.coalesce(prev["n"], F.lit(0)) + F.coalesce(batch["n"], F.lit(0))
                 ).alias("n"),
             )
+        ranked = merged.withColumn(
+            "__rk",
+            F.row_number().over(Window.orderBy(F.desc("n"), F.asc("key"))),
         )
-    else:
-        merged = inc
-    ranked = merged.withColumn(
-        "__rk",
-        F.row_number().over(Window.orderBy(F.desc("n"), F.asc("key"))),
-    )
-    # largest truncated count = the (capacity+1)-th row, if any: a
-    # 1-row bounded action over the capacity-sized summary
-    thr_row = ranked.filter(F.col("__rk") == capacity + 1).select("n").first()
-    eps_new = eps_prev + (thr_row["n"] if thr_row is not None else 0)
-    kept = (
-        ranked.filter(F.col("__rk") <= capacity)
-        .select("key", "n")
-        .withColumn(_HH_EPS, F.lit(eps_new).cast("bigint"))
-        .withColumn(_BATCH_MARK, F.lit(batch_id))
-    )
-    _commit_maintained_table(kept, path, batch_id, n_files=1)
+        # largest truncated count = the (capacity+1)-th row, if any: a
+        # 1-row bounded action over the capacity-sized summary
+        thr_row = ranked.filter(F.col("__rk") == capacity + 1).select("n").first()
+        eps_new = eps_prev + (thr_row["n"] if thr_row is not None else 0)
+        return (
+            ranked.filter(F.col("__rk") <= capacity)
+            .select("key", "n")
+            .withColumn(_HH_EPS, F.lit(eps_new).cast("bigint"))
+        )
+
+    _merge(batch_df.sparkSession, path, inc, ["key"], merge_fn, batch_id)
 
 
 def maintain_heavy_hitters_stream(
@@ -1695,11 +1224,11 @@ def maintain_heavy_hitters_stream(
     """Streaming heavy hitters (trending keys) with BOUNDED state: each
     micro-batch's per-key counts merge into a Misra–Gries summary of at
     most ``capacity`` rows (``apply_heavy_hitters_batch``).  Read the
-    live table and sort by ``n`` for the current top-k; the stored
-    ``__eps`` column is the uniform undercount bound (true count ≤
-    n + eps for every surviving key; keys with true count > eps are
-    guaranteed present).  Exactly-once per micro-batch via the
-    ``__last_batch_id`` mark + atomic symlink publish."""
+    table with ``read_maintained_table`` and sort by ``n`` for the
+    current top-k; the stored ``__eps`` column is the uniform
+    undercount bound (true count ≤ n + eps for every surviving key;
+    keys with true count > eps are guaranteed present).  Exactly-once
+    per micro-batch via the ``txn`` in each batch's commit."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_heavy_hitters_batch(batch_df, batch_id, path, key_col, capacity)
@@ -1712,6 +1241,12 @@ def maintain_heavy_hitters_stream(
     )
 
 
+# the maintained HLL table stores the register index under this name:
+# ``__bucket`` (hll_register_table's name) is the column delta_lite
+# stages its merge buckets under
+_HLL_REGISTER = "__register"
+
+
 def apply_hll_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -1722,33 +1257,33 @@ def apply_hll_batch(
 ) -> None:
     """One micro-batch of bounded distinct-count maintenance: the
     batch's HLL register table (sketches.hll_register_table) merges
-    into the stored one by per-(group, bucket) MAX — associative,
+    into the stored one by per-(group, register) MAX — associative,
     commutative, and IDEMPOTENT, so the merged sketch is independent
     of batch boundaries and re-delivery order (Agarwal et al.,
     mergeable summaries).  State is at most |groups|·2^b rows no
     matter how many distinct keys the stream has seen — the exact
     per-key dedup a maintainer must NOT attempt at 100 TB ingest
     (distinct users per URL over a year of events).  Same
-    exactly-once contract as the other maintainers: __last_batch_id
-    rides in the same atomic publish.  Read the estimate off the live
-    table with sketches.hll_estimate_from_registers."""
+    exactly-once contract as the other maintainers: the batch's
+    ``txn`` rides in the same atomic commit.  The stored table is
+    ``(group_col, _HLL_REGISTER, __rho)``; read the estimate off it
+    with sketches.hll_estimate_from_registers."""
     from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators.sketches import (
         hll_register_table,
         merge_hll_registers,
     )
 
-    spark = batch_df.sparkSession
-    stored = _read_maintained_table(spark, path)
-    if _already_applied(stored, batch_id):
-        return
-    inc = hll_register_table(batch_df, group_col, key_col, b=b)
-    if stored is not None:
-        merged = merge_hll_registers([stored.drop(_BATCH_MARK), inc])
-    else:
-        merged = inc
-    merged = merged.withColumn(_BATCH_MARK, F.lit(batch_id))
-    # |groups|*2^b-sized by contract -> one output file
-    _commit_maintained_table(merged, path, batch_id, n_files=1)
+    inc = hll_register_table(batch_df, group_col, key_col, b=b).withColumnRenamed(
+        "__bucket", _HLL_REGISTER
+    )
+
+    def merge_fn(cur, batch):
+        return batch if cur is None else merge_hll_registers([cur, batch])
+
+    _merge(
+        batch_df.sparkSession, path, inc, [group_col, _HLL_REGISTER], merge_fn,
+        batch_id,
+    )
 
 
 def maintain_hll_stream(
@@ -1763,7 +1298,7 @@ def maintain_hll_stream(
     per-group HLL register table (|groups|·2^b rows) is the entire
     cross-batch state; estimates read off the live table at any time
     without touching history.  Exactly-once per micro-batch via the
-    __last_batch_id mark + atomic publish."""
+    ``txn`` in each batch's commit."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_hll_batch(batch_df, batch_id, path, group_col, key_col, b)
@@ -1799,9 +1334,9 @@ def apply_reservoir_batch(
     State is O(|groups|·k) rows regardless of stream length; per batch
     the only work is one union + one window over that summary plus the
     batch's own rows — the stream is never re-scanned or re-sorted.
-    Replays are no-ops via the ``__last_batch_id`` mark, and the merge
-    itself is also idempotent (duplicate (group, id) rows collapse
-    before ranking), so even a torn batch converges.
+    Replays are no-ops via the batch's ``txn``, and the merge itself
+    is also idempotent (duplicate (group, id) rows collapse before
+    ranking), so even a torn batch converges.
 
     Uniformity: md5 priorities are pseudo-uniform and independent of
     the payload, so each group's k survivors are a uniform-without-
@@ -1810,10 +1345,6 @@ def apply_reservoir_batch(
     """
     from pyspark.sql import Window
 
-    spark = batch_df.sparkSession
-    stored = _read_maintained_table(spark, path)
-    if _already_applied(stored, batch_id):
-        return
     pri = F.conv(
         F.substring(
             F.md5(F.concat(F.lit("res:"), F.col(id_col).cast("string"))), 1, 8
@@ -1823,19 +1354,20 @@ def apply_reservoir_batch(
     ).cast("bigint")
     keep_cols = [group_col, id_col, *payload_cols]
     inc = batch_df.select(*keep_cols).withColumn("__pri", pri)
-    if stored is not None:
-        merged = stored.select(*keep_cols, "__pri").unionByName(inc)
-    else:
-        merged = inc
     w = Window.partitionBy(group_col).orderBy(F.asc("__pri"), F.asc(id_col))
-    kept = (
-        merged.dropDuplicates([group_col, id_col])
-        .withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= k)
-        .drop("__rk")
-        .withColumn(_BATCH_MARK, F.lit(batch_id))
+
+    def merge_fn(cur, batch):
+        merged = batch if cur is None else cur.unionByName(batch)
+        return (
+            merged.dropDuplicates([group_col, id_col])
+            .withColumn("__rk", F.row_number().over(w))
+            .filter(F.col("__rk") <= k)
+            .drop("__rk")
+        )
+
+    _merge(
+        batch_df.sparkSession, path, inc, [group_col, id_col], merge_fn, batch_id
     )
-    _commit_maintained_table(kept, path, batch_id, n_files=1)
 
 
 def apply_cms_batch(
@@ -1854,31 +1386,23 @@ def apply_cms_batch(
     seen (the property the batch-twin oracle hash-checks).  State is
     ≤ depth·width rows forever; per batch the work is the batch's own
     explode+aggregate plus a grid-sized outer join.  Exactly-once via
-    the shared ``__last_batch_id`` mark + atomic publish."""
+    the batch's ``txn`` in the same atomic commit."""
     from ..operators.sketches import cms_register_table
 
-    spark = batch_df.sparkSession
-    stored = _read_maintained_table(spark, path)
-    if _already_applied(stored, batch_id):
-        return
     inc = cms_register_table(batch_df, key_col, depth, width)
-    if stored is not None:
-        prev = stored.select("d", "bucket", "n")
-        merged = (
-            prev.join(inc, ["d", "bucket"], "full_outer")
-            .select(
-                "d",
-                "bucket",
-                (
-                    F.coalesce(prev["n"], F.lit(0)) + F.coalesce(inc["n"], F.lit(0))
-                ).cast("bigint").alias("n"),
-            )
+
+    def merge_fn(cur, batch):
+        if cur is None:
+            return batch
+        return cur.join(batch, ["d", "bucket"], "full_outer").select(
+            "d",
+            "bucket",
+            (
+                F.coalesce(cur["n"], F.lit(0)) + F.coalesce(batch["n"], F.lit(0))
+            ).cast("bigint").alias("n"),
         )
-    else:
-        merged = inc
-    _commit_maintained_table(
-        merged.withColumn(_BATCH_MARK, F.lit(batch_id)), path, batch_id, n_files=1
-    )
+
+    _merge(batch_df.sparkSession, path, inc, ["d", "bucket"], merge_fn, batch_id)
 
 
 def maintain_cms_stream(
@@ -1917,7 +1441,7 @@ def maintain_reservoir_stream(
     """Streaming per-group uniform sample with BOUNDED state: the
     |groups|·k bottom-k table is the entire cross-batch state and is
     readable at any time.  Exactly-once per micro-batch via the
-    __last_batch_id mark + atomic publish."""
+    ``txn`` in each batch's commit."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_reservoir_batch(
@@ -1937,8 +1461,6 @@ def _dir_bytes(path: str) -> int:
     cheap plan-build-time size signal the adaptive broadcast guard in
     ``apply_lsh_dedup_batch`` uses; object-store deployments swap this
     for a listing call."""
-    import os
-
     total = 0
     for root, _dirs, files in os.walk(path):
         for f in files:
@@ -1993,8 +1515,6 @@ def apply_lsh_dedup_batch(
         num_hashes=num_hashes, shingle_n=shingle_n, hash_fn="xxhash64",
     )
     new_rows = batch_df.select(id_col, text_col).join(sigs_new, id_col)
-
-    import os
 
     mh_cols = [f"mh_{i}" for i in range(num_hashes)]
     if os.path.isdir(index_path) and any(
@@ -2127,11 +1647,7 @@ def apply_experiment_units_batch(
     split, epoch micros) is fixed at experiment start by contract —
     the property that makes per-user counts mergeable."""
     from ..operators.experiments import hash_assign
-    from ..sources import delta_lite
 
-    spark = batch_df.sparkSession
-    if _delta_batch_applied(spark, table_path, batch_id):
-        return  # at-least-once replay of an applied batch: no-op
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     deltas = (
         batch_df.groupBy("user_id")
@@ -2176,14 +1692,9 @@ def apply_experiment_units_batch(
             F.coalesce(F.col("carm"), F.col("arm")).alias("arm"),
         )
 
-    delta_lite.merge_touched(
-        spark,
-        table_path,
-        deltas,
-        ["user_id"],
-        merge_fn,
-        n_buckets=n_buckets,
-        txn=(_TXN_APP, batch_id),
+    _merge(
+        batch_df.sparkSession, table_path, deltas, ["user_id"], merge_fn,
+        batch_id, n_buckets=n_buckets,
     )
 
 

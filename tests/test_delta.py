@@ -119,11 +119,10 @@ def test_schema_evolution_rides_metadata_action(spark, tmp_path):
 
 
 def test_upsert_maintainer_publishes_through_delta_log(spark, sf_dir, tmp_path):
-    """The maintained-table integration: apply_upsert_batch with
-    protocol='delta' publishes snapshots as Delta commits; a replayed
-    batch id is a no-op (idempotence guard reads back through the
-    log); auto-detection keeps subsequent batches on the Delta path;
-    history shows one version per applied batch."""
+    """The maintained-table integration: apply_upsert_batch publishes
+    each batch as a Delta commit; a replayed batch id is a no-op
+    (idempotence guard reads back through the log); history shows one
+    version per applied batch."""
     e = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .select("event_id", "ts", "user_id", "event_type", "value")
@@ -131,7 +130,7 @@ def test_upsert_maintainer_publishes_through_delta_log(spark, sf_dir, tmp_path):
     t = str(tmp_path / "profiles")
     for b in range(3):
         batch = e.filter(F.col("event_id") % 3 == b)
-        jobs.apply_upsert_batch(batch, b, t, ["user_id"], protocol="delta")
+        jobs.apply_upsert_batch(batch, b, t, ["user_id"])
     assert delta_lite.is_delta_table(t)
     assert delta_lite.current_version(t) == 2
     # replay of an applied batch: no new commit
@@ -153,8 +152,7 @@ def test_upsert_maintainer_publishes_through_delta_log(spark, sf_dir, tmp_path):
 
 
 def test_upsert_stream_on_delta_protocol_end_to_end(spark, tmp_path):
-    """Full streaming path: upsert_stream(protocol='delta') over two
-    deliveries; the live table reads back through the Delta log and a
+    """Full streaming path: upsert_stream over two deliveries; the live table reads back through the Delta log and a
     checkpoint-wiped replay leaves it untouched."""
     import datetime as dt
 
@@ -173,12 +171,10 @@ def test_upsert_stream_on_delta_protocol_end_to_end(spark, tmp_path):
     spark.createDataFrame(rows, schema).write.parquet(land)
     jobs.upsert_stream(
         jobs.read_event_stream(spark, land), table, ["user_id"], cp,
-        protocol="delta",
     ).awaitTermination()
     spark.createDataFrame(late, schema).write.mode("append").parquet(land)
     jobs.upsert_stream(
         jobs.read_event_stream(spark, land), table, ["user_id"], cp,
-        protocol="delta",
     ).awaitTermination()
     want = {(7, "purchase"), (8, "click"), (9, "click")}
     got = {
@@ -187,8 +183,8 @@ def test_upsert_stream_on_delta_protocol_end_to_end(spark, tmp_path):
     }
     assert got == want
     v = delta_lite.current_version(table)
-    # checkpoint-wiped replay: every batch re-delivers, the batch-id
-    # mark skips them all, no new Delta commit appears
+    # checkpoint-wiped replay: every batch re-delivers, the txn in the
+    # log skips them all, no new Delta commit appears
     import shutil
 
     shutil.rmtree(cp)
@@ -339,7 +335,7 @@ def test_compact_aborts_on_concurrent_commit(spark, tmp_path):
 
 
 def test_scd2_delta_batches_match_batch_collapse(spark, sf_dir, tmp_path):
-    """apply_scd2_batch(protocol='delta'): three time-ordered deliveries
+    """apply_scd2_batch: three time-ordered deliveries
     maintain the interval table through touched-file MERGE commits; the
     final snapshot equals the one-pass batch collapse, and per-batch
     commits only cycle the buckets their keys touch."""
@@ -364,8 +360,7 @@ def test_scd2_delta_batches_match_batch_collapse(spark, sf_dir, tmp_path):
     t = str(tmp_path / "scd")
     for b, ch in enumerate(chunks):
         jobs.apply_scd2_batch(
-            ch, b, t, "user_id", "ts", ["event_type"], protocol="delta",
-            n_buckets=8,
+            ch, b, t, "user_id", "ts", ["event_type"], n_buckets=8,
         )
     # replayed batch: txn guard no-ops, no new commit
     v = delta_lite.current_version(t)
@@ -433,21 +428,6 @@ def test_optimize_zorder_preserves_content_and_enables_two_col_pruning(spark, tm
     # pre-optimize snapshot still time-travels
     at0 = {tuple(r) for r in delta_lite.read_delta(spark, t, version=0).collect()}
     assert at0 == before
-
-
-def test_compact_maintained_table_routes_delta_tables(spark, tmp_path):
-    """compact_maintained_table on a Delta-published table must go
-    through the log (reading the raw table root would resurrect every
-    superseded version's files)."""
-    t = str(tmp_path / "t")
-    for b in range(3):
-        df = spark.createDataFrame([(b, f"x{b}", b)], "user_id long, v string, ts long")
-        jobs.apply_upsert_batch(df, b, t, ["user_id"], protocol="delta")
-    before = {(r["user_id"], r["v"]) for r in delta_lite.read_delta(spark, t).collect()}
-    jobs.compact_maintained_table(spark, t, n_files=1)
-    after = {(r["user_id"], r["v"]) for r in delta_lite.read_delta(spark, t).collect()}
-    assert after == before
-    assert delta_lite.current_version(t) == 3  # one OPTIMIZE commit
 
 
 def test_upsert_delta_schema_evolution_adds_and_drops_columns(spark, tmp_path):
@@ -968,28 +948,6 @@ def test_temporal_key_timezone_handling():
     # aware-vs-aware prunes by instant: bound far in the future (aware)
     aware_lo = dt.datetime(2030, 1, 1, tzinfo=dt.timezone.utc)
     assert delta_lite._maybe_prunable(add, "ts", aware_lo, None) is True
-
-
-def test_auto_protocol_empty_dir_is_delta_born(tmp_path):
-    """ADVICE r8 (low): an empty directory (mkdir leftover, failed run
-    scaffolding) is NOT an existing bespoke table — auto still resolves
-    to 'delta'.  Committed bespoke state and non-empty foreign dirs keep
-    bespoke resolution."""
-    empty = str(tmp_path / "empty")
-    os.makedirs(empty)
-    assert jobs._resolve_auto_protocol(empty) == "delta"
-    fresh = str(tmp_path / "nonexistent")
-    assert jobs._resolve_auto_protocol(fresh) == "delta"
-    foreign = str(tmp_path / "foreign")
-    os.makedirs(foreign)
-    open(os.path.join(foreign, "data.parquet"), "w").close()
-    assert jobs._resolve_auto_protocol(foreign) == "auto"
-    # committed bespoke state (versions dir with _SUCCESS) stays bespoke
-    bespoke = str(tmp_path / "bespoke")
-    vdir = os.path.join(bespoke + ".versions", "v00000001")
-    os.makedirs(vdir)
-    open(os.path.join(vdir, "_SUCCESS"), "w").close()
-    assert jobs._resolve_auto_protocol(bespoke) == "auto"
 
 
 def test_read_changes_reads_only_changed_files(spark, tmp_path):

@@ -599,7 +599,7 @@ def test_hll_registers_invariant_under_arbitrary_splits(spark):
         assert abs(est[g] - n) <= 0.2 * n, (g, est[g], n)
 
 
-def test_misra_gries_bound_on_random_streams(spark):
+def test_misra_gries_bound_on_random_streams(spark, tmp_path):
     """On seeded random skewed streams cut into arbitrary batches: every
     surviving key's count obeys n <= true <= n + eps, and every key
     with true count > eps survives — the two MG guarantees, checked
@@ -612,7 +612,7 @@ def test_misra_gries_bound_on_random_streams(spark):
     # zipf-ish skew over 40 keys
     keys = [f"k{min(int(rng.paretovariate(1.0)), 40)}" for _ in range(4000)]
     true = Counter(keys)
-    path = f"/tmp/mg_prop_{rng.randint(0, 10**9)}"
+    path = str(tmp_path / "mg_prop")
     n_batches = 4
     for b in range(n_batches):
         batch = keys[b::n_batches]
@@ -620,7 +620,7 @@ def test_misra_gries_bound_on_random_streams(spark):
             spark.createDataFrame([(k,) for k in batch], "k string"),
             b, path, key_col="k", capacity=8,
         )
-    out = spark.read.parquet(path)
+    out = jobs.read_maintained_table(spark, path)
     eps = out.agg(F.max("__eps")).first()[0]
     got = {r["key"]: r["n"] for r in out.collect()}
     assert len(got) <= 8
@@ -629,10 +629,6 @@ def test_misra_gries_bound_on_random_streams(spark):
     for k, t in true.items():
         if t > eps:
             assert k in got, (k, t, eps)
-    import shutil as _sh
-
-    _sh.rmtree(path, ignore_errors=True)
-    _sh.rmtree(f"{path}.versions", ignore_errors=True)
 
 
 def test_canonical_url_idempotent_on_random_urls(spark):

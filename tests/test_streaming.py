@@ -144,10 +144,8 @@ def test_upsert_stream_latest_per_key(spark, event_dir, tmp_path):
     """foreachBatch MERGE: after two deliveries the keyed table holds
     exactly one row per user — that user's latest event overall (the
     second delivery contains only later events, so update-wins equals
-    global argmax by ts).  Under the r8 default a NEW table is
-    DELTA-BORN (protocol='auto' → touched-file Delta publish), so this
-    also pins the default's end-to-end semantics; reads go through
-    read_maintained_table (protocol-agnostic)."""
+    global argmax by ts).  The table is a Delta table (touched-file
+    publish) and reads go through read_maintained_table."""
     from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.sources import (
         delta_lite,
     )
@@ -166,7 +164,7 @@ def test_upsert_stream_latest_per_key(spark, event_dir, tmp_path):
         jobs.read_event_stream(spark, land), table, ["user_id"], cp
     )
     q.awaitTermination()
-    assert delta_lite.is_delta_table(table)  # new table is Delta-born
+    assert delta_lite.is_delta_table(table)
     t1 = jobs.read_maintained_table(spark, table)
     assert t1.count() == early.select("user_id").distinct().count()
 
@@ -329,7 +327,7 @@ def test_streaming_rollup_maintenance_matches_batch(spark, event_dir, tmp_path):
 
     got = {
         r["event_type"]: (r["n"], float(r["sum_value"]))
-        for r in spark.read.parquet(str(rollup)).collect()
+        for r in jobs.read_maintained_table(spark, str(rollup)).collect()
     }
     want = {
         r["event_type"]: (r["n"], float(r["s"]))
@@ -362,7 +360,7 @@ def test_streaming_drift_maintenance_matches_batch(spark, event_dir, tmp_path):
     q.awaitTermination()
     assert q.lastProgress["batchId"] >= 3
 
-    stored = spark.read.parquet(str(counts))
+    stored = jobs.read_maintained_table(spark, str(counts))
     got = {
         r["event_type"]: (r["n"], r["psi"], r["jsd"])
         for r in quality.drift_from_counts(
@@ -434,8 +432,7 @@ def test_streaming_scd2_maintenance_matches_batch(spark, event_dir, tmp_path):
         )
         q.awaitTermination()
 
-    # r8 default: the new table is Delta-born — read through the
-    # protocol-agnostic reader (the log snapshot, not the raw dir)
+    # read through the Delta log snapshot, not the raw dir
     got = {
         (r["user_id"], r["event_type"], r["valid_from"], r["valid_to"], r["is_current"])
         for r in jobs.read_maintained_table(spark, table).collect()
@@ -450,35 +447,41 @@ def test_streaming_scd2_maintenance_matches_batch(spark, event_dir, tmp_path):
 
 
 def test_foreach_batch_replay_guard_helpers(spark, tmp_path):
-    """The exactly-once guard: _already_applied skips batch ids at or
-    below the stored mark (the at-least-once replay case) and admits
-    new ones; _read_maintained_table returns None only for a missing
-    path and PROPAGATES real read errors instead of silently resetting
-    state."""
+    """The exactly-once guard: _delta_batch_applied skips batch ids at
+    or below the committed txn (the at-least-once replay case) and
+    admits new ones; read_maintained_table returns None only when
+    nothing is committed and PROPAGATES real read errors instead of
+    silently resetting state."""
+    import os
+
     import pytest as _pt
 
-    stored = spark.createDataFrame(
-        [("click", 5, 3), ("view", 2, 3)],
-        "event_type string, n long, __last_batch_id long",
+    table = str(tmp_path / "guarded")
+    assert jobs._delta_batch_applied(table, 0) is False  # first batch
+    batch = spark.createDataFrame(
+        [(1, "click", 5.0), (2, "view", 2.0)],
+        "event_id long, event_type string, value double",
     )
-    assert jobs._already_applied(stored, 3) is True   # replay
-    assert jobs._already_applied(stored, 2) is True   # older replay
-    assert jobs._already_applied(stored, 4) is False  # new batch
-    assert jobs._already_applied(None, 0) is False    # first batch
-    # legacy table without the mark: treated as not-applied
-    legacy = stored.drop("__last_batch_id")
-    assert jobs._already_applied(legacy, 0) is False
+    jobs.apply_rollup_batch(batch, 3, table)
+    assert jobs._delta_batch_applied(table, 3) is True   # replay
+    assert jobs._delta_batch_applied(table, 2) is True   # older replay
+    assert jobs._delta_batch_applied(table, 4) is False  # new batch
 
-    missing = jobs._read_maintained_table(spark, str(tmp_path / "nope"))
+    missing = jobs.read_maintained_table(spark, str(tmp_path / "nope"))
     assert missing is None
     # a CORRUPT table must raise, not silently become "first batch"
-    bad = tmp_path / "corrupt"
-    bad.mkdir()
-    (bad / "part-00000.parquet").write_bytes(b"this is not parquet")
+    for name in os.listdir(table):
+        if name.endswith(".parquet"):
+            with open(os.path.join(table, name), "wb") as fh:
+                fh.write(b"this is not parquet")
     with _pt.raises(Exception):
-        df = jobs._read_maintained_table(spark, str(bad))
-        if df is not None:  # force the read if lazily deferred
-            df.collect()
+        jobs.read_maintained_table(spark, table).collect()
+    # ... and so must a corrupt log
+    with open(os.path.join(table, "_delta_log", f"{0:020d}.json"), "w") as fh:
+        fh.write("{not json")
+    with _pt.raises(Exception):
+        jobs.read_maintained_table(spark, table)
+
 
 def test_rollup_batch_replay_is_idempotent(spark, event_dir, tmp_path):
     """The at-least-once replay contract, exercised on the real apply
@@ -495,15 +498,15 @@ def test_rollup_batch_replay_is_idempotent(spark, event_dir, tmp_path):
 
     jobs.apply_rollup_batch(b0, 0, rollup)
     first = {r["event_type"]: (r["n"], float(r["sum_value"]))
-             for r in spark.read.parquet(rollup).collect()}
+             for r in jobs.read_maintained_table(spark, rollup).collect()}
     # crash-replay of batch 0: same id re-delivered -> no double count
     jobs.apply_rollup_batch(b0, 0, rollup)
     assert {r["event_type"]: (r["n"], float(r["sum_value"]))
-            for r in spark.read.parquet(rollup).collect()} == first
+            for r in jobs.read_maintained_table(spark, rollup).collect()} == first
     # the NEXT batch still applies on top
     jobs.apply_rollup_batch(b1, 1, rollup)
     got = {r["event_type"]: (r["n"], float(r["sum_value"]))
-           for r in spark.read.parquet(rollup).collect()}
+           for r in jobs.read_maintained_table(spark, rollup).collect()}
     want = {r["event_type"]: (r["n"], float(r["s"]))
             for r in src.groupBy("event_type").agg(
                 F.count("*").alias("n"),
@@ -513,82 +516,7 @@ def test_rollup_batch_replay_is_idempotent(spark, event_dir, tmp_path):
     # and replaying batch 1 after the fact is also a no-op
     jobs.apply_rollup_batch(b1, 1, rollup)
     assert {r["event_type"]: (r["n"], float(r["sum_value"]))
-            for r in spark.read.parquet(rollup).collect()} == want
-
-
-def test_rollup_batch_migrates_legacy_table_without_mark(spark, tmp_path):
-    """A rollup table written before the replay guard existed (no
-    __last_batch_id column) must merge cleanly and come out upgraded
-    with the mark."""
-    from pyspark.sql import functions as F
-
-    rollup = str(tmp_path / "legacy")
-    spark.createDataFrame(
-        [("click", 10, 100.0)], "event_type string, n long, sum_value double"
-    ).select(
-        "event_type", "n", F.col("sum_value").cast("decimal(28,6)").alias("sum_value")
-    ).write.parquet(rollup)
-
-    batch = spark.createDataFrame(
-        [(1, "click", 5.0), (2, "view", 7.0)],
-        "event_id long, event_type string, value double",
-    )
-    jobs.apply_rollup_batch(batch, 0, rollup)
-    out = spark.read.parquet(rollup)
-    assert "__last_batch_id" in out.columns
-    got = {r["event_type"]: (r["n"], float(r["sum_value"])) for r in out.collect()}
-    assert got == {"click": (11, 105.0), "view": (1, 7.0)}
-
-
-def test_commit_maintained_table_atomic_symlink_protocol(spark, tmp_path):
-    """The maintained-table publish protocol: the live path is a
-    symlink atomically retargeted per batch; a crash BEFORE the swap
-    (simulated: version dir written, no publish) leaves the previous
-    version live; leftover temp links from a crashed publish are
-    tolerated on replay; old versions are garbage-collected down to
-    live + predecessor."""
-    import os
-
-    path = str(tmp_path / "tbl")
-    v0 = spark.createDataFrame([(1, "a")], "k long, v string")
-    v1 = spark.createDataFrame([(1, "b"), (2, "c")], "k long, v string")
-
-    jobs._commit_maintained_table(v0, path, 0, n_files=1)
-    assert os.path.islink(path)
-    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [(1, "a")]
-
-    # crash before swap: a new version dir exists but the live symlink
-    # still serves the old data
-    stale = os.path.join(f"{path}.versions", f"v{1:020d}")
-    v1.coalesce(1).write.mode("overwrite").parquet(stale)
-    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [(1, "a")]
-    # ... and a leftover temp link from the crashed publish is replaced
-    os.symlink(stale, f"{path}.publish.1")
-    jobs._commit_maintained_table(v1, path, 1, n_files=1)
-    got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
-    assert got == [(1, "b"), (2, "c")]
-
-    # GC keeps at most live + predecessor
-    jobs._commit_maintained_table(v1, path, 2, n_files=1)
-    jobs._commit_maintained_table(v1, path, 3, n_files=1)
-    kept = sorted(os.listdir(f"{path}.versions"))
-    assert kept == [f"v{2:020d}", f"v{3:020d}"]
-
-
-def test_commit_maintained_table_migrates_real_directory(spark, tmp_path):
-    """A pre-protocol table (a REAL parquet directory at the live
-    path) is renamed into the versions dir once and the symlink
-    protocol takes over, preserving readability throughout."""
-    import os
-
-    path = str(tmp_path / "legacy_tbl")
-    spark.createDataFrame([(9, "z")], "k long, v string").write.parquet(path)
-    assert os.path.isdir(path) and not os.path.islink(path)
-
-    nxt = spark.createDataFrame([(9, "y")], "k long, v string")
-    jobs._commit_maintained_table(nxt, path, 0, n_files=1)
-    assert os.path.islink(path)
-    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [(9, "y")]
+            for r in jobs.read_maintained_table(spark, rollup).collect()} == want
 
 
 def test_decontaminate_stream_matches_batch_and_replays_idempotently(
@@ -651,7 +579,7 @@ def test_streaming_heavy_hitters_exact_when_capacity_not_binding(
     q.awaitTermination()
     assert q.lastProgress["batchId"] >= 3  # genuinely multi-batch
 
-    out = spark.read.parquet(hh)
+    out = jobs.read_maintained_table(spark, hh)
     got = {r["key"]: r["n"] for r in out.collect()}
     want = {
         r["event_type"]: r["n"]
@@ -675,17 +603,19 @@ def test_heavy_hitters_bound_holds_under_truncation(spark, tmp_path):
     )
     batch = spark.createDataFrame(rows, "k string")
     jobs.apply_heavy_hitters_batch(batch, 0, hh, key_col="k", capacity=2)
-    first = spark.read.parquet(hh)
+    first = jobs.read_maintained_table(spark, hh)
     eps0 = first.agg(F.max("__eps")).first()[0]
     got0 = {r["key"]: r["n"] for r in first.collect()}
     assert set(got0) == {"hot", "warm"}   # capacity 2 keeps the top 2
     assert eps0 == 6                       # largest truncated count
     # replay of batch 0: no-op
     jobs.apply_heavy_hitters_batch(batch, 0, hh, key_col="k", capacity=2)
-    assert {r["key"]: r["n"] for r in spark.read.parquet(hh).collect()} == got0
+    assert {
+        r["key"]: r["n"] for r in jobs.read_maintained_table(spark, hh).collect()
+    } == got0
 
     jobs.apply_heavy_hitters_batch(batch, 1, hh, key_col="k", capacity=2)
-    out = spark.read.parquet(hh)
+    out = jobs.read_maintained_table(spark, hh)
     eps1 = out.agg(F.max("__eps")).first()[0]
     got1 = {r["key"]: r["n"] for r in out.collect()}
     true = {"hot": 120, "warm": 60, "cold_a": 12, "cold_b": 8}
@@ -704,11 +634,13 @@ def test_upsert_batch_replay_is_idempotent_and_keeps_table_live(
 ):
     """ADVICE r4 (high): replaying an upsert batch whose commit already
     landed (crash between publish and checkpoint commit) must be a
-    no-op — the pre-fix code rebuilt `merged` lazily over the live
-    version dir and then overwrote that same dir, destroying the table
-    it was reading.  Asserted: same rows, same live version dir, table
-    readable throughout; the NEXT batch still applies."""
-    import os
+    no-op — an early version rebuilt the merge lazily over the live
+    data and then overwrote that same data, destroying the table it
+    was reading.  Asserted: same rows, no new commit, table readable
+    throughout; the NEXT batch still applies."""
+    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.sources import (
+        delta_lite,
+    )
 
     src = spark.read.parquet(event_dir)
     mid = src.select(F.unix_timestamp("ts").alias("s")).approxQuantile(
@@ -718,140 +650,31 @@ def test_upsert_batch_replay_is_idempotent_and_keeps_table_live(
     late = src.filter(F.unix_timestamp("ts") > mid)
     table = str(tmp_path / "ups_replay")
 
-    # bespoke symlink protocol EXPLICIT since r8 (auto now makes new
-    # tables Delta-born); this test covers the bespoke crash-replay path
-    jobs.apply_upsert_batch(early, 0, table, ["user_id"], protocol="symlink")
-    live0 = os.path.realpath(table)
-    rows0 = {
-        (r["user_id"], r["ts"])
-        for r in spark.read.parquet(table).select("user_id", "ts").collect()
-    }
-    # crash-replay of batch 0: no rewrite, no destroyed version dir
-    jobs.apply_upsert_batch(early, 0, table, ["user_id"], protocol="symlink")
-    assert os.path.realpath(table) == live0
-    assert {
-        (r["user_id"], r["ts"])
-        for r in spark.read.parquet(table).select("user_id", "ts").collect()
-    } == rows0
+    def rows():
+        return {
+            (r["user_id"], r["ts"])
+            for r in jobs.read_maintained_table(spark, table)
+            .select("user_id", "ts")
+            .collect()
+        }
 
-    jobs.apply_upsert_batch(late, 1, table, ["user_id"], protocol="symlink")
-    got = {
-        (r["user_id"], r["ts"])
-        for r in spark.read.parquet(table).select("user_id", "ts").collect()
-    }
+    jobs.apply_upsert_batch(early, 0, table, ["user_id"])
+    live0 = delta_lite.current_version(table)
+    rows0 = rows()
+    # crash-replay of batch 0: no rewrite, no new commit
+    jobs.apply_upsert_batch(early, 0, table, ["user_id"])
+    assert delta_lite.current_version(table) == live0
+    assert rows() == rows0
+
+    jobs.apply_upsert_batch(late, 1, table, ["user_id"])
     want = {
         (r["user_id"], r["ts"])
         for r in src.groupBy("user_id").agg(F.max("ts").alias("ts")).collect()
     }
-    assert got == want
+    assert rows() == want
     # and replaying batch 1 after the fact is also a no-op
-    jobs.apply_upsert_batch(late, 1, table, ["user_id"], protocol="symlink")
-    assert {
-        (r["user_id"], r["ts"])
-        for r in spark.read.parquet(table).select("user_id", "ts").collect()
-    } == want
-
-
-def test_version_sort_key_orders_legacy_oldest():
-    """GC ordering: the legacy snapshot is by definition the OLDEST
-    state, so it must be the first dir GC removes — a plain lexical
-    sort put its `_` suffix after every digit and GC then deleted the
-    true predecessor while keeping the legacy dir forever."""
-    names = [
-        "v" + "0" * 19 + "_legacy",
-        f"v{0:020d}",
-        f"v{0:020d}.r1",
-        f"v{0:020d}.r2",
-        f"v{1:020d}",
-        f"v{12:020d}",
-    ]
-    import random
-
-    shuffled = names[:]
-    random.Random(7).shuffle(shuffled)
-    assert sorted(shuffled, key=jobs._version_sort_key) == names
-
-
-def test_legacy_migration_gc_removes_legacy_not_predecessor(spark, tmp_path):
-    """After migrating a pre-protocol table, two more commits must GC
-    the legacy snapshot (oldest) and keep the true predecessor."""
-    import os
-
-    path = str(tmp_path / "mig_gc")
-    spark.createDataFrame([(1, "old")], "k long, v string").write.parquet(path)
-    d0 = spark.createDataFrame([(1, "b0")], "k long, v string")
-    d1 = spark.createDataFrame([(1, "b1")], "k long, v string")
-
-    jobs._commit_maintained_table(d0, path, 0, n_files=1)
-    vroot = f"{path}.versions"
-    assert jobs._LEGACY_VERSION in os.listdir(vroot)  # kept as predecessor
-    jobs._commit_maintained_table(d1, path, 1, n_files=1)
-    kept = sorted(os.listdir(vroot), key=jobs._version_sort_key)
-    assert jobs._LEGACY_VERSION not in kept  # legacy GC'd first
-    assert kept == [f"v{0:020d}", f"v{1:020d}"]  # true predecessor kept
-    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [(1, "b1")]
-
-
-def test_read_maintained_table_recovers_when_publish_is_missing(spark, tmp_path):
-    """ADVICE r4 (medium): a crash inside the legacy-migration window
-    (or between version write and symlink publish) leaves the live
-    path absent while a fully committed version dir exists — the read
-    side must recover the newest committed version, NOT silently reset
-    to 'first batch'.  Half-written versions (no _SUCCESS) are never
-    recovered onto."""
-    import os
-
-    path = str(tmp_path / "crash_tbl")
-    vroot = f"{path}.versions"
-    # committed version dir, but no symlink at path (crashed publish)
-    spark.createDataFrame([(5, "x")], "k long, v string").coalesce(1).write.parquet(
-        os.path.join(vroot, f"v{3:020d}")
-    )
-    got = jobs._read_maintained_table(spark, path)
-    assert got is not None
-    assert [tuple(r) for r in got.collect()] == [(5, "x")]
-
-    # a NEWER but half-written version (no _SUCCESS) must not win
-    partial = os.path.join(vroot, f"v{4:020d}")
-    os.makedirs(partial)
-    got2 = jobs._read_maintained_table(spark, path)
-    assert [tuple(r) for r in got2.collect()] == [(5, "x")]
-
-    # nothing committed at all -> first batch
-    assert jobs._read_maintained_table(spark, str(tmp_path / "fresh")) is None
-
-
-def test_manifest_protocol_publish_and_crash_window(spark, tmp_path):
-    """Object-store-safe pointer-file publish: no symlink anywhere —
-    the live version is named by an atomically replaced _CURRENT file.
-    A crash between version write and pointer publish leaves the OLD
-    version live and readable (the VERDICT r4 #3 kill test)."""
-    import os
-
-    path = str(tmp_path / "mani_tbl")
-    vroot = f"{path}.versions"
-    d0 = spark.createDataFrame([(1, "a")], "k long, v string")
-    d1 = spark.createDataFrame([(1, "b"), (2, "c")], "k long, v string")
-
-    jobs._commit_maintained_table(d0, path, 0, n_files=1, protocol="manifest")
-    assert not os.path.lexists(path)  # nothing at the live path at all
-    assert os.path.isfile(os.path.join(vroot, "_CURRENT"))
-    got = jobs._read_maintained_table(spark, path)
-    assert [tuple(r) for r in got.collect()] == [(1, "a")]
-    # external readers resolve the same version
-    res = jobs.resolve_maintained_table(path)
-    assert [tuple(r) for r in spark.read.parquet(res).collect()] == [(1, "a")]
-
-    # writer killed between version write and pointer publish: the new
-    # version dir is fully committed but _CURRENT still names v0
-    d1.coalesce(1).write.parquet(os.path.join(vroot, f"v{1:020d}"))
-    got = jobs._read_maintained_table(spark, path)
-    assert [tuple(r) for r in got.collect()] == [(1, "a")]  # old version live
-
-    # the replayed commit publishes the pointer; new data becomes live
-    jobs._commit_maintained_table(d1, path, 1, n_files=1, protocol="manifest")
-    got = sorted(tuple(r) for r in jobs._read_maintained_table(spark, path).collect())
-    assert got == [(1, "b"), (2, "c")]
+    jobs.apply_upsert_batch(late, 1, table, ["user_id"])
+    assert rows() == want
 
 
 def test_streaming_hll_matches_one_pass_sketch_and_bounds_error(
@@ -863,6 +686,9 @@ def test_streaming_hll_matches_one_pass_sketch_and_bounds_error(
     estimate lands within the HLL error envelope of the exact answer,
     and replaying an applied batch is a no-op."""
     from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import sketches
+    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.sources import (
+        delta_lite,
+    )
 
     hll = str(tmp_path / "hll_tbl")
     q = jobs.maintain_hll_stream(
@@ -874,9 +700,11 @@ def test_streaming_hll_matches_one_pass_sketch_and_bounds_error(
     assert q.lastProgress["batchId"] >= 3  # genuinely multi-batch
 
     src = spark.read.parquet(event_dir)
+    # the maintained table stores the register index as
+    # jobs._HLL_REGISTER (``__bucket`` is the Delta layer's bucket column)
     maintained = {
-        (r["event_type"], r["__bucket"]): r["__rho"]
-        for r in spark.read.parquet(hll).collect()
+        (r["event_type"], r[jobs._HLL_REGISTER]): r["__rho"]
+        for r in jobs.read_maintained_table(spark, hll).collect()
     }
     one_pass = {
         (r["event_type"], r["__bucket"]): r["__rho"]
@@ -889,7 +717,7 @@ def test_streaming_hll_matches_one_pass_sketch_and_bounds_error(
     est = {
         r["event_type"]: r["est_distinct"]
         for r in sketches.hll_estimate_from_registers(
-            spark.read.parquet(hll).drop("__last_batch_id"), "event_type", b=9
+            jobs.read_maintained_table(spark, hll), "event_type", b=9
         ).collect()
     }
     exact = {
@@ -903,11 +731,11 @@ def test_streaming_hll_matches_one_pass_sketch_and_bounds_error(
         assert abs(est[k] - n) <= max(0.20 * n, 4.0), (k, est[k], n)
 
     # replay of the last applied batch id: no-op
-    last = spark.read.parquet(hll).agg(F.max("__last_batch_id")).first()[0]
+    last = delta_lite.last_txn_version(hll, jobs._TXN_APP)
     jobs.apply_hll_batch(src.limit(50), last, hll, "event_type", "user_id", 9)
     assert {
-        (r["event_type"], r["__bucket"]): r["__rho"]
-        for r in spark.read.parquet(hll).collect()
+        (r["event_type"], r[jobs._HLL_REGISTER]): r["__rho"]
+        for r in jobs.read_maintained_table(spark, hll).collect()
     } == maintained
 
 
@@ -965,35 +793,6 @@ def test_stream_stream_left_outer_abandoned_clicks_matches_batch(
     got_matched = {r["click_id"] for r in got if not r["abandoned"]}
     assert got_matched.isdisjoint(got_abandoned)
     assert got_matched == {r["click_id"] for r in c.collect()} - want_abandoned
-
-
-def test_rollback_maintained_table_both_protocols(spark, tmp_path):
-    """One-step rollback: the GC-kept predecessor becomes live again
-    under both publish protocols; with no predecessor it refuses."""
-    import pytest as _pt
-
-    d0 = spark.createDataFrame([(1, "v0")], "k long, v string")
-    d1 = spark.createDataFrame([(1, "v1")], "k long, v string")
-
-    sym = str(tmp_path / "sym_tbl")
-    jobs._commit_maintained_table(d0, sym, 0, n_files=1)
-    with _pt.raises(ValueError):
-        jobs.rollback_maintained_table(sym)  # no predecessor yet
-    jobs._commit_maintained_table(d1, sym, 1, n_files=1)
-    assert [tuple(r) for r in spark.read.parquet(sym).collect()] == [(1, "v1")]
-    jobs.rollback_maintained_table(sym)
-    assert [tuple(r) for r in spark.read.parquet(sym).collect()] == [(1, "v0")]
-
-    man = str(tmp_path / "man_tbl")
-    jobs._commit_maintained_table(d0, man, 0, n_files=1, protocol="manifest")
-    jobs._commit_maintained_table(d1, man, 1, n_files=1, protocol="manifest")
-    assert [tuple(r) for r in jobs._read_maintained_table(spark, man).collect()] == [
-        (1, "v1")
-    ]
-    jobs.rollback_maintained_table(man)
-    assert [tuple(r) for r in jobs._read_maintained_table(spark, man).collect()] == [
-        (1, "v0")
-    ]
 
 
 def test_incremental_lsh_dedup_stream_equals_one_shot(spark, sf_dir, tmp_path):
@@ -1057,7 +856,7 @@ def test_incremental_lsh_dedup_stream_equals_one_shot(spark, sf_dir, tmp_path):
 def test_reservoir_merge_equals_oneshot_and_replay_noop(spark, tmp_path):
     """Bottom-k mergeability: any batch split converges to the one-shot
     bottom-k per group; replaying an applied batch is a no-op; state
-    never exceeds |groups|*k (+ the batch mark)."""
+    never exceeds |groups|*k."""
     res = str(tmp_path / "res")
     rows = [(i, "g%d" % (i % 2), float(i)) for i in range(40)]
     df = spark.createDataFrame(rows, ["id", "grp", "v"])
@@ -1090,7 +889,7 @@ def test_reservoir_merge_equals_oneshot_and_replay_noop(spark, tmp_path):
             k=3,
             payload_cols=("v",),
         )
-    final = spark.read.parquet(res)
+    final = jobs.read_maintained_table(spark, res)
     assert {(r["grp"], r["id"]) for r in final.collect()} == expected
     assert final.count() == 6  # 2 groups x k=3: bounded state
 
@@ -1102,7 +901,9 @@ def test_reservoir_merge_equals_oneshot_and_replay_noop(spark, tmp_path):
         df.filter(F.col("id") >= 30), 2, res, group_col="grp", id_col="id", k=3,
         payload_cols=("v",),
     )
-    assert {(r["grp"], r["id"]) for r in spark.read.parquet(res).collect()} == expected
+    assert {
+        (r["grp"], r["id"]) for r in jobs.read_maintained_table(spark, res).collect()
+    } == expected
 
 
 def test_cms_merge_equals_oneshot_and_never_undercounts(spark, tmp_path):
@@ -1121,7 +922,7 @@ def test_cms_merge_equals_oneshot_and_never_undercounts(spark, tmp_path):
             df.filter((F.col("id") >= lo) & (F.col("id") < hi)),
             b, cms, key_col="k", depth=3, width=16,
         )
-    regs = spark.read.parquet(cms).select("d", "bucket", "n")
+    regs = jobs.read_maintained_table(spark, cms).select("d", "bucket", "n")
     oneshot = sketches.cms_register_table(df, "k", depth=3, width=16)
     assert {
         (r["d"], r["bucket"]): r["n"] for r in regs.collect()
@@ -1145,7 +946,9 @@ def test_cms_merge_equals_oneshot_and_never_undercounts(spark, tmp_path):
     )
     assert {
         (r["d"], r["bucket"]): r["n"]
-        for r in spark.read.parquet(cms).select("d", "bucket", "n").collect()
+        for r in jobs.read_maintained_table(spark, cms)
+        .select("d", "bucket", "n")
+        .collect()
     } == {(r["d"], r["bucket"]): r["n"] for r in oneshot.collect()}
 
 
@@ -1186,7 +989,7 @@ def test_reservoir_and_cms_streams_match_one_shot(spark, event_dir, tmp_path):
     }
     got = {
         (r["event_type"], r["event_id"])
-        for r in spark.read.parquet(res).collect()
+        for r in jobs.read_maintained_table(spark, res).collect()
     }
     assert got == want
 
@@ -1198,63 +1001,15 @@ def test_reservoir_and_cms_streams_match_one_shot(spark, event_dir, tmp_path):
     q2.awaitTermination()
     maintained = {
         (r["d"], r["bucket"]): r["n"]
-        for r in spark.read.parquet(cms).select("d", "bucket", "n").collect()
+        for r in jobs.read_maintained_table(spark, cms)
+        .select("d", "bucket", "n")
+        .collect()
     }
     one_shot = {
         (r["d"], r["bucket"]): r["n"]
         for r in sketches.cms_register_table(src, "user_id", 3, 64).collect()
     }
     assert maintained == one_shot
-
-
-def test_compact_maintained_table_data_identical_and_recoverable(
-    spark, event_dir, tmp_path
-):
-    """Compaction rewrites the live version into n_files and republishes
-    atomically: data identical, file census shrinks, the pre-compaction
-    version survives as the rollback target, and the in-table replay
-    guard still no-ops a replayed batch after compaction."""
-    import glob
-    import os
-
-    src = spark.read.parquet(event_dir)
-    table = str(tmp_path / "compact_me")
-    # bespoke symlink protocol EXPLICIT since r8 (auto now makes new
-    # tables Delta-born); this test covers bespoke compaction/rollback
-    jobs.apply_upsert_batch(src.filter(F.col("event_id") % 2 == 0), 0, table, ["user_id"], protocol="symlink")
-    jobs.apply_upsert_batch(src.filter(F.col("event_id") % 2 == 1), 1, table, ["user_id"], protocol="symlink")
-
-    def rows():
-        return sorted(
-            (r["user_id"], r["ts"], r["event_type"])
-            for r in spark.read.parquet(
-                jobs.resolve_maintained_table(table)
-            ).select("user_id", "ts", "event_type").collect()
-        )
-
-    def n_files():
-        return len(glob.glob(os.path.join(jobs.resolve_maintained_table(table), "part-*")))
-
-    before, files_before = rows(), n_files()
-    assert files_before > 1  # upsert publishes are uncompacted
-    live_before = os.path.realpath(table)
-
-    new_dir = jobs.compact_maintained_table(spark, table, n_files=1)
-    assert rows() == before and n_files() == 1
-    assert os.path.realpath(table) == os.path.realpath(new_dir) != live_before
-
-    # replay of the already-applied batch 1 is still a no-op
-    jobs.apply_upsert_batch(src.filter(F.col("event_id") % 2 == 1), 1, table, ["user_id"], protocol="symlink")
-    assert rows() == before and n_files() == 1
-
-    # the uncompacted predecessor is the rollback target
-    jobs.rollback_maintained_table(table)
-    assert rows() == before
-    assert os.path.realpath(table) == live_before
-
-    # a table with no committed state is rejected
-    with pytest.raises(ValueError, match="no committed state"):
-        jobs.compact_maintained_table(spark, str(tmp_path / "nope"), 1)
 
 
 def test_experiment_units_maintained_incrementally(spark, event_dir, tmp_path):

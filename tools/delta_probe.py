@@ -7,12 +7,9 @@ A. PER-BATCH PUBLISH COST IS FLAT AS THE TABLE GROWS.
    stays constant — the production discipline: bucket count tracks
    table size at the target file size (~100 MB), exactly like file
    count in a real Delta/Iceberg table.  Then K constant-size batches
-   (5 keys each) publish through:
-   - the NEW path: jobs.apply_upsert_batch / apply_scd2_batch with
-     protocol='delta' → delta_lite.merge_touched — expect per-batch
-     wall ~flat (reads+rewrites ≤5 constant-size buckets);
-   - the OLD path: the bespoke full-snapshot publish — expect per-batch
-     wall growing ~Nx (the r6 SCALE.md 3.7x finding, isolated).
+   (5 keys each) publish through jobs.apply_upsert_batch /
+   apply_scd2_batch → delta_lite.merge_touched — expect per-batch wall
+   ~flat (reads+rewrites ≤5 constant-size buckets).
 
 B. LOG-REPLAY COST IS FLAT IN VERSION COUNT (checkpoints).
    After V tiny commits, snapshot-read planning replays the log.  With
@@ -78,20 +75,17 @@ def batch_of(events, keys: list[int]):
     return events.filter(F.col("user_id").isin(keys))
 
 
-def probe_upsert(spark, events, scale_n: int, workdir: str, protocol: str) -> dict:
+def probe_upsert(spark, events, scale_n: int, workdir: str) -> dict:
     nb = BASE_BUCKETS * scale_n  # constant bucket size across scales
-    table = os.path.join(workdir, f"ups_{protocol}_{scale_n}")
+    table = os.path.join(workdir, f"ups_{scale_n}")
     # bulk init: one commit holding the whole profile table
     t0 = time.time()
-    if protocol == "delta":
-        dedup = (
-            events.groupBy("user_id")
-            .agg(F.max_by(F.struct("event_id", "ts", "event_type", "value"), "ts").alias("r"))
-            .select("user_id", "r.*")
-        )
-        delta_lite.upsert_delta(spark, table, dedup, ["user_id"], n_buckets=nb)
-    else:
-        jobs.apply_upsert_batch(events, 0, table, ["user_id"], protocol=protocol)
+    dedup = (
+        events.groupBy("user_id")
+        .agg(F.max_by(F.struct("event_id", "ts", "event_type", "value"), "ts").alias("r"))
+        .select("user_id", "r.*")
+    )
+    delta_lite.upsert_delta(spark, table, dedup, ["user_id"], n_buckets=nb)
     init_s = round(time.time() - t0, 3)
     keys = [r["user_id"] for r in events.select("user_id").distinct().limit(BATCH_KEYS * N_BATCHES).collect()]
     per_batch = []
@@ -101,22 +95,21 @@ def probe_upsert(spark, events, scale_n: int, workdir: str, protocol: str) -> di
         # publish cost, not the cost of carving a batch from Nx events
         bdf = batch_of(events, bk).localCheckpoint(eager=True)
         t0 = time.time()
-        jobs.apply_upsert_batch(bdf, b + 1, table, ["user_id"], protocol=protocol)
+        jobs.apply_upsert_batch(bdf, b + 1, table, ["user_id"])
         per_batch.append(time.time() - t0)
     return {
         "init_s": init_s,
         "batch_s": round(sum(per_batch) / len(per_batch), 3),
-        "n_buckets": nb if protocol == "delta" else None,
+        "n_buckets": nb,
     }
 
 
-def probe_scd2(spark, events, scale_n: int, workdir: str, protocol: str) -> dict:
+def probe_scd2(spark, events, scale_n: int, workdir: str) -> dict:
     nb = BASE_BUCKETS * scale_n
-    table = os.path.join(workdir, f"scd_{protocol}_{scale_n}")
+    table = os.path.join(workdir, f"scd_{scale_n}")
     t0 = time.time()
     jobs.apply_scd2_batch(
-        events, 0, table, "user_id", "ts", ["event_type"],
-        protocol=protocol, n_buckets=nb,
+        events, 0, table, "user_id", "ts", ["event_type"], n_buckets=nb
     )
     init_s = round(time.time() - t0, 3)
     keys = [r["user_id"] for r in events.select("user_id").distinct().limit(BATCH_KEYS * N_BATCHES).collect()]
@@ -138,14 +131,13 @@ def probe_scd2(spark, events, scale_n: int, workdir: str, protocol: str) -> dict
         )
         t0 = time.time()
         jobs.apply_scd2_batch(
-            bdf, b + 1, table, "user_id", "ts", ["event_type"],
-            protocol=protocol, n_buckets=nb,
+            bdf, b + 1, table, "user_id", "ts", ["event_type"], n_buckets=nb
         )
         per_batch.append(time.time() - t0)
     return {
         "init_s": init_s,
         "batch_s": round(sum(per_batch) / len(per_batch), 3),
-        "n_buckets": nb if protocol == "delta" else None,
+        "n_buckets": nb,
     }
 
 
@@ -182,24 +174,21 @@ def main() -> None:
         # warmup (JVM/codegen) — untimed
         ev1 = profiles(spark, 1)
         wdir = os.path.join(workdir, "warm")
-        probe_upsert(spark, ev1, 1, wdir, "delta")
+        probe_upsert(spark, ev1, 1, wdir)
         for kind, fn in (("upsert", probe_upsert), ("scd2", probe_scd2)):
-            # bespoke leg is EXPLICIT since r8: protocol='auto' now makes
-            # a new table Delta-born, so 'auto' would measure delta twice
-            for proto in ("delta", "symlink"):
-                rows = {}
-                for scale, nn in (("sf0.1", 1), (f"x{n}", n)):
-                    ev = profiles(spark, nn)
-                    rows[scale] = fn(spark, ev, nn, workdir, proto)
-                rows["batch_ratio"] = round(
-                    rows[f"x{n}"]["batch_s"] / max(rows["sf0.1"]["batch_s"], 1e-9), 2
-                )
-                report[f"{kind}_{'delta' if proto == 'delta' else 'bespoke'}"] = rows
+            rows = {}
+            for scale, nn in (("sf0.1", 1), (f"x{n}", n)):
+                ev = profiles(spark, nn)
+                rows[scale] = fn(spark, ev, nn, workdir)
+            rows["batch_ratio"] = round(
+                rows[f"x{n}"]["batch_s"] / max(rows["sf0.1"]["batch_s"], 1e-9), 2
+            )
+            report[f"{kind}_delta"] = rows
         # GDPR delete (r8): erase BATCH_KEYS keys from the delta profile
         # table at each scale — expect ~flat (touched buckets, not table)
         del_rows = {}
         for scale, nn in (("sf0.1", 1), (f"x{n}", n)):
-            table = os.path.join(workdir, f"ups_delta_{nn}")
+            table = os.path.join(workdir, f"ups_{nn}")
             ev = profiles(spark, nn)
             keys = ev.select("user_id").distinct().orderBy("user_id").limit(BATCH_KEYS)
             keys = keys.localCheckpoint(eager=True)
@@ -215,7 +204,7 @@ def main() -> None:
         # with the table
         cdf_rows = {}
         for scale, nn in (("sf0.1", 1), (f"x{n}", n)):
-            table = os.path.join(workdir, f"ups_delta_{nn}")
+            table = os.path.join(workdir, f"ups_{nn}")
             base_v = delta_lite.current_version(table) - 1
             t0 = time.time()
             n_incr = delta_lite.read_changes(spark, table, base_v).count()

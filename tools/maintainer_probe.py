@@ -7,8 +7,8 @@ Per scale and maintainer:
 - three time-ordered deliveries land as parquet; the availableNow
   stream runs after each (the incremental-maintenance cost);
 - the checkpoint is then WIPED and the stream re-run over the full
-  landing dir — every batch re-delivers, and the ``_already_applied``
-  mark must skip them all (the crash-recovery window of a89dffb);
+  landing dir — every batch re-delivers, and the ``txn`` each batch
+  committed must skip them all (the crash-recovery window of a89dffb);
 - the final table is asserted equal to the one-pass batch collapse
   over the full log (idempotence under replay, not just speed).
 
@@ -92,16 +92,14 @@ def run_maintainer(spark, events, kind: str, workdir: str) -> dict:
     maintain_s = round(time.time() - t0, 3)
 
     # at-least-once replay: wipe the checkpoint so EVERY landed file
-    # re-delivers; the stored __last_batch_id mark must skip all of it
+    # re-delivers; the txn in each batch's commit must skip all of it
     shutil.rmtree(cp)
     t0 = time.time()
     start().awaitTermination()
     replay_s = round(time.time() - t0, 3)
 
     # idempotence + correctness: final table == one-pass batch collapse
-    stored = spark.read.parquet(
-        jobs.resolve_maintained_table(table) or table
-    ).drop("__last_batch_id")
+    stored = jobs.read_maintained_table(spark, table)
     if kind == "upsert":
         got = stored.select("user_id", "ts")
         want = events.groupBy("user_id").agg(F.max("ts").alias("ts"))
