@@ -7,6 +7,8 @@
   on the winner's snapshot, so both batches are kept;
 - ``delta_lite.restore_table`` and ``delta_lite.compact`` keep the
   ``txn``, so a replay after either is still a no-op;
+- a compacted maintained table is read through the log, never from the
+  superseded files still under its root;
 - a path holding non-Delta data is refused before anything is written.
 
 Races use the pattern of ``tests/test_delta_lifecycle.py``: ``_commit``
@@ -189,6 +191,24 @@ def test_compaction_of_a_maintained_table_is_data_identical(spark, tmp_path):
     assert dl.current_version(path) == 3
     dl.restore_table(path, version=2)
     assert _rows(spark, path) == before
+
+
+def test_compaction_of_a_maintained_table_reads_through_the_log(spark, tmp_path):
+    """After ``delta_lite.compact`` the superseded files of every earlier
+    version are still under the table root; ``read_maintained_table``
+    goes through the log, so it serves the one live version and never
+    resurrects a superseded row."""
+    path = str(tmp_path / "t")
+    for b in range(3):
+        df = spark.createDataFrame([(1, f"x{b}", b)], "user_id long, v string, ts long")
+        jobs.apply_upsert_batch(df, b, path, ["user_id"])
+    before = _rows(spark, path)
+    assert before == [(1, "x2", 2)]
+    assert dl.compact(spark, path) == 3  # one OPTIMIZE commit
+    assert _rows(spark, path) == before
+    assert len(dl._read_actions(path)[0]) == 1
+    raw = {r["v"] for r in spark.read.parquet(path).collect()}
+    assert {"x0", "x1"} <= raw  # the superseded rows are on disk
 
 
 def test_maintainers_refuse_foreign_directories(spark, tmp_path):
