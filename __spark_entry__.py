@@ -1384,10 +1384,6 @@ def q_containment_token(spark: SparkSession, sf_dir: str) -> DataFrame:
         [-F.length("needle"), F.col("ref_idx"), F.col("needle")],
         strategy="token",
         exclude_equal=True,
-        # the dim IS fact-cardinality here (full name+word vocabulary):
-        # let AQE pick the join — forcing a broadcast would make the
-        # broadcast build, not the join shape, the scale limit
-        broadcast_dim=False,
     )
     return out.filter(F.col("needle").isNotNull()).select(
         "p_partkey",
@@ -1436,7 +1432,6 @@ def q_regex_kb_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     kb = spark.createDataFrame(_J3_KB, "kb_order int, pattern string, category string")
     out = fuzzy_join.regex_lookup(
         d.select("doc_id", "text"),
-        "doc_id",
         "text",
         kb,
         "pattern",

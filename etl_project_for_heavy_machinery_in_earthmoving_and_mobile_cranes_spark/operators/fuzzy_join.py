@@ -1,36 +1,72 @@
 """Containment and regex lookup joins (J1/J2/J3 + W2 winner selection).
 
 The reference implements these as O(N·B)/O(N·R) nested ``iterrows`` loops
-(prog.py:75-101, 174-236).  The Spark-native shape is:
+(prog.py:75-101, 174-236).  The Spark-native shape keeps one winner per
+fact row with no join back onto the fact:
 
-    fact ⋈ broadcast(dim) on a string/theta predicate
-         → row_number() over (partition by fact_id order by <priority>)
-         → keep rank 1 → left-join payload back onto the fact.
+    dim → one row: sort_array(collect_list(struct(<priority>, needle, payload)))
+        → fact × broadcast(that row)
+        → each row's first array element passing its predicate (``first_hit``)
+        → the fact's columns + the winner's payload.
 
-The dims are 10²–10³ rows, so the theta join is a BroadcastNestedLoopJoin
-— each executor scans its fact partition once against the in-memory dim;
-no shuffle of the fact table at all.  Winner selection shuffles only the
-*matched* rows on ``fact_id``.  For very large dims there is a token
-equi-key strategy (``strategy='token'``) that converts the containment
-predicate to a hash join on exploded tokens with identical semantics.
+The dims are 10²–10³ rows, so the cross join is a BroadcastNestedLoopJoin
+against one row: the fact is read once and never shuffled, each row
+scans the in-memory KB array in priority order, and the only exchange
+is the dim's single-partition aggregate.  Ties on the priority key are
+broken by the remaining struct fields (needle or pattern, then
+payload), so the winner is deterministic; a ``min_by`` over the matches
+would pick any tied row.
+
+For fact-sized dims there is a token equi-key strategy
+(``strategy='token'``): the containment predicate becomes a hash join on
+exploded tokens (token-anchored semantics), and the winner per
+``fact_id`` is a ``min_by`` aggregate joined back onto the fact.
 
 Priority columns are materialized in the dims at load time (ref_idx,
 kb_order, length(model)) because tie-breaks must be deterministic under
 Spark's unordered execution (SURVEY §7.3).
 
-The customs pipeline (``plans/pipeline.py``) does not join: it carries
-each KB as one broadcast row of structs sorted by the same priority and
-takes each row's first hit, so its plan never joins back onto itself.
+The customs pipeline (``plans/pipeline.py``) carries its KBs with the
+same ``sorted_structs`` / ``first_hit`` pair.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-MATCH_RANK = "__match_rank"
+
+def sorted_structs(*fields) -> Column:
+    """Aggregate: every KB row as struct(*fields), sorted ascending — the
+    leading fields are the priority key."""
+    return F.sort_array(F.collect_list(F.struct(*fields)))
+
+
+def first_hit(arr: str, pred: Callable[[Column], Column]) -> Column:
+    """The first element of the priority-sorted array column ``arr`` that
+    passes ``pred``; NULL when none does (or the array is empty)."""
+    return F.try_element_at(F.filter(F.col(arr), pred), F.lit(1))
+
+
+def _first_hit_lookup(
+    fact: DataFrame,
+    dim: DataFrame,
+    key_col: str,
+    payload_cols: Sequence[str],
+    priority: Sequence[Column],
+    pred: Callable[[Column], Column],
+) -> DataFrame:
+    """fact ⟕ the payload of each fact row's first ``dim`` row by
+    ``priority`` whose ``key_col`` passes ``pred`` against that row."""
+    fields = [p.alias(f"__p{i}") for i, p in enumerate(priority)]
+    kb = dim.agg(sorted_structs(*fields, *dict.fromkeys([key_col, *payload_cols])).alias("__kb"))
+    hit = first_hit("__kb", lambda r: pred(r[key_col]))
+    # the winner is one projected column, so first_hit runs once per row
+    # however many payload fields are read from it
+    out = fact.crossJoin(F.broadcast(kb)).select(*fact.columns, hit.alias("__w"))
+    return out.select(*fact.columns, *(F.col("__w")[c].alias(c) for c in payload_cols))
 
 
 def _pick_winner(
@@ -63,105 +99,85 @@ def containment_lookup(
     priority: Sequence[Column],
     strategy: str = "broadcast",
     exclude_equal: bool = False,
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """J1/J2: for each fact row, find dim rows whose ``needle_col`` string
     is contained in any of the fact's ``text_cols``; keep the best match
-    by ``priority``; return fact ⟕ payload.
+    by ``priority`` (ascending; ties → the smaller needle, then payload);
+    return fact ⟕ payload.
 
     J1 (brand detection, prog.py:75-89): priority = [ref_idx asc]
     (first-in-table wins).  J2 (model detection, prog.py:90-101):
     priority = [length(model) desc, ref_idx asc] (longest wins).
 
-    ``strategy='token'`` — scale path: join on the needle's first token
-    vs the fact text's exploded tokens (equi hash join), then verify full
-    containment.  Avoids the nested-loop scan when the dim is too big to
-    nested-loop against.  NOTE the token path is *token-anchored*: a
-    needle is only found where its first token appears as a whitespace
-    token of the text ('old plate' is missed inside 'cold plate').
-    Brand/model needles in the reference data are token-anchored, so
-    J1/J2 semantics are preserved; for arbitrary mid-token substrings
-    keep ``strategy='broadcast'``.
+    ``strategy='broadcast'`` (default): the dim becomes one broadcast
+    row of priority-sorted structs and each fact row takes its first
+    hit — no shuffle of the fact, no join back; every fact row keeps its
+    own winner, and ``fact_id`` is not used.
+
+    ``strategy='token'`` — scale path for fact-sized dims: join on the
+    needle's first token vs the fact text's exploded tokens (equi hash
+    join; the planner picks the build side), verify full containment,
+    then keep the ``min_by`` winner per ``fact_id`` and join it back —
+    so ``fact_id`` must be a key of ``fact`` here.  NOTE the token path
+    is *token-anchored*: a needle is only found where its first token
+    appears as a whitespace token of the text ('old plate' is missed
+    inside 'cold plate').  Brand/model needles in the reference data
+    are token-anchored, so J1/J2 semantics are preserved; for arbitrary
+    mid-token substrings keep ``strategy='broadcast'``.
 
     ``exclude_equal``: drop matches where the needle equals the text
     column it matched (proper containment — for self-joins such as
     name-subsumption detection).
-
-    ``broadcast_dim`` (token strategy only): hint the dim side for
-    broadcast.  Set False when the dim is fact-cardinality (e.g. a full
-    name-vocabulary self-join) so AQE/stats pick a shuffled hash join
-    instead of forcing an over-sized broadcast.  The broadcast strategy
-    ignores it — a containment theta join without a broadcast hint
-    would fall back to a cartesian nested loop.
     """
-    needle = F.col(needle_col)
-    contains_pred = None
-    for tc in text_cols:
-        p = F.instr(F.col(tc), needle) > 0
-        if exclude_equal:
-            p = p & (needle != F.col(tc))
-        contains_pred = p if contains_pred is None else (contains_pred | p)
 
-    if strategy == "token":
-        first_tok = F.split(needle, " ").getItem(0)
-        dimx = dim.withColumn("__tok", first_tok)
-        factx = fact.select(
-            fact_id, *text_cols,
-            F.explode(
-                F.array_distinct(
-                    F.flatten(F.array(*[F.split(F.col(tc), " ") for tc in text_cols]))
-                )
-            ).alias("__tok"),
-        )
-        dim_side = F.broadcast(dimx) if broadcast_dim else dimx
-        matched = factx.join(dim_side, on="__tok").filter(contains_pred)
-    else:
-        matched = fact.select(fact_id, *text_cols).join(
-            F.broadcast(dim), on=contains_pred, how="inner"
-        )
+    def contains(needle: Column) -> Column:
+        pred = None
+        for tc in text_cols:
+            p = F.instr(F.col(tc), needle) > 0
+            if exclude_equal:
+                p = p & (needle != F.col(tc))
+            pred = p if pred is None else (pred | p)
+        return pred
 
+    if strategy != "token":
+        return _first_hit_lookup(fact, dim, needle_col, payload_cols, priority, contains)
+
+    dimx = dim.withColumn("__tok", F.split(F.col(needle_col), " ").getItem(0))
+    factx = fact.select(
+        fact_id, *text_cols,
+        F.explode(
+            F.array_distinct(
+                F.flatten(F.array(*[F.split(F.col(tc), " ") for tc in text_cols]))
+            )
+        ).alias("__tok"),
+    )
+    matched = factx.join(dimx, on="__tok").filter(contains(F.col(needle_col)))
     winners = _pick_winner(matched, fact_id, priority).select(fact_id, *payload_cols)
     return fact.join(winners, on=fact_id, how="left")
 
 
 def regex_lookup(
     fact: DataFrame,
-    fact_id: str,
     text_col: str,
     kb: DataFrame,
     pattern_col: str,
     payload_cols: Sequence[str],
     priority: Sequence[Column],
-    brand_col: str | None = None,
-    kb_brand_col: str | None = None,
 ) -> DataFrame:
-    """J3 (prog.py:167-236 search_regex): broadcast cross join fact × kb,
-    keep rows where the kb pattern (DATA, not a literal) matches the fact
-    text, then deterministic winner per fact row.
-
-    ``brand_col``/``kb_brand_col``: when given, candidate patterns are
-    restricted to the fact row's brand (the reference's ``filter_brand``
-    mode, prog.py:180) — this turns the cross join into an equi join on
-    brand with the regex as a residual predicate, a much tighter plan.
+    """J3 (prog.py:167-236 search_regex): each fact row's winner is the
+    first kb row by ``priority`` (ascending; ties → the smaller pattern,
+    then payload) whose pattern (DATA, not a literal) matches the fact
+    text; return fact ⟕ payload, NULL where no pattern matches.  The kb
+    is one broadcast row of priority-sorted structs — the same shape as
+    ``containment_lookup``'s broadcast strategy.
 
     The extracted model itself (longest findall hit) is computed by the
     caller with ``regexp_extract_all`` on the winning pattern.
     """
-    pat = F.col(pattern_col)
-    pred = F.regexp_like(F.col(text_col), pat)
-    facts = fact.select(fact_id, text_col, *( [brand_col] if brand_col else [] ))
-    if brand_col and kb_brand_col:
-        matched = facts.join(
-            F.broadcast(kb),
-            on=(F.col(brand_col) == F.col(kb_brand_col)) & pred,
-            how="inner",
-        )
-    else:
-        matched = facts.join(F.broadcast(kb), on=pred, how="inner")
-    winners = _pick_winner(matched, fact_id, priority).select(
-        fact_id, *payload_cols
+    text = F.col(text_col)
+    return _first_hit_lookup(
+        fact, kb, pattern_col, payload_cols, priority, lambda pat: F.regexp_like(text, pat)
     )
-    return fact.join(winners, on=fact_id, how="left")
 
 
 def longest_regex_hit(text: Column, pattern: Column) -> Column:

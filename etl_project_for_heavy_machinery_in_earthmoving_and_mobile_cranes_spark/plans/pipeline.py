@@ -11,17 +11,17 @@ Internal representation uses typed NULLs (never 'UNKNOWN' sentinels);
 
 Plan shape: one linear chain; no stage joins back onto the fact table.
 Each KB (model_ref, regex_kb) is aggregated once into a one-row array
-of structs sorted by its priority key and cross-joined (broadcast) onto
-every row; a row's winner is the first array element that passes the
-row's predicate (``_first_hit``) — the predicate work of a nested loop
-join, with no shuffle and no join back.  Band inference (J5) and the
-outlier median (X1) are windows over (brand, type) and (brand, model):
-the plan's only two shuffles.  fx broadcasts.  No Python UDFs anywhere.
+of structs sorted by its priority key (``fuzzy_join.sorted_structs``)
+and cross-joined (broadcast) onto every row; a row's winner is the
+first array element that passes the row's predicate
+(``fuzzy_join.first_hit``, the per-row pick the registry's containment
+and regex lookups share) — the predicate work of a nested loop join,
+with no shuffle and no join back.  Band inference (J5) and the outlier
+median (X1) are windows over (brand, type) and (brand, model): the
+plan's only two shuffles.  fx broadcasts.  No Python UDFs anywhere.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -93,28 +93,16 @@ def normalize(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _sorted_structs(*fields) -> Column:
-    """Aggregate: every KB row as struct(*fields), sorted ascending — the
-    leading fields are the priority key."""
-    return F.sort_array(F.collect_list(F.struct(*fields)))
-
-
-def _first_hit(arr: str, pred: Callable[[Column], Column]) -> Column:
-    """The first element of the priority-sorted array column ``arr`` that
-    passes ``pred``; NULL when none does (or the array is empty)."""
-    return F.try_element_at(F.filter(F.col(arr), pred), F.lit(1))
-
-
 def match_catalog(df: DataFrame, model_ref: DataFrame) -> DataFrame:
     ref = model_ref.withColumn("model_ref", T.despace(F.upper(F.col("model"))))
     # the catalog as one broadcast row of two priority-sorted arrays
     kb = ref.agg(
         # J1 order: a brand's first row in the ref table (prog.py:75-89)
         F.array_distinct(
-            F.transform(_sorted_structs("ref_idx", "brand"), lambda r: r["brand"])
+            F.transform(FJ.sorted_structs("ref_idx", "brand"), lambda r: r["brand"])
         ).alias("__brands"),
         # J2 order: longest model first, ties → first ref row (prog.py:90-101)
-        _sorted_structs(
+        FJ.sorted_structs(
             (-F.length("model_ref")).alias("neg_len"), "ref_idx", "brand",
             "model_ref", "capacity", "type", "hp",
         ).alias("__models"),
@@ -123,7 +111,7 @@ def match_catalog(df: DataFrame, model_ref: DataFrame) -> DataFrame:
 
     # J1: first brand contained in description2 OR supplier2
     out = df.crossJoin(F.broadcast(kb)).withColumn(
-        "brand", _first_hit("__brands", lambda b: (F.instr(d2, b) > 0) | (F.instr(s2, b) > 0))
+        "brand", FJ.first_hit("__brands", lambda b: (F.instr(d2, b) > 0) | (F.instr(s2, b) > 0))
     )
 
     # J2: longest catalog model of the matched brand contained in
@@ -145,7 +133,7 @@ def match_catalog(df: DataFrame, model_ref: DataFrame) -> DataFrame:
             lambda i: F.concat_ws("", F.slice(toks, i, 1_000_000)),
         ),
     )
-    m = _first_hit(
+    m = FJ.first_hit(
         "__models",
         lambda r: (r["brand"] == F.col("brand"))
         & (
@@ -211,7 +199,7 @@ def _regex_pass(
         hit = F.regexp_like(d2, r["model_regex"])
         return (r["brand"] == F.col("brand")) & hit if brand_scoped else hit
 
-    out = df.withColumn("__w", F.when(scope, _first_hit("__rx", pred)))
+    out = df.withColumn("__w", F.when(scope, FJ.first_hit("__rx", pred)))
     pattern = F.col("__w.model_regex")
     out = out.withColumn("__rx_model", FJ.longest_regex_hit(d2, pattern))
     new_model = F.col("__rx_model")
@@ -244,7 +232,7 @@ def _regex_pass(
 def regex_stage(df: DataFrame, regex_kb: DataFrame) -> DataFrame:
     # the KB as one broadcast row: patterns sorted by kb_order desc
     kb = regex_kb.agg(
-        _sorted_structs(
+        FJ.sorted_structs(
             (-F.col("kb_order")).alias("neg_order"), "brand", "model_regex",
             "capacity_regex", "category", "starting_point",
         ).alias("__rx")

@@ -24,18 +24,67 @@ from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.oper
 
 
 def test_containment_first_priority(spark):
-    fact = spark.createDataFrame(
-        [(1, "KOMATSU BUCKET FOR HITACHI"), (2, "ONLY HITACHI"), (3, "NOTHING")],
-        "id long, txt string",
-    )
     dim = spark.createDataFrame(
         [(1, "KOMATSU"), (2, "HITACHI")], "prio int, needle string"
     )
-    out = fuzzy_join.containment_lookup(
-        fact, "id", ["txt"], dim, "needle", ["needle"], [F.col("prio")]
+
+    def run(rows, dim):
+        fact = spark.createDataFrame(rows, "id long, txt string")
+        out = fuzzy_join.containment_lookup(
+            fact, "id", ["txt"], dim, "needle", ["needle"], [F.col("prio")]
+        )
+        return sorted((r["id"], r["txt"], r["needle"]) for r in out.collect())
+
+    assert run(
+        [(1, "KOMATSU BUCKET FOR HITACHI"), (2, "ONLY HITACHI"), (3, "NOTHING")], dim
+    ) == [
+        (1, "KOMATSU BUCKET FOR HITACHI", "KOMATSU"),
+        (2, "ONLY HITACHI", "HITACHI"),
+        (3, "NOTHING", None),
+    ]
+    # rows that share an id each keep their own winner
+    assert run([(1, "KOMATSU X"), (1, "HITACHI Y")], dim) == [
+        (1, "HITACHI Y", "HITACHI"),
+        (1, "KOMATSU X", "KOMATSU"),
+    ]
+    # an empty dim keeps every fact row, payload NULL
+    empty = spark.createDataFrame([], "prio int, needle string")
+    assert run([(1, "KOMATSU X"), (2, "NOTHING")], empty) == [
+        (1, "KOMATSU X", None),
+        (2, "NOTHING", None),
+    ]
+
+
+def test_regex_lookup_last_match_wins(spark):
+    kb_schema = "kb_order int, pattern string, category string"
+    kb = spark.createDataFrame(
+        [(1, "KOMATSU", "A"), (2, "X$", "B")], kb_schema
     )
-    got = {r["id"]: r["needle"] for r in out.collect()}
-    assert got == {1: "KOMATSU", 2: "HITACHI", 3: None}
+    fact = spark.createDataFrame(
+        [(1, "KOMATSU X"), (1, "HITACHI Y"), (2, "NOTHING"), (3, "KOMATSU Z")],
+        "id long, txt string",
+    )
+
+    def run(kb):
+        out = fuzzy_join.regex_lookup(
+            fact, "txt", kb, "pattern", ["pattern", "category"], [-F.col("kb_order")]
+        )
+        return sorted((r["id"], r["txt"], r["category"]) for r in out.collect())
+
+    # both patterns match 'KOMATSU X': the highest kb_order wins; rows
+    # sharing an id keep their own results; no match -> NULL
+    assert run(kb) == [
+        (1, "HITACHI Y", None),
+        (1, "KOMATSU X", "B"),
+        (2, "NOTHING", None),
+        (3, "KOMATSU Z", "A"),
+    ]
+    assert run(spark.createDataFrame([], kb_schema)) == [
+        (1, "HITACHI Y", None),
+        (1, "KOMATSU X", None),
+        (2, "NOTHING", None),
+        (3, "KOMATSU Z", None),
+    ]
 
 
 def test_containment_token_strategy_equivalent(spark):

@@ -34,15 +34,26 @@ def test_star_joins_broadcast_no_cartesian(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan_of(spark, "shipping_priority_top10", sf_dir)
 
 
-def test_containment_join_shape(spark, sf_dir):
-    p = plan_of(spark, "containment_first", sf_dir)
-    # theta join against the broadcast dim — fact side never shuffled
-    # before the match
+@pytest.mark.parametrize(
+    "name", ["containment_first", "containment_longest", "regex_kb_match", "export_render"]
+)
+def test_containment_join_shape(spark, sf_dir, name):
+    df = entry.queries()[name](spark, sf_dir)
+    qe = df._jdf.queryExecution()
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    p = qe.explainString(mode)
+    # the fact is read once: no join back onto it, so the leaves are the
+    # fact scan and the dim
+    assert qe.analyzed().collectLeaves().size() == 2
+    # the dim is one broadcast row of priority-sorted structs, crossed
+    # onto the fact — the fact is never shuffled
     assert "BroadcastNestedLoopJoin" in p
-    # winner selection is a min_by hash aggregate (map-side partial
-    # combine), NOT a sort-based row_number window
-    assert "min_by" in p
+    assert "SortMergeJoin" not in p
+    assert "Exchange hashpartitioning" not in p
+    # the winner is each row's first hit in that array, not a sort-based
+    # window, and never an unhinted cartesian
     assert "Window" not in p
+    assert "CartesianProduct" not in p
 
 
 def test_fx_join_broadcast_left_outer(spark, sf_dir):

@@ -238,8 +238,7 @@ def test_containment_strategies_agree_on_random_tokens(spark):
 
     a = run()
     b = run(strategy="token")
-    c = run(strategy="token", broadcast_dim=False)
-    assert a == b == c
+    assert a == b
 
 
 def test_dedup_exact_idempotent(spark):
