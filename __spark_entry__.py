@@ -1353,8 +1353,9 @@ FROM merged
 def q_containment_token(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-strategy containment at dim scale: the needle table is the
     full part-name vocabulary (20k rows at sf0.1) matched against the
-    part names themselves — name-subsumption detection ('old plate' is
-    properly contained in 'cold plate x').  The token path turns the
+    part names themselves — name-subsumption detection ('cold plate' is
+    properly contained in 'cold plate x'; 'old plate' is not, it starts
+    mid-token there).  The token path turns the
     containment into a hash join on the needle's first token (no
     BroadcastNestedLoopJoin — asserted by tests/test_operators.py
     plan-contract test); matches are token-anchored by design.  Winner:
@@ -4493,7 +4494,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     sigs = dedup.minhash_signatures(d, "doc_id", "text", num_hashes=_MH_HASHES, shingle_n=_MH_SHINGLE)
     sigs = sigs.localCheckpoint(eager=True)
-    pairs = dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=_MH_HASHES, bands=_MH_HASHES)
+    pairs = dedup.lsh_similar_pairs(
+        sigs, "doc_id", num_hashes=_MH_HASHES, bands=_MH_HASHES
+    ).select("id_a", "id_b")
     comps = dedup.connected_components(pairs, "id_a", "id_b")
     return (
         comps.groupBy("label")
@@ -4849,9 +4852,9 @@ def q_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         d, "doc_id", "text", num_hashes=_MH_HASHES, shingle_n=_MH_SHINGLE
     )
     sigs = sigs.localCheckpoint(eager=True)
-    pairs = dedup.lsh_candidate_pairs(
+    pairs = dedup.lsh_similar_pairs(
         sigs, "doc_id", num_hashes=_MH_HASHES, bands=_MH_HASHES
-    )
+    ).select("id_a", "id_b")
     comps = dedup.connected_components(pairs, "id_a", "id_b").select(
         F.col("node").alias("doc_id"), "label"
     )
@@ -4967,9 +4970,9 @@ def q_dedup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         d, "doc_id", "text", num_hashes=_MH_HASHES, shingle_n=_MH_SHINGLE
     )
     sigs = sigs.localCheckpoint(eager=True)
-    pairs = dedup.lsh_candidate_pairs(
+    pairs = dedup.lsh_similar_pairs(
         sigs, "doc_id", num_hashes=_MH_HASHES, bands=_MH_HASHES
-    )
+    ).select("id_a", "id_b")
     comps = dedup.connected_components(pairs, "id_a", "id_b")
     sizes = comps.groupBy("label").agg(F.count("*").alias("cluster_size"))
     return (

@@ -1,14 +1,22 @@
 """Deduplication operators for large-scale training-data pipelines.
 
 Exact dedup, MinHash+LSH, SimHash and n-gram Jaccard — all expressed as
-native DataFrame ops (explode → hash → groupBy → self-join on bucket),
-no Python UDFs, so they scale to the 100 TB design point: the only
-shuffles are the per-doc signature aggregation and the bucket join, both
-keyed well enough for AQE to balance.
+native DataFrame ops, no Python UDFs, so they scale to the 100 TB design
+point.  Each near-duplicate job has one shape:
 
-Hashes are md5-based (``conv(substr(md5(seed||token),1,8),16,10)``) —
-deterministic and reproducible bit-for-bit in any engine with md5
-(the DuckDB correctness oracle uses the same construction).
+- signatures: explode shingles → one ``groupBy(id)`` (``minhash_signatures``);
+- candidates: the fused band self-join that also scores the estimate
+  (``lsh_similar_pairs``) — callers that only need pairs select
+  ``id_a, id_b``;
+- verify: one shingle-key ARRAY per candidate doc, joined onto the pair
+  list once per side and intersected per row (``exact_jaccard_of_pairs``);
+- all-pairs n-gram Jaccard / containment: one inverted-index self-join on
+  shingle keys (``ngram_jaccard_pairs``, ``containment_pairs``).
+
+MinHash signatures default to md5 (``conv(substr(md5(seed||token),1,8),16,10)``)
+— deterministic and reproducible bit-for-bit in any engine with md5
+(the DuckDB correctness oracle uses the same construction).  Band and
+shingle join keys are xxhash64: engine-internal, never in the output.
 """
 
 from __future__ import annotations
@@ -28,17 +36,13 @@ def tokens(col: Column) -> Column:
     return F.split(normalize_for_dedup(col), " ")
 
 
-def shingles(col: Column, n: int = 3) -> Column:
+def shingles_of_tokens(toks: Column, n: int = 3) -> Column:
     """Word n-gram shingles (array<string>); distinct.
 
     PERFORMANCE: pass a plain column reference to an already-projected
-    token array via ``shingles_of_tokens`` when possible — embedding the
-    tokenization expression here makes ``slice`` re-evaluate the full
-    regex normalization per shingle element (O(tokens²) per doc)."""
-    return shingles_of_tokens(tokens(col), n)
-
-
-def shingles_of_tokens(toks: Column, n: int = 3) -> Column:
+    token array — embedding the tokenization expression here makes
+    ``slice`` re-evaluate the full regex normalization per shingle
+    element (O(tokens²) per doc)."""
     # guard: sequence(1, 0) yields DESCENDING [1, 0] in Spark, sending an
     # illegal start=0 into slice() — short docs must produce [] instead
     last = F.size(toks) - (n - 1)
@@ -154,45 +158,6 @@ def minhash_signatures(
     return sh.groupBy(id_col).agg(*aggs)
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame, id_col: str, num_hashes: int = 16, bands: int = 4
-) -> DataFrame:
-    """Band the signature; docs sharing any band bucket become candidate
-    pairs (id_a < id_b).  The bucket join is an equi hash join on the
-    band key — the scale path that avoids all-pairs comparison.
-
-    The band key is ``xxhash64(band_index, mh_...)`` — an 8-byte join
-    key instead of the former ~90-byte ``concat_ws`` string (r13,
-    guide §2.3: shuffle fewer bytes; also skips per-row string
-    building).  Two DISTINCT band tuples colliding would add a
-    candidate pair — the standard LSH fingerprinting trade (~n²/2⁶⁴),
-    proven exact on the test corpora by the oracle gate."""
-    rows = num_hashes // bands
-    band_cols = [
-        F.xxhash64(
-            F.lit(b), *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
-        ).alias(f"band_{b}")
-        for b in range(bands)
-    ]
-    banded = sigs.select(
-        F.col(id_col),
-        F.explode(F.array(*band_cols)).alias("__bucket"),
-    ).dropDuplicates()
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            on=(F.col("a.__bucket") == F.col("b.__bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .dropDuplicates()
-    )
-
-
 def lsh_similar_pairs(
     sigs: DataFrame,
     id_col: str,
@@ -201,14 +166,15 @@ def lsh_similar_pairs(
     max_bucket: int | None = None,
     return_drop_stats: bool = False,
 ):
-    """Fused band-join + similarity: candidate pairs WITH estimated
-    Jaccard in a single shuffle chain.
+    """Band the signature; docs sharing any band bucket become candidate
+    pairs ``(id_a < id_b, est_jaccard)`` — the one LSH candidate path
+    (callers that only need the pairs select ``id_a, id_b``).  The
+    bucket join is an equi hash join on the band key, never all-pairs.
 
     Carries the signature columns through the band explode so the match
-    count is computed inside the bucket join — no re-join back to the
-    sigs table (two full shuffles saved vs lsh_candidate_pairs +
-    minhash_similarity).  The extra shuffle width (k longs per row) is
-    cheaper than two extra joins at any scale where LSH is warranted.
+    count is computed inside the bucket join — no join back onto the
+    sigs table.  The extra shuffle width (k longs per row) is cheaper
+    than two extra joins at any scale where LSH is warranted.
     (id, bucket) needs no pre-dedup: the band index is embedded in the
     bucket key, so each doc emits exactly one row per band.
 
@@ -228,8 +194,10 @@ def lsh_similar_pairs(
     pass if you need both.
 
     On the UNCAPPED path band keys are ``xxhash64(band_index, mh_...)``
-    — 8-byte join keys, same narrowing and collision contract as
-    ``lsh_candidate_pairs`` (r13, guide §2.3).  The capped path keeps
+    — 8-byte join keys instead of a ~90-byte ``concat_ws`` string
+    (r13, guide §2.3).  Two DISTINCT band tuples colliding would add a
+    candidate pair — the standard LSH fingerprinting trade (~n²/2⁶⁴),
+    proven exact on the test corpora by the oracle gate.  The capped path keeps
     the engine-portable ``concat_ws`` string key: the drop report
     EXPOSES the bucket value (oracle-replayed by
     ``minhash_pairs_capped``), so its representation is part of the
@@ -294,26 +262,6 @@ def lsh_similar_pairs(
             )
         return pairs, drops
     return pairs
-
-
-def minhash_similarity(
-    sigs: DataFrame, pairs: DataFrame, id_col: str, num_hashes: int = 16
-) -> DataFrame:
-    """Estimated Jaccard = fraction of matching signature components."""
-    a = sigs.select(
-        F.col(id_col).alias("id_a"), *[F.col(f"mh_{i}").alias(f"a_{i}") for i in range(num_hashes)]
-    )
-    b = sigs.select(
-        F.col(id_col).alias("id_b"), *[F.col(f"mh_{i}").alias(f"b_{i}") for i in range(num_hashes)]
-    )
-    j = pairs.join(a, "id_a").join(b, "id_b")
-    matches = sum(
-        F.when(F.col(f"a_{i}") == F.col(f"b_{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
-    )
-    return j.select(
-        "id_a", "id_b", (matches / F.lit(num_hashes)).alias("est_jaccard")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -444,6 +392,37 @@ def connected_components(
 # ---------------------------------------------------------------------------
 
 
+def _shared_shingle_pairs(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int, max_df: int | None
+) -> DataFrame:
+    """``(id_a < id_b, __common, __sza, __szb)`` for every pair sharing
+    ≥1 xxhash64 shingle key: the inverted-index self-join behind
+    ``ngram_jaccard_pairs`` and ``containment_pairs``.  Shingles in more
+    than ``max_df`` docs are dropped from the join AND the set sizes."""
+    sh = shingle_rows(df, id_col, text_col, shingle_n).select(
+        id_col, F.xxhash64("__sh").alias("__sh")
+    )
+    if max_df is not None:
+        hot = (
+            sh.groupBy("__sh")
+            .agg(F.count("*").alias("__df"))
+            .filter(F.col("__df") > max_df)
+            .select("__sh")
+        )
+        sh = sh.join(F.broadcast(hot), "__sh", "left_anti")
+    sizes = sh.groupBy(id_col).agg(F.count("*").alias("__sz"))
+    common = (
+        sh.select(F.col(id_col).alias("id_a"), "__sh")
+        .join(sh.select(F.col(id_col).alias("id_b"), "__sh"), "__sh")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("__common"))
+    )
+    return common.join(
+        sizes.select(F.col(id_col).alias("id_a"), F.col("__sz").alias("__sza")), "id_a"
+    ).join(sizes.select(F.col(id_col).alias("id_b"), F.col("__sz").alias("__szb")), "id_b")
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -476,37 +455,12 @@ def ngram_jaccard_pairs(
     merge their postings — the standard fingerprinting trade every
     minhash/LSH stage here already makes, and the oracle gate proves
     exactness on the test corpora."""
-    sh = shingle_rows(df, id_col, text_col, shingle_n).select(
-        id_col, F.xxhash64("__sh").alias("__sh")
-    )
-    if max_df is not None:
-        hot = (
-            sh.groupBy("__sh")
-            .agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") > max_df)
-            .select("__sh")
-        )
-        sh = sh.join(F.broadcast(hot), "__sh", "left_anti")
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("__sz"))
-    a = sh.select(F.col(id_col).alias("id_a"), "__sh")
-    b = sh.select(F.col(id_col).alias("id_b"), "__sh")
-    common = (
-        a.join(b, on=["__sh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("__common"))
-    )
-    out = (
-        common.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sz", "__sza"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sz", "__szb"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("__common")
-                / (F.col("__sza") + F.col("__szb") - F.col("__common"))
-            ).alias("jaccard"),
-        )
+    out = _shared_shingle_pairs(df, id_col, text_col, shingle_n, max_df).select(
+        "id_a",
+        "id_b",
+        (F.col("__common") / (F.col("__sza") + F.col("__szb") - F.col("__common"))).alias(
+            "jaccard"
+        ),
     )
     if min_jaccard > 0:
         out = out.filter(F.col("jaccard") >= min_jaccard)
@@ -548,42 +502,12 @@ def containment_pairs(
 
     Returns ``(id_a < id_b, common, cont_a_in_b, cont_b_in_a)``.
     """
-    sh = shingle_rows(df, id_col, text_col, shingle_n).select(
-        id_col, F.xxhash64("__sh").alias("__sh")
-    )
-    if max_df is not None:
-        hot = (
-            sh.groupBy("__sh")
-            .agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") > max_df)
-            .select("__sh")
-        )
-        sh = sh.join(F.broadcast(hot), "__sh", "left_anti")
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("__sz"))
-    a = sh.select(F.col(id_col).alias("id_a"), "__sh")
-    b = sh.select(F.col(id_col).alias("id_b"), "__sh")
-    common = (
-        a.join(b, on=["__sh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("common"))
-    )
-    out = (
-        common.join(
-            sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sz", "__sza"),
-            "id_a",
-        )
-        .join(
-            sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sz", "__szb"),
-            "id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.col("common").cast("bigint").alias("common"),
-            (F.col("common") / F.col("__sza")).alias("cont_a_in_b"),
-            (F.col("common") / F.col("__szb")).alias("cont_b_in_a"),
-        )
+    out = _shared_shingle_pairs(df, id_col, text_col, shingle_n, max_df).select(
+        "id_a",
+        "id_b",
+        F.col("__common").alias("common"),
+        (F.col("__common") / F.col("__sza")).alias("cont_a_in_b"),
+        (F.col("__common") / F.col("__szb")).alias("cont_b_in_a"),
     )
     if min_containment > 0:
         out = out.filter(
@@ -604,76 +528,58 @@ def exact_jaccard_of_pairs(
 
     Word-n-gram Jaccard computed ONLY for the given candidate
     ``(id_a, id_b)`` pairs — the verify stage of LSH candidate→verify
-    dedup.  Shingle rows are first semi-joined down to ids that appear
-    in any pair (the candidate set is tiny next to the corpus), the
-    inverted-index join then runs on that restricted set, and the
-    result is inner-joined back to ``pairs`` so only candidate pairs
-    come out.  Candidate pairs sharing zero shingles get jaccard 0.0.
+    dedup.  Docs are first semi-joined down to ids that appear in any
+    pair (the candidate set is tiny next to the corpus), each candidate
+    doc becomes ONE row ``(id, array of distinct shingle keys)``, and
+    the pair list is left-joined to that set table once per side;
+    ``|A ∩ B|`` is an ``array_intersect`` on the row.  One output row
+    per input pair row (duplicates included).  Pairs sharing zero
+    shingles, or touching a doc with fewer than ``shingle_n`` tokens,
+    get jaccard 0.0.
 
     Cost scales with the candidate set, not the corpus: at 100 TB the
     expensive part stays the (already banded+capped) LSH stage, and the
     verify stage touches |candidate ids| documents.
 
-    The intersection key is the xxhash64 of the shingle (8-byte rows
-    through the pair-scoped join — same narrowing and collision
-    contract as ``ngram_jaccard_pairs``, r13 guide §2.3).
+    Set elements are the xxhash64 of the shingle (same narrowing and
+    collision contract as ``ngram_jaccard_pairs``, r13 guide §2.3).
     """
     ids = (
         pairs.select(F.col("id_a").alias(id_col))
         .union(pairs.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    # prune BEFORE tokenize/explode: only candidate docs pay the
-    # shingling cost (the candidate set is tiny next to the corpus)
-    sh = shingle_rows(
-        df.join(ids, id_col, "left_semi"), id_col, text_col, shingle_n
-    ).select(id_col, F.xxhash64("__sh").alias("__sh"))
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("__sz"))
-    # PAIR-SCOPED intersection: attach id_a's shingles to each pair,
-    # then equi-join on (id_b, shingle).  Cost is Σ_pairs |shingles(a)|
-    # — linear in the pair list.  The tempting alternative (shared-
-    # shingle self-join over the candidate-id set, then filter to
-    # pairs) silently degenerates to full-corpus quadratic Jaccard
-    # when candidates are dense — e.g. a corpus where every doc has a
-    # duplicate (caught by the 10× scale probe: 54 s → pair-scoped).
-    pa = pairs.select("id_a", "id_b").join(
-        sh.withColumnRenamed(id_col, "id_a"), "id_a"
-    )
-    common = (
-        pa.join(
-            sh.select(F.col(id_col).alias("id_b"), "__sh"),
-            ["id_b", "__sh"],
-            "left_semi",
+    # prune BEFORE tokenize: only candidate docs pay the shingling cost
+    sets = (
+        df.join(ids, id_col, "left_semi")
+        .withColumn("__toks", tokens(F.col(text_col)))
+        .select(
+            F.col(id_col),
+            F.array_distinct(
+                F.transform(shingles_of_tokens(F.col("__toks"), shingle_n), lambda g: F.xxhash64(g))
+            ).alias("__set"),
         )
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("__common"))
     )
-    # sizes join LEFT + coalesce 0: a doc with < n tokens produces zero
-    # shingles and hence no size row — such pairs must still come out
-    # with jaccard 0.0 (not silently vanish on an inner join)
-    c = F.coalesce(F.col("__common"), F.lit(0))
-    den = (
-        F.coalesce(F.col("__sza"), F.lit(0))
-        + F.coalesce(F.col("__szb"), F.lit(0))
-        - c
-    )
+    # PAIR-SCOPED: each pair reads its two sets, cost linear in the pair
+    # list.  The tempting alternative (shared-shingle self-join over the
+    # candidate-id set, then filter to pairs) silently degenerates to
+    # full-corpus quadratic Jaccard when candidates are dense — e.g. a
+    # corpus where every doc has a duplicate (caught by the 10× scale
+    # probe: 54 s → pair-scoped).  A doc missing from ``df`` coalesces
+    # to the empty set like a shingle-less one.
+    empty = F.array().cast("array<bigint>")
+    sa = F.coalesce(F.col("__a"), empty)
+    sb = F.coalesce(F.col("__b"), empty)
+    common = F.size(F.array_intersect(sa, sb))
+    den = F.size(sa) + F.size(sb) - common
     return (
         pairs.select("id_a", "id_b")
-        .join(common, ["id_a", "id_b"], "left")
-        .join(
-            sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sz", "__sza"),
-            "id_a",
-            "left",
-        )
-        .join(
-            sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sz", "__szb"),
-            "id_b",
-            "left",
-        )
+        .join(sets.select(F.col(id_col).alias("id_a"), F.col("__set").alias("__a")), "id_a", "left")
+        .join(sets.select(F.col(id_col).alias("id_b"), F.col("__set").alias("__b")), "id_b", "left")
         .select(
             "id_a",
             "id_b",
-            F.when(den > 0, c / den).otherwise(F.lit(0.0)).alias("jaccard"),
+            F.when(den > 0, common / den).otherwise(F.lit(0.0)).alias("jaccard"),
         )
     )
 

@@ -1573,9 +1573,9 @@ def apply_lsh_dedup_batch(
     pairs = exact.filter(F.col("jaccard") >= threshold).select(
         "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
     )
-    # the pair list, candidate-id projections, and shared-shingle
-    # frames in the verify plan are all ANSWER-sized — unbounded on a
-    # dup-storm batch.  An auto-chosen broadcast of any of them is a
+    # the pair list, candidate-id projections, and per-candidate
+    # shingle-set table in the verify plan are all ANSWER-sized —
+    # unbounded on a dup-storm batch.  An auto-chosen broadcast of any of them is a
     # driver OOM waiting for the worst batch (observed at the 30x
     # probe: a 64 MB-threshold broadcast build OOM'd the 8 GB driver),
     # so once the accumulated index is big enough that answer frames

@@ -359,9 +359,8 @@ def test_minhash_near_dup_detection(spark):
         "doc_id long, text string",
     )
     sigs = dedup.minhash_signatures(df, "doc_id", "text", num_hashes=16)
-    pairs = dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=16, bands=16)
     sim = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in
-           dedup.minhash_similarity(sigs, pairs, "doc_id", 16).collect()}
+           dedup.lsh_similar_pairs(sigs, "doc_id", num_hashes=16, bands=16).collect()}
     assert sim.get((1, 2), 0) > 0.5
     assert sim.get((1, 3), 0) == 0
 
@@ -465,6 +464,18 @@ def test_exact_jaccard_of_pairs_shingleless_doc(spark):
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
            dedup.exact_jaccard_of_pairs(df, pairs, "doc_id", "text").collect()}
     assert got == {(1, 2): 0.0, (2, 3): 0.0}
+
+
+def test_exact_jaccard_of_pairs_duplicate_pair_rows(spark):
+    # a pair listed twice yields two rows with the pair's own Jaccard:
+    # shingles {abc, bcd, cde} vs {abc, bcx, cxy} share 1 of 5
+    df = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c x y")], "doc_id long, text string"
+    )
+    pairs = spark.createDataFrame([(1, 2), (1, 2)], "id_a long, id_b long")
+    got = dedup.exact_jaccard_of_pairs(df, pairs, "doc_id", "text").collect()
+    assert [(r["id_a"], r["id_b"]) for r in got] == [(1, 2), (1, 2)]
+    assert [r["jaccard"] for r in got] == [pytest.approx(0.2)] * 2
 
 
 def test_rolling_fingerprints_local_edit_robustness(spark):

@@ -694,6 +694,29 @@ def test_quality_calibration_one_pass_integer_agg(spark, sf_dir):
     assert "text" in read and "doc_id" not in read
 
 
+def test_exact_jaccard_verify_no_pair_regroup_no_shingle_join(spark):
+    """The verify stage intersects per-doc shingle-key arrays on each
+    pair row: no explode of pairs × shingles regrouped on the pair key,
+    and no join keyed on a shingle column."""
+    import re
+
+    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import (
+        dedup,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c x y"), (3, "a b c d e f")],
+        "doc_id long, text string",
+    )
+    pairs = spark.createDataFrame([(1, 2), (1, 3), (2, 3)], "id_a long, id_b long")
+    df = dedup.exact_jaccard_of_pairs(docs, pairs, "doc_id", "text")
+    df.collect()
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"HashAggregate\(keys=\[id_a#\d+L?, id_b#\d+L?", p)
+    assert not [ln for ln in p.splitlines() if "Join" in ln and "__sh" in ln]
+    assert "Generate" not in p
+
+
 def test_embedding_registry_no_all_pairs(spark, sf_dir):
     """Round-6 contract (VERDICT r5 #1): the registered embedding-space
     queries must carry bounded candidate joins — equi hash joins on SRP

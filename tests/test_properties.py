@@ -76,8 +76,7 @@ def test_minhash_estimates_bounded_and_symmetric_inputs(spark):
         [(i, t) for i, t in enumerate(_random_texts(60, 5))], "doc_id long, text string"
     )
     sigs = dedup.minhash_signatures(df, "doc_id", "text", num_hashes=8)
-    pairs = dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=8)
-    sim = dedup.minhash_similarity(sigs, pairs, "doc_id", num_hashes=8).collect()
+    sim = dedup.lsh_similar_pairs(sigs, "doc_id", num_hashes=8, bands=8).collect()
     for r in sim:
         assert 0.0 <= r["est_jaccard"] <= 1.0
         assert r["id_a"] < r["id_b"]
