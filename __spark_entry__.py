@@ -2929,9 +2929,7 @@ def q_token_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shuffle word-count shape; top-k via deterministic sort+limit."""
     tune(spark)
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(dedup.normalize_for_dedup(F.col("text")), " "), lambda x: x != ""
-    )
+    toks = dedup.tokens(F.col("text"))
     return (
         d.select(F.explode(toks).alias("token"))
         .groupBy("token")
@@ -2962,9 +2960,7 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (regr_slope/intercept/r2)."""
     tune(spark)
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(dedup.normalize_for_dedup(F.col("text")), " "), lambda x: x != ""
-    )
+    toks = dedup.tokens(F.col("text"))
     top = (
         d.select(F.explode(toks).alias("token"))
         .groupBy("token")
@@ -3398,9 +3394,7 @@ def q_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates as a UNION ALL of scalars."""
     tune(spark)
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(dedup.normalize_for_dedup(F.col("text")), " "), lambda t: t != ""
-    )
+    toks = dedup.tokens(F.col("text"))
     fp = F.md5(dedup.normalize_for_dedup(F.col("text")))
     wide = d.agg(
         F.count("*").cast("double").alias("n_docs"),
@@ -9063,9 +9057,7 @@ def q_overlapping_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import packing
 
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(dedup.normalize_for_dedup(F.col("text")), " "), lambda x: x != ""
-    )
+    toks = dedup.tokens(F.col("text"))
     return packing.chunk_with_overlap(
         d.select("doc_id", toks.alias("toks")),
         "doc_id",

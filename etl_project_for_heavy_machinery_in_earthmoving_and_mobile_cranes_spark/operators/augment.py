@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import md5_hash64, normalize_for_dedup
+from .dedup import md5_hash64, tokens
 from .sampling import _BUCKETS
 
 
@@ -53,9 +53,7 @@ def span_corruption(
     keeps non-cheap multi-use aliases materialized)."""
     cut = int(mask_rate * _BUCKETS)
     idc = F.col(id_col)
-    toks = F.filter(
-        F.split(normalize_for_dedup(F.col(text_col)), " "), lambda x: x != ""
-    )
+    toks = tokens(F.col(text_col))
     mask = F.transform(toks, lambda x, i: _pos_bucket(idc, i, seed) < cut)
     t = df.select(idc, toks.alias("__t"), mask.alias("__m"))
 

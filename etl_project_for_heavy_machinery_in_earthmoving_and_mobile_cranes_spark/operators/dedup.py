@@ -4,7 +4,10 @@ Exact dedup, MinHash+LSH, SimHash and n-gram Jaccard — all expressed as
 native DataFrame ops, no Python UDFs, so they scale to the 100 TB design
 point.  Each near-duplicate job has one shape:
 
-- signatures: explode shingles → one ``groupBy(id)`` (``minhash_signatures``);
+- shingles: one regex pass per doc (``shingle_array``), the only shingle
+  definition; ``shingle_rows`` explodes it where rows are needed;
+- signatures: narrow projections over each doc's shingle array — no
+  explode, shuffle or aggregate (``minhash_signatures``);
 - candidates: the fused band self-join that also scores the estimate
   (``lsh_similar_pairs``) — callers that only need pairs select
   ``id_a, id_b``;
@@ -33,37 +36,29 @@ def normalize_for_dedup(col: Column) -> Column:
 
 
 def tokens(col: Column) -> Column:
-    return F.split(normalize_for_dedup(col), " ")
+    """The non-empty words of ``normalize_for_dedup(col)`` (array<string>);
+    a text that normalizes to '' has none."""
+    return F.filter(F.split(normalize_for_dedup(col), " "), lambda t: t != "")
 
 
-def shingles_of_tokens(toks: Column, n: int = 3) -> Column:
-    """Word n-gram shingles (array<string>); distinct.
-
-    PERFORMANCE: pass a plain column reference to an already-projected
-    token array — embedding the tokenization expression here makes
-    ``slice`` re-evaluate the full regex normalization per shingle
-    element (O(tokens²) per doc)."""
-    # guard: sequence(1, 0) yields DESCENDING [1, 0] in Spark, sending an
-    # illegal start=0 into slice() — short docs must produce [] instead
-    last = F.size(toks) - (n - 1)
-    idx = F.when(last >= 1, F.sequence(F.lit(1), last)).otherwise(
-        F.array().cast("array<int>")
+def shingle_array(text: Column, n: int = 3) -> Column:
+    """Distinct word ``n``-gram shingles of ``normalize_for_dedup(text)``
+    (array<string>, first-occurrence order) from one regex pass: a
+    zero-width match at each word start whose lookahead captures that
+    word and the ``n - 1`` after it.  A text with fewer than ``n`` words
+    (an empty text, for any ``n``) yields []."""
+    gram = rf"(?<![^ ])(?=((?:[^ ]+ ){{{n - 1}}}[^ ]+))"
+    return F.array_distinct(
+        F.regexp_extract_all(normalize_for_dedup(text), F.lit(gram), 1)
     )
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    return F.array_distinct(grams)
 
 
 def shingle_rows(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, out_col: str = "__sh"
 ) -> DataFrame:
-    """(id, shingle) rows: tokenization projected ONCE per doc, then the
-    n-gram build works on the materialized array column."""
-    return (
-        df.withColumn("__toks", tokens(F.col(text_col)))
-        .select(
-            F.col(id_col),
-            F.explode(shingles_of_tokens(F.col("__toks"), n)).alias(out_col),
-        )
+    """(id, shingle) rows: one explode of ``shingle_array`` per doc."""
+    return df.select(
+        F.col(id_col), F.explode(shingle_array(F.col(text_col), n)).alias(out_col)
     )
 
 
@@ -122,40 +117,56 @@ def minhash_signatures(
     shingle_n: int = 3,
     hash_fn: str = "md5",
 ) -> DataFrame:
-    """One row per doc: ``id, mh_0..mh_{k-1}`` (min over shingles of k
-    independent hash families).  explode → single groupBy(id).
+    """One row per doc: ``id, mh_0..mh_{k-1}`` (min over the doc's
+    shingles of k independent hash families), from narrow projections
+    over the doc's shingle array — no explode, no shuffle, no
+    aggregate.  ``id_col`` must be a key of ``df``: each input row is
+    one signature row.  Docs with no shingle (fewer than ``shingle_n``
+    words) are absent.
 
     ``hash_fn``:
     - ``"md5"`` (default): cross-engine-reproducible construction
       (``conv(substr(md5(seed:shingle)))``) — any engine with md5 can
-      recompute the exact signatures (the DuckDB oracle does).
+      recompute the exact signatures (the DuckDB oracle does).  One
+      digest array per 4 families; each family takes the min of its
+      8-hex-char slice and converts it once per doc (fixed-width
+      lowercase hex orders as its value, so min-then-conv equals
+      conv-then-min).
     - ``"xxhash64"``: JVM-intrinsic seeded hash, measured ~7× faster on
       the signature stage (no digest string, no base conversion) —
       the 100 TB path when signatures only need to agree with
       THIS engine's runs.  Same banding/collision mechanics.
     """
-    sh = shingle_rows(df, id_col, text_col, shingle_n)
+    sh = df.select(
+        F.col(id_col), shingle_array(F.col(text_col), shingle_n).alias("__sh")
+    ).filter(F.size("__sh") > 0)
     if hash_fn == "xxhash64":
-        aggs = [
-            F.min(F.xxhash64(F.lit(i), F.col("__sh"))).alias(f"mh_{i}")
+        mh = [
+            F.array_min(F.transform("__sh", lambda g: F.xxhash64(F.lit(i), g)))
             for i in range(num_hashes)
         ]
-        return sh.groupBy(id_col).agg(*aggs)
-    # one md5 digest per 4 hash families, computed ONCE per shingle row in
-    # a projection — embedding the md5 inside each min() would evaluate it
-    # k times per row (no CSE across aggregate expressions)
-    n_digests = (num_hashes + 3) // 4
-    for s in range(n_digests):
-        sh = sh.withColumn(
-            f"__d{s}",
-            F.md5(F.concat(F.lit(f"{s}:"), F.col("__sh")).cast("binary")),
+    else:
+        # each digest array is its own projected column: inlined into the
+        # four families that slice it, the md5 would run four times
+        sh = sh.select(
+            F.col(id_col),
+            *[
+                F.transform("__sh", lambda g: F.md5(F.concat(F.lit(f"{s}:"), g).cast("binary")))
+                .alias(f"__d{s}")
+                for s in range((num_hashes + 3) // 4)
+            ],
         )
-    aggs = []
-    for i in range(num_hashes):
-        seed, part = divmod(i, 4)
-        h = F.conv(F.substring(F.col(f"__d{seed}"), 1 + 8 * part, 8), 16, 10).cast("bigint")
-        aggs.append(F.min(h).alias(f"mh_{i}"))
-    return sh.groupBy(id_col).agg(*aggs)
+        mh = [
+            F.conv(
+                F.array_min(
+                    F.transform(f"__d{i // 4}", lambda x: F.substring(x, 1 + 8 * (i % 4), 8))
+                ),
+                16,
+                10,
+            ).cast("bigint")
+            for i in range(num_hashes)
+        ]
+    return sh.select(F.col(id_col), *[h.alias(f"mh_{i}") for i, h in enumerate(mh)])
 
 
 def lsh_similar_pairs(
@@ -278,7 +289,6 @@ def simhash(
     groupBy (bits sums computed map-side) → reassemble the fingerprint.
     """
     toks = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("__t"))
-    toks = toks.filter(F.col("__t") != "")
     h = md5_hash64(F.col("__t"), seed=99)
     bit_aggs = [
         F.sum(
@@ -310,12 +320,14 @@ def connected_components(
 ) -> DataFrame:
     """Cluster near-duplicate pairs into components (label = min member
     id) by iterative min-label propagation — each iteration is one
-    join + one aggregate, lineage cut per iteration, early stop on
-    convergence.  Diameter of dup clusters is tiny in practice, so
-    few iterations suffice; ``max_iter`` bounds pathological chains —
-    and hitting the bound without converging warns LOUDLY (a
-    partially-converged labeling silently under-merges clusters, so
-    a pathological chain must fail loud, not quiet).
+    aggregate (plus, after round 1, one join), lineage cut per
+    iteration, early stop on convergence.  Round 1 reads the edge table
+    alone: every node starts as its own label, so its first label is
+    ``least(node, min(neighbour))``.  Diameter of dup clusters is tiny
+    in practice, so few iterations suffice; ``max_iter`` bounds
+    pathological chains — and hitting the bound without converging
+    warns LOUDLY (a partially-converged labeling silently under-merges
+    clusters, so a pathological chain must fail loud, not quiet).
 
     Returns (node, label) — docs to DROP are rows with node != label.
     """
@@ -330,13 +342,16 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = (
-        e.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
+    # round 1: the own label is the node itself, so the change flag is
+    # min(neighbour) < node and rides the same aggregate
+    new_labels = e.groupBy("src").agg(F.min("dst").alias("__m")).select(
+        F.col("src").alias("node"),
+        F.least("src", "__m").alias("label"),
+        (F.col("__m") < F.col("src")).alias("__chg"),
     )
-    # One shuffle per iteration (r12, guide §2.4): the neighbor-min AND
+    # the identity labeling, returned only when max_iter runs no round
+    labels = new_labels.select("node", F.col("node").alias("label"))
+    # One shuffle per later round (r12, guide §2.4): the neighbor-min AND
     # the node's own label meet in a single groupBy — new label =
     # min(own ∪ neighbor labels) — instead of the former
     # aggregate-then-left-join (two exchanges).  Convergence detection
@@ -346,6 +361,19 @@ def connected_components(
     # labels.  Fixpoint and labels are identical: both formulations
     # compute min-label propagation and stop when no label changes.
     for _ in range(max_iter):
+        new_labels = new_labels.localCheckpoint(eager=False)
+        # ONE job per iteration (r13, guide §2.4/§5): the convergence
+        # aggregate computes every partition of the LAZY checkpoint (so
+        # materialization and the convergence answer share the job),
+        # where the former eager-checkpoint + limit(1).count() pair paid
+        # a materialization job PLUS incremental take-jobs per round
+        # (measured: dedup_clusters 56 jobs → ~20).
+        changed = new_labels.agg(
+            F.max(F.col("__chg").cast("int"))
+        ).first()[0]
+        labels = new_labels.drop("__chg")
+        if not changed:
+            break
         msgs = e.join(labels, e["dst"] == labels["node"]).select(
             F.col("src").alias("node"),
             F.col("label"),
@@ -359,20 +387,7 @@ def connected_components(
             .select(
                 "node", "label", (F.col("label") < F.col("__old")).alias("__chg")
             )
-            .localCheckpoint(eager=False)
         )
-        # ONE job per iteration (r13, guide §2.4/§5): the convergence
-        # aggregate computes every partition of the LAZY checkpoint (so
-        # materialization and the convergence answer share the job),
-        # where the former eager-checkpoint + limit(1).count() pair paid
-        # a materialization job PLUS incremental take-jobs per round
-        # (measured: dedup_clusters 56 jobs → ~20).
-        changed = new_labels.agg(
-            F.max(F.col("__chg").cast("int"))
-        ).first()[0]
-        labels = new_labels.drop("__chg")
-        if not changed:
-            break
     else:
         import warnings
 
@@ -550,15 +565,11 @@ def exact_jaccard_of_pairs(
         .distinct()
     )
     # prune BEFORE tokenize: only candidate docs pay the shingling cost
-    sets = (
-        df.join(ids, id_col, "left_semi")
-        .withColumn("__toks", tokens(F.col(text_col)))
-        .select(
-            F.col(id_col),
-            F.array_distinct(
-                F.transform(shingles_of_tokens(F.col("__toks"), shingle_n), lambda g: F.xxhash64(g))
-            ).alias("__set"),
-        )
+    sets = df.join(ids, id_col, "left_semi").select(
+        F.col(id_col),
+        F.array_distinct(
+            F.transform(shingle_array(F.col(text_col), shingle_n), lambda g: F.xxhash64(g))
+        ).alias("__set"),
     )
     # PAIR-SCOPED: each pair reads its two sets, cost linear in the pair
     # list.  The tempting alternative (shared-shingle self-join over the
@@ -770,11 +781,8 @@ def contamination_attribution(
         )
     )
     g = (
-        tagged.withColumn("__toks", tokens(F.col("__text")))
-        .select(
-            "__side",
-            "__id",
-            F.explode(shingles_of_tokens(F.col("__toks"), n)).alias("__sh"),
+        tagged.select(
+            "__side", "__id", F.explode(shingle_array(F.col("__text"), n)).alias("__sh")
         )
         .distinct()
         .persist()

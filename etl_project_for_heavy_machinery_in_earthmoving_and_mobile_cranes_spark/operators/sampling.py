@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import md5_hash64
+from .dedup import md5_hash64, tokens
 
 # md5-derived bucket space: 8 hex chars = 32 bits
 _BUCKETS = 1 << 32
@@ -537,11 +537,7 @@ def dsir_importance(
     Output: ``(id, n_feats, log_w)`` for every input row; docs with no
     bigrams carry n_feats = 0 and NULL log_w.
     """
-    from .textstats import normalize_for_dedup
-
-    toks = F.filter(
-        F.split(normalize_for_dedup(F.col(text_col)), " "), lambda t: t != ""
-    )
+    toks = tokens(F.col(text_col))
     bigrams = F.expr(
         "transform(sequence(1, size(__tk) - 1),"
         " i -> concat(__tk[i - 1], ' ', __tk[i]))"

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import normalize_for_dedup
+from .dedup import normalize_for_dedup, tokens
 
 # whitespace tokens; BPE-ish fallback splits punctuation off words
 _TOKEN_RE = r"\s+"
@@ -140,9 +140,7 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     AQE will broadcast it when small; at 100 TB it shuffle-joins on the
     token key, which is exactly the word-count partitioning already in
     place from the groupBy."""
-    toks = F.filter(
-        F.split(normalize_for_dedup(F.col(text_col)), " "), lambda x: x != ""
-    )
+    toks = tokens(F.col(text_col))
     dt = (
         df.select(F.col(id_col), F.explode(toks).alias("tok"))
         .groupBy(id_col, "tok")
@@ -188,9 +186,7 @@ def bigram_logprob(
     shuffle-joins on the token key at scale, same as word count.  The
     interpolation guarantees a nonzero probability for every observed
     bigram (cvw >= 1), so no log(0) guard is needed."""
-    toks = F.filter(
-        F.split(normalize_for_dedup(F.col(text_col)), " "), lambda x: x != ""
-    )
+    toks = tokens(F.col(text_col))
     t = df.select(F.col(id_col), toks.alias("__t"))
     pairs = F.when(
         F.size("__t") >= 2,
@@ -258,9 +254,7 @@ def repetition_stats(
     duplicate-token fraction and duplicate-bigram fraction.  High values
     flag boilerplate/spam for corpus filtering.  Pure array expressions
     — tokens projected once, no explode, no shuffle."""
-    toks = F.filter(
-        F.split(normalize_for_dedup(F.col(text_col)), " "), lambda x: x != ""
-    )
+    toks = tokens(F.col(text_col))
     t = df.select(F.col(id_col), toks.alias("__t"))
     # NON-distinct bigrams (repetition is the signal, unlike shingling)
     last = F.size(F.col("__t")) - 1
@@ -305,9 +299,7 @@ def tfidf_top_terms(
     (crossJoin of a 1-row countDistinct), keeping the operator ONE lazy
     plan — no driver-side ``count()`` barrier job mid-build.
     """
-    toks = F.filter(
-        F.split(normalize_for_dedup(F.col(text_col)), " "), lambda x: x != ""
-    )
+    toks = tokens(F.col(text_col))
     dt = (
         df.select(F.col(id_col), F.explode(toks).alias("term"))
         .groupBy(id_col, "term")
@@ -348,9 +340,7 @@ def token_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     is explode → (doc, token) count → one per-doc aggregate — two
     map-side-combined shuffles, no Python.
     """
-    toks = F.filter(
-        F.split(normalize_for_dedup(F.col(text_col)), " "), lambda x: x != ""
-    )
+    toks = tokens(F.col(text_col))
     dt = (
         df.select(F.col(id_col), F.explode(toks).alias("tok"))
         .groupBy(id_col, "tok")
@@ -415,9 +405,7 @@ def distinctive_terms(
     the term / group keys of vocabulary- and group-cardinality-sized
     tables; the final top-k is a WindowGroupLimit over |groups| keys.
     """
-    toks = F.filter(
-        F.split(normalize_for_dedup(F.col(text_col)), " "), lambda x: x != ""
-    )
+    toks = tokens(F.col(text_col))
     gt = (
         df.select(F.col(group_col).alias("grp"), F.explode(toks).alias("term"))
         .groupBy("grp", "term")
@@ -667,9 +655,7 @@ def bm25_scores(
     """
     if not query_terms:
         raise ValueError("bm25_scores needs at least one query term")
-    toks = F.filter(
-        F.split(normalize_for_dedup(F.col(text_col)), " "), lambda x: x != ""
-    )
+    toks = tokens(F.col(text_col))
     base = df.select(F.col(id_col), toks.alias("__t")).select(
         F.col(id_col), F.col("__t"), F.size("__t").alias("__dl")
     )
@@ -755,9 +741,7 @@ def bpe_merge_steps(df: DataFrame, text_col: str, n_merges: int = 3) -> DataFram
     fewer than ``n_merges`` rows when the vocabulary runs out of
     adjacent pairs.
     """
-    toks = F.filter(
-        F.split(normalize_for_dedup(F.col(text_col)), " "), lambda t: t != ""
-    )
+    toks = tokens(F.col(text_col))
     vocab = (
         df.select(F.explode(toks).alias("__w"))
         .groupBy("__w")
@@ -848,9 +832,7 @@ def doc_distinct_grams(
     queries in one long-lived session; a leaked cache degrades to
     LRU-evicted storage, never wrong answers.
     """
-    toks = F.filter(
-        F.split(normalize_for_dedup(F.col(text_col)), " "), lambda t: t != ""
-    )
+    toks = tokens(F.col(text_col))
     grams = F.array_distinct(
         F.transform(
             F.sequence(F.lit(0), F.size(F.col("__tk")) - n),
@@ -973,9 +955,7 @@ def bpe_encode_counts(
     inside ``transform``/``aggregate`` lambdas, no explode, no shuffle,
     no UDF.  Cost is O(corpus chars × merges).
     """
-    toks = F.filter(
-        F.split(normalize_for_dedup(F.col(text_col)), " "), lambda t: t != ""
-    )
+    toks = tokens(F.col(text_col))
 
     def encode(w):
         seq = F.trim(F.regexp_replace(w, r"(.)", r"$1 "))
@@ -1030,9 +1010,7 @@ def hashed_bow(
     """
     from .dedup import md5_hash64
 
-    toks = F.filter(
-        F.split(normalize_for_dedup(F.col(text_col)), " "), lambda t: t != ""
-    )
+    toks = tokens(F.col(text_col))
     idx = (md5_hash64(F.col("__t"), seed) % dim).cast("int")
     per_idx = (
         df.select(F.col(id_col), F.explode(toks).alias("__t"))
@@ -1084,9 +1062,7 @@ def tail_token_coverage(
     every input row; token-less docs carry zeros and NULL tail_frac.
     """
     toks = F.array_distinct(
-        F.filter(
-            F.split(normalize_for_dedup(F.col(text_col)), " "), lambda t: t != ""
-        )
+        tokens(F.col(text_col))
     )
     pairs = df.select(F.col(id_col), F.explode(toks).alias("__t"))
     # per-doc-distinct tokens => count(*) over the token IS its df
@@ -1162,9 +1138,7 @@ def gopher_rules(
     """
     t = {**GOPHER_THRESHOLDS, **(thresholds or {})}
     raw = F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != "")
-    norm = F.filter(
-        F.split(normalize_for_dedup(F.col(text_col)), " "), lambda x: x != ""
-    )
+    norm = tokens(F.col(text_col))
     base = df.select(
         F.col(id_col),
         F.col(text_col).alias("__txt"),

@@ -74,6 +74,24 @@ def test_connected_components(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
+def test_connected_components_converging_in_round_one(spark):
+    """Stars around their smallest member are labelled by round 1 (read
+    from the edge table alone); round 2 only confirms, so two rounds
+    converge without a warning.  A self-pair and a pair listed in both
+    orientations change nothing."""
+    import warnings
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (1, 3), (4, 1), (10, 11), (11, 10), (5, 5)], "id_a long, id_b long"
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        comps = dedup.connected_components(pairs, max_iter=2)
+    assert not any("did not converge" in str(w.message) for w in caught)
+    got = {r["node"]: r["label"] for r in comps.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 10: 10, 11: 10}
+
+
 def test_pq_codes_and_adc_recall(spark, sf_dir):
     from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import (
         similarity as sim,

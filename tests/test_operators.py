@@ -554,6 +554,8 @@ def test_strip_duplicate_spans_keeps_lowest_id_copy(spark):
             (1, "a b c d e f g h i j"),
             (2, "x y a b c d e f g h q r s"),
             (3, "short doc"),  # < k tokens: passes through untouched
+            (4, ""),  # no word at all: empty, zero kept
+            (5, "!!! -- ..."),
         ],
         "doc_id long, text string",
     )
@@ -567,7 +569,19 @@ def test_strip_duplicate_spans_keeps_lowest_id_copy(spark):
         1: ("a b c d e f g h i j", 10),
         2: ("x y q r s", 5),
         3: ("short doc", 2),
+        4: ("", 0),
+        5: ("", 0),
     }
+
+
+def test_positional_grams_skip_docs_without_words(spark):
+    """A text that normalizes to '' has no word, so no gram at any k."""
+    df = spark.createDataFrame(
+        [(1, ""), (2, "!!! -- ..."), (3, "short doc")], "doc_id long, text string"
+    )
+    for k in (1, 2):
+        got = {r["doc_id"] for r in dedup.positional_gram_hashes(df, "doc_id", "text", k).collect()}
+        assert got == {3}, k
 
 
 def test_simhash_similarity_order(spark):

@@ -489,11 +489,22 @@ def test_curation_pipeline_one_dag_no_cartesian(spark, sf_dir):
     assert not re.search(r"Exchange SinglePartition[^\n]*\n[^\n]*Sort ", p)
 
 
-def test_no_python_udfs_anywhere_in_registry(spark, sf_dir):
+def test_no_python_udfs_anywhere_in_registry(spark, sf_dir, monkeypatch):
     """The repo-wide anti-pattern sweep as a plan contract: EVERY
     registered query's physical plan must be Python-free except the
     declared Python-boundary set (multimodal codecs via mapInPandas).
     Compiles all plans; executes none."""
+    import os
+
+    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark import (
+        reference_harness as rh,
+    )
+
+    # without the reference's xlsx files, reference_batch_parity plans
+    # the same run_pipeline call over the harness builders' empty,
+    # explicitly typed frames
+    if not (os.path.exists(rh.INPUT_XLSX) and os.path.exists(rh.GOLDEN_XLSX)):
+        monkeypatch.setattr(rh, "load_reference_records", lambda: ([], []))
     python_boundary = {
         "media_features", "media_frames", "media_resize",
         "media_decode_dims", "media_wav_stats", "media_dhash",
@@ -715,6 +726,26 @@ def test_exact_jaccard_verify_no_pair_regroup_no_shingle_join(spark):
     assert not re.search(r"HashAggregate\(keys=\[id_a#\d+L?, id_b#\d+L?", p)
     assert not [ln for ln in p.splitlines() if "Join" in ln and "__sh" in ln]
     assert "Generate" not in p
+
+
+@pytest.mark.parametrize("hash_fn", ["md5", "xxhash64"])
+def test_minhash_signatures_are_one_row_per_doc_projection(spark, hash_fn):
+    """Signatures come from projections over each doc's shingle array:
+    no explode of doc × shingle rows, no shuffle, no per-doc aggregate."""
+    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import (
+        dedup,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c x y"), (3, "too short")],
+        "doc_id long, text string",
+    )
+    df = dedup.minhash_signatures(docs, "doc_id", "text", num_hashes=8, hash_fn=hash_fn)
+    assert sorted(r["doc_id"] for r in df.collect()) == [1, 2]
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in p
+    assert "Generate" not in p
+    assert "Aggregate" not in p
 
 
 def test_embedding_registry_no_all_pairs(spark, sf_dir):

@@ -145,6 +145,52 @@ def test_exact_jaccard_matches_python_reference(spark):
         assert got[(a, b)] == pytest.approx(want), (a, b)
 
 
+def test_shingles_and_md5_signatures_match_python_reference(spark):
+    """``shingle_array`` and the md5 ``minhash_signatures`` agree bit for
+    bit with a ``re``/``hashlib`` replay on seeded random docs plus
+    degenerate ones (empty, punctuation-only, fewer than n words,
+    repeated n-grams, a non-ASCII capital that lowercases to two chars)."""
+    import hashlib
+    import re
+
+    rng = random.Random(9)
+    vocab = WORDS + ["a-b", "C.D", "e", "7", "!!"]
+    texts = [" ".join(rng.choices(vocab, k=rng.randint(0, 14))) for _ in range(120)]
+    texts += ["", "!!! -- ...", "one two", "a b a b a b a b a b", "\u0130", "x \u0130 y z"]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+
+    def grams(t, n):
+        norm = re.sub(r"[^a-z0-9]+", " ", t.lower()).strip()
+        words = norm.split(" ") if norm else []
+        out = [" ".join(words[i:i + n]) for i in range(len(words) - n + 1)]
+        return list(dict.fromkeys(out))
+
+    ns = (1, 2, 3, 5)
+    rows = df.select(
+        "doc_id", *[dedup.shingle_array(F.col("text"), n).alias(f"g{n}") for n in ns]
+    ).collect()
+    for r in rows:
+        for n in ns:
+            assert r[f"g{n}"] == grams(texts[r["doc_id"]], n), (r["doc_id"], n)
+
+    k = 8
+    sigs = {
+        r["doc_id"]: [r[f"mh_{i}"] for i in range(k)]
+        for r in dedup.minhash_signatures(df, "doc_id", "text", num_hashes=k).collect()
+    }
+
+    def md5_sig(gs):
+        def h(i, g):
+            seed, part = divmod(i, 4)
+            hexd = hashlib.md5(f"{seed}:{g}".encode()).hexdigest()
+            return int(hexd[8 * part:8 * part + 8], 16)
+
+        return [min(h(i, g) for g in gs) for i in range(k)]
+
+    want = {i: md5_sig(grams(t, 3)) for i, t in enumerate(texts) if grams(t, 3)}
+    assert sigs == want
+
+
 def test_shuffle_rank_matches_single_window_reference(spark):
     """The two-pass bucket+offset construction produces the identical
     total order as the (non-scalable) single global row_number."""

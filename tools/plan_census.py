@@ -9,7 +9,9 @@ Output: PLANS.md (one row per query) + one JSON summary line on
 stdout.  Complements tests/test_plans.py (deep per-query contracts) by
 making the whole surface auditable at a glance.
 
-Usage: python tools/plan_census.py [sf_dir]
+Usage: python tools/plan_census.py [sf_dir] [query ...]
+       (with query names, only those rows of PLANS.md are rebuilt and
+       rewritten; every other row and violation is kept as it stands)
 """
 
 from __future__ import annotations
@@ -101,8 +103,26 @@ INTERNAL_PYTHON_ALLOWLIST = {
 }
 
 
+def _read_census(path: str) -> tuple[list, list]:
+    """(rows, violations) of an existing PLANS.md."""
+    rows, violations = [], []
+    with open(path) as fh:
+        for line in fh:
+            m = re.match(r"- VIOLATION `([^`]+)`: (.*)$", line)
+            if m:
+                violations.append((m.group(1), m.group(2)))
+            elif line.startswith("| ") and not line.startswith("| query |"):
+                rows.append(tuple(c.strip() for c in line.strip()[1:-1].split("|")))
+    return rows, violations
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    only = set(sys.argv[2:])
+    registry = entrymod.queries()
+    unknown = only - set(registry)
+    if unknown:
+        sys.exit(f"unknown queries: {sorted(unknown)}")
     spark = get_spark(app_name="plan-census")
     spark.sparkContext.setLogLevel("ERROR")
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -133,7 +153,9 @@ def main() -> None:
         }
 
     rows, violations = [], []
-    for name, fn in entrymod.queries().items():
+    for name, fn in registry.items():
+        if only and name not in only:
+            continue
         n0 = store.executionsList().size()
         try:
             df = fn(spark, sf_dir)
@@ -182,6 +204,11 @@ def main() -> None:
                 (name, f"internal Python eval not allowlisted ({ic['py']})")
             )
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+    if only:
+        old_rows, old_violations = _read_census(out)
+        fresh = {r[0]: r for r in rows}
+        rows = [fresh.pop(r[0], r) for r in old_rows] + list(fresh.values())
+        violations = [v for v in old_violations if v[0] not in only] + violations
     with open(out, "w") as fh:
         fh.write("# Plan-shape census (tools/plan_census.py)\n\n")
         fh.write(f"Registry size: {len(rows)}; sf_dir: {sf_dir}.\n")
