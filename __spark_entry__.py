@@ -1884,7 +1884,8 @@ def _oracle_winnow_fingerprints() -> str:
     poly = "(" + " + ".join(terms) + f") % {WINNOW_MOD}"
     return f"""
 WITH toks AS (
-  SELECT doc_id, string_split({norm}, ' ') AS t FROM documents
+  SELECT doc_id, list_filter(string_split({norm}, ' '), x -> x <> '') AS t
+  FROM documents
 ), words AS (
   SELECT doc_id, unnest(t) AS w,
          CAST(unnest(range(1, len(t) + 1)) AS BIGINT) AS pos
@@ -1939,7 +1940,8 @@ def _oracle_dup_span_detect() -> str:
 
     return f"""
 WITH toks AS (
-  SELECT doc_id, string_split({norm}, ' ') AS t FROM documents
+  SELECT doc_id, list_filter(string_split({norm}, ' '), x -> x <> '') AS t
+  FROM documents
 ), words AS (
   SELECT doc_id, unnest(t) AS w,
          CAST(unnest(range(1, len(t) + 1)) AS BIGINT) AS pos
@@ -2007,7 +2009,8 @@ def _oracle_dup_span_strip() -> str:
 
     return f"""
 WITH toks AS (
-  SELECT doc_id, string_split({norm}, ' ') AS t FROM documents
+  SELECT doc_id, list_filter(string_split({norm}, ' '), x -> x <> '') AS t
+  FROM documents
 ), words AS (
   SELECT doc_id, unnest(t) AS w,
          CAST(unnest(range(1, len(t) + 1)) AS BIGINT) AS pos
@@ -13964,7 +13967,7 @@ def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 d.filter(F.col("doc_id") % 3 == b), b, idx, pairs
             )
         out = (
-            spark.read.parquet(pairs)
+            jobs.read_maintained_table(spark, pairs)
             .select("id_a", "id_b", "jaccard")
             .localCheckpoint(eager=True)
         )
@@ -15375,7 +15378,8 @@ def q_decontaminate_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of ingest-edge decontamination (streaming/jobs.
     apply_decontaminate_batch): the corpus slice arrives as three
     micro-batches, each anti-joined against the STATIC benchmark
-    5-gram set (broadcast, derived once) into its own partition.
+    5-gram set (broadcast, derived once) and appended to one Delta
+    table.
     Contamination is stateless across batches, so the union of the
     per-batch clean outputs must equal the one-shot anti join — which
     is exactly what the oracle computes."""
@@ -15408,7 +15412,7 @@ def q_decontaminate_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n=5,
             )
         out = (
-            spark.read.parquet(out_path)
+            jobs.read_maintained_table(spark, out_path)
             .select("doc_id", "lang", "source", "n_chars")
             .localCheckpoint(eager=True)
         )

@@ -1,9 +1,11 @@
 """History maintenance (O3 union + O5 schema check).
 
 Reference: xlsx concat after a column-name set check (nb cells 77-83,
-prog.py:450-468).  Engine shape: a partitioned Parquet table keyed by
-batch month — append is a metadata operation, year slices prune
-partitions, and re-runs are idempotent via partition overwrite.
+prog.py:450-468).  Engine shape: the union and the schema check are
+DataFrame operators; the history itself is a Delta table
+(``sources.delta_lite``): a batch lands as one ``write_delta`` append or
+``upsert_delta`` commit, a retried batch is a no-op through its ``txn``,
+and year slices prune on the log's partition values and file stats.
 """
 
 from __future__ import annotations
@@ -29,17 +31,6 @@ def append_history(hist: DataFrame, batch: DataFrame) -> DataFrame:
     return hist.unionByName(batch)
 
 
-def write_history(df: DataFrame, path: str, partition_col: str = "month") -> None:
-    """Partitioned Parquet append; dynamic partition overwrite makes a
-    re-run of the same batch idempotent."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-
-
 def year_slice(
     df: DataFrame, date_col: str, year: int, fmt: str | None = None
 ) -> DataFrame:
@@ -60,10 +51,10 @@ def merge_upsert(
     """Key-based upsert: rows in ``updates`` replace same-key rows in
     ``current``; new keys append.  The MERGE-INTO shape without a table
     format: anti-join out the superseded rows, union the updates.  One
-    shuffle on the key (both inputs hash-partition for the anti join);
-    at scale write the result partitioned so only affected partitions
-    rewrite (partition-key prefix in ``key_cols`` enables dynamic
-    partition overwrite)."""
+    shuffle on the key (both inputs hash-partition for the anti join).
+    The persisted twin is ``delta_lite.upsert_delta``: the same
+    semantics as one commit that rewrites only the key buckets the
+    updates touch."""
     keep = current.join(
         updates.select(*key_cols).dropDuplicates(), on=key_cols, how="left_anti"
     )

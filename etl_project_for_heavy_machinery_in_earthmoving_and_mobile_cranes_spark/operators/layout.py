@@ -11,7 +11,10 @@ bounds BOTH spans per file, so min/max footer stats prune on either
 column or both.
 
 Everything here is integer bit arithmetic — deterministic, shuffle-free
-expression code the oracle replays exactly.
+expression code the oracle replays exactly.  The layout WRITE is
+``sources.delta_lite.optimize_zorder``: it min/max-normalizes both
+columns into the ``bits`` range before calling ``morton_code``, so no
+value wraps past ``2^bits``, and commits the rewrite to the table's log.
 
 Reference scope note: the reference is a single-process pandas batch
 (prog.py) with no storage-layout stage at all; this module is part of
@@ -59,9 +62,10 @@ def zorder_bucket_stats(
 
     Shape: one shuffle-free Morton projection, ONE 1-row max aggregate
     broadcast back (the bucket width scalar — never a join), one hash
-    aggregate on bucket id.  The same expression feeds a real layout
-    write via ``df.repartitionByRange(n, morton).sortWithinPartitions``
-    — this census is the verifiable stand-in the oracle can replay."""
+    aggregate on bucket id.  The real layout write is
+    ``delta_lite.optimize_zorder`` (the same interleave over normalized
+    values) — this census is the verifiable stand-in the oracle can
+    replay."""
     m = morton_code(F.col(col_a), F.col(col_b), bits=bits)
     coded = df.select(
         F.col(col_a).cast("bigint").alias("__a"),
@@ -92,27 +96,4 @@ def zorder_bucket_stats(
             (F.col("max_a") - F.col("min_a") + F.lit(1))
             * (F.col("max_b") - F.col("min_b") + F.lit(1)),
         )
-    )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 32,
-    bits: int = 16,
-) -> None:
-    """Materialize a Z-ordered parquet layout: range-partition on the
-    Morton code into ``n_files`` and sort within each, so every file's
-    (col_a, col_b) footer stats expose a bounded bounding box and a
-    selective predicate on EITHER column skips most files."""
-    m = morton_code(F.col(col_a), F.col(col_b), bits=bits)
-    (
-        df.withColumn("__zorder", m)
-        .repartitionByRange(n_files, "__zorder")
-        .sortWithinPartitions("__zorder")
-        .drop("__zorder")
-        .write.mode("overwrite")
-        .parquet(path)
     )

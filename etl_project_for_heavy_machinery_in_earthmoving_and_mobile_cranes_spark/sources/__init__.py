@@ -1,11 +1,9 @@
 from .readers import (  # noqa: F401
-    compact_parquet,
     read_csv,
     read_jsonl,
     read_orc,
     read_parquet,
     read_xlsx_as_df,
-    write_clustered_parquet,
     write_csv,
     write_jsonl,
     write_orc,

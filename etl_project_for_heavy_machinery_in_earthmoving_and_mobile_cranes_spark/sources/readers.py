@@ -1,16 +1,18 @@
-"""Sources & sinks (S1–S5).
+"""Sources & sinks (S1–S5): the interchange edge.
 
-Canonical storage is Parquet (columnar, splittable, predicate/projection
-pushdown); CSV supported with explicit schemas; xlsx exists only at the
-ingestion edge (reference S1/S2 read xlsx) via a pandas conversion on
-the driver — xlsx files are small dims/batches by nature, never the
-100 TB fact path.
+Every table the engine persists is a Delta table written through
+``sources/delta_lite`` (one format, one replay rule; its ``compact``,
+``optimize_small_files``, ``optimize_cluster`` and ``optimize_zorder``
+are the layout writers).  This module reads and writes the formats at
+the edge: Parquet files, CSV with explicit schemas, JSON lines, ORC,
+the Hive-bucketed catalog table and footer-only statistics.  xlsx
+exists only at the ingestion edge (reference S1/S2 read xlsx) via a
+pandas conversion on the driver — xlsx files are small dims/batches by
+nature, never the 100 TB fact path.
 """
-
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -142,100 +144,6 @@ def write_orc(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.orc(path)
-
-
-def write_clustered_parquet(
-    df: DataFrame,
-    path: str,
-    cluster_by: tuple[str, ...],
-    num_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Layout-aware write: range-partition on ``cluster_by`` then sort
-    within each file on the same keys.  Every output file covers a
-    disjoint key range and every parquet row group carries tight
-    min/max stats on the cluster keys, so later range/point predicates
-    skip whole files and row groups at scan time — the poor man's
-    Z-order, and the single highest-leverage layout choice for a table
-    that is always filtered on the same key (date, tenant, shard).
-
-    One range-exchange (sampled boundaries, skew-resistant) + a
-    partition-local sort; no global sort."""
-    cols = [F.col(c) for c in cluster_by]
-    out = df.repartitionByRange(*([num_files] if num_files else []), *cols)
-    out.sortWithinPartitions(*cols).write.mode(mode).parquet(path)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_file_mb: int = 256,
-) -> int:
-    """Small-file compaction: rewrite a directory into ~target-sized
-    files.  Streaming sinks and over-parallel writers fragment tables
-    into many tiny files; scans then pay per-file open cost and lose
-    row-group locality.  File count is estimated from on-disk bytes —
-    no shuffle beyond the coalesce.  Returns the file count written."""
-    import math
-
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    size_bytes = fs.getContentSummary(jvm_path).getLength()
-    n_files = max(1, math.ceil(size_bytes / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    df.coalesce(n_files).write.mode("overwrite").parquet(out_path)
-    return n_files
-
-
-def write_zordered_parquet(
-    df: DataFrame,
-    path: str,
-    cols: tuple[str, ...],
-    num_files: int = 8,
-    bits: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order (Morton-curve) layout for tables filtered on ANY of the
-    cluster columns, not just a leading key.
-
-    Each column is bucketed into 2^bits equi-width cells (bounds from
-    one tiny min/max agg), the cell indexes are bit-interleaved into a
-    single z-value, and the table is range-partitioned + sorted on z.
-    Every file then covers a small hyper-rectangle of the key space, so
-    parquet min/max stats skip most files for a predicate on EITHER
-    column — where ``write_clustered_parquet`` on (x, y) only helps x.
-    Cost at any scale: one scalar agg + one range exchange + a
-    partition-local sort — same exchange count as single-key
-    clustering."""
-    stats = df.agg(
-        *[F.min(c).alias(f"__mn_{c}") for c in cols],
-        *[F.max(c).alias(f"__mx_{c}") for c in cols],
-    ).collect()[0]
-    n = 1 << bits
-    cells = []
-    for c in cols:
-        mn = float(stats[f"__mn_{c}"])
-        span = (float(stats[f"__mx_{c}"]) - mn) or 1.0
-        cells.append(
-            F.least(
-                F.lit(n - 1), F.floor((F.col(c) - F.lit(mn)) / F.lit(span) * n)
-            ).cast("long")
-        )
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, cell in enumerate(cells):
-            z = z + F.shiftright(cell, i).bitwiseAND(F.lit(1)) * F.lit(
-                1 << (i * len(cols) + j)
-            )
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(num_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )
 
 
 def write_bucketed_table(

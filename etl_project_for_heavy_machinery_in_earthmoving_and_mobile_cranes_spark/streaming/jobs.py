@@ -4,17 +4,21 @@ The reference is batch-append only (history union, O3); this module is
 the streaming-native extension: watermarked tumbling/session windows,
 streaming dedup, an idempotent foreachBatch history appender, and the
 foreachBatch MAINTAINERS of derived tables (upsert, SCD2, rollups,
-drift counts, sketches, change-feed views).
+drift counts, sketches, change-feed views, the decontaminated corpus
+and the incremental near-dup index and pair feed).
 
-Every maintained table is a Delta table (``sources/delta_lite``).  Each
-micro-batch publishes as one ``merge_touched`` commit that carries a
-``txn`` action (app ``_TXN_APP``, version = the batch id): a replay of
-an applied batch returns after a log read, and a commit that loses a
-race re-runs its merge on the winner's snapshot, so each batch lands
-exactly once.  The ``txn`` version is a high-water mark, as in
-Structured Streaming's idempotent sinks: a committed batch id marks
-every lower one applied, so the batches written to one table must
-commit in increasing id order.  Keyed tables hash-bucket their files on the key and
+Every table a sink writes is a Delta table (``sources/delta_lite``);
+no sink writes plain parquet.  Each micro-batch publishes as one commit
+that carries a ``txn`` action (app ``_TXN_APP``, version = the batch
+id): keyed and snapshot tables through ``merge_touched``, append-only
+tables (history, decontaminated corpus, near-dup index and pairs)
+through ``write_delta(mode="append")``.  A replay of an applied batch
+returns after a log read, and a commit that loses a race re-runs its
+merge on the winner's snapshot, so each batch lands exactly once.  The
+``txn`` version is a high-water mark, as in Structured Streaming's
+idempotent sinks: a committed batch id marks every lower one applied,
+so the batches written to one table must commit in increasing id
+order.  Keyed tables hash-bucket their files on the key and
 rewrite only the buckets a batch touches; the snapshot maintainers keep
 one bucket.  Read a maintained table with ``read_maintained_table``;
 roll it back with ``delta_lite.restore_table`` and compact it with
@@ -26,7 +30,6 @@ All jobs are defined against a *streaming* DataFrame and are tested
 with the file source + ``availableNow`` trigger (exactly-once batch
 drain), which is also the production pattern for catch-up processing.
 """
-
 from __future__ import annotations
 
 import os
@@ -134,19 +137,35 @@ def run_available_now(
     return spark.sql(f"SELECT * FROM {name}").collect()
 
 
+def apply_history_append_batch(
+    batch_df: DataFrame, batch_id: int, table_path: str
+) -> None:
+    """One micro-batch of the streaming history append, module-level so
+    the replay contract is directly testable: the batch, partitioned by
+    its event date ``p_date``, is one ``delta_lite.write_delta`` append
+    carrying the batch's ``txn``.  A replay of an applied batch (its
+    checkpoint commit was lost after the data commit landed) returns
+    after a log read, so the history holds each event once."""
+    _refuse_foreign(table_path)
+    delta_lite.write_delta(
+        batch_df.withColumn("p_date", F.to_date("ts")),
+        table_path,
+        mode="append",
+        txn=(_TXN_APP, batch_id),
+        partition_by=["p_date"],
+    )
+
+
 def append_history_stream(
     events: DataFrame, table_path: str, checkpoint_dir: str
 ):
-    """Idempotent streaming append into the partitioned history table via
-    foreachBatch (exactly-once per micro-batch with the checkpoint)."""
+    """Idempotent streaming append into the date-partitioned Delta
+    history via foreachBatch (``apply_history_append_batch``): exactly
+    once per micro-batch, also when a batch replays.  Read it with
+    ``read_maintained_table``."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("p_date", F.to_date("ts"))
-            .write.mode("append")
-            .partitionBy("p_date")
-            .parquet(table_path)
-        )
+        apply_history_append_batch(batch_df, batch_id, table_path)
 
     return (
         events.writeStream.foreachBatch(write_batch)
@@ -316,9 +335,9 @@ def read_maintained_table(spark, path: str):
 
 def _delta_batch_applied(table_path: str, batch_id: int) -> bool:
     """Whether the log already holds this batch's ``txn``: a log read,
-    zero data files.  Only maintainers that run a Spark action before
-    their merge need it; ``merge_touched`` itself checks the ``txn``
-    on every attempt."""
+    zero data files.  Only sinks that run a Spark action before their
+    commit, or commit to two tables, need it; ``merge_touched`` and
+    ``write_delta`` check the ``txn`` themselves on every attempt."""
     last = delta_lite.last_txn_version(table_path, _TXN_APP)
     return last is not None and last >= batch_id
 
@@ -1089,11 +1108,10 @@ def decontaminate_stream(
     (doc, static benchmark), so the job carries NO cross-batch state —
     each micro-batch is independently correct.
 
-    Replay idempotence: each batch writes its own
-    ``batch=<id>`` subdirectory with mode('overwrite'), so an
-    at-least-once replay rewrites the same directory instead of
-    appending duplicates (a directory is finalized by the checkpoint
-    commit that follows it).
+    Replay idempotence: each batch is one Delta append carrying its
+    ``txn`` (``apply_decontaminate_batch``), so an at-least-once replay
+    of an applied batch writes nothing.  Read the clean corpus with
+    ``read_maintained_table``.
     """
     from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import (
         dedup,
@@ -1128,10 +1146,12 @@ def apply_decontaminate_batch(
     the batch-twin driver query can replay it directly (the pattern of
     ``apply_lsh_dedup_batch``): drop the batch's docs sharing any word
     n-gram with the static benchmark gram set (``bench_sh``, one
-    distinct ``__sh`` column, broadcast), write the clean rest to the
-    batch's own ``batch=<id>`` partition.  Stateless across batches —
-    contamination is a pure function of (doc, static benchmark) — so
-    the union of per-batch outputs equals the one-shot anti join."""
+    distinct ``__sh`` column, broadcast) and append the clean rest to
+    the Delta table at ``out_path`` with the batch's ``txn``: a replay
+    of an applied batch returns after a log read.  Stateless across
+    batches — contamination is a pure function of (doc, static
+    benchmark) — so the union of per-batch outputs equals the one-shot
+    anti join."""
     from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import (
         dedup,
     )
@@ -1143,7 +1163,8 @@ def apply_decontaminate_batch(
         .distinct()
     )
     clean = batch_df.join(bad, "doc_id", "left_anti")
-    clean.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
+    _refuse_foreign(out_path)
+    delta_lite.write_delta(clean, out_path, mode="append", txn=(_TXN_APP, batch_id))
 
 
 _HH_EPS = "__eps"
@@ -1456,21 +1477,6 @@ def maintain_reservoir_stream(
     )
 
 
-def _dir_bytes(path: str) -> int:
-    """Total bytes under a local directory tree (0 when absent) — the
-    cheap plan-build-time size signal the adaptive broadcast guard in
-    ``apply_lsh_dedup_batch`` uses; object-store deployments swap this
-    for a listing call."""
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
-
-
 def apply_lsh_dedup_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -1492,12 +1498,13 @@ def apply_lsh_dedup_batch(
     whole corpus with each pair reported EXACTLY ONCE (asserted by the
     stream/batch twin test) — no full-corpus re-dedup, ever.
 
-    Layout: both the index and the pair feed are ``batch=<id>``
-    partition dirs written with mode('overwrite') — an at-least-once
-    replay rewrites its own partition instead of duplicating
-    (the decontaminate_stream idempotence pattern); the index read
-    EXCLUDES the current batch's partition so a replay never pairs a
-    doc against its own half-written earlier write.
+    Layout: the index and the pair feed are Delta tables, and each
+    batch appends to both with its ``txn`` — the pairs first, then the
+    index.  The index commit is the batch's last, so a replay whose
+    index already holds the batch returns after a log read, before any
+    Spark job; a replay after a crash between the two commits finds an
+    index without the batch (so it never pairs a doc with itself),
+    skips the applied pair append and lands the index append.
 
     Scale shape: per batch, signatures cost O(batch shingles); the
     candidate stage is the banded equi join of (batch ∪ index)
@@ -1509,7 +1516,11 @@ def apply_lsh_dedup_batch(
     """
     from ..operators import dedup as dedup_ops
 
+    _refuse_foreign(pairs_path)
+    if _delta_batch_applied(index_path, batch_id):
+        return
     spark = batch_df.sparkSession
+    stored = read_maintained_table(spark, index_path)
     sigs_new = dedup_ops.minhash_signatures(
         batch_df, id_col, text_col,
         num_hashes=num_hashes, shingle_n=shingle_n, hash_fn="xxhash64",
@@ -1517,14 +1528,6 @@ def apply_lsh_dedup_batch(
     new_rows = batch_df.select(id_col, text_col).join(sigs_new, id_col)
 
     mh_cols = [f"mh_{i}" for i in range(num_hashes)]
-    if os.path.isdir(index_path) and any(
-        d.startswith("batch=") for d in os.listdir(index_path)
-    ):
-        stored = spark.read.parquet(index_path).filter(
-            F.col("batch") != batch_id  # replay: never pair against own write
-        )
-    else:
-        stored = None
 
     if stored is not None:
         all_sigs = stored.select(id_col, *mh_cols).unionByName(
@@ -1584,18 +1587,20 @@ def apply_lsh_dedup_batch(
     # threshold honors explicit hints).  Small indexes keep broadcasts
     # on: at gate scale every frame is tiny and shuffling them instead
     # measured 4x slower for nothing.
-    big_index = _dir_bytes(index_path) > 16 * 1024 * 1024
+    live = delta_lite._read_actions(index_path)[0] if stored is not None else {}
+    big_index = sum(add["size"] for add in live.values()) > 16 * 1024 * 1024
     thr_key = "spark.sql.autoBroadcastJoinThreshold"
     old_thr = spark.conf.get(thr_key, None)
     if big_index:
         spark.conf.set(thr_key, "-1")
     try:
-        pairs.write.mode("overwrite").parquet(f"{pairs_path}/batch={batch_id}")
-        new_rows.write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
+        txn = (_TXN_APP, batch_id)
+        delta_lite.write_delta(pairs, pairs_path, mode="append", txn=txn)
+        delta_lite.write_delta(new_rows, index_path, mode="append", txn=txn)
     finally:
         if big_index and old_thr is not None:
             spark.conf.set(thr_key, old_thr)
-        cand_new.unpersist()  # release the checkpointed pair blocks
+        cand_new.unpersist()  # release the persisted pair blocks
 
 
 def incremental_lsh_dedup_stream(
@@ -1610,7 +1615,8 @@ def incremental_lsh_dedup_stream(
     before it (apply_lsh_dedup_batch) — the dup-pair feed and the
     signature index grow per batch, and no batch ever rescans the
     corpus it didn't touch.  Exactly-once per micro-batch via the
-    checkpoint + per-batch partition overwrite."""
+    checkpoint + each append's ``txn``; read the pair feed and the
+    index with ``read_maintained_table``."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_lsh_dedup_batch(batch_df, batch_id, index_path, pairs_path, **kwargs)

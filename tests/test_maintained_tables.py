@@ -1,6 +1,7 @@
-"""The maintained-table lifecycle: every foreachBatch maintainer in
-``streaming/jobs`` publishes through ``delta_lite.merge_touched`` (or
-``upsert_delta``) with the batch's ``txn`` in the same commit.
+"""The maintained-table lifecycle: every foreachBatch sink in
+``streaming/jobs`` publishes through ``delta_lite`` — ``merge_touched``,
+``upsert_delta`` or a ``write_delta`` append — with the batch's ``txn``
+in the same commit, and no sink writes through a ``DataFrameWriter``.
 
 - a replay of an applied batch reads the log and starts no Spark job;
 - a runner whose commit loses a race to another batch re-runs its merge
@@ -18,8 +19,10 @@ the version under contention and then reports the loss.
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
 import os
+import pathlib
 import re
 
 import pytest
@@ -59,6 +62,33 @@ def _changes(spark, b: int):
     )
 
 
+_BENCH_TEXT = "the quick brown fox jumps over the lazy dog"
+
+
+def _docs(spark, b: int, n: int = 6):
+    """Batch ``b`` of a small document stream: every third doc is
+    ``_BENCH_TEXT`` (a near-duplicate across batches, and contaminated
+    for a benchmark holding that text); the rest share no word."""
+    rows = [
+        (
+            b * n + i,
+            _BENCH_TEXT if i % 3 == 0
+            else " ".join(f"w{(b * n + i) * 10 + j}" for j in range(8)),
+        )
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _bench_shingles(spark):
+    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import (
+        dedup,
+    )
+
+    bench = spark.createDataFrame([(0, _BENCH_TEXT)], "doc_id long, text string")
+    return dedup.shingle_rows(bench, "doc_id", "text", 3).select("__sh").distinct()
+
+
 # name -> apply(spark, batch_id, path)
 _MAINTAINERS = {
     "rollup": lambda s, b, p: jobs.apply_rollup_batch(_events(s, b), b, p),
@@ -90,6 +120,17 @@ _MAINTAINERS = {
     "experiment_units": lambda s, b, p: jobs.apply_experiment_units_batch(
         _events(s, b), b, p, cut_us=int(_T0.timestamp() * 1e6) + 60_000_000,
         n_buckets=2,
+    ),
+    # the append-only sinks: one write_delta append per batch
+    "history_append": lambda s, b, p: jobs.apply_history_append_batch(
+        _events(s, b), b, p
+    ),
+    "decontaminate": lambda s, b, p: jobs.apply_decontaminate_batch(
+        _docs(s, b), b, _bench_shingles(s), p, n=3
+    ),
+    # ``p`` is the signature index; the pair feed sits beside it
+    "lsh_dedup": lambda s, b, p: jobs.apply_lsh_dedup_batch(
+        _docs(s, b), b, p, p + "_pairs", num_hashes=4
     ),
 }
 _SNAPSHOT = ["rollup", "drift_counts", "heavy_hitters", "hll", "reservoir", "cms"]
@@ -151,6 +192,40 @@ def test_racing_runner_keeps_both_batches(spark, tmp_path, monkeypatch, name):
     assert _rows(spark, path) == _rows(spark, want_path)
     assert dl.current_version(path) == 2
     assert dl.last_txn_version(path, jobs._TXN_APP) == 2
+
+
+def test_near_dup_replay_after_a_crash_between_its_two_commits(
+    spark, tmp_path, monkeypatch
+):
+    """The near-dup sink commits its pairs, then its index.  A crash
+    between the two leaves the batch in the pair feed only; the replay
+    skips the applied pair append, pairs the batch against the index
+    without it and lands the index append, so both tables hold what an
+    uninterrupted run writes."""
+    apply = _MAINTAINERS["lsh_dedup"]
+    path = str(tmp_path / "index")
+    apply(spark, 0, path)
+    real = dl.write_delta
+
+    def crash_before_index_commit(df, table, *args, **kwargs):
+        if table == path:
+            raise RuntimeError("crash before the index commit")
+        return real(df, table, *args, **kwargs)
+
+    monkeypatch.setattr(dl, "write_delta", crash_before_index_commit)
+    with pytest.raises(RuntimeError, match="crash before the index commit"):
+        apply(spark, 1, path)
+    monkeypatch.setattr(dl, "write_delta", real)
+    assert dl.last_txn_version(path + "_pairs", jobs._TXN_APP) == 1
+    assert dl.last_txn_version(path, jobs._TXN_APP) == 0
+
+    apply(spark, 1, path)
+    assert [r[0] for r in _rows(spark, path)] == list(range(12))
+    # every pair of the four ``_BENCH_TEXT`` docs, once
+    assert [r[:2] for r in _rows(spark, path + "_pairs")] == [
+        (0, 3), (0, 6), (0, 9), (3, 6), (3, 9), (6, 9)
+    ]
+    assert dl.last_txn_version(path, jobs._TXN_APP) == 1
 
 
 def test_restore_rolls_back_a_maintained_table_and_replay_stays_noop(spark, tmp_path):
@@ -228,15 +303,29 @@ def test_maintainers_refuse_foreign_directories(spark, tmp_path):
     os.symlink(versions, linked)
     pointer_only = tmp_path / "pointer"
     (tmp_path / "pointer.versions").mkdir()
+    # the old append-sink layout: one parquet directory per batch
+    batch_dirs = tmp_path / "batch_dirs"
+    (batch_dirs / "batch=0").mkdir(parents=True)
+    (batch_dirs / "batch=0" / "part-0.parquet").write_bytes(b"old")
 
-    for path in (foreign, linked, pointer_only):
+    for path in (foreign, linked, pointer_only, batch_dirs):
         listing = sorted(os.listdir(path)) if os.path.isdir(path) else None
-        for name in ("rollup", "upsert", "scd2", "hll"):
+        for name in (
+            "rollup", "upsert", "scd2", "hll",
+            "history_append", "decontaminate", "lsh_dedup",
+        ):
             with pytest.raises(ValueError, match=re.escape(str(path))):
                 _MAINTAINERS[name](spark, 0, str(path))
         with pytest.raises(ValueError, match=re.escape(str(path))):
             jobs.read_maintained_table(spark, str(path))
         assert (sorted(os.listdir(path)) if os.path.isdir(path) else None) == listing
+    # the near-dup pair feed is checked before its index is touched
+    fresh_index = tmp_path / "fresh_index"
+    with pytest.raises(ValueError, match=re.escape(str(batch_dirs))):
+        jobs.apply_lsh_dedup_batch(
+            _docs(spark, 0), 0, str(fresh_index), str(batch_dirs)
+        )
+    assert not fresh_index.exists()
 
     empty = tmp_path / "empty"
     empty.mkdir()
@@ -245,3 +334,25 @@ def test_maintainers_refuse_foreign_directories(spark, tmp_path):
         assert jobs.read_maintained_table(spark, str(path)) is None
         jobs.apply_rollup_batch(_events(spark, 0), 0, str(path))
         assert dl.is_delta_table(str(path))
+
+
+def test_streaming_sinks_do_not_use_dataframe_writer():
+    """Every table written under ``streaming/`` goes through
+    ``delta_lite``: no module there touches ``DataFrame.write`` (the
+    ``DataFrameWriter`` behind ``.parquet(path)`` and ``.saveAsTable``)
+    or calls ``saveAsTable`` / ``insertInto``.  A plain parquet sink
+    has no ``txn``, so a replayed batch would be written twice."""
+    found = []
+    for src in sorted(pathlib.Path(jobs.__file__).parent.glob("*.py")):
+        tree = ast.parse(src.read_text(), filename=str(src))
+        called = {
+            id(node.func) for node in ast.walk(tree) if isinstance(node, ast.Call)
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Attribute):
+                continue
+            # ``df.write`` is a property; ``fh.write(...)`` is a call
+            writer = node.attr == "write" and id(node) not in called
+            if writer or node.attr in ("saveAsTable", "insertInto"):
+                found.append(f"{src.name}:{node.lineno} .{node.attr}")
+    assert found == []

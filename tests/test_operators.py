@@ -16,6 +16,9 @@ from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.oper
     similarity,
     textstats,
 )
+from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.sources import (
+    delta_lite as dl,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -841,8 +844,8 @@ def test_history_union_and_schema_check(spark, tmp_path):
     bad = spark.createDataFrame([(3, 202403)], "id long, month int")
     with pytest.raises(history.SchemaMismatch):
         history.append_history(a, bad)
-    history.write_history(u, str(tmp_path / "hist"))
-    back = spark.read.parquet(str(tmp_path / "hist"))
+    dl.write_delta(u, str(tmp_path / "hist"), mode="append", partition_by=["month"])
+    back = dl.read_delta(spark, str(tmp_path / "hist"))
     assert back.count() == 2
     assert history.year_slice(
         spark.createDataFrame([("2024/01/05",), ("2023/01/05",)], "date string"),
@@ -1575,50 +1578,6 @@ def test_morton_code_locality_and_bijectivity(spark):
     assert codes[(1, 0)] == 1 and codes[(0, 1)] == 2
     # 3=0b011, 5=0b101 -> interleave -> b2 a2 b1 a1 b0 a0 = 1 0 0 1 1 1 = 0b100111
     assert codes[(3, 5)] == 0b100111
-
-
-def test_zorder_layout_prunes_on_either_dimension(spark, tmp_path):
-    """The scan-pruning claim, measured on real files: a selective
-    predicate on the SECOND key touches few z-ordered files but every
-    single-key-sorted file."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import (
-        layout,
-    )
-
-    n, files = 1 << 14, 16
-    grid = spark.range(n).select(
-        (F.col("id") % 128).alias("a"), (F.col("id") / 128).cast("long").alias("b")
-    )
-    zpath, spath = str(tmp_path / "z"), str(tmp_path / "s")
-    layout.write_zordered(grid, zpath, "a", "b", n_files=files, bits=8)
-    (grid.repartitionByRange(files, "a").sortWithinPartitions("a")
-        .write.mode("overwrite").parquet(spath))
-
-    def files_touched(path, col, lo, hi):
-        import glob
-        import pyarrow.parquet as pq
-        touched = 0
-        for f in glob.glob(f"{path}/part-*.parquet"):
-            md = pq.read_metadata(f)
-            idx = md.schema.names.index(col)
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st.min <= hi and st.max >= lo:
-                    touched += 1
-                    break
-        return touched
-
-    # predicate narrow in b: z-order prunes, a-sort cannot
-    zb = files_touched(zpath, "b", 10, 17)
-    sb = files_touched(spath, "b", 10, 17)
-    assert zb <= files // 2 < sb == files
-    # predicate narrow in a: BOTH layouts prune (z-order keeps a bounded too)
-    za = files_touched(zpath, "a", 0, 7)
-    assert za <= files // 2
 
 
 def test_mutual_information_known_values(spark):

@@ -97,19 +97,6 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     assert files and all("shard=2" in f for f in files)
 
 
-def test_compact_parquet_reduces_files(spark, tmp_path):
-    df = spark.range(0, 10000).selectExpr("id", "id * 2 AS v")
-    frag = str(tmp_path / "fragmented")
-    df.repartition(64).write.parquet(frag)
-    out = str(tmp_path / "compacted")
-    n = sources.compact_parquet(spark, frag, out, target_file_mb=256)
-    assert n == 1
-    import glob
-
-    assert len(glob.glob(out + "/part-*.parquet")) == 1
-    assert spark.read.parquet(out).count() == 10000
-
-
 def test_merge_upsert_and_schema_evolution(spark, tmp_path):
     from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import (
         history,
@@ -154,36 +141,6 @@ def test_orc_roundtrip(spark, tmp_path):
     # filter pushdown reaches the ORC scan like parquet
     plan = back.filter("k = 2")._jdf.queryExecution().executedPlan().toString()
     assert "orc" in plan.lower()
-
-
-def test_clustered_write_disjoint_file_ranges(spark, tmp_path):
-    import glob
-
-    df = spark.range(0, 10000).selectExpr(
-        "pmod(hash(id), 10000) AS k", "id AS payload"
-    )
-    p = str(tmp_path / "clustered")
-    sources.write_clustered_parquet(df, p, ("k",), num_files=8)
-    files = sorted(glob.glob(p + "/*.parquet"))
-    assert len(files) == 8
-    # every file owns a disjoint key range -> range predicates skip
-    # whole files via parquet min/max stats
-    ranges = [
-        tuple(spark.read.parquet(f).agg(F.min("k"), F.max("k")).first())
-        for f in files
-    ]
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2
-    # point predicate scans read the pruned schema + pushed filter
-    plan = (
-        spark.read.parquet(p)
-        .filter("k = 17")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters" in plan and "k" in plan
 
 
 def test_xlsx_lite_writer_roundtrip(tmp_path):
@@ -347,42 +304,6 @@ def test_xlsx_python_datasource(spark, tmp_path):
     assert {r["id"] for r in inf.collect()} == {"1", "2"}
 
 
-def test_zorder_write_bounds_both_dims(spark, tmp_path):
-    """Z-order files cover small (x, y) rectangles; single-key
-    clustering leaves the trailing dim unbounded per file."""
-    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.sources import (
-        readers,
-    )
-
-    grid = spark.range(64 * 64).select(
-        (F.col("id") % 64).alias("x"), (F.col("id") / 64).cast("long").alias("y")
-    )
-    zpath, xpath = str(tmp_path / "z"), str(tmp_path / "xonly")
-    readers.write_zordered_parquet(grid, zpath, ("x", "y"), num_files=16, bits=6)
-    readers.write_clustered_parquet(grid, xpath, ("x",), num_files=16)
-
-    def avg_ranges(path):
-        per_file = (
-            spark.read.parquet(path)
-            .groupBy(F.input_file_name().alias("f"))
-            .agg(
-                (F.max("x") - F.min("x")).alias("rx"),
-                (F.max("y") - F.min("y")).alias("ry"),
-            )
-            .agg(F.avg("rx"), F.avg("ry"))
-            .collect()[0]
-        )
-        return per_file[0], per_file[1]
-
-    zrx, zry = avg_ranges(zpath)
-    xrx, xry = avg_ranges(xpath)
-    # x-clustered: x tight but y spans the whole domain per file
-    assert xry > 55
-    # z-ordered: BOTH dims bounded well below the 63-wide domain
-    assert zrx < 32 and zry < 32
-    assert zry < 0.5 * xry
-
-
 def test_csv_roundtrip(spark, tmp_path):
     from pyspark.sql import types as T
 
@@ -452,28 +373,6 @@ def test_dynamic_partition_pruning_on_dim_filter(spark, tmp_path):
         assert j.count() == 500
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_clustered_layout_skips_files_on_range_predicate(spark, tmp_path):
-    """Zone-map evidence: after a clustered write, a narrow range
-    predicate physically reads a small subset of the files (parquet
-    min/max footer stats prune the rest) — the scan-cost claim behind
-    write_clustered_parquet, asserted on actual files touched."""
-    df = spark.range(0, 200_000).selectExpr("id", "id * 2 AS v")
-    p = str(tmp_path / "clustered")
-    sources.write_clustered_parquet(df, p, ("id",), num_files=16)
-    import glob
-
-    n_files = len(glob.glob(p + "/part-*.parquet"))
-    assert n_files >= 8
-    narrow = spark.read.parquet(p).filter("id >= 1000 AND id < 2000")
-    touched = {
-        r[0]
-        for r in narrow.select(F.input_file_name()).distinct().collect()
-    }
-    assert narrow.count() == 1000
-    # a 0.5% range must not touch more than a couple of files
-    assert len(touched) <= 2, (len(touched), n_files)
 
 
 def test_parquet_compression_codec_roundtrip_and_size(spark, tmp_path):

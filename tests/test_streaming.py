@@ -1,9 +1,14 @@
 """Structured Streaming jobs: file source + availableNow drain, compared
 against the batch twin on the same data."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.sources import (
+    delta_lite as dl,
+)
 from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.streaming import jobs
 
 
@@ -65,12 +70,27 @@ def test_history_append_stream_idempotent(spark, event_dir, tmp_path):
     cp = str(tmp_path / "cp4")
     q = jobs.append_history_stream(jobs.read_event_stream(spark, event_dir), table, cp)
     q.awaitTermination()
-    n1 = spark.read.parquet(table).count()
+    n1 = jobs.read_maintained_table(spark, table).count()
     # re-run with same checkpoint: no new data → no duplicate append
     q2 = jobs.append_history_stream(jobs.read_event_stream(spark, event_dir), table, cp)
     q2.awaitTermination()
-    n2 = spark.read.parquet(table).count()
+    n2 = jobs.read_maintained_table(spark, table).count()
     assert n1 == n2 == spark.read.parquet(event_dir).count()
+
+    # lost checkpoint commit: the last batch's data commit landed but
+    # its commits/<n> entry did not, so a restart replays that batch;
+    # the batch's txn makes the replayed append a no-op
+    commits = os.path.join(cp, "commits")
+    last = max(int(name) for name in os.listdir(commits) if name.isdigit())
+    version = dl.current_version(table)
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    q3 = jobs.append_history_stream(jobs.read_event_stream(spark, event_dir), table, cp)
+    q3.awaitTermination()
+    assert q3.lastProgress["batchId"] == last  # the batch did replay
+    assert dl.current_version(table) == version
+    assert jobs.read_maintained_table(spark, table).count() == n1
 
 
 def test_stream_static_enrichment(spark, event_dir, tmp_path):
@@ -525,8 +545,8 @@ def test_decontaminate_stream_matches_batch_and_replays_idempotently(
     """Ingest-edge decontamination: the streamed clean corpus equals
     the batch semi/anti-join decontamination over the same docs and
     benchmark; re-running the drained stream (same checkpoint) adds
-    nothing, and a simulated replay of a batch directory rewrites
-    rather than duplicates."""
+    nothing.  The replay of an applied batch is covered in
+    ``tests/test_maintained_tables.py``."""
     from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import dedup
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -544,7 +564,10 @@ def test_decontaminate_stream_matches_batch_and_replays_idempotently(
     )
     q.awaitTermination()
 
-    got = {r["doc_id"] for r in spark.read.parquet(out).select("doc_id").collect()}
+    got = {
+        r["doc_id"]
+        for r in jobs.read_maintained_table(spark, out).select("doc_id").collect()
+    }
     contaminated = dedup.decontaminate(corpus, bench, "doc_id", "text", n=5)
     want = {
         r["doc_id"]
@@ -561,7 +584,7 @@ def test_decontaminate_stream_matches_batch_and_replays_idempotently(
         jobs.read_document_stream(spark, indir), bench, out, cp, n=5
     )
     q2.awaitTermination()
-    assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == want
+    assert {r["doc_id"] for r in jobs.read_maintained_table(spark, out).collect()} == want
 
 
 def test_streaming_heavy_hitters_exact_when_capacity_not_binding(
@@ -822,7 +845,11 @@ def test_incremental_lsh_dedup_stream_equals_one_shot(spark, sf_dir, tmp_path):
     q.awaitTermination()
     assert q.lastProgress["batchId"] >= 1  # genuinely multi-batch
 
-    got_rows = spark.read.parquet(pairs).select("id_a", "id_b", "jaccard").collect()
+    got_rows = (
+        jobs.read_maintained_table(spark, pairs)
+        .select("id_a", "id_b", "jaccard")
+        .collect()
+    )
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in got_rows}
     assert len(got_rows) == len(got)  # every pair exactly once
 
@@ -838,7 +865,7 @@ def test_incremental_lsh_dedup_stream_equals_one_shot(spark, sf_dir, tmp_path):
     assert got == want and len(want) > 0
 
     # drained restart: no new batches, no new pairs, index unchanged
-    n_idx = spark.read.parquet(idx).count()
+    n_idx = jobs.read_maintained_table(spark, idx).count()
     q2 = jobs.incremental_lsh_dedup_stream(
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
@@ -848,9 +875,9 @@ def test_incremental_lsh_dedup_stream_equals_one_shot(spark, sf_dir, tmp_path):
     q2.awaitTermination()
     assert {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in spark.read.parquet(pairs).collect()
+        for r in jobs.read_maintained_table(spark, pairs).collect()
     } == want
-    assert spark.read.parquet(idx).count() == n_idx == docs.count()
+    assert jobs.read_maintained_table(spark, idx).count() == n_idx == docs.count()
 
 
 def test_reservoir_merge_equals_oneshot_and_replay_noop(spark, tmp_path):
