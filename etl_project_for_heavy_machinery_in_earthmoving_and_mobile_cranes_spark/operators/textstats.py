@@ -475,8 +475,9 @@ def bigram_pmi(
         .persist()
     )
     n_uni = uni.agg(F.sum("c").alias("n_uni"))
-    shifted = toks.select(
-        F.col("t"),
+    # a doc with fewer than 2 tokens has no bigram (and slice() refuses
+    # the negative length an empty doc would give)
+    shifted = toks.filter(F.size("t") > 1).select(
         F.slice(F.col("t"), 1, F.size("t") - 1).alias("_a"),
         F.slice(F.col("t"), 2, F.size("t") - 1).alias("_b"),
     )

@@ -217,58 +217,35 @@ class _CdfStreamReader(DataSourceStreamReader):
         self._observe(end["version"])
         parts: list[_FileChange] = []
         for v in range(start["version"] + 1, end["version"] + 1):
-            vf = delta_lite._version_file(self.table, v)
-            if not os.path.isfile(vf):
+            # the reader feature gate applies MID-STREAM too: a commit
+            # upgrading the table past this engine's ceiling raises here
+            try:
+                actions = delta_lite._read_log_file(
+                    delta_lite._version_file(self.table, v)
+                )
+            except FileNotFoundError:
                 raise FileNotFoundError(
                     f"commit {v} of {self.table} is gone (log truncated "
                     "below the stream's offset); restart the stream from "
                     "a snapshot + a fresh startingVersion"
-                )
-            adds_v: dict = {}
-            removes_v: dict = {}
-            with open(vf) as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "protocol" in action:
-                        # the reader feature gate applies MID-STREAM
-                        # too: a writer upgrading the table past this
-                        # engine's ceiling means later commits may use
-                        # reader features whose absence silently emits
-                        # WRONG change rows — abort like every batch
-                        # replay path (delta_lite._apply_action) does
-                        p = action["protocol"]
-                        if (
-                            p.get("minReaderVersion", 1)
-                            > delta_lite._SUPPORTED["minReaderVersion"]
-                        ):
-                            raise ValueError(
-                                f"commit {v} of {self.table} requires "
-                                f"minReaderVersion="
-                                f"{p.get('minReaderVersion')} but this "
-                                "engine supports "
-                                f"{delta_lite._SUPPORTED['minReaderVersion']}"
-                                " — stopping the change stream"
-                            )
-                    if "add" in action and action["add"].get("dataChange", True):
-                        adds_v[action["add"]["path"]] = action["add"]
-                    elif "remove" in action and action["remove"].get(
-                        "dataChange", True
-                    ):
-                        removes_v[action["remove"]["path"]] = action["remove"]
-
-            def dv_of(a: dict) -> "str | None":
-                return (a.get("tags") or {}).get("dv")
-
+                ) from None
+            # the commit's data-changing adds and removes, by path
+            adds_v, removes_v = (
+                {
+                    a[kind]["path"]: a[kind]
+                    for a in actions
+                    if kind in a and a[kind].get("dataChange", True)
+                }
+                for kind in ("add", "remove")
+            )
             for rel, a in adds_v.items():
                 full = os.path.join(self.table, rel)
                 if rel in removes_v:
                     # same path removed+re-added in one commit: a
                     # DELETION-VECTOR commit — emit exactly the newly
                     # deleted rows (new vector minus old) as deletes
-                    old_dv = dv_of(removes_v[rel])
-                    new_dv = dv_of(a)
+                    old_dv = delta_lite._dv_of(removes_v[rel])
+                    new_dv = delta_lite._dv_of(a)
                     if new_dv != old_dv:
                         parts.append(
                             _FileChange(
@@ -282,7 +259,9 @@ class _CdfStreamReader(DataSourceStreamReader):
                             )
                         )
                     continue
-                parts.append(_FileChange(full, rel, "insert", v, dv=dv_of(a)))
+                parts.append(
+                    _FileChange(full, rel, "insert", v, dv=delta_lite._dv_of(a))
+                )
             for rel, a in removes_v.items():
                 if rel in adds_v:
                     continue  # handled as a DV pair above
@@ -292,7 +271,7 @@ class _CdfStreamReader(DataSourceStreamReader):
                         rel,
                         "delete",
                         v,
-                        dv=dv_of(a),
+                        dv=delta_lite._dv_of(a),
                     )
                 )
         if not parts:
@@ -306,19 +285,14 @@ class _CdfStreamReader(DataSourceStreamReader):
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        from . import delta_lite
+
         schema = T.StructType.fromJson(json.loads(self.schema_json))
         arrow_schema = to_arrow_schema(schema)
-        # column mapping: parquet files store PHYSICAL names; the
-        # logical->physical map rides each field's metadata in the
-        # committed schema (identity when mapping is off), so a
+        # column mapping: parquet files store PHYSICAL names, so a
         # renamed column keeps reading instead of falling through to
         # the schema-evolution NULL branch
-        phys_of = {
-            f.name: (f.metadata or {}).get(
-                "delta.columnMapping.physicalName", f.name
-            )
-            for f in schema.fields
-        }
+        phys_of = delta_lite._schema_l2p(schema)
         if not partition.file_path:
             yield pa.RecordBatch.from_arrays(
                 [pa.array([], type=f.type) for f in arrow_schema],
@@ -358,9 +332,9 @@ class _CdfStreamReader(DataSourceStreamReader):
                 col = pa.array([partition.version] * n, type=pa.int64()).cast(
                     field.type
                 )
-            elif phys_of.get(field.name, field.name) in tbl.column_names:
+            elif phys_of[field.name] in tbl.column_names:
                 col = (
-                    tbl.column(phys_of.get(field.name, field.name))
+                    tbl.column(phys_of[field.name])
                     .combine_chunks()
                     .cast(field.type)
                 )

@@ -125,7 +125,7 @@ _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 # silently serving physical column names as logical ones
 _PROTOCOL_CM = {"minReaderVersion": 2, "minWriterVersion": 5}
 # ceiling of what THIS engine implements; tables demanding more are
-# refused loudly (reads in _apply_action, writes in _read_actions)
+# refused loudly (reads in _read_log_file, writes in _read_actions)
 _SUPPORTED = {"minReaderVersion": 2, "minWriterVersion": 5}
 _BUCKET_COL = "__bucket"
 # Checkpoint-pointer filename deliberately does NOT collide with the
@@ -181,6 +181,32 @@ def _read_last_checkpoint(table: str) -> int | None:
         return None  # corrupt pointer: fall back to full replay
 
 
+def _read_log_file(path: str) -> list[dict]:
+    """The actions of one log file (a commit ``_version_file(table, v)``
+    or a checkpoint), with the READER FEATURE GATE applied (Delta spec
+    "Protocol Evolution"): a protocol action whose minReaderVersion
+    exceeds what this engine understands raises ValueError — the table
+    uses reader features (e.g. a future column-mapping mode, row
+    tracking) whose absence would not fail loudly but silently return
+    WRONG results (a v1 reader of a name-mapped table serves physical
+    column names as logical ones).  Snapshot replay (``_read_actions``:
+    reads, time travel, writes, maintenance), the change feed's
+    ``_range_has_datachange`` and the CDF stream reader all read the
+    log through this function.  A missing file raises
+    FileNotFoundError."""
+    with open(path) as fh:
+        actions = [json.loads(line) for line in fh if line.strip()]
+    for a in actions:
+        need = a.get("protocol", {}).get("minReaderVersion", 1)
+        if need > _SUPPORTED["minReaderVersion"]:
+            raise ValueError(
+                f"{path} requires minReaderVersion={need} but this engine "
+                f"supports {_SUPPORTED['minReaderVersion']} — refusing to "
+                "read (a silent read would misinterpret reader features)"
+            )
+    return actions
+
+
 def _apply_action(
     action: dict, live: dict, meta: dict, txns: dict, proto: "dict | None" = None
 ) -> None:
@@ -196,28 +222,10 @@ def _apply_action(
         prev = txns.get(t["appId"])
         if prev is None or t["version"] > prev:
             txns[t["appId"]] = t["version"]
-    elif "protocol" in action:
-        # READER FEATURE GATE (Delta spec "Protocol Evolution"): a
-        # protocol action encountered during replay whose
-        # minReaderVersion exceeds what this engine understands MUST
-        # abort the read — the table uses reader features (e.g. a
-        # future column-mapping mode, row tracking) whose absence
-        # would not fail loudly but silently return WRONG results
-        # (a v1 reader of a name-mapped table serves physical column
-        # names as logical ones).  Raising here covers every path:
-        # snapshot reads, time travel, CDF, maintenance — all replay
-        # through this function.
-        p = action["protocol"]
-        if p.get("minReaderVersion", 1) > _SUPPORTED["minReaderVersion"]:
-            raise ValueError(
-                f"table requires minReaderVersion="
-                f"{p.get('minReaderVersion')} but this engine supports "
-                f"{_SUPPORTED['minReaderVersion']} — refusing to read "
-                "(a silent read would misinterpret reader features)"
-            )
-        if proto is not None:
-            proto.clear()
-            proto.update(p)
+    elif "protocol" in action and proto is not None:
+        # the reader gate ran when the file was read (_read_log_file)
+        proto.clear()
+        proto.update(action["protocol"])
 
 
 def _list_checkpoints(table: str) -> list[int]:
@@ -280,10 +288,8 @@ def _read_actions(
                 cp = c
                 break
     if cp is not None and os.path.isfile(_checkpoint_file(table, cp)):
-        with open(_checkpoint_file(table, cp)) as fh:
-            for line in fh:
-                if line.strip():
-                    _apply_action(json.loads(line), live, meta, txns, proto)
+        for action in _read_log_file(_checkpoint_file(table, cp)):
+            _apply_action(action, live, meta, txns, proto)
         start_after = cp
     # a truncated log must not be replayed from scratch: version files
     # below the oldest checkpoint are gone, so a from-zero replay would
@@ -298,10 +304,8 @@ def _read_actions(
     for v in versions:
         if v <= start_after:
             continue
-        with open(_version_file(table, v)) as fh:
-            for line in fh:
-                if line.strip():
-                    _apply_action(json.loads(line), live, meta, txns, proto)
+        for action in _read_log_file(_version_file(table, v)):
+            _apply_action(action, live, meta, txns, proto)
     if writer and proto.get("minWriterVersion", 1) > _SUPPORTED["minWriterVersion"]:
         raise ValueError(
             f"table {table} requires minWriterVersion="
@@ -715,14 +719,9 @@ def _read_with_dv(
 
 
 def _file_bucket(add: dict) -> "str | None":
-    """The merge-key hash bucket a data file is tagged with, or None
-    for untagged files.  Reads ``add.tags['bucket']`` (the spec-clean
-    home) with a fallback to the legacy ``partitionValues['__bucket']``
-    written by pre-r8 commits, so existing tables merge correctly."""
-    tag = (add.get("tags") or {}).get("bucket")
-    if tag is not None:
-        return tag
-    return (add.get("partitionValues") or {}).get(_BUCKET_COL)
+    """The merge-key hash bucket a data file is tagged with
+    (``add.tags['bucket']``), or None for untagged files."""
+    return (add.get("tags") or {}).get("bucket")
 
 
 # ---------------------------------------------------------------------------
@@ -2522,8 +2521,7 @@ def _range_has_datachange(table: str, from_version: int, to_version: int) -> boo
     data changes so the caller falls back to the row diff."""
     for v in range(from_version + 1, to_version + 1):
         try:
-            with open(_version_file(table, v)) as fh:
-                acts = [json.loads(ln) for ln in fh if ln.strip()]
+            acts = _read_log_file(_version_file(table, v))
         except OSError:
             return True
         for a in acts:

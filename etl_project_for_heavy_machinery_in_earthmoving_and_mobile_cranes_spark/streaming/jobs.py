@@ -26,6 +26,14 @@ roll it back with ``delta_lite.restore_table`` and compact it with
 before a restore stays applied: re-ingesting a rolled-back interval
 takes new batch ids (or a fresh table), not a replay.
 
+Every sink starts through one function, ``_run_foreach_batch``: it drains
+the stream with the ``availableNow`` trigger and calls the sink's
+module-level ``apply_*_batch`` function once per micro-batch.  The
+public ``*_stream`` / ``*_from_changes`` wrappers add only what their
+``apply_*`` function lacks (the change feed of an upstream table, the
+benchmark gram set), so each ``apply_*`` docstring is the sink's
+contract, and tests replay a batch by calling it directly.
+
 All jobs are defined against a *streaming* DataFrame and are tested
 with the file source + ``availableNow`` trigger (exactly-once batch
 drain), which is also the production pattern for catch-up processing.
@@ -38,7 +46,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.history import merge_rollups
 from ..sources import delta_lite
+from ..sources.delta_cdf_datasource import stream_changes
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -137,6 +147,23 @@ def run_available_now(
     return spark.sql(f"SELECT * FROM {name}").collect()
 
 
+def _run_foreach_batch(
+    stream: DataFrame, checkpoint_dir: str, apply, /, *args, **kwargs
+):
+    """Start the availableNow drain of ``stream`` into a foreachBatch
+    sink that calls ``apply(batch_df, batch_id, *args, **kwargs)`` per
+    micro-batch; returns the started query.  The checkpoint plus each
+    ``apply``'s ``txn`` make the sink exactly-once per micro-batch."""
+    return (
+        stream.writeStream.foreachBatch(
+            lambda batch_df, batch_id: apply(batch_df, batch_id, *args, **kwargs)
+        )
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def apply_history_append_batch(
     batch_df: DataFrame, batch_id: int, table_path: str
 ) -> None:
@@ -159,19 +186,10 @@ def apply_history_append_batch(
 def append_history_stream(
     events: DataFrame, table_path: str, checkpoint_dir: str
 ):
-    """Idempotent streaming append into the date-partitioned Delta
-    history via foreachBatch (``apply_history_append_batch``): exactly
-    once per micro-batch, also when a batch replays.  Read it with
-    ``read_maintained_table``."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_history_append_batch(batch_df, batch_id, table_path)
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Streaming append into the date-partitioned Delta history
+    (``apply_history_append_batch``)."""
+    return _run_foreach_batch(
+        events, checkpoint_dir, apply_history_append_batch, table_path
     )
 
 
@@ -378,35 +396,11 @@ def apply_upsert_batch(
 
 
 def upsert_stream(
-    events: DataFrame,
-    table_path: str,
-    key_cols: list[str],
-    checkpoint_dir: str,
-    n_buckets: int = 16,
+    events: DataFrame, table_path: str, key_cols: list[str], checkpoint_dir: str
 ):
-    """Streaming MERGE: each micro-batch upserts into a keyed table via
-    foreachBatch (latest row per key wins, within-batch latest picked
-    by ts).  The table publishes through the Delta transaction log
-    with key-hash-bucketed files, and each micro-batch commits ONLY
-    the buckets its keys touch (``apply_upsert_batch``) — per-batch
-    publish cost is O(batch + touched buckets), flat as the table
-    grows.  Read the result back with ``read_maintained_table``.
-
-    Exactly-once: the ``txn`` action rides in the same atomic commit
-    as the data, so an at-least-once replay of a batch whose commit
-    already landed (crash between publish and checkpoint commit) is a
-    no-op."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_upsert_batch(
-            batch_df, batch_id, table_path, key_cols, n_buckets=n_buckets
-        )
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Streaming MERGE into a keyed table (``apply_upsert_batch``)."""
+    return _run_foreach_batch(
+        events, checkpoint_dir, apply_upsert_batch, table_path, key_cols
     )
 
 
@@ -442,22 +436,13 @@ def apply_changes_rollup_batch(
         *[F.sum(sign * F.col(c)).alias(f"sum_{c}") for c in sum_cols],
     )
 
+    # "n" sums like the measures and stays the first measure column
+    measures = ("n", *[f"sum_{c}" for c in sum_cols])
+
     def merge_fn(cur, batch):
-        if cur is None:
-            merged = batch
-        else:
-            merged = (
-                cur.unionByName(batch)
-                .groupBy(*group_cols)
-                .agg(
-                    F.sum("n").alias("n"),
-                    *[
-                        F.sum(f"sum_{c}").alias(f"sum_{c}")
-                        for c in sum_cols
-                    ],
-                )
-            )
-        return merged.filter(F.col("n") != 0)
+        if cur is not None:
+            batch = merge_rollups([cur, batch], group_cols, sum_cols=measures)
+        return batch.filter(F.col("n") != 0)
 
     _merge(
         batch_df.sparkSession, table_path, delta, list(group_cols), merge_fn,
@@ -472,37 +457,14 @@ def maintain_rollup_from_changes(
     checkpoint_dir: str,
     group_cols: list[str],
     sum_cols: list[str],
-    starting_version: int = 0,
-    n_buckets: int = 16,
 ):
     """Incrementally-maintained MATERIALIZED VIEW over a delta_lite
-    table: tail the upstream commit log (``delta_cdf`` streaming
-    source), fold each micro-batch of file-level changes into a
-    downstream group aggregate (``apply_changes_rollup_batch``), and
-    publish through the touched-file Delta merge.  This closes the CDC
-    loop end to end: maintainers WRITE incrementally, the change feed
-    READS incrementally, and now derived tables UPDATE incrementally —
-    no snapshot is ever re-scanned on either side.  Restart from the
-    checkpoint resumes at the committed upstream version; read the
-    result back with ``read_maintained_table``."""
-    from ..sources.delta_cdf_datasource import stream_changes
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_changes_rollup_batch(
-            batch_df,
-            batch_id,
-            table_path,
-            list(group_cols),
-            list(sum_cols),
-            n_buckets=n_buckets,
-        )
-
-    return (
-        stream_changes(spark, upstream_table, starting_version)
-        .writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    table: its change feed from version 0 (``delta_cdf`` source) folds
+    into a count/sum rollup (``apply_changes_rollup_batch``).  A
+    restart resumes at the checkpoint's committed upstream version."""
+    return _run_foreach_batch(
+        stream_changes(spark, upstream_table, 0), checkpoint_dir,
+        apply_changes_rollup_batch, table_path, group_cols, sum_cols,
     )
 
 
@@ -560,36 +522,15 @@ def maintain_scd2_from_changes(
     checkpoint_dir: str,
     key_col: str,
     attr_cols: list[str],
-    starting_version: int = 0,
-    n_buckets: int = 16,
 ):
     """Incrementally-maintained SCD2 HISTORY of a delta_lite dimension
-    table — the third CDC-maintained view shape (count/sum rollup,
-    min/max gauge, and now attribute-change history): tail the
-    upstream commit log and fold each micro-batch's net post-images
-    into validity intervals.  The upstream table stores only the
-    CURRENT state; this view answers "what was key K's state at
-    version V" without ever re-scanning a snapshot — per batch
-    O(changed files + touched buckets).  Read back with
-    ``read_maintained_table``."""
-    from ..sources.delta_cdf_datasource import stream_changes
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_scd2_changes_batch(
-            batch_df,
-            batch_id,
-            table_path,
-            key_col,
-            list(attr_cols),
-            n_buckets=n_buckets,
-        )
-
-    return (
-        stream_changes(spark, upstream_table, starting_version)
-        .writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    table: its change feed from version 0 folds into validity
+    intervals (``apply_scd2_changes_batch``), so the view answers
+    "what was key K's state at version V" while the upstream stores
+    only the current state."""
+    return _run_foreach_batch(
+        stream_changes(spark, upstream_table, 0), checkpoint_dir,
+        apply_scd2_changes_batch, table_path, key_col, attr_cols,
     )
 
 
@@ -757,38 +698,15 @@ def maintain_gauge_rollup_from_changes(
     group_cols: list[str],
     minmax_cols: list[str],
     sum_cols: "list[str] | tuple" = (),
-    starting_version: int = 0,
-    n_buckets: int = 16,
 ):
     """Incrementally-maintained min/max MATERIALIZED VIEW over a
-    delta_lite table: tail the upstream commit log (``delta_cdf``
-    source) and fold/recompute each micro-batch into a per-group
-    gauge rollup (``apply_gauge_rollup_batch``).  Complements
-    ``maintain_rollup_from_changes``: that one covers the invertible
-    aggregates (count/sum) with a pure signed fold; this one covers
-    the non-invertible extrema, paying an upstream touched-group
-    recompute ONLY for groups that saw a delete.  Read the result back
-    with ``read_maintained_table``."""
-    from ..sources.delta_cdf_datasource import stream_changes
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_gauge_rollup_batch(
-            batch_df,
-            batch_id,
-            table_path,
-            upstream_table,
-            list(group_cols),
-            list(minmax_cols),
-            list(sum_cols),
-            n_buckets=n_buckets,
-        )
-
-    return (
-        stream_changes(spark, upstream_table, starting_version)
-        .writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    delta_lite table: its change feed from version 0 folds into a
+    per-group gauge rollup (``apply_gauge_rollup_batch``), the
+    non-invertible twin of ``maintain_rollup_from_changes``."""
+    return _run_foreach_batch(
+        stream_changes(spark, upstream_table, 0), checkpoint_dir,
+        apply_gauge_rollup_batch, table_path, upstream_table,
+        group_cols, minmax_cols, sum_cols,
     )
 
 
@@ -842,10 +760,6 @@ def apply_rollup_batch(
     """One micro-batch of rollup maintenance, exposed at module level
     so the at-least-once replay contract is directly testable: calling
     it twice with the same ``batch_id`` applies once."""
-    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators.history import (
-        merge_rollups,
-    )
-
     inc = batch_df.groupBy(key_col).agg(
         F.count("*").alias("n"),
         F.sum(F.col(value_col).cast("decimal(28,6)")).alias("sum_value"),
@@ -861,30 +775,11 @@ def apply_rollup_batch(
     _merge(batch_df.sparkSession, rollup_path, inc, [key_col], merge_fn, batch_id)
 
 
-def maintain_rollup_stream(
-    events: DataFrame,
-    rollup_path: str,
-    checkpoint_dir: str,
-    key_col: str = "event_type",
-    value_col: str = "value",
-):
-    """Incremental rollup maintenance on a stream: each micro-batch's
-    partial rollup (count + DECIMAL sum per key) merges into the stored
-    rollup via ``history.merge_rollups`` — refresh cost is
-    O(batch + rollup), the history is never rescanned.  Each batch is
-    one Delta MERGE commit carrying its ``txn``; the checkpoint plus
-    that ``txn`` make the loop exactly-once per micro-batch even under
-    replay."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_rollup_batch(batch_df, batch_id, rollup_path, key_col, value_col)
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+def maintain_rollup_stream(events: DataFrame, rollup_path: str, checkpoint_dir: str):
+    """Incremental per-event-type count + DECIMAL value-sum rollup on a
+    stream (``apply_rollup_batch``): O(batch + rollup) per refresh,
+    the history is never rescanned."""
+    return _run_foreach_batch(events, checkpoint_dir, apply_rollup_batch, rollup_path)
 
 
 def _apply_drift_counts_batch(
@@ -898,7 +793,9 @@ def _apply_drift_counts_batch(
     n_bins: int = 10,
 ) -> None:
     """One micro-batch of ``maintain_drift_counts_stream``: the batch's
-    per-(group, bin) counts sum into the stored counts table."""
+    per-(group, bin) counts (``quality.bin_counts`` over the FIXED
+    profile bounds ``lo``/``hi`` — the property that makes the partials
+    mergeable) sum into the stored |groups|·n_bins counts table."""
     from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators.quality import (
         bin_counts,
     )
@@ -906,11 +803,7 @@ def _apply_drift_counts_batch(
     def merge_fn(cur, batch):
         if cur is None:
             return batch
-        return (
-            cur.unionByName(batch)
-            .groupBy("__g", "__bin")
-            .agg(F.sum("__c").alias("__c"))
-        )
+        return merge_rollups([cur, batch], ["__g", "__bin"], sum_cols=("__c",))
 
     inc = bin_counts(batch_df, group_col, value_col, lo, hi, n_bins)
     _merge(
@@ -928,25 +821,13 @@ def maintain_drift_counts_stream(
     hi: float,
     n_bins: int = 10,
 ):
-    """Incremental distribution-drift maintenance on a stream: each
-    micro-batch's per-(group, bin) counts (``quality.bin_counts`` over
-    FIXED profile bounds — the property that makes the partials
-    mergeable) sum into the stored counts table; the monitor computes
-    PSI/JSD on demand from the stored table via
-    ``quality.drift_from_counts`` without ever rescanning history.
-    Same one-commit-per-batch contract as ``maintain_rollup_stream``
-    (the counts table is |groups|·n_bins-sized)."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _apply_drift_counts_batch(
-            batch_df, batch_id, counts_path, group_col, value_col, lo, hi, n_bins
-        )
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Incremental distribution-drift maintenance on a stream
+    (``_apply_drift_counts_batch``); the monitor computes PSI/JSD on
+    demand from the stored table via ``quality.drift_from_counts``
+    without ever rescanning history."""
+    return _run_foreach_batch(
+        events, checkpoint_dir, _apply_drift_counts_batch,
+        counts_path, group_col, value_col, lo, hi, n_bins,
     )
 
 
@@ -1042,7 +923,11 @@ def apply_scd2_batch(
     touched buckets), flat as closed history accumulates.  The batch's
     ``txn`` makes a replay a no-op; without it the replayed events
     would regenerate closed intervals that already exist (overlapping
-    rows)."""
+    rows).
+
+    Contract: events arrive in event-time order ACROSS batches per key
+    (the standard CDC ingestion assumption); within a batch any order
+    is fine."""
     obs = batch_df.select(
         F.col(key_col), F.col(ts_col), *[F.col(a) for a in attr_cols]
     )
@@ -1064,31 +949,12 @@ def maintain_scd2_stream(
     key_col: str,
     ts_col: str,
     attr_cols: list[str],
-    n_buckets: int = 16,
 ):
-    """Incremental SCD2 dimension maintenance on a stream: each
-    micro-batch folds its attribute-change observations into the
-    stored validity-interval table WITHOUT rescanning the event
-    history — the lakehouse dimension-table pattern at the ingest
-    edge.  Refresh compute is O(batch + affected keys) and publish IO
-    is O(touched buckets) (``apply_scd2_batch``).
-
-    Contract: events arrive in event-time order ACROSS batches per key
-    (the standard CDC ingestion assumption); within a batch any order
-    is fine.
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_scd2_batch(
-            batch_df, batch_id, table_path, key_col, ts_col, attr_cols,
-            n_buckets=n_buckets,
-        )
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Incremental SCD2 dimension maintenance on a stream
+    (``apply_scd2_batch``): the event history is never rescanned."""
+    return _run_foreach_batch(
+        events, checkpoint_dir, apply_scd2_batch,
+        table_path, key_col, ts_col, attr_cols,
     )
 
 
@@ -1099,20 +965,9 @@ def decontaminate_stream(
     checkpoint_dir: str,
     n: int = 5,
 ):
-    """Benchmark decontamination AT THE INGEST EDGE: every micro-batch
-    of arriving documents drops the ones sharing any word ``n``-gram
-    with the STATIC benchmark/eval set (``dedup.decontaminate``'s
-    inverted-index semi join — the benchmark gram set broadcasts, the
-    batch side stays shuffle-free), and the clean docs land in the
-    curated sink.  Contamination is a pure function of
-    (doc, static benchmark), so the job carries NO cross-batch state —
-    each micro-batch is independently correct.
-
-    Replay idempotence: each batch is one Delta append carrying its
-    ``txn`` (``apply_decontaminate_batch``), so an at-least-once replay
-    of an applied batch writes nothing.  Read the clean corpus with
-    ``read_maintained_table``.
-    """
+    """Benchmark decontamination AT THE INGEST EDGE
+    (``apply_decontaminate_batch``) against the word ``n``-gram set of
+    the static ``benchmark``, derived once for every batch."""
     from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import (
         dedup,
     )
@@ -1123,15 +978,8 @@ def decontaminate_stream(
         .distinct()
         .localCheckpoint(eager=True)  # static: derive once, reuse every batch
     )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_decontaminate_batch(batch_df, batch_id, bench_sh, out_path, n)
-
-    return (
-        docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _run_foreach_batch(
+        docs, checkpoint_dir, apply_decontaminate_batch, bench_sh, out_path, n
     )
 
 
@@ -1242,23 +1090,11 @@ def maintain_heavy_hitters_stream(
     key_col: str = "event_type",
     capacity: int = 1000,
 ):
-    """Streaming heavy hitters (trending keys) with BOUNDED state: each
-    micro-batch's per-key counts merge into a Misra–Gries summary of at
-    most ``capacity`` rows (``apply_heavy_hitters_batch``).  Read the
-    table with ``read_maintained_table`` and sort by ``n`` for the
-    current top-k; the stored ``__eps`` column is the uniform
-    undercount bound (true count ≤ n + eps for every surviving key;
-    keys with true count > eps are guaranteed present).  Exactly-once
-    per micro-batch via the ``txn`` in each batch's commit."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_heavy_hitters_batch(batch_df, batch_id, path, key_col, capacity)
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Streaming heavy hitters (trending keys) with BOUNDED state
+    (``apply_heavy_hitters_batch``); sort the table by ``n`` for the
+    current top-k."""
+    return _run_foreach_batch(
+        events, checkpoint_dir, apply_heavy_hitters_batch, path, key_col, capacity
     )
 
 
@@ -1315,20 +1151,10 @@ def maintain_hll_stream(
     key_col: str = "user_id",
     b: int = 9,
 ):
-    """Streaming distinct-count maintenance with BOUNDED state: the
-    per-group HLL register table (|groups|·2^b rows) is the entire
-    cross-batch state; estimates read off the live table at any time
-    without touching history.  Exactly-once per micro-batch via the
-    ``txn`` in each batch's commit."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_hll_batch(batch_df, batch_id, path, group_col, key_col, b)
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Streaming distinct-count maintenance with BOUNDED state
+    (``apply_hll_batch``)."""
+    return _run_foreach_batch(
+        events, checkpoint_dir, apply_hll_batch, path, group_col, key_col, b
     )
 
 
@@ -1415,13 +1241,7 @@ def apply_cms_batch(
     def merge_fn(cur, batch):
         if cur is None:
             return batch
-        return cur.join(batch, ["d", "bucket"], "full_outer").select(
-            "d",
-            "bucket",
-            (
-                F.coalesce(cur["n"], F.lit(0)) + F.coalesce(batch["n"], F.lit(0))
-            ).cast("bigint").alias("n"),
-        )
+        return merge_rollups([cur, batch], ["d", "bucket"], sum_cols=("n",))
 
     _merge(batch_df.sparkSession, path, inc, ["d", "bucket"], merge_fn, batch_id)
 
@@ -1434,19 +1254,11 @@ def maintain_cms_stream(
     depth: int = 4,
     width: int = 256,
 ):
-    """Streaming frequency-sketch maintenance with BOUNDED state: the
-    depth×width register grid is the entire cross-batch state; point
-    estimates (sketches.cms_point_estimates) read off the live table
-    at any time without touching history."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_cms_batch(batch_df, batch_id, path, key_col, depth, width)
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Streaming frequency-sketch maintenance with BOUNDED state
+    (``apply_cms_batch``); point estimates
+    (sketches.cms_point_estimates) read off the live table."""
+    return _run_foreach_batch(
+        events, checkpoint_dir, apply_cms_batch, path, key_col, depth, width
     )
 
 
@@ -1457,23 +1269,11 @@ def maintain_reservoir_stream(
     group_col: str = "event_type",
     id_col: str = "event_id",
     k: int = 5,
-    payload_cols: "tuple[str, ...]" = (),
 ):
-    """Streaming per-group uniform sample with BOUNDED state: the
-    |groups|·k bottom-k table is the entire cross-batch state and is
-    readable at any time.  Exactly-once per micro-batch via the
-    ``txn`` in each batch's commit."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_reservoir_batch(
-            batch_df, batch_id, path, group_col, id_col, k, payload_cols
-        )
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Streaming per-group uniform sample with BOUNDED state
+    (``apply_reservoir_batch``)."""
+    return _run_foreach_batch(
+        events, checkpoint_dir, apply_reservoir_batch, path, group_col, id_col, k
     )
 
 
@@ -1610,22 +1410,11 @@ def incremental_lsh_dedup_stream(
     checkpoint_dir: str,
     **kwargs,
 ):
-    """Streaming incremental near-dup detection: every arriving
-    micro-batch of documents is checked against everything ingested
-    before it (apply_lsh_dedup_batch) — the dup-pair feed and the
-    signature index grow per batch, and no batch ever rescans the
-    corpus it didn't touch.  Exactly-once per micro-batch via the
-    checkpoint + each append's ``txn``; read the pair feed and the
-    index with ``read_maintained_table``."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_lsh_dedup_batch(batch_df, batch_id, index_path, pairs_path, **kwargs)
-
-    return (
-        docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Streaming incremental near-dup detection
+    (``apply_lsh_dedup_batch``): every arriving micro-batch of
+    documents is checked against everything ingested before it."""
+    return _run_foreach_batch(
+        docs, checkpoint_dir, apply_lsh_dedup_batch, index_path, pairs_path, **kwargs
     )
 
 
@@ -1705,31 +1494,12 @@ def apply_experiment_units_batch(
 
 
 def maintain_experiment_units_stream(
-    events: DataFrame,
-    table_path: str,
-    checkpoint_dir: str,
-    cut_us: int,
-    conv_type: str = "purchase",
-    seed: int = 0,
-    n_buckets: int = 16,
+    events: DataFrame, table_path: str, checkpoint_dir: str, cut_us: int
 ):
-    """Streaming experiment-unit maintenance (see
-    ``apply_experiment_units_batch``): each micro-batch folds its
-    per-user deltas into the Delta-published unit table; any
-    experiments.* readout then runs as one tiny aggregate over
-    ``read_maintained_table`` instead of rescanning event history —
-    how a continuously-monitored experiment stays O(batch) per
-    refresh at 100 TB of events."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_experiment_units_batch(
-            batch_df, batch_id, table_path, cut_us,
-            conv_type=conv_type, seed=seed, n_buckets=n_buckets,
-        )
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Streaming experiment-unit maintenance
+    (``apply_experiment_units_batch``): any experiments.* readout then
+    runs as one tiny aggregate over ``read_maintained_table`` instead
+    of rescanning event history."""
+    return _run_foreach_batch(
+        events, checkpoint_dir, apply_experiment_units_batch, table_path, cut_us
     )

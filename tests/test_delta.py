@@ -301,6 +301,21 @@ def test_compact_preserves_bucketing_and_incrementality(spark, tmp_path):
     got = {(r["k"], r["v"]) for r in delta_lite.read_delta(spark, t).collect()}
     assert got == {(k, "a") for k in range(40) if k != 3} | {(3, "c")}
     assert len(got) == 40
+    # a file whose bucket rides only the old partitionValues['__bucket']
+    # (no tag) reads as untagged: the next merge rewrites it, so the key
+    # it holds is never duplicated
+    tagged = next(a["add"] for a in acts if "add" in a)
+    legacy = {k: val for k, val in tagged.items() if k != "tags"}
+    legacy["partitionValues"] = {"__bucket": delta_lite._file_bucket(tagged)}
+    assert delta_lite._commit(t, v2 + 1, [{"add": legacy}])
+    v3 = delta_lite.upsert_delta(
+        spark, t, spark.createDataFrame([(3, "d")], "k long, v string"), ["k"]
+    )
+    assert legacy["path"] in {
+        a["remove"]["path"] for a in _log_actions(t, v3) if "remove" in a
+    }
+    rows = [(r["k"], r["v"]) for r in delta_lite.read_delta(spark, t).collect()]
+    assert sorted(rows) == sorted({(k, "a") for k in range(40) if k != 3} | {(3, "d")})
 
 
 def test_compact_aborts_on_concurrent_commit(spark, tmp_path):

@@ -356,3 +356,25 @@ def test_streaming_sinks_do_not_use_dataframe_writer():
             if writer or node.attr in ("saveAsTable", "insertInto"):
                 found.append(f"{src.name}:{node.lineno} .{node.attr}")
     assert found == []
+
+
+def test_streaming_sinks_start_through_one_foreach_batch_runner():
+    """Every foreachBatch sink under ``streaming/`` starts through
+    ``jobs._run_foreach_batch``: no other function there calls
+    ``foreachBatch`` or ``.trigger``, apart from the memory-sink drain
+    ``run_available_now``."""
+    allowed = {"_run_foreach_batch", "run_available_now"}
+    found = []
+    for src in sorted(pathlib.Path(jobs.__file__).parent.glob("*.py")):
+        tree = ast.parse(src.read_text(), filename=str(src))
+        for top in tree.body:
+            if getattr(top, "name", None) in allowed:
+                continue
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("foreachBatch", "trigger")
+                ):
+                    found.append(f"{src.name}:{node.lineno} .{node.func.attr}")
+    assert found == []

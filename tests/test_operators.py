@@ -1107,6 +1107,24 @@ def test_bigram_pmi_hand_computed(spark):
     assert got[("a", "c")] == (1, exp_ac)
 
 
+def test_bigram_pmi_skips_docs_without_a_bigram(spark):
+    """A doc with no token (empty) or one token (punctuation only) has
+    no bigram: it adds its tokens to N_uni and nothing else, and never
+    fails the query."""
+    import math
+
+    df = spark.createDataFrame(
+        [("a b",), ("a b",), ("a b",), ("a c",), ("",), ("?!",)], "text string"
+    )
+    out = textstats.bigram_pmi(df, "text", min_count=1)
+    got = {(r["x"], r["y"]): (r["c_xy"], r["pmi"]) for r in out.collect()}
+    # tokens a:4 b:3 c:1 ?!:1 → N_uni=9; bigrams (a,b):3 (a,c):1 → N_bi=4
+    assert got == {
+        ("a", "b"): (3, round(math.log((3.0 * 9 * 9) / (4.0 * 4 * 3)), 6)),
+        ("a", "c"): (1, round(math.log((1.0 * 9 * 9) / (4.0 * 4 * 1)), 6)),
+    }
+
+
 def test_contamination_attribution_max_df_caps_hot_grams(spark):
     """The hot-gram cap (VERDICT r4 nit #1): a boilerplate 5-gram
     shared by EVERY doc must not drive attribution — under max_df the
