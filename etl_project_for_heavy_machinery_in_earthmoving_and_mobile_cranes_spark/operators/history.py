@@ -77,7 +77,9 @@ def merge_rollups(
     nightly job and a 100 TB rescan).  Non-mergeable stats (avg,
     stddev) must be DERIVED downstream from merged sums and counts;
     a count column in a partial rollup merges by SUM, which is why
-    ``count_col`` is summed here, never re-counted.
+    ``count_col`` is summed here, never re-counted.  The output columns
+    keep their order in ``parts[0]``, so a maintained rollup merged
+    into itself never reorders its stored schema.
     """
     if not parts:
         raise ValueError("merge_rollups needs at least one partial rollup")
@@ -89,7 +91,8 @@ def merge_rollups(
         aggs.append(F.sum(count_col).alias(count_col))
     aggs += [F.min(c).alias(c) for c in min_cols]
     aggs += [F.max(c).alias(c) for c in max_cols]
-    return u.groupBy(*keys).agg(*aggs)
+    out = u.groupBy(*keys).agg(*aggs)
+    return out.select(*[c for c in parts[0].columns if c in out.columns])
 
 
 def read_with_schema_evolution(spark, paths: list[str]) -> DataFrame:

@@ -97,7 +97,7 @@ def _table_schema(table: str) -> T.StructType:
     from . import delta_lite
 
     _, meta, _, _ = delta_lite._read_actions(table)
-    return T.StructType.fromJson(json.loads(meta["schemaString"]))
+    return delta_lite._schema_of(meta)
 
 
 def _cdf_schema(table: str) -> T.StructType:
@@ -304,11 +304,7 @@ class _CdfStreamReader(DataSourceStreamReader):
         def dv_positions(dv_rel: "str | None") -> set:
             if not dv_rel:
                 return set()
-            side = pq.read_table(
-                dv_rel
-                if os.path.isabs(dv_rel)
-                else os.path.join(self.table, dv_rel)
-            )
+            side = pq.read_table(os.path.join(self.table, dv_rel))
             fb = os.path.basename(partition.rel_path)
             mask = pa.compute.equal(side.column("file"), pa.scalar(fb))
             return set(side.filter(mask).column("idx").to_pylist())

@@ -116,6 +116,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType
 
 _LOG_DIR = "_delta_log"
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -125,7 +126,8 @@ _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 # silently serving physical column names as logical ones
 _PROTOCOL_CM = {"minReaderVersion": 2, "minWriterVersion": 5}
 # ceiling of what THIS engine implements; tables demanding more are
-# refused loudly (reads in _read_log_file, writes in _read_actions)
+# refused loudly (reads and vacuum in _read_log_file, writes in
+# _read_actions(writer=True))
 _SUPPORTED = {"minReaderVersion": 2, "minWriterVersion": 5}
 _BUCKET_COL = "__bucket"
 # Checkpoint-pointer filename deliberately does NOT collide with the
@@ -156,18 +158,22 @@ def _checkpoint_file(table: str, v: int) -> str:
     return os.path.join(_log_path(table), f"{v:020d}.checkpoint.json")
 
 
-def _list_versions(table: str) -> list[int]:
+def _list_log(table: str) -> "tuple[list[int], list[int]]":
+    """One scan of ``_delta_log``: the sorted versions of its commit
+    files and of its checkpoint files."""
+    found: "dict[str, list[int]]" = {".json": [], ".checkpoint.json": []}
     log = _log_path(table)
-    if not os.path.isdir(log):
-        return []
-    out = []
-    for name in os.listdir(log):
-        if name.endswith(".json") and len(name) == 25:
+    for name in os.listdir(log) if os.path.isdir(log) else ():
+        if name[20:] in found:
             try:
-                out.append(int(name[:-5]))
+                found[name[20:]].append(int(name[:20]))
             except ValueError:
                 continue
-    return sorted(out)
+    return sorted(found[".json"]), sorted(found[".checkpoint.json"])
+
+
+def _list_versions(table: str) -> list[int]:
+    return _list_log(table)[0]
 
 
 def _read_last_checkpoint(table: str) -> int | None:
@@ -181,21 +187,29 @@ def _read_last_checkpoint(table: str) -> int | None:
         return None  # corrupt pointer: fall back to full replay
 
 
-def _read_log_file(path: str) -> list[dict]:
+def _log_actions(path: str) -> list[dict]:
     """The actions of one log file (a commit ``_version_file(table, v)``
-    or a checkpoint), with the READER FEATURE GATE applied (Delta spec
+    or a checkpoint): the one parser of the log's JSON lines.  It checks
+    no protocol — only readers of ``commitInfo`` (``_commit_info_at``)
+    call it directly; every reader of table state goes through
+    ``_read_log_file``.  A missing file raises FileNotFoundError."""
+    with open(path) as fh:
+        return [json.loads(line) for line in fh if line.strip()]
+
+
+def _read_log_file(path: str) -> list[dict]:
+    """``_log_actions`` with the READER FEATURE GATE applied (Delta spec
     "Protocol Evolution"): a protocol action whose minReaderVersion
     exceeds what this engine understands raises ValueError — the table
     uses reader features (e.g. a future column-mapping mode, row
     tracking) whose absence would not fail loudly but silently return
     WRONG results (a v1 reader of a name-mapped table serves physical
     column names as logical ones).  Snapshot replay (``_read_actions``:
-    reads, time travel, writes, maintenance), the change feed's
-    ``_range_has_datachange`` and the CDF stream reader all read the
-    log through this function.  A missing file raises
-    FileNotFoundError."""
-    with open(path) as fh:
-        actions = [json.loads(line) for line in fh if line.strip()]
+    reads, time travel, writes, maintenance), ``vacuum`` (which decides
+    what is live), the change feed's ``_range_has_datachange`` and the
+    CDF stream reader all read the log through this function.  A
+    missing file raises FileNotFoundError."""
+    actions = _log_actions(path)
     for a in actions:
         need = a.get("protocol", {}).get("minReaderVersion", 1)
         if need > _SUPPORTED["minReaderVersion"]:
@@ -228,21 +242,6 @@ def _apply_action(
         proto.update(action["protocol"])
 
 
-def _list_checkpoints(table: str) -> list[int]:
-    log = _log_path(table)
-    if not os.path.isdir(log):
-        return []
-    out = []
-    suffix = ".checkpoint.json"
-    for name in os.listdir(log):
-        if name.endswith(suffix) and len(name) == 20 + len(suffix):
-            try:
-                out.append(int(name[:20]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
 def _read_actions(
     table: str,
     upto: int | None = None,
@@ -266,7 +265,7 @@ def _read_actions(
     also what keeps reads between a ``truncate_log`` checkpoint and a
     newer pointer correct — replaying version files alone from a
     truncated base would silently miss the pre-truncation state."""
-    versions = _list_versions(table)
+    versions, cps = _list_log(table)
     if upto is not None:
         versions = [v for v in versions if v <= upto]
     if not versions:
@@ -282,11 +281,7 @@ def _read_actions(
         and cp <= versions[-1]
         and os.path.isfile(_checkpoint_file(table, cp))
     ):
-        cp = None
-        for c in reversed(_list_checkpoints(table)):
-            if c <= versions[-1]:
-                cp = c
-                break
+        cp = next((c for c in reversed(cps) if c <= versions[-1]), None)
     if cp is not None and os.path.isfile(_checkpoint_file(table, cp)):
         for action in _read_log_file(_checkpoint_file(table, cp)):
             _apply_action(action, live, meta, txns, proto)
@@ -294,13 +289,11 @@ def _read_actions(
     # a truncated log must not be replayed from scratch: version files
     # below the oldest checkpoint are gone, so a from-zero replay would
     # be silently incomplete
-    if start_after == -1:
-        cps = _list_checkpoints(table)
-        if cps and versions[0] > 0 and versions[0] >= cps[0]:
-            raise FileNotFoundError(
-                f"no checkpoint usable for version {versions[-1]} of {table} "
-                f"and the log is truncated below {versions[0]}"
-            )
+    if start_after == -1 and cps and 0 < versions[0] and cps[0] <= versions[0]:
+        raise FileNotFoundError(
+            f"no checkpoint usable for version {versions[-1]} of {table} "
+            f"and the log is truncated below {versions[0]}"
+        )
     for v in versions:
         if v <= start_after:
             continue
@@ -428,6 +421,11 @@ def _layout(meta: dict) -> "tuple[list[str], tuple[list[str], int] | None]":
     if "bucketKeys" in conf and "numBuckets" in conf:
         bucket = (json.loads(conf["bucketKeys"]), int(conf["numBuckets"]))
     return list(meta.get("partitionColumns") or []), bucket
+
+
+def _schema_of(meta: dict) -> StructType:
+    """The table schema a metaData action commits (its ``schemaString``)."""
+    return StructType.fromJson(json.loads(meta["schemaString"]))
 
 
 def _stage_files(
@@ -635,8 +633,10 @@ def _read_with_dv(
     equivalent of real Delta's bitmap application, costing one
     anti-join bounded by the DV'd files' rows, never the table.  Every
     snapshot-shaped read (read_delta, merge_touched's touched read,
-    read_changes, the OPTIMIZE family's re-reads) routes through here,
-    so a deleted row can never resurrect through a side door.
+    read_changes, and each OPTIMIZE, DML and constraint operation over
+    the live set its own ``_read_actions`` returned — never a second
+    replay) routes through here, so a deleted row can never resurrect
+    through a side door.
     ``with_position=True`` appends ``__file`` (basename) and ``__idx``
     (row index) columns — the coordinates a new deletion vector is
     written in."""
@@ -650,8 +650,6 @@ def _read_with_dv(
     l2p = _schema_l2p(schema)
     mapped = any(l2p[c] != c for c in cols)
     if mapped:
-        from pyspark.sql.types import StructField, StructType
-
         read_schema = StructType(
             [StructField(l2p[f.name], f.dataType, f.nullable) for f in schema.fields]
         )
@@ -659,16 +657,10 @@ def _read_with_dv(
     else:
         read_schema = schema
         base_sel = [F.col(c) for c in cols]
-    pos = (
-        [
-            F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
-                "__file"
-            ),
-            F.col("_metadata.row_index").alias("__idx"),
-        ]
-        if with_position
-        else []
-    )
+    pos = [
+        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("__file"),
+        F.col("_metadata.row_index").alias("__idx"),
+    ]
     out_cols = cols + (["__file", "__idx"] if with_position else [])
 
     def rd(paths: dict, need_pos: bool) -> DataFrame:
@@ -676,15 +668,7 @@ def _read_with_dv(
         if pcols:
             reader = reader.option("basePath", table)
         df = reader.parquet(*[os.path.join(table, p) for p in sorted(paths)])
-        if need_pos:
-            return df.select(
-                *base_sel,
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ).alias("__file"),
-                F.col("_metadata.row_index").alias("__idx"),
-            )
-        return df.select(*base_sel, *pos)
+        return df.select(*base_sel, *(pos if need_pos else []))
 
     if not files:
         empty = spark.createDataFrame([], schema)
@@ -697,7 +681,7 @@ def _read_with_dv(
     clean = {p: a for p, a in files.items() if not _dv_of(a)}
     parts = []
     if clean:
-        parts.append(rd(clean, False))
+        parts.append(rd(clean, with_position))
     if dv_files:
         dvdf = rd(dv_files, True)
         survived = dvdf.join(
@@ -707,11 +691,7 @@ def _read_with_dv(
             ["__file", "__idx"],
             "left_anti",
         )
-        if not with_position:
-            survived = survived.select(*cols)
-        else:
-            survived = survived.select(*out_cols)
-        parts.append(survived)
+        parts.append(survived.select(*out_cols))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -766,12 +746,9 @@ def _schema_l2p(schema) -> "dict[str, str]":
 def _l2p_of(meta: dict) -> "dict[str, str]":
     """The table's logical->physical map, or {} when column mapping is
     not enabled (every caller treats a missing key as identity)."""
-    from pyspark.sql.types import StructType
-
     if (meta.get("configuration") or {}).get(_CM_MODE) != "name":
         return {}
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    return _schema_l2p(schema)
+    return _schema_l2p(_schema_of(meta))
 
 
 def _table_l2p(table: str) -> "dict[str, str]":
@@ -806,8 +783,6 @@ def _strip_cm_meta(schema):
     a DIFFERENT, unmapped table would make its readers chase physical
     names its files never stored — every value would read NULL.  Every
     unmapped commit path strips first."""
-    from pyspark.sql.types import StructField, StructType
-
     if not any(
         k in (f.metadata or {})
         for f in schema.fields
@@ -848,10 +823,7 @@ def _mapped_schema(meta: dict, new_schema) -> "tuple":
     conf = meta.get("configuration") or {}
     if conf.get(_CM_MODE) != "name":
         return _strip_cm_meta(new_schema), {}
-    from pyspark.sql.types import StructField, StructType
-
-    prev = StructType.fromJson(json.loads(meta["schemaString"]))
-    prev_by_name = {f.name: f for f in prev.fields}
+    prev_by_name = {f.name: f for f in _schema_of(meta).fields}
     maxid = int(conf.get(_CM_MAXID, "0"))
     fields = []
     for f in new_schema.fields:
@@ -891,10 +863,10 @@ def _generated_of(meta: dict) -> "dict[str, str]":
     if not meta:
         return {}
     out = {}
-    for f in json.loads(meta["schemaString"])["fields"]:
-        expr = (f.get("metadata") or {}).get(_GEN_KEY)
+    for f in _schema_of(meta).fields:
+        expr = (f.metadata or {}).get(_GEN_KEY)
         if expr:
-            out[f["name"]] = expr
+            out[f.name] = expr
     return out
 
 
@@ -908,8 +880,6 @@ def _with_gen_meta(schema, genspec: "dict[str, str]"):
     generation contract from the table."""
     if not genspec:
         return schema
-    from pyspark.sql.types import StructField, StructType
-
     return StructType(
         [
             StructField(
@@ -1071,13 +1041,10 @@ def enable_column_mapping(table: str) -> int:
     including their stats and bloom tags, which key on parquet footer
     names) and a stable column id.  Idempotent — returns the current
     version when already enabled."""
-    from pyspark.sql.types import StructField, StructType
-
     _, meta, base, _ = _read_actions(table, writer=True)
     conf = meta.get("configuration") or {}
     if conf.get(_CM_MODE) == "name":
         return base
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
     fields = [
         StructField(
             f.name,
@@ -1085,7 +1052,7 @@ def enable_column_mapping(table: str) -> int:
             f.nullable,
             {**(f.metadata or {}), _CM_ID: i + 1, _CM_PHYS: f.name},
         )
-        for i, f in enumerate(schema.fields)
+        for i, f in enumerate(_schema_of(meta).fields)
     ]
     actions = [
         _commit_info("ENABLE COLUMN MAPPING", {"mode": "name"}),
@@ -1126,8 +1093,6 @@ def rename_column(table: str, old: str, new: str) -> int:
     files), so ``optimize_cluster_incremental`` under the new name
     still sees the backbone as clustered instead of rewriting the
     whole table."""
-    from pyspark.sql.types import StructField, StructType
-
     live, meta, base, _ = _read_actions(table, writer=True)
     conf = meta.get("configuration") or {}
     if conf.get(_CM_MODE) != "name":
@@ -1136,7 +1101,7 @@ def rename_column(table: str, old: str, new: str) -> int:
             "enable_column_mapping(table) first (a one-time "
             "metadata-only upgrade)"
         )
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    schema = _schema_of(meta)
     names = [f.name for f in schema.fields]
     if old not in names:
         raise ValueError(f"rename_column: {old!r} is not a column of {table}")
@@ -1210,12 +1175,12 @@ def add_column(table: str, name: str, dtype: str, nullable: bool = True) -> int:
     a fresh physical name and column id, so re-adding a previously
     DROPPED name can never resurface the old data.  ``dtype`` is a DDL
     type string ('long', 'string', 'decimal(12,2)', ...)."""
-    from pyspark.sql.types import StructField, StructType, _parse_datatype_string
+    from pyspark.sql.types import _parse_datatype_string
 
     _, meta, base, _ = _read_actions(table, writer=True)
     conf = meta.get("configuration") or {}
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    if name in [f.name for f in schema.fields]:
+    schema = _schema_of(meta)
+    if name in schema.names:
         raise ValueError(f"add_column: {name!r} already exists in {table}")
     dt = _parse_datatype_string(dtype)
     md: dict = {}
@@ -1250,8 +1215,6 @@ def drop_column(table: str, col: str) -> int:
     for erasure semantics use delete_where/delete_keys + vacuum.
     Requires column mapping; refused for partition columns, merge
     bucket keys, constraint-referenced columns, and the last column."""
-    from pyspark.sql.types import StructType
-
     _, meta, base, _ = _read_actions(table, writer=True)
     conf = meta.get("configuration") or {}
     if conf.get(_CM_MODE) != "name":
@@ -1259,7 +1222,7 @@ def drop_column(table: str, col: str) -> int:
             f"drop_column on {table} requires column mapping: call "
             "enable_column_mapping(table) first"
         )
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    schema = _schema_of(meta)
     names = [f.name for f in schema.fields]
     if col not in names:
         raise ValueError(f"drop_column: {col!r} is not a column of {table}")
@@ -1410,24 +1373,26 @@ def _log_store_for(table: str) -> LogStore:
         ) from None
 
 
+def _commit_info_at(table: str, v: int) -> "dict | None":
+    """The commitInfo of version ``v``, or None when it carries none.
+    Commit metadata, not table state: read without the reader gate, so
+    history and TIMESTAMP AS OF resolve below a reader upgrade exactly
+    as version time travel does."""
+    actions = _log_actions(_version_file(table, v))
+    return next((a["commitInfo"] for a in actions if "commitInfo" in a), None)
+
+
 def _prev_commit_ts(table: str, version: int) -> "int | None":
     """commitInfo timestamp of ``version - 1``, or None when absent
-    (version 0, truncated log, or a commit without commitInfo)."""
+    (version 0, truncated log, an unparseable commit, or a commit
+    without commitInfo)."""
     if version <= 0:
         return None
-    prev = _version_file(table, version - 1)
-    if not os.path.isfile(prev):
-        return None
     try:
-        with open(prev) as fh:
-            for line in fh:
-                if line.strip():
-                    a = json.loads(line)
-                    if "commitInfo" in a:
-                        return a["commitInfo"].get("timestamp")
-    except (OSError, json.JSONDecodeError):
+        info = _commit_info_at(table, version - 1)
+    except (OSError, ValueError):
         return None
-    return None
+    return (info or {}).get("timestamp")
 
 
 def _commit(table: str, version: int, actions: list[dict]) -> bool:
@@ -1629,10 +1594,10 @@ def set_check_constraint(
             f"constraint '{name}' already exists on {table} "
             f"(drop it first to replace: {conf[key]!r})"
         )
-    snapshot = read_delta(spark, table, version=base)
-    _enforce_constraints(
-        snapshot, {"configuration": {key: expr}}, table
+    snapshot = _read_with_dv(
+        spark, table, live, _schema_of(meta), meta.get("partitionColumns") or []
     )
+    _enforce_constraints(snapshot, {"configuration": {key: expr}}, table)
     conf[key] = expr
     actions = [
         _commit_info("ADD CONSTRAINT", {"name": name, "expr": expr}),
@@ -1938,8 +1903,6 @@ def merge_touched(
     rewrites into up to k·d files — co-locate merge keys with
     partition values upstream when d is large.
     """
-    from pyspark.sql.types import StructType
-
     keys = list(key_cols)
     params = {"predicate": json.dumps(keys)}
     os.makedirs(table, exist_ok=True)
@@ -1997,13 +1960,12 @@ def merge_touched(
             # the CALLER's n_buckets
             nb = width = n_buckets
             touched = dict(live)
-        schema = StructType.fromJson(json.loads(meta["schemaString"]))
         # partitioned tables read touched files with basePath so Spark's
         # partition discovery reconstitutes the partition columns from
         # the Hive path segments (VERDICT r9 #1); deletion vectors apply
         # so a DV-deleted row can never resurrect through a merge (the
         # rewrite then PURGES the DV — the new files carry no dv tag)
-        cur = _read_with_dv(spark, table, touched, schema, pcols)
+        cur = _read_with_dv(spark, table, touched, _schema_of(meta), pcols)
         merged = merge_fn(cur, batch_df)
         missing_pcols = [c for c in pcols if c not in merged.columns]
         if missing_pcols:
@@ -2449,14 +2411,12 @@ def read_delta(
     Partitioned tables (non-empty ``metaData.partitionColumns``) read
     with ``basePath`` so Spark's partition discovery reconstitutes the
     partition columns from the Hive-layout file paths."""
-    from pyspark.sql.types import StructType
-
     if timestamp_ms is not None:
         if version is not None:
             raise ValueError("pass version OR timestamp_ms, not both")
         version = version_at_timestamp(table, timestamp_ms)
     live, meta, _, _ = _read_actions(table, upto=version)
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    schema = _schema_of(meta)
     pcols = meta.get("partitionColumns") or []
     live = _prune_files(live, meta, schema, predicate)
     if predicate is not None:
@@ -2564,7 +2524,6 @@ def read_changes(
     snapshot reads of pre-evolution files).  Partitioned tables read
     with ``basePath`` so partition columns reconstitute."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     added, removed, vto = changed_files(table, from_version, to_version)
     # spec short-circuit (r12, guide §2.4): a range of pure
@@ -2577,7 +2536,7 @@ def read_changes(
     ):
         added, removed = {}, {}
     _, meta_to, _, _ = _read_actions(table, upto=vto)
-    schema = StructType.fromJson(json.loads(meta_to["schemaString"]))
+    schema = _schema_of(meta_to)
     pcols = meta_to.get("partitionColumns") or []
 
     # deletion vectors apply per side (each dict carries its version's
@@ -2694,12 +2653,9 @@ def delta_history(table: str) -> list[dict]:
     """commitInfo per version, oldest first."""
     out = []
     for v in _list_versions(table):
-        with open(_version_file(table, v)) as fh:
-            for line in fh:
-                action = json.loads(line) if line.strip() else {}
-                if "commitInfo" in action:
-                    out.append({"version": v, **action["commitInfo"]})
-                    break
+        info = _commit_info_at(table, v)
+        if info is not None:
+            out.append({"version": v, **info})
     return out
 
 
@@ -2709,7 +2665,7 @@ def current_version(table: str) -> int | None:
 
 
 def is_delta_table(path: str) -> bool:
-    return os.path.isdir(_log_path(path)) and bool(_list_versions(path))
+    return bool(_list_versions(path))
 
 
 # ---------------------------------------------------------------------------
@@ -2797,7 +2753,6 @@ def add_bloom_index(
     owns it).  Returns the committed version, or None when every live
     file is already tagged."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     live, meta, base, _ = _read_actions(table, writer=True)
     pcols = meta.get("partitionColumns") or []
@@ -2806,7 +2761,7 @@ def add_bloom_index(
             f"bloom index on partition column {col!r} is pointless: "
             "partition pruning already skips on it"
         )
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    schema = _schema_of(meta)
     coltype = next(
         (f.dataType.typeName() for f in schema.fields if f.name == col), None
     )
@@ -2840,9 +2795,7 @@ def add_bloom_index(
             pass
     m, k = _bloom_params(n_max, fpp)
 
-    abspaths = {
-        (p if os.path.isabs(p) else os.path.join(table, p)): p for p in todo
-    }
+    abspaths = {os.path.join(table, p): p for p in todo}
     # raw per-file scan of the indexed column only (partition columns
     # are refused above, so nothing needs Hive-path reconstitution)
     df = spark.read.parquet(*abspaths).select(
@@ -2954,6 +2907,13 @@ def _strip_uri(p: str) -> str:
     return p
 
 
+def _bloom_sidecar(table: str, tag: str) -> dict:
+    """The bloom sidecar a ``bloom_<col>`` tag names (m, k, fpp and the
+    base64 bitset), read relative to the table root."""
+    with open(os.path.join(table, tag)) as fh:
+        return json.load(fh)
+
+
 def _bloom_prunable(table: str, add: dict, col: str, value) -> bool:
     """True when the file's bloom sidecar PROVES ``col = value`` has no
     row in it (some probed bit is unset).  Advisory-safe: no tag,
@@ -2962,10 +2922,8 @@ def _bloom_prunable(table: str, add: dict, col: str, value) -> bool:
     tag = (add.get("tags") or {}).get(f"bloom_{col}")
     if not tag:
         return False
-    path = tag if os.path.isabs(tag) else os.path.join(table, tag)
     try:
-        with open(path) as fh:
-            side = json.load(fh)
+        side = _bloom_sidecar(table, tag)
         import base64
 
         bits = base64.b64decode(side["bits"])
@@ -2989,7 +2947,10 @@ def vacuum(table: str, retention_seconds: float = 3600.0) -> list[str]:
     data files into the table root BEFORE its commit lands, so a
     zero-retention vacuum racing an in-flight commit would delete
     files the about-to-land version references.  Pass 0 only when no
-    writer can be active (offline maintenance)."""
+    writer can be active (offline maintenance).
+
+    A table whose protocol demands a reader version this engine does
+    not implement is refused (ValueError) before any file is deleted."""
     referenced: set[str] = set()
 
     def _ref(add: dict) -> None:
@@ -3004,25 +2965,22 @@ def vacuum(table: str, retention_seconds: float = 3600.0) -> list[str]:
                 # bloom sidecars are references for the same reason
                 referenced.add(v)
 
-    for v in _list_versions(table):
-        with open(_version_file(table, v)) as fh:
-            for line in fh:
-                action = json.loads(line) if line.strip() else {}
-                if "add" in action:
-                    _ref(action["add"])
+    # through the reader gate: unknown reader features may reference
+    # files in ways this engine cannot see
+    versions, checkpoints = _list_log(table)
+    actions = [a for v in versions for a in _read_log_file(_version_file(table, v))]
     # checkpoints are REFERENCES too: after truncate_log the state at
     # the truncation point lives ONLY in its checkpoint (the version's
     # own commit file holds just the incremental adds), so skipping
     # checkpoint adds here would delete live data
-    for c in _list_checkpoints(table):
+    for c in checkpoints:
         try:
-            with open(_checkpoint_file(table, c)) as fh:
-                for line in fh:
-                    action = json.loads(line) if line.strip() else {}
-                    if "add" in action:
-                        _ref(action["add"])
+            actions += _read_log_file(_checkpoint_file(table, c))
         except OSError:
             continue  # raced away
+    for action in actions:
+        if "add" in action:
+            _ref(action["add"])
     now = time.time()
     removed = []
     # walk recursively: partitioned tables keep data files under
@@ -3122,7 +3080,7 @@ def clone_table(
     missing = [
         p
         for p in needed
-        if not os.path.isfile(p if os.path.isabs(p) else os.path.join(source, p))
+        if not os.path.isfile(os.path.join(source, p))
     ]
     if missing:
         raise FileNotFoundError(
@@ -3146,11 +3104,9 @@ def clone_table(
         {"metaData": {**meta, "id": str(uuid.uuid4())}},
     ]
     for p, add in live.items():
-        a = dict(add)
-        if not os.path.isabs(p):
-            a["path"] = os.path.join(src_abs, p)
+        a = {**add, "path": os.path.join(src_abs, p)}
         dv = _dv_of(a)
-        if dv and not os.path.isabs(dv):
+        if dv:
             # the clone's readers resolve the sidecar against the
             # TARGET root — absolutize it like the data path
             a["tags"] = {**(a.get("tags") or {}), "dv": os.path.join(src_abs, dv)}
@@ -3208,9 +3164,7 @@ def restore_table(
         p
         for p in then_needed
         if p not in live_now
-        and not os.path.isfile(
-            p if os.path.isabs(p) else os.path.join(table, p)
-        )
+        and not os.path.isfile(os.path.join(table, p))
     ]
     if missing:
         raise FileNotFoundError(
@@ -3352,12 +3306,9 @@ def _reindex_bloom_after_rewrite(spark, table: str, removed: dict) -> "list[int]
                 phys_cols.add(k[len("bloom_") :])
     if not phys_cols:
         return []
-    from pyspark.sql.types import StructType
-
     _, meta, _, _ = _read_actions(table)
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
     p2l = {v: k for k, v in _l2p_of(meta).items()}
-    logical_names = {f.name for f in schema.fields}
+    logical_names = set(_schema_of(meta).names)
 
     def _orig_fpp(phys: str) -> float:
         for a in removed.values():
@@ -3365,8 +3316,7 @@ def _reindex_bloom_after_rewrite(spark, table: str, removed: dict) -> "list[int]
             if not tag:
                 continue
             try:
-                with open(os.path.join(table, tag)) as fh:
-                    return float(json.load(fh)["fpp"])
+                return float(_bloom_sidecar(table, tag)["fpp"])
             except (OSError, KeyError, ValueError):
                 continue
         return 0.01
@@ -3413,11 +3363,11 @@ def compact(spark: SparkSession, table: str, n_files: int = 1) -> int:
     ignored), so incremental merges stay incremental after compaction.
     Returns the committed version."""
     live, meta, base, _ = _read_actions(table, writer=True)
-    snapshot = read_delta(spark, table, version=base)
     # the rewrite keeps the table's layout: a flat rewrite of a
     # partitioned table would orphan metaData.partitionColumns and
     # break pruning
     pcols, bucket = _layout(meta)
+    snapshot = _read_with_dv(spark, table, live, _schema_of(meta), pcols)
     if pcols:
         params = {"partitionBy": json.dumps(pcols)}
     elif bucket is not None:
@@ -3464,8 +3414,6 @@ def optimize_where(
     rewritten files auto-rebuild, and a concurrent commit aborts the
     optimize (pinned snapshot).  Returns the committed version, or
     None when fewer than ``min_files`` files are in scope."""
-    from pyspark.sql.types import StructType
-
     live, meta, base, _ = _read_actions(table, writer=True)
     pcols = meta.get("partitionColumns") or []
     if not pcols:
@@ -3473,7 +3421,7 @@ def optimize_where(
             f"optimize_where: {table} is unpartitioned — there is no "
             "partition scope to optimize; use compact()"
         )
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    schema = _schema_of(meta)
     eff = [t for t in _triples(meta, predicate) if t[0] in pcols]
     if not eff:
         raise ValueError(
@@ -3538,7 +3486,6 @@ def reorg_purge_dv(
     bucketed tables never carry DVs (``delete_where`` refuses them).
     Returns the committed version, or None when no file qualifies."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     live, meta, base, _ = _read_actions(table, writer=True)
     pcols = meta.get("partitionColumns") or []
@@ -3566,8 +3513,7 @@ def reorg_purge_dv(
         dvd = {p: a for p, a in dvd.items() if frac(p, a) >= min_dv_fraction}
         if not dvd:
             return None
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    survivors = _read_with_dv(spark, table, dvd, schema, pcols)
+    survivors = _read_with_dv(spark, table, dvd, _schema_of(meta), pcols)
     if not pcols:
         survivors = survivors.repartition(max(1, len(dvd)))
     adds = _stage_files(survivors, table, base + 1, pcols, l2p=_l2p_of(meta))
@@ -3611,8 +3557,6 @@ def optimize_small_files(
     aborts the optimize (stale remove set), same contract as
     ``compact``.  Returns the committed version, or None when fewer
     than ``min_files`` files qualify (nothing worth packing)."""
-    from pyspark.sql.types import StructType
-
     live, meta, base, _ = _read_actions(table, writer=True)
     pcols = meta.get("partitionColumns") or []
     if pcols:
@@ -3626,10 +3570,9 @@ def optimize_small_files(
     }
     if len(small) < max(2, min_files):
         return None
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
     # deletion vectors apply (and are PURGED by the rewrite — the
     # packed files carry no dv tag, the old sidecars age out of live)
-    df = _read_with_dv(spark, table, small, schema, [])
+    df = _read_with_dv(spark, table, small, _schema_of(meta), [])
     _, bucket = _layout(meta)
     width = None
     if bucket is not None:
@@ -3688,15 +3631,15 @@ def optimize_zorder(
 
     from ..operators.layout import morton_code
 
-    live, _meta, base, _ = _read_actions(table, writer=True)
-    pcols = _meta.get("partitionColumns") or []
+    live, meta, base, _ = _read_actions(table, writer=True)
+    pcols = meta.get("partitionColumns") or []
     if col_a in pcols or col_b in pcols:
         raise ValueError(
             f"z-order columns must not be partition columns {pcols}: "
             "partition pruning already handles them; z-order the "
             "within-partition residual columns instead"
         )
-    snapshot = read_delta(spark, table, version=base)
+    snapshot = _read_with_dv(spark, table, live, _schema_of(meta), pcols)
     # min/max span: GLOBAL on a flat table; real Delta z-orders WITHIN
     # partitions, so on a partitioned table the span (and therefore the
     # normalization) is computed per partition value — a skewed
@@ -3764,7 +3707,7 @@ def optimize_zorder(
         .sortWithinPartitions(*pcols, "__zorder")
         .drop("__zorder", "__alo", "__ahi", "__blo", "__bhi")
     )
-    adds = _stage_files(ordered, table, base + 1, pcols, l2p=_l2p_of(_meta))
+    adds = _stage_files(ordered, table, base + 1, pcols, l2p=_l2p_of(meta))
     return _commit_layout_rewrite(
         spark, table, base + 1, live, adds, {"zOrderBy": json.dumps([col_a, col_b])}
     )
@@ -3821,7 +3764,7 @@ def optimize_cluster(
             "buckets and degrade the next merge to a full rewrite — "
             "rely on touched-bucket pruning, or compact() to re-bucket"
         )
-    snapshot = read_delta(spark, table, version=base)
+    snapshot = _read_with_dv(spark, table, live, _schema_of(meta), pcols)
     ordered = snapshot.repartitionByRange(
         max(1, n_files), *pcols, *cols
     ).sortWithinPartitions(*pcols, *cols)
@@ -3889,10 +3832,9 @@ def delete_where(
     merge-bucketed tables (use ``delete_keys`` there — the bucket path
     is already O(touched))."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     live, meta, base, _ = _read_actions(table, writer=True)
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    schema = _schema_of(meta)
     pcols, bucket = _layout(meta)
     cand = _prune_files(live, meta, schema, predicate)
     if not cand:
@@ -4057,8 +3999,6 @@ def optimize_cluster_incremental(
     the same tag-destruction reason as the full rewrite).  Returns the
     committed version, or None when fewer than ``min_files`` files
     need clustering."""
-    from pyspark.sql.types import StructType
-
     live, meta, base, _ = _read_actions(table, writer=True)
     pcols = meta.get("partitionColumns") or []
     conf = meta.get("configuration") or {}
@@ -4084,10 +4024,9 @@ def optimize_cluster_incremental(
     }
     if len(fresh) < max(1, min_files):
         return None
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
     # deletion vectors on fresh files apply and are purged by the
     # clustered rewrite
-    df = _read_with_dv(spark, table, fresh, schema, [])
+    df = _read_with_dv(spark, table, fresh, _schema_of(meta), [])
     if n_files is None:
         total = sum(a.get("size", 0) for a in fresh.values())
         n_files = max(1, -(-total // max(1, target_bytes)))
@@ -4129,12 +4068,11 @@ def update_where(
     the rewritten rows by their new hash.  Returns the committed
     version, or the current version unchanged when nothing matched."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     if not set_exprs:
         raise ValueError("update_where: pass at least one SET expression")
     live, meta, base, _ = _read_actions(table, writer=True)
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    schema = _schema_of(meta)
     pcols = meta.get("partitionColumns") or []
     known = {f.name for f in schema.fields}
     bad_cols = [c for c in set_exprs if c not in known]

@@ -2831,6 +2831,23 @@ def test_reader_gate_refuses_future_minreader(spark, tmp_path):
         delta_lite.read_changes(spark, t, from_version=v0)
     got = delta_lite.read_delta(spark, t, version=v1)  # pre-upgrade snapshot
     assert {r["k"] for r in got.collect()} == {1, 2}
+    # vacuum decides which files are live, so it is gated too: it
+    # refuses before deleting an old unreferenced file
+    orphan = os.path.join(t, "part-orphan.snappy.parquet")
+    with open(orphan, "wb") as fh:
+        fh.write(b"orphan")
+    os.utime(orphan, (0, 0))
+    with pytest.raises(ValueError, match="minReaderVersion=3"):
+        delta_lite.vacuum(t, retention_seconds=0)
+    assert os.path.exists(orphan)
+    # commitInfo is commit metadata, read ungated: history and TIMESTAMP
+    # AS OF below the upgrade resolve like version time travel does
+    assert [h["version"] for h in delta_lite.delta_history(t)] == [v0, v1]
+    with open(os.path.join(t, "_delta_log", f"{v1:020d}.json")) as fh:
+        acts = [json.loads(ln) for ln in fh if ln.strip()]
+    v1_ts = next(a["commitInfo"]["timestamp"] for a in acts if "commitInfo" in a)
+    got = delta_lite.read_delta(spark, t, timestamp_ms=v1_ts)
+    assert {r["k"] for r in got.collect()} == {1, 2}
 
 
 def test_writer_gate_refuses_future_minwriter_but_still_reads(spark, tmp_path):

@@ -250,6 +250,18 @@ def test_restore_rolls_back_a_maintained_table_and_replay_stays_noop(spark, tmp_
     assert _rows(spark, path) == after_1
 
 
+def test_rollup_keeps_its_column_order_across_batches(spark, tmp_path):
+    """A merged rollup keeps the column order of its first batch
+    (``history.merge_rollups`` orders its output like its first part),
+    so the maintained table's schema never moves under its readers."""
+    path = str(tmp_path / "rollup")
+    columns = []
+    for b in range(3):
+        jobs.apply_rollup_batch(_events(spark, b), b, path)
+        columns.append(jobs.read_maintained_table(spark, path).columns)
+    assert columns == [["event_type", "n", "sum_value"]] * 3
+
+
 def test_compaction_of_a_maintained_table_is_data_identical(spark, tmp_path):
     """``delta_lite.compact`` on an upsert-maintained table rewrites it
     in one layout-only commit: same rows, a replay afterwards is a
@@ -378,3 +390,51 @@ def test_streaming_sinks_start_through_one_foreach_batch_runner():
                 ):
                     found.append(f"{src.name}:{node.lineno} .{node.func.attr}")
     assert found == []
+
+
+def test_sources_have_one_log_parser_and_one_schema_decode():
+    """Under ``sources/``, Delta log lines are parsed in one function,
+    ``delta_lite._log_actions`` (``_read_log_file`` is it plus the
+    reader-feature gate, so a second parser is a reader that skips the
+    gate), and a metaData ``schemaString`` is decoded in one,
+    ``delta_lite._schema_of``.  Flagged: a ``json.loads`` inside a
+    ``with open(...)`` block, a loop or comprehension over
+    ``open(...)``, or of an ``open(...)`` read, outside
+    ``_log_actions`` and the CDF source's reader of Spark's streaming
+    offset log (``_checkpoint_committed_version``, not a Delta log);
+    and a ``json.loads`` or ``fromJson`` of a ``schemaString`` outside
+    ``_schema_of``."""
+    parsers = {"_log_actions", "_checkpoint_committed_version"}
+    comps = (ast.ListComp, ast.SetComp, ast.GeneratorExp, ast.DictComp)
+    found = set()
+
+    def call_of(node, name):
+        return isinstance(node, ast.Call) and ast.unparse(node.func).endswith(name)
+
+    def scan(node, src, fn, in_open):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn, in_open = node.name, False
+        in_open = (
+            in_open
+            or isinstance(node, ast.With)
+            and any(call_of(i.context_expr, "open") for i in node.items)
+            or isinstance(node, ast.For) and call_of(node.iter, "open")
+            or isinstance(node, comps)
+            and any(call_of(g.iter, "open") for g in node.generators)
+        )
+        if call_of(node, "json.loads") or call_of(node, ".fromJson"):
+            inner = [n for a in node.args for n in ast.walk(a)]
+            consts = {n.value for n in inner if isinstance(n, ast.Constant)}
+            if "schemaString" in consts:
+                if fn != "_schema_of":
+                    found.add(f"{src.name}:{node.lineno} {fn} decodes schemaString")
+            elif call_of(node, "json.loads") and fn not in parsers and (
+                in_open or any(call_of(n, "open") for n in inner)
+            ):
+                found.add(f"{src.name}:{node.lineno} {fn} parses a file line")
+        for child in ast.iter_child_nodes(node):
+            scan(child, src, fn, in_open)
+
+    for src in sorted(pathlib.Path(dl.__file__).parent.glob("*.py")):
+        scan(ast.parse(src.read_text(), filename=str(src)), src, None, False)
+    assert sorted(found) == []
