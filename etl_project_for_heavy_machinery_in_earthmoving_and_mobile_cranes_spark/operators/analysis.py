@@ -1,4 +1,4 @@
-"""Analysis/report operators (G1–G9, W1–W3, O1–O4, V1).
+"""Analysis/report operators (G1–G9, W1–W3, O1–O4).
 
 Reference: ``key_players_table`` (prog.py:610-645), ``key_capacity_interval``
 (prog.py:664-689), ``top3_players`` (prog.py:693-694), pivots/value_counts
@@ -129,16 +129,6 @@ def keyword_diagnostics(df: DataFrame, text_col: str, keywords: Sequence[str]) -
         for k in keywords
     ]
     return df.agg(*aggs)
-
-
-def format_report(df: DataFrame, pct_cols: Sequence[str] = (), musd_cols: Sequence[str] = ()) -> DataFrame:
-    """V1 presentation formatting — kept out of the numeric core."""
-    out = df
-    for c in pct_cols:
-        out = out.withColumn(c, F.format_string("%.1f%%", F.col(c)))
-    for c in musd_cols:
-        out = out.withColumn(c, F.concat(F.format_number(F.col(c) / 1e6, 1), F.lit(" M")))
-    return out
 
 
 def mode_per_group(

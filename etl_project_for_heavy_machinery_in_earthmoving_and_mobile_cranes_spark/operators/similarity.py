@@ -1,10 +1,28 @@
-"""Approximate/exact nearest-neighbor search over embedding columns.
+"""Nearest-neighbor search, near-duplicate pairs and embedding statistics
+over embedding columns.
 
-Baseline: brute-force cosine top-k — broadcast the (small) query set
-against the corpus, JVM-side ``zip_with``/``aggregate`` arithmetic, one
-window for top-k.  Scale path: sign-random-projection LSH bucketing so
-the candidate join is an equi join on bucket key instead of a full
-cross product.
+Every retrieval operator here has one shape: candidates, then one
+scorer, then one per-group top-k.
+
+- Candidates come from a broadcast cross join (``brute_force_knn``,
+  ``near_dup_pairs``, ``ann_int8``: the exact forms tests compare the
+  approximate ones against), or from an equi hash join on a
+  sign-random-projection bucket (``lsh_knn``) or on a coarse-quantizer
+  cell (``_ivf_candidates`` behind ``ivf_knn`` and
+  ``hard_negative_mining``; ``ivf_pq_knn``, ``ann_int8_pruned``,
+  ``semantic_dedup``, ``near_dup_pairs_bucketed``,
+  ``margin_bitext_pairs``), or from both (``ann_union_knn``).  Pairs
+  are deduped only where one can repeat: two retrievers, or two
+  multi-probed sides.  A corpus row has one home cell and a query
+  probes distinct cells, so an IVF query×corpus pair meets once.
+- Scorers: the cosine over ``_side`` projections that carry each
+  vector's norm (``_cos``), the exact integer dot over int8 codes
+  (``_int8_top_k``), or PQ asymmetric distance (``ivf_pq_knn``).
+- Top-k: ``_top_k``, one ``row_number`` window per group over a full
+  deterministic order, which Spark plans as a ``WindowGroupLimit``.
+
+The slim-first operators carry only id pairs through their candidate
+exchange and fetch the vectors afterwards (``_attach``).
 """
 
 from __future__ import annotations
@@ -60,6 +78,109 @@ def l2_normalize(a: Column) -> Column:
     )
 
 
+def _floor_round(c: Column, decimals: int = 6) -> Column:
+    """Round half up at ``decimals`` as ``floor(x·10ⁿ + 0.5) / 10ⁿ``:
+    engine ``round()`` implementations diverge at .5-ulp boundaries,
+    this form gives the same double in every engine."""
+    s = F.lit(float(10**decimals))
+    return F.floor(c * s + F.lit(0.5)) / s
+
+
+def _side(
+    df: DataFrame, id_col: str, vec_col: str, alias: str, tag: str, *extra
+) -> DataFrame:
+    """One side of a candidate join: ``(alias, __{tag}v, __{tag}n,
+    *extra)`` — the id, the vector and its norm, hoisted here so it is
+    computed once per vector, not once per candidate pair."""
+    return df.select(
+        F.col(id_col).alias(alias),
+        F.col(vec_col).alias(f"__{tag}v"),
+        norm(F.col(vec_col)).alias(f"__{tag}n"),
+        *extra,
+    )
+
+
+def _cos(a: str, b: str) -> Column:
+    """``cosine_hoisted`` between the ``_side`` columns tagged ``a`` and
+    ``b``."""
+    return cosine_hoisted(
+        F.col(f"__{a}v"), F.col(f"__{b}v"), F.col(f"__{a}n"), F.col(f"__{b}n")
+    )
+
+
+def _attach(pairs: DataFrame, id_col: str, vec_col: str, *sides) -> DataFrame:
+    """Slim-first vector fetch: join each ``(frame, id alias, tag)``
+    side's ``_side`` projection onto an id-pair frame by the id alias.
+    No broadcast hint (a hint is honoured whatever the size): the
+    planner and AQE broadcast the vector frames while they fit under
+    the broadcast threshold and shuffle-join them on the id past it, so
+    the id-pair list stays the only candidate-mass exchange."""
+    for df, alias, tag in sides:
+        pairs = pairs.join(_side(df, id_col, vec_col, alias, tag), alias)
+    return pairs
+
+
+def _top_k(
+    scored: DataFrame, key: str, order: list, k: int, rank: str | None = None
+) -> DataFrame:
+    """The first ``k`` rows of every ``key`` group by ``order``, which
+    must be a full deterministic order: one ``row_number`` window
+    filtered ``<= k`` (planned as a ``WindowGroupLimit`` ahead of the
+    window's exchange).  The rank is dropped unless ``rank`` names it."""
+    col = rank or "__rank"
+    out = scored.withColumn(
+        col, F.row_number().over(Window.partitionBy(key).orderBy(*order))
+    ).filter(F.col(col) <= k)
+    return out if rank else out.drop(col)
+
+
+def _cosine_knn(
+    cand: DataFrame, k: int, band: tuple[float, float] | None = None
+) -> DataFrame:
+    """The cosine kNN scorer: ``cand`` pairs a ``query_id`` side (tag
+    ``q``) with a ``neighbor_id`` side (tag ``c``); self-matches drop,
+    ``band`` = (lo, hi) keeps cosines in [lo, hi) ahead of the top-k,
+    and each query keeps its ``k`` best (cosine desc, neighbor id
+    asc).  Returns ``(query_id, neighbor_id, cosine_sim)``."""
+    scored = cand.filter(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id", "neighbor_id", _cos("q", "c").alias("cosine_sim")
+    )
+    if band is not None:
+        lo, hi = band
+        scored = scored.filter(
+            (F.col("cosine_sim") >= F.lit(lo)) & (F.col("cosine_sim") < F.lit(hi))
+        )
+    order = [F.col("cosine_sim").desc(), F.col("neighbor_id").asc()]
+    return _top_k(scored, "query_id", order, k)
+
+
+def _pairs_at_least(cand: DataFrame, threshold: float) -> DataFrame:
+    """Score ``id_a``/``id_b`` candidate pairs (``_side`` tags ``a``
+    and ``b``) and keep those with cosine ≥ ``threshold``."""
+    return cand.select(
+        "id_a", "id_b", _cos("a", "b").alias("cosine_sim")
+    ).filter(F.col("cosine_sim") >= threshold)
+
+
+def _cap_cells(cells: DataFrame, max_cell: int) -> tuple[DataFrame, DataFrame]:
+    """Drop the rows of every ``__cell`` holding more than ``max_cell``
+    rows: a giant cell means the quantizer failed to discriminate there,
+    and a quadratic comparison inside it is cost without signal.
+    Returns (kept rows, lazy ``(cell, width)`` frame of the cells
+    dropped)."""
+    sizes = cells.groupBy("__cell").agg(F.count("*").alias("__csize"))
+    kept = (
+        cells.join(F.broadcast(sizes), on="__cell")
+        .filter(F.col("__csize") <= F.lit(max_cell))
+        .drop("__csize")
+    )
+    drops = sizes.filter(F.col("__csize") > F.lit(max_cell)).select(
+        F.col("__cell").alias("cell"),
+        F.col("__csize").cast("bigint").alias("width"),
+    )
+    return kept, drops
+
+
 def brute_force_knn(
     corpus: DataFrame,
     queries: DataFrame,
@@ -70,35 +191,9 @@ def brute_force_knn(
     """Exact cosine top-k: for each query row, the k nearest corpus rows
     (self-matches excluded).  Queries are broadcast; the corpus is
     scanned once; top-k via row_number over (query partition)."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm(F.col(vec_col)).alias("__qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        norm(F.col(vec_col)).alias("__cn"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_hoisted(
-                F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    q = _side(queries, id_col, vec_col, "query_id", "q")
+    c = _side(corpus, id_col, vec_col, "neighbor_id", "c")
+    return _cosine_knn(c.crossJoin(F.broadcast(q)), k)
 
 
 def near_dup_pairs(
@@ -110,27 +205,9 @@ def near_dup_pairs(
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥
     threshold).  Brute-force baseline; at scale swap the self cross join
     for the SRP-bucketed candidate join in ``lsh_knn`` (same scoring)."""
-    a = corpus.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("__va"),
-        norm(F.col(vec_col)).alias("__na"),
-    )
-    b = corpus.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("__vb"),
-        norm(F.col(vec_col)).alias("__nb"),
-    )
-    return (
-        a.join(b, on=F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            cosine_hoisted(
-                F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")
-            ).alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-    )
+    a = _side(corpus, id_col, vec_col, "id_a", "a")
+    b = _side(corpus, id_col, vec_col, "id_b", "b")
+    return _pairs_at_least(a.join(b, on=F.col("id_a") < F.col("id_b")), threshold)
 
 
 def near_dup_pairs_bucketed(
@@ -173,27 +250,15 @@ def near_dup_pairs_bucketed(
     )
     drops = None
     if max_cell is not None:
-        sizes = cells.groupBy("__cell").agg(F.count("*").alias("__csize"))
-        drops = sizes.filter(F.col("__csize") > F.lit(max_cell)).select(
-            F.col("__cell").alias("cell"),
-            F.col("__csize").cast("bigint").alias("width"),
-        )
-        cells = (
-            cells.join(F.broadcast(sizes), on="__cell")
-            .filter(F.col("__csize") <= F.lit(max_cell))
-            .drop("__csize")
-        )
+        cells, drops = _cap_cells(cells, max_cell)
     # The pair pipeline is SLIM-FIRST (measured at 30× data, SCALE.md
     # round 6): candidate pairs carry only the two ids through the cell
     # join and the multi-probe dedup exchange (16-byte rows), and the
-    # 64-dim vectors are fetched AFTERWARDS by id-keyed joins for the
-    # one exact scoring pass per distinct pair.  Shipping vectors
-    # through the pair shuffle (~40× wider rows at candidate-mass
-    # count) is the difference between a 30× probe that finishes in
-    # ~2 min and one that spills >100 GB and never returns.  The fetch
-    # joins broadcast here (an embedding corpus slice is MBs at gate
-    # scale); at 100 TB they become shuffle hash joins on the id — the
-    # pair list stays the only candidate-mass exchange either way.
+    # 64-dim vectors are fetched AFTERWARDS (``_attach``) for the one
+    # exact scoring pass per distinct pair.  Shipping vectors through
+    # the pair shuffle (~40× wider rows at candidate-mass count) is the
+    # difference between a 30× probe that finishes in ~2 min and one
+    # that spills >100 GB and never returns.
     a = cells.select(F.col(id_col).alias("id_a"), "__cell")
     b = cells.select(F.col(id_col).alias("id_b"), "__cell")
     pairs = (
@@ -202,32 +267,9 @@ def near_dup_pairs_bucketed(
         .select("id_a", "id_b")
         .dropDuplicates()
     )
-    # norms are hoisted into the per-vector fetch frames (computed once
-    # per vector at broadcast build, 8 bytes carried per row) instead of
-    # re-running the interpreted HOF norm per candidate pair — measured
-    # 2.5× on this scoring stage at sf0.1 (926k candidates from 2k
-    # vectors), bit-identical (same ops, same order)
-    ea = corpus.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("__va"),
-        norm(F.col(vec_col)).alias("__na"),
-    )
-    eb = corpus.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("__vb"),
-        norm(F.col(vec_col)).alias("__nb"),
-    )
-    out = (
-        pairs.join(F.broadcast(ea), "id_a")
-        .join(F.broadcast(eb), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            cosine_hoisted(
-                F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")
-            ).alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
+    out = _pairs_at_least(
+        _attach(pairs, id_col, vec_col, (corpus, "id_a", "a"), (corpus, "id_b", "b")),
+        threshold,
     )
     if return_drop_stats:
         if drops is None:
@@ -266,12 +308,9 @@ def ann_union_knn(
     ``near_dup_pairs_bucketed``): candidate rows carry ONLY the two ids
     through the union and the per-(query, neighbor) dedup exchange
     (16-byte rows), and the vectors + hoisted norms are re-attached
-    AFTERWARDS by id-keyed joins for the one exact scoring pass per
+    AFTERWARDS (``_attach``) for the one exact scoring pass per
     distinct candidate.  Previously both 64-dim vectors rode the dedup
-    exchange (~70× wider rows at candidate-mass count).  The fetch joins
-    carry no broadcast hint (a hint is honoured whatever the size): the
-    planner and AQE broadcast the vector frames while they fit under the
-    broadcast threshold and shuffle-join them on the id past it."""
+    exchange (~70× wider rows at candidate-mass count)."""
     if centroids is None:
         centroids = det_centroids(ivf_seed, n_cells, dim)
     planes = [_det_plane(seed, i, dim) for i in range(num_planes)]
@@ -297,39 +336,14 @@ def ann_union_knn(
     ivf_cand = ci.join(F.broadcast(qi), on="__cell").select(
         "query_id", "neighbor_id"
     )
-    # per-vector norms hoisted into the fetch frames (computed once per
-    # vector, not per candidate) — bit-identical scoring, guide §1.2
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        norm(F.col(vec_col)).alias("__cn"),
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm(F.col(vec_col)).alias("__qn"),
-    )
-    scored = (
-        srp_cand.unionByName(ivf_cand)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .join(qv, "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_hoisted(
-                F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
+    # the two retrievers can both find a pair: one scoring pass per pair
+    cand = srp_cand.unionByName(ivf_cand).dropDuplicates(["query_id", "neighbor_id"])
+    return _cosine_knn(
+        _attach(
+            cand, id_col, vec_col,
+            (queries, "query_id", "q"), (corpus, "neighbor_id", "c"),
+        ),
+        k,
     )
 
 
@@ -404,37 +418,10 @@ def lsh_knn(
     At 100 TB the bucket join is an equi hash join; recall is tuned by
     ``num_planes`` (fewer planes → bigger buckets → higher recall)."""
     planes = [_det_plane(seed, i, dim) for i in range(num_planes)]
-    cb = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        norm(F.col(vec_col)).alias("__cn"),
-        srp_bucket(F.col(vec_col), planes).alias("__bucket"),
-    )
-    qb = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm(F.col(vec_col)).alias("__qn"),
-        srp_bucket(F.col(vec_col), planes).alias("__bucket"),
-    )
-    scored = (
-        cb.join(F.broadcast(qb), on="__bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_hoisted(
-                F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    bucket = srp_bucket(F.col(vec_col), planes).alias("__bucket")
+    cb = _side(corpus, id_col, vec_col, "neighbor_id", "c", bucket)
+    qb = _side(queries, id_col, vec_col, "query_id", "q", bucket)
+    return _cosine_knn(cb.join(F.broadcast(qb), on="__bucket"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -498,6 +485,29 @@ def assign_cells(
     )
 
 
+def _ivf_candidates(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    centroids: list[list[float]],
+    nprobe: int,
+) -> DataFrame:
+    """IVF candidates for ``_cosine_knn``: every corpus row in its one
+    nearest cell, every query in its ``nprobe`` nearest, equi hash join
+    on the cell id with the queries broadcast — |corpus|·nprobe/n_cells
+    comparisons per query instead of |corpus|.  The probed cells of a
+    query are distinct, so a (query, neighbor) pair meets once."""
+    cb = assign_cells(
+        _side(corpus, id_col, vec_col, "neighbor_id", "c"), "__cv", centroids
+    )
+    qb = assign_cells(
+        _side(queries, id_col, vec_col, "query_id", "q"), "__qv", centroids,
+        nprobe=nprobe,
+    )
+    return cb.join(F.broadcast(qb), on="__cell")
+
+
 def ivf_knn(
     corpus: DataFrame,
     queries: DataFrame,
@@ -516,44 +526,8 @@ def ivf_knn(
     nprobe=n_cells degenerates to exact search."""
     if centroids is None:
         centroids = train_ivf_centroids(corpus, vec_col, n_cells=n_cells, seed=seed)
-    cb = assign_cells(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv"),
-            norm(F.col(vec_col)).alias("__cn"),
-        ),
-        "__cv",
-        centroids,
-        nprobe=1,
-    )
-    qb = assign_cells(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            norm(F.col(vec_col)).alias("__qn"),
-        ),
-        "__qv",
-        centroids,
-        nprobe=nprobe,
-    )
-    scored = (
-        cb.join(F.broadcast(qb), on="__cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_hoisted(
-                F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
+    return _cosine_knn(
+        _ivf_candidates(corpus, queries, id_col, vec_col, centroids, nprobe), k
     )
 
 
@@ -624,82 +598,6 @@ def pq_encode(
     return df.withColumn("pq_code", code)
 
 
-def pq_knn(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    m: int = 8,
-    n_codes: int = 16,
-    seed: int = 7,
-    codebooks: list[list[list[float]]] | None = None,
-) -> DataFrame:
-    """Asymmetric-distance KNN over PQ codes: the corpus is represented
-    ONLY by its codes; each query computes an m×n_codes lookup table of
-    exact subspace distances to every centroid, and a candidate's
-    distance is the sum of m table lookups.
-
-    Scale shape: queries (with their small LUTs) broadcast against the
-    code table — the scan side carries m ints per vector instead of d
-    floats, an ~8-16× memory/IO compression, and the per-candidate cost
-    is m array lookups instead of d multiplies.  Compose with IVF cells
-    (join on ``__cell`` first) for sublinear candidate counts; this
-    function scans all codes, which is the right baseline shape when
-    the whole code table fits in memory per executor."""
-    if codebooks is None:
-        codebooks = train_pq_codebooks(
-            corpus, vec_col, m=m, k=n_codes, seed=seed
-        )
-    sub = len(codebooks[0][0])
-    coded = pq_encode(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            l2_normalize(F.col(vec_col)).alias(vec_col),
-        ),
-        vec_col,
-        codebooks,
-    ).select("neighbor_id", "pq_code")
-    # per-query LUT: lut[s][j] = ||q_s - codebook_s[j]||^2 (exact, tiny)
-    lut = F.array(
-        *[
-            F.array(
-                *[
-                    _sq_dist(F.slice(F.col(vec_col), s * sub + 1, sub), c)
-                    for c in book
-                ]
-            )
-            for s, book in enumerate(codebooks)
-        ]
-    )
-    qt = queries.select(
-        F.col(id_col).alias("query_id"),
-        l2_normalize(F.col(vec_col)).alias(vec_col),
-    ).withColumn("__lut", lut)
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("__lut"),
-            F.col("pq_code"),
-            lambda row, code: F.element_at(row, code + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    scored = (
-        coded.join(F.broadcast(qt), on=F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("adc_dist", adc)
-        .select("query_id", "neighbor_id", "adc_dist")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
 def ivf_pq_knn(
     corpus: DataFrame,
     queries: DataFrame,
@@ -717,11 +615,16 @@ def ivf_pq_knn(
     """IVF×PQ — the billion-scale ANN layout: candidates restricted to
     the query's ``nprobe`` nearest cells (equi join on cell id, sublinear
     candidate count) AND scored from m-byte PQ codes instead of full
-    vectors (asymmetric distance, LUT lookups).  The corpus side of the
-    join carries only (id, cell, code) — at 100 TB the full vectors
-    never shuffle, never broadcast, and are only read once at encode
-    time.  Recall tunes with nprobe × codebook resolution; both
-    quantizers train on samples and compile to literal expressions."""
+    vectors (asymmetric distance: each query computes an m×n_codes
+    lookup table of exact subspace distances to every centroid, and a
+    candidate's distance is the sum of m table lookups).  The corpus
+    side of the join carries only (id, cell, code) — at 100 TB the full
+    vectors never shuffle, never broadcast, and are only read once at
+    encode time.  Recall tunes with nprobe × codebook resolution; both
+    quantizers train on samples and compile to literal expressions.
+    Probing every cell (one all-zero centroid, ``nprobe=1``) scans all
+    codes: the plain PQ search.  A corpus row has one home cell and a
+    query's probed cells are distinct, so a pair meets once."""
     unit_corpus = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         l2_normalize(F.col(vec_col)).alias("__cv"),
@@ -747,6 +650,7 @@ def ivf_pq_knn(
         centroids,
         nprobe=1,
     ).select("neighbor_id", "pq_code", "__cell")
+    # per-query LUT: lut[s][j] = ||q_s - codebook_s[j]||^2 (exact, tiny)
     lut = F.array(
         *[
             F.array(
@@ -773,19 +677,10 @@ def ivf_pq_knn(
     scored = (
         cb.join(F.broadcast(qb), on="__cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("adc_dist", adc)
-        .select("query_id", "neighbor_id", "adc_dist")
-        # a (query, neighbor) pair can meet in several probed cells
-        .dropDuplicates(["query_id", "neighbor_id"])
+        .select("query_id", "neighbor_id", adc.alias("adc_dist"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    order = [F.col("adc_dist").asc(), F.col("neighbor_id").asc()]
+    return _top_k(scored, "query_id", order, k)
 
 
 def assign_to_nearest(
@@ -808,8 +703,6 @@ def assign_to_nearest(
     The row norm is projected once (``__vnorm``) so it is not
     re-evaluated per centroid.
     """
-    import math
-
     v = F.col(vec_col)
     with_norm = df.withColumn("__vnorm", norm(v))
     structs = []
@@ -877,38 +770,13 @@ def semantic_dedup(
     cells = assign_cells(
         df.select(F.col(id_col), F.col(vec_col)), vec_col, centroids, nprobe=1
     )
-    pairable = cells
-    if max_cell is not None:
-        sizes = cells.groupBy("__cell").agg(F.count("*").alias("__csize"))
-        pairable = (
-            cells.join(F.broadcast(sizes), on="__cell")
-            .filter(F.col("__csize") <= F.lit(max_cell))
-            .drop("__csize")
-        )
-    # per-vector norm hoisted ahead of the cell self-join: computed once
-    # per cell-mate row, not once per candidate pair (bit-identical —
-    # same dot/(na*nb) ops in the same order; guide §1.2)
-    left = pairable.select(
-        F.col(id_col).alias("__lid"),
-        F.col(vec_col).alias("__lv"),
-        norm(F.col(vec_col)).alias("__ln"),
-        "__cell",
-    )
-    right = pairable.select(
-        F.col(id_col).alias("__rid"),
-        F.col(vec_col).alias("__rv"),
-        norm(F.col(vec_col)).alias("__rn"),
-        "__cell",
-    )
+    pairable = cells if max_cell is None else _cap_cells(cells, max_cell)[0]
+    left = _side(pairable, id_col, vec_col, "__lid", "l", "__cell")
+    right = _side(pairable, id_col, vec_col, "__rid", "r", "__cell")
     dropped = (
         left.join(right, on="__cell")
         .filter(F.col("__lid") < F.col("__rid"))
-        .filter(
-            cosine_hoisted(
-                F.col("__lv"), F.col("__rv"), F.col("__ln"), F.col("__rn")
-            )
-            >= F.lit(tau)
-        )
+        .filter(_cos("l", "r") >= F.lit(tau))
         .select(F.col("__rid").alias(id_col))
         .distinct()
         .withColumn("__dup", F.lit(True))
@@ -943,56 +811,19 @@ def hard_negative_mining(
     below the positive/near-duplicate band (which starts at ``hi``;
     pair with ``semantic_dedup``/``near_dup_pairs`` for that band).
 
-    Scale design: identical join shape to ``ivf_knn`` — candidates are
-    cell-scoped (equi join on nearest-centroid cell id, anchors probe
-    ``nprobe`` cells), the band predicate filters BEFORE the per-anchor
-    top-k window, and the window input is already down to
-    |corpus|·nprobe/n_cells candidates per anchor.  Never an all-pairs
-    scan; centroids are plan literals (no model broadcast).
+    Scale design: the ``ivf_knn`` candidates — cell-scoped (equi join
+    on nearest-centroid cell id, anchors probe ``nprobe`` cells) — with
+    the band predicate filtering BEFORE the per-anchor top-k window, so
+    the window input is already down to |corpus|·nprobe/n_cells
+    candidates per anchor.  Never an all-pairs scan; centroids are plan
+    literals (no model broadcast).
     """
     if centroids is None:
         centroids = train_ivf_centroids(corpus, vec_col, n_cells=n_cells, seed=seed)
-    cb = assign_cells(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv"),
-            norm(F.col(vec_col)).alias("__cn"),
-        ),
-        "__cv",
-        centroids,
-        nprobe=1,
-    )
-    qb = assign_cells(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            norm(F.col(vec_col)).alias("__qn"),
-        ),
-        "__qv",
-        centroids,
-        nprobe=nprobe,
-    )
-    scored = (
-        cb.join(F.broadcast(qb), on="__cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_hoisted(
-                F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")
-            ).alias("cosine_sim"),
-        )
-        # an (anchor, candidate) pair can meet in several probed cells
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .filter((F.col("cosine_sim") >= F.lit(lo)) & (F.col("cosine_sim") < F.lit(hi)))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
+    return _cosine_knn(
+        _ivf_candidates(corpus, queries, id_col, vec_col, centroids, nprobe),
+        k,
+        band=(lo, hi),
     )
 
 
@@ -1166,8 +997,7 @@ def random_projection(
         plane = F.array(*[F.lit(x * scale) for x in p])
         c = dot(F.col(vec_col), plane)
         if round_to is not None:
-            s = F.lit(float(10 ** round_to))
-            c = F.floor(c * s + F.lit(0.5)) / s
+            c = _floor_round(c, round_to)
         cols.append(c.alias(f"rp_{i}"))
     return df.select(*cols)
 
@@ -1240,8 +1070,7 @@ def centroid_outliers(
     )
     norm = F.sqrt(F.col("__vv").cast("double")) * F.sqrt(F.col("__mm").cast("double"))
     cos = F.when(norm > 0, F.col("__dot").cast("double") / norm)
-    # portable floor-round (engine round() diverges at .5-ulp boundaries)
-    shown = F.floor(cos * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    shown = _floor_round(cos)
     # flag from the ROUNDED value: comparing the unrounded cosine could
     # contradict the reported column at the threshold boundary and
     # diverge across engines (the rounded-comparison determinism
@@ -1293,6 +1122,42 @@ def int8_quantize(
     return out.select(id_col, *others, "__scale", "__q", qnorm.alias("__qnorm"))
 
 
+def _int8_side(
+    df: DataFrame, id_col: str, vec_col: str, alias: str, tag: str, *extra
+) -> DataFrame:
+    """One side of an int8 candidate join: ``(alias, *extra, __q{tag},
+    __n{tag})`` — the id, the int8 codes and their integer self-dot."""
+    return int8_quantize(df, id_col, vec_col).select(
+        F.col(id_col).alias(alias),
+        *extra,
+        F.col("__q").alias(f"__q{tag}"),
+        F.col("__qnorm").alias(f"__n{tag}"),
+    )
+
+
+def _int8_top_k(cand: DataFrame, id_col: str, k: int) -> DataFrame:
+    """The int8 scorer: ``cand`` pairs a ``query_id`` side (tag ``a``)
+    with an ``id_col`` side (tag ``b``).  The dot product and both
+    norms are exact integer folds over the codes, the cosine is rounded
+    at 6 dp, zero vectors (NULL cosine) drop, and each query keeps its
+    ``k`` best (rounded cosine desc, id asc).  Returns ``(query_id,
+    id_col, qcos, rk)``."""
+    idot = F.aggregate(
+        F.zip_with("__qa", "__qb", lambda a, b: a * b),
+        F.lit(0).cast("bigint"),
+        lambda acc, v: acc + v,
+    )
+    cos = F.when(
+        (F.col("__na") > 0) & (F.col("__nb") > 0),
+        idot.cast("double")
+        / (F.sqrt(F.col("__na").cast("double")) * F.sqrt(F.col("__nb").cast("double"))),
+    )
+    scored = cand.select("query_id", id_col, _floor_round(cos).alias("qcos")).filter(
+        F.col("qcos").isNotNull()
+    )
+    return _top_k(scored, "query_id", [F.desc("qcos"), F.asc(id_col)], k, rank="rk")
+
+
 def ann_int8(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1316,40 +1181,9 @@ def ann_int8(
 
     Returns ``(query_id, {id_col}, qcos, rk)`` with rk in [1, k].
     """
-    qq = int8_quantize(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("__q").alias("__qa"),
-        F.col("__qnorm").alias("__na"),
-    )
-    qc = int8_quantize(corpus, id_col, vec_col).select(
-        F.col(id_col),
-        F.col("__q").alias("__qb"),
-        F.col("__qnorm").alias("__nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with("__qa", "__qb", lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    cos = F.when(
-        (F.col("__na") > 0) & (F.col("__nb") > 0),
-        dot.cast("double")
-        / (F.sqrt(F.col("__na").cast("double")) * F.sqrt(F.col("__nb").cast("double"))),
-    )
-    scored = (
-        qc.crossJoin(F.broadcast(qq))
-        .select(
-            "query_id",
-            id_col,
-            (F.floor(cos * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("qcos"),
-        )
-        .filter(F.col("qcos").isNotNull())
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qcos"), F.asc(id_col))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-    )
+    qq = _int8_side(queries, id_col, vec_col, "query_id", "a")
+    qc = _int8_side(corpus, id_col, vec_col, id_col, "b")
+    return _int8_top_k(qc.crossJoin(F.broadcast(qq)), id_col, k)
 
 
 def ann_int8_pruned(
@@ -1385,40 +1219,12 @@ def ann_int8_pruned(
     qc = assign_cells(
         queries.select(F.col(id_col), F.col(vec_col)), vec_col, centroids, nprobe=nprobe
     )
-    cq = int8_quantize(cc, id_col, vec_col).select(
-        id_col, "__cell", F.col("__q").alias("__qb"), F.col("__qnorm").alias("__nb")
+    cq = _int8_side(cc, id_col, vec_col, id_col, "b", "__cell")
+    qq = _int8_side(qc, id_col, vec_col, "query_id", "a", "__cell")
+    cand = cq.join(F.broadcast(qq), on="__cell").filter(
+        F.col(id_col) != F.col("query_id")
     )
-    qq = int8_quantize(qc, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        "__cell",
-        F.col("__q").alias("__qa"),
-        F.col("__qnorm").alias("__na"),
-    )
-    dot = F.aggregate(
-        F.zip_with("__qa", "__qb", lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    cos = F.when(
-        (F.col("__na") > 0) & (F.col("__nb") > 0),
-        dot.cast("double")
-        / (F.sqrt(F.col("__na").cast("double")) * F.sqrt(F.col("__nb").cast("double"))),
-    )
-    scored = (
-        cq.join(F.broadcast(qq), on="__cell")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            id_col,
-            (F.floor(cos * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("qcos"),
-        )
-        .filter(F.col("qcos").isNotNull())
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qcos"), F.asc(id_col))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-    )
+    return _int8_top_k(cand, id_col, k)
 
 
 def mmr_rerank(
@@ -1451,8 +1257,6 @@ def mmr_rerank(
     the selection and its tie-breaks (desc score, asc id) — is
     bit-identical to the old per-step distributed argmax and to the
     oracle's unrolled greedy."""
-    import math
-
     spark = candidates.sparkSession
     qlit = F.array(*[F.lit(float(x)) for x in query_vec])
     rows = (
@@ -1542,28 +1346,18 @@ def kmeans_lloyd(
     round's centroids are bit-identical everywhere.  Empty clusters
     keep their previous centroid.
     """
-    import math
-
     scale = float(10**decimals)
     cents = [(int(cid), [float(x) for x in c]) for cid, c in init_centroids]
     dim = len(cents[0][1])
 
     def assign(cur):
-        v = F.col(vec_col)
-        structs = []
-        for cid, c in cur:
-            carr = F.array(*[F.lit(float(x)) for x in c])
-            d2 = F.aggregate(
-                F.zip_with(
-                    v,
-                    carr,
-                    lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
+        structs = [
+            F.struct(
+                _floor_round(_sq_dist(F.col(vec_col), c), decimals).alias("d"),
+                F.lit(int(cid)).alias("cid"),
             )
-            rd = F.floor(d2 * F.lit(scale) + F.lit(0.5)) / F.lit(scale)
-            structs.append(F.struct(rd.alias("d"), F.lit(int(cid)).alias("cid")))
+            for cid, c in cur
+        ]
         return df.withColumn("__best", F.element_at(F.array_sort(F.array(*structs)), 1))
 
     for _ in range(iters):
@@ -1651,8 +1445,6 @@ def margin_bitext_pairs(
     over many corpora calls ``spark.catalog.clearCache()`` between
     rounds.
     """
-    scale = float(10**decimals)
-    rnd = lambda c: F.floor(c * F.lit(scale) + F.lit(0.5)) / F.lit(scale)  # noqa: E731
     xs = x.select(
         F.col(id_col).alias("x_id"), l2_normalize(F.col(vec_col)).alias("__xv")
     )
@@ -1693,14 +1485,8 @@ def margin_bitext_pairs(
             .select("x_id", "y_id", dot(F.col("__xv"), F.col("__yv")).alias("__c"))
             .persist()  # feeds both directional windows + the pair frame
         )
-    wx = Window.partitionBy("x_id").orderBy(F.col("__c").desc(), F.col("y_id"))
-    wy = Window.partitionBy("y_id").orderBy(F.col("__c").desc(), F.col("x_id"))
-    fwd = scored.withColumn("__rk", F.row_number().over(wx)).filter(
-        F.col("__rk") <= k
-    )
-    bwd = scored.withColumn("__rk", F.row_number().over(wy)).filter(
-        F.col("__rk") <= k
-    )
+    fwd = _top_k(scored, "x_id", [F.col("__c").desc(), F.col("y_id")], k)
+    bwd = _top_k(scored, "y_id", [F.col("__c").desc(), F.col("x_id")], k)
     dmean = (
         lambda df, key: df.groupBy(key).agg(
             (
@@ -1715,9 +1501,12 @@ def margin_bitext_pairs(
     return (
         fwd.join(ax, "x_id")
         .join(ay, "y_id")
-        .withColumn("margin", rnd(margin))
+        .withColumn("margin", _floor_round(margin, decimals))
         .filter(F.col("margin") >= threshold)
-        .select("x_id", "y_id", rnd(F.col("__c")).alias("cosine"), "margin")
+        .select(
+            "x_id", "y_id", _floor_round(F.col("__c"), decimals).alias("cosine"),
+            "margin",
+        )
     )
 
 
@@ -1759,8 +1548,6 @@ def pca_power_iteration(
     every iteration); callers looping over corpora should
     ``spark.catalog.clearCache()`` between rounds.
     """
-    rnd6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
-
     ex = df.select(F.posexplode(F.col(vec_col)).alias("dim", "__v"))
     vdec = F.col("__v").cast(dec)
     stats = ex.groupBy("dim").agg(
@@ -1842,9 +1629,9 @@ def pca_power_iteration(
     ev = F.col("eigenvalue") / F.col("__n")
     return out.select(
         "dim",
-        rnd6(F.col("m")).alias("mean"),
-        rnd6(F.col("loading")).alias("loading"),
-        rnd6(ev).alias("eigenvalue"),
-        rnd6(F.col("total_var")).alias("total_var"),
-        rnd6(ev / F.col("total_var")).alias("explained"),
+        _floor_round(F.col("m")).alias("mean"),
+        _floor_round(F.col("loading")).alias("loading"),
+        _floor_round(ev).alias("eigenvalue"),
+        _floor_round(F.col("total_var")).alias("total_var"),
+        _floor_round(ev / F.col("total_var")).alias("explained"),
     )

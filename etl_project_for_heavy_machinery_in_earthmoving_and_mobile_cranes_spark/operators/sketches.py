@@ -30,16 +30,6 @@ def approx_quantiles(col: str, probs: list[float], accuracy: int = 10000) -> Col
     )
 
 
-def distinct_by_group(
-    df: DataFrame, group_cols: list[str], value_col: str, rsd: float = 0.015
-) -> DataFrame:
-    """Per-group approximate distinct — one shuffle on the group key,
-    constant-size state per group regardless of value cardinality."""
-    return df.groupBy(*group_cols).agg(
-        hll_distinct(value_col, rsd).alias(f"approx_distinct_{value_col}")
-    )
-
-
 def quantile_summary(
     df: DataFrame,
     group_cols: list[str],

@@ -42,10 +42,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
     for t in TESTDATA_TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -338,6 +338,20 @@ def _merge(
     )
 
 
+def _merge_rollup(cur, batch: DataFrame, keys: list[str], **aggs) -> DataFrame:
+    """``history.merge_rollups`` of the stored table and the batch; the
+    first batch merges into an empty table of its columns.  A stored
+    table reads back with every column nullable and a re-summed count
+    is nullable, so a first batch stored as it came (``count("*")`` and
+    literal keys are not nullable) would change the table schema — a
+    ``metaData`` action — on its first merge."""
+    if cur is None:
+        cur = batch.sparkSession.createDataFrame(
+            [], T.StructType([T.StructField(f.name, f.dataType) for f in batch.schema])
+        )
+    return merge_rollups([cur, batch], keys, **aggs)
+
+
 def read_maintained_table(spark, path: str):
     """Snapshot of a maintained table, read through its Delta log; None
     when nothing is committed yet.  Raises ValueError on a path holding
@@ -766,10 +780,8 @@ def apply_rollup_batch(
     )
 
     def merge_fn(cur, batch):
-        if cur is None:
-            return batch
-        return merge_rollups(
-            [cur, batch], [key_col], sum_cols=("sum_value",), count_col="n"
+        return _merge_rollup(
+            cur, batch, [key_col], sum_cols=("sum_value",), count_col="n"
         )
 
     _merge(batch_df.sparkSession, rollup_path, inc, [key_col], merge_fn, batch_id)
@@ -801,9 +813,7 @@ def _apply_drift_counts_batch(
     )
 
     def merge_fn(cur, batch):
-        if cur is None:
-            return batch
-        return merge_rollups([cur, batch], ["__g", "__bin"], sum_cols=("__c",))
+        return _merge_rollup(cur, batch, ["__g", "__bin"], sum_cols=("__c",))
 
     inc = bin_counts(batch_df, group_col, value_col, lo, hi, n_bins)
     _merge(
@@ -1239,9 +1249,7 @@ def apply_cms_batch(
     inc = cms_register_table(batch_df, key_col, depth, width)
 
     def merge_fn(cur, batch):
-        if cur is None:
-            return batch
-        return merge_rollups([cur, batch], ["d", "bucket"], sum_cols=("n",))
+        return _merge_rollup(cur, batch, ["d", "bucket"], sum_cols=("n",))
 
     _merge(batch_df.sparkSession, path, inc, ["d", "bucket"], merge_fn, batch_id)
 

@@ -113,7 +113,10 @@ def test_pq_codes_and_adc_recall(spark, sf_dir):
         (r["query_id"], r["neighbor_id"])
         for r in sim.brute_force_knn(emb, q, k=10).collect()
     }
-    got = sim.pq_knn(emb, q, k=10, codebooks=books)
+    # one all-zero centroid: every vector in one cell, all codes scanned
+    got = sim.ivf_pq_knn(
+        emb, q, k=10, codebooks=books, centroids=[[0.0] * 64], nprobe=1
+    )
     pairs = {(r["query_id"], r["neighbor_id"]) for r in got.collect()}
     recall = len(exact & pairs) / len(exact)
     # random top-10 of ~500 would land ~0.02; even a coarse 4x8 codebook

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import ast
 import datetime as dt
+import json
 import os
 import pathlib
 import re
@@ -262,6 +263,25 @@ def test_rollup_keeps_its_column_order_across_batches(spark, tmp_path):
     assert columns == [["event_type", "n", "sum_value"]] * 3
 
 
+def test_summed_snapshots_commit_their_schema_once(spark, tmp_path):
+    """The maintainers that re-sum their table (rollup, drift counts,
+    count-min) store the first batch with the schema every later merge
+    produces, so only the first commit carries a ``metaData`` action."""
+    with_meta = {}
+    for name in ("rollup", "drift_counts", "cms"):
+        path = tmp_path / name
+        for b in range(3):
+            _MAINTAINERS[name](spark, b, str(path))
+        with_meta[name] = [
+            log.name
+            for log in sorted((path / "_delta_log").glob("*.json"))
+            if any("metaData" in json.loads(ln) for ln in log.read_text().splitlines())
+        ]
+    assert with_meta == {
+        name: ["00000000000000000000.json"] for name in ("rollup", "drift_counts", "cms")
+    }
+
+
 def test_compaction_of_a_maintained_table_is_data_identical(spark, tmp_path):
     """``delta_lite.compact`` on an upsert-maintained table rewrites it
     in one layout-only commit: same rows, a replay afterwards is a
@@ -438,3 +458,28 @@ def test_sources_have_one_log_parser_and_one_schema_decode():
     for src in sorted(pathlib.Path(dl.__file__).parent.glob("*.py")):
         scan(ast.parse(src.read_text(), filename=str(src)), src, None, False)
     assert sorted(found) == []
+
+
+def test_similarity_has_one_top_k_window_and_one_pair_dedup():
+    """``operators/similarity.py`` ranks through one ``row_number()``
+    call (``_top_k``), and dedups (query_id, neighbor_id) pairs only in
+    ``ann_union_knn``, whose two retrievers can both find a pair."""
+    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import (
+        similarity,
+    )
+
+    src = pathlib.Path(similarity.__file__)
+    windows, dedups = [], []
+    for top in ast.parse(src.read_text(), filename=str(src)).body:
+        for node in ast.walk(top):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            if node.func.attr == "row_number":
+                windows.append(top.name)
+            elif node.func.attr == "dropDuplicates" and any(
+                isinstance(a, ast.List)
+                and ast.literal_eval(a) == ["query_id", "neighbor_id"]
+                for a in node.args
+            ):
+                dedups.append(top.name)
+    assert (windows, dedups) == (["_top_k"], ["ann_union_knn"])

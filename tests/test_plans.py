@@ -375,6 +375,20 @@ def test_hard_negatives_cell_equi_join_no_cartesian(spark, sf_dir):
     assert "WindowGroupLimit" in p
 
 
+def test_ivf_candidates_have_no_pair_dedup(spark, sf_dir):
+    """A corpus row has one home cell and a query probes distinct cells,
+    so the IVF candidates of ``ann_ivf_pq`` and ``hard_negatives`` meet
+    each (query, neighbor) pair once: no aggregate keyed on the pair."""
+    import re
+
+    for name in ("ann_ivf_pq", "hard_negatives"):
+        df = entry.queries()[name](spark, sf_dir)
+        df.collect()
+        p = df._jdf.queryExecution().executedPlan().toString()
+        keyed = r"HashAggregate\(keys=\[query_id#\d+L?, neighbor_id#\d+L?"
+        assert not re.search(keyed, p), name
+
+
 def test_dup_span_detect_plan_shape(spark, sf_dir):
     p = plan_of(spark, "dup_span_detect", sf_dir)
     # duplicated-gram membership must be a semi join on the hash pair
