@@ -5793,11 +5793,11 @@ WITH toks AS (
   FROM documents
 )
 SELECT doc_id,
-       array_to_string(
+       coalesce(array_to_string(
          list_transform(generate_series(1, len(t)),
                         i -> CASE WHEN {b} < {cut}
                                   THEN '<extra_id>' ELSE t[i] END),
-         ' ') AS corrupted,
+         ' '), '') AS corrupted,
        coalesce(array_to_string(
          list_filter(list_transform(generate_series(1, len(t)),
                                     i -> CASE WHEN {b} < {cut}
@@ -9086,7 +9086,8 @@ WITH t AS (
 SELECT doc_id,
        CAST(st / {step} AS INT) AS chunk_idx,
        CAST(least({CHUNK_LEN}, len(toks) - st) AS INT) AS n_tokens,
-       array_to_string(list_slice(toks, st + 1, st + {CHUNK_LEN}), ' ') AS chunk_text
+       coalesce(array_to_string(list_slice(toks, st + 1, st + {CHUNK_LEN}), ' '), '')
+         AS chunk_text
 FROM s WHERE st = 0 OR st < len(toks)
 """
 

@@ -41,6 +41,17 @@ def tokens(col: Column) -> Column:
     return F.filter(F.split(normalize_for_dedup(col), " "), lambda t: t != "")
 
 
+def bigrams(arr: Column) -> Column:
+    """The adjacent pairs ``'v w'`` of ``arr`` (array<string>), in order
+    and not deduplicated; [] when it has fewer than 2 elements.  The
+    lambda reads ``arr`` once per element, so pass a projected column,
+    not a tokenizer expression."""
+    return F.transform(
+        F.filter(arr, lambda _, i: i > 0),
+        lambda w, i: F.concat(F.element_at(arr, i + 1), F.lit(" "), w),
+    )
+
+
 def shingle_array(text: Column, n: int = 3) -> Column:
     """Distinct word ``n``-gram shingles of ``normalize_for_dedup(text)``
     (array<string>, first-occurrence order) from one regex pass: a

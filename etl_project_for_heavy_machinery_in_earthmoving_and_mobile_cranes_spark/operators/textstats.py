@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import normalize_for_dedup, tokens
+from .dedup import bigrams, md5_hash64, normalize_for_dedup, shingle_array, tokens
 
 # whitespace tokens; BPE-ish fallback splits punctuation off words
 _TOKEN_RE = r"\s+"
@@ -145,9 +145,6 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         df.select(F.col(id_col), F.explode(toks).alias("tok"))
         .groupBy(id_col, "tok")
         .agg(F.count("*").alias("k"))
-        # dt forks (frequency table + join-back): persist so the
-        # explode+aggregate runs once, not once per branch
-        .persist()
     )
     freq = dt.groupBy("tok").agg(F.sum("k").alias("c"))
     total = freq.agg(F.sum("c").alias("t"))
@@ -177,48 +174,37 @@ def bigram_logprob(
     machine-spam filter than the unigram score: scrambled word salads
     keep their unigram mass but lose all bigram mass.  Documents with
     fewer than 2 tokens return n_bigrams = 0 and NULL score.
+    ``id_col`` is a key: one output row per input row.
 
-    Shape: per-doc bigram counts (explode of an index-transform
-    projection — no window, no doc-keyed exchange) → global bigram /
-    context / unigram frequency tables → three equi joins keyed on the
-    bigram/word → weighted mean.  The frequency tables are
-    vocabulary²-bounded; AQE broadcasts them when small and
-    shuffle-joins on the token key at scale, same as word count.  The
-    interpolation guarantees a nonzero probability for every observed
-    bigram (cvw >= 1), so no log(0) guard is needed."""
-    toks = tokens(F.col(text_col))
-    t = df.select(F.col(id_col), toks.alias("__t"))
-    pairs = F.when(
-        F.size("__t") >= 2,
-        F.transform(
-            F.sequence(F.lit(2), F.size("__t")),
-            lambda i: F.struct(
-                F.element_at(F.col("__t"), i - 1).alias("v"),
-                F.element_at(F.col("__t"), i).alias("w"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<v:string,w:string>>"))
+    Shape: per-doc bigram counts (``explode_outer`` of ``dedup.bigrams``,
+    so a doc without a bigram keeps one NULL row and a count of 0 — no
+    join back onto the input) → global bigram / context / unigram
+    frequency tables → three left equi joins keyed on the bigram/word →
+    weighted mean.  The frequency tables are vocabulary²-bounded; AQE
+    broadcasts them when small and shuffle-joins on the token key at
+    scale, same as word count.  The interpolation guarantees a nonzero
+    probability for every observed bigram (cvw >= 1), so no log(0)
+    guard is needed."""
+    t = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__t"))
     dbc = (
-        t.select(F.col(id_col), F.explode(pairs).alias("bg"))
-        .select(F.col(id_col), F.col("bg.v").alias("v"), F.col("bg.w").alias("w"))
-        .groupBy(id_col, "v", "w")
-        .agg(F.count("*").alias("k"))
-        # dbc forks (global bigram table + join-back): persist so the
-        # explode+aggregate runs once, not once per branch
-        .persist()
+        t.select(F.col(id_col), F.explode_outer(bigrams(F.col("__t"))).alias("bg"))
+        .groupBy(id_col, "bg")
+        .agg(F.count("bg").alias("k"))
     )
-    bgc = dbc.groupBy("v", "w").agg(F.sum("k").alias("cvw"))
+    # no token contains a space, so the pair splits exactly
+    bgc = dbc.groupBy("bg").agg(F.sum("k").alias("cvw")).select(
+        "bg",
+        "cvw",
+        F.substring_index("bg", " ", 1).alias("v"),
+        F.substring_index("bg", " ", -1).alias("w"),
+    )
     vc = bgc.groupBy("v").agg(F.sum("cvw").alias("cv"))
-    uni = (
-        t.select(F.col(id_col), F.explode("__t").alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("c"))
-    )
+    uni = t.select(F.explode("__t").alias("w")).groupBy("w").agg(F.count("*").alias("c"))
     total = uni.agg(F.sum("c").alias("t"))
-    scored = (
-        dbc.join(bgc, ["v", "w"])
-        .join(vc, "v")
-        .join(uni, "w")
+    return (
+        dbc.join(bgc, "bg", "left")
+        .join(vc, "v", "left")
+        .join(uni, "w", "left")
         .crossJoin(F.broadcast(total))
         .groupBy(id_col)
         .agg(
@@ -236,15 +222,6 @@ def bigram_logprob(
             ).alias("avg_logprob"),
         )
     )
-    return (
-        df.select(F.col(id_col))
-        .join(scored, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_bigrams", F.lit(0)).cast("bigint").alias("n_bigrams"),
-            "avg_logprob",
-        )
-    )
 
 
 def repetition_stats(
@@ -257,14 +234,7 @@ def repetition_stats(
     toks = tokens(F.col(text_col))
     t = df.select(F.col(id_col), toks.alias("__t"))
     # NON-distinct bigrams (repetition is the signal, unlike shingling)
-    last = F.size(F.col("__t")) - 1
-    idx = F.when(last >= 1, F.sequence(F.lit(1), last)).otherwise(
-        F.array().cast("array<int>")
-    )
-    bigrams = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(F.col("__t"), i, 2))
-    )
-    t = t.withColumn("__b", bigrams)
+    t = t.withColumn("__b", bigrams(F.col("__t")))
 
     def dup_frac(arr: Column) -> Column:
         n = F.size(arr)
@@ -304,15 +274,11 @@ def tfidf_top_terms(
         df.select(F.col(id_col), F.explode(toks).alias("term"))
         .groupBy(id_col, "term")
         .agg(F.count("*").alias("tf"))
-        # forks into the df table + join-back: run the explode once
-        .persist()
     )
     n_docs = dt.agg(
         F.countDistinct(id_col).cast("double").alias("__n_docs")
     )
     docfreq = dt.groupBy("term").agg(F.count("*").alias("df"))
-    from pyspark.sql import Window
-
     w = (
         Window.partitionBy(id_col)
         .orderBy(F.col("score").desc(), F.col("term").asc())
@@ -370,8 +336,6 @@ def quality_percentile_filter(
     table, and filter — same semantics up to sketch error, no global
     sort per language.
     """
-    from pyspark.sql import Window
-
     c = F.col(text_col)
     scored = df.withColumn("quality", quality_score(c)).withColumn(
         "lang_guess", lang_id(c)
@@ -400,9 +364,8 @@ def distinctive_terms(
 
     Shape: one explode → (group, term) hash aggregate, then the
     term-marginal and group-marginal tables derive from the SAME
-    grouped result (persisted — vocabulary-sized, tiny vs the corpus),
-    so the corpus is scanned exactly once.  Marginal join-backs are on
-    the term / group keys of vocabulary- and group-cardinality-sized
+    grouped result, whose exchange the plan reuses.  Marginal
+    join-backs are on the term / group keys of vocabulary- and group-cardinality-sized
     tables; the final top-k is a WindowGroupLimit over |groups| keys.
     """
     toks = tokens(F.col(text_col))
@@ -410,14 +373,10 @@ def distinctive_terms(
         df.select(F.col(group_col).alias("grp"), F.explode(toks).alias("term"))
         .groupBy("grp", "term")
         .agg(F.count("*").alias("c_g"))
-        .persist()
     )
     grp_totals = gt.groupBy("grp").agg(F.sum("c_g").alias("n_g"))
     term_totals = gt.groupBy("term").agg(F.sum("c_g").alias("c_all"))
     corpus_total = gt.agg(F.sum("c_g").alias("n_all"))
-
-    from pyspark.sql import Window
-
     joined = (
         gt.join(F.broadcast(grp_totals), "grp")
         .join(term_totals, "term")
@@ -451,12 +410,11 @@ def bigram_pmi(
     (Church & Hanks 1990) — for corpus hygiene it surfaces boilerplate
     phrases and templated spans that unigram frequency misses.
 
-    Shape: ONE tokenization pass (persisted token arrays — the fork
-    below reads them twice), then bigrams via two shifted array slices
-    zipped per row (no posexplode self-join).  Unigram and bigram
-    count tables shuffle on the token key; the two marginal join-backs
-    are vocabulary-sized.  Scalar totals ride in via a broadcast cross
-    join.  All ratio arithmetic is double with pinned left-to-right
+    Shape: one tokenization projection read by the unigram and the
+    bigram (``dedup.bigrams``, no posexplode self-join) count tables,
+    which shuffle on the token key and split the pair after
+    aggregating; the two marginal join-backs are vocabulary-sized.
+    Scalar totals ride in via a broadcast cross join.  All ratio arithmetic is double with pinned left-to-right
     association so an external SQL oracle reproduces bit-identical
     inputs to ``ln``; the 6dp round absorbs the last-ulp ``ln``
     libm difference.
@@ -467,29 +425,23 @@ def bigram_pmi(
         F.filter(
             F.split(F.lower(F.col(text_col)), " "), lambda t: t != F.lit("")
         ).alias("t")
-    ).persist()
+    )
     uni = (
         toks.select(F.explode("t").alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("c"))
-        .persist()
     )
     n_uni = uni.agg(F.sum("c").alias("n_uni"))
-    # a doc with fewer than 2 tokens has no bigram (and slice() refuses
-    # the negative length an empty doc would give)
-    shifted = toks.filter(F.size("t") > 1).select(
-        F.slice(F.col("t"), 1, F.size("t") - 1).alias("_a"),
-        F.slice(F.col("t"), 2, F.size("t") - 1).alias("_b"),
-    )
+    # no token contains a space, so the pair splits exactly
     bi = (
-        shifted.select(
-            F.explode(
-                F.zip_with("_a", "_b", lambda x, y: F.struct(x.alias("x"), y.alias("y")))
-            ).alias("p")
-        )
-        .select("p.x", "p.y")
-        .groupBy("x", "y")
+        toks.select(F.explode(bigrams(F.col("t"))).alias("p"))
+        .groupBy("p")
         .agg(F.count("*").alias("c_xy"))
+        .select(
+            F.substring_index("p", " ", 1).alias("x"),
+            F.substring_index("p", " ", -1).alias("y"),
+            "c_xy",
+        )
     )
     n_bi = bi.agg(F.sum("c_xy").alias("n_bi"))
     ux = uni.select(F.col("tok").alias("x"), F.col("c").alias("c_x"))
@@ -748,7 +700,9 @@ def bpe_merge_steps(df: DataFrame, text_col: str, n_merges: int = 3) -> DataFram
         .groupBy("__w")
         .agg(F.count("*").cast("bigint").alias("__n"))
     )
-    # "h e l l o": one symbol per char, space-separated
+    # "h e l l o": one symbol per char, space-separated.  Cached, else
+    # step k re-runs k - 1 merges: 10 merges at sf0.1 on 4 vCPUs take
+    # 3.2 s warm with the persists, 4.2 s without
     cur = vocab.select(
         "__n",
         F.trim(F.regexp_replace(F.col("__w"), r"(.)", r"$1 ")).alias("__seq"),
@@ -758,19 +712,9 @@ def bpe_merge_steps(df: DataFrame, text_col: str, n_merges: int = 3) -> DataFram
     prev: DataFrame | None = None
     try:
         for step in range(1, n_merges + 1):
-            with_tk = cur.withColumn("__tk", F.split(F.col("__seq"), " "))
             pairs = (
-                # guard size>=2: Spark's sequence(0, -1) steps BACKWARD
-                with_tk.filter(F.size(F.col("__tk")) >= 2)
-                .select(
-                    "__n",
-                    F.explode(
-                        F.expr(
-                            "transform(sequence(0, size(__tk) - 2),"
-                            " i -> concat(__tk[i], ' ', __tk[i + 1]))"
-                        )
-                    ).alias("pair"),
-                )
+                cur.withColumn("__tk", F.split(F.col("__seq"), " "))
+                .select("__n", F.explode(bigrams(F.col("__tk"))).alias("pair"))
                 .groupBy("pair")
                 .agg(F.sum("__n").alias("pair_count"))
             )
@@ -812,44 +756,20 @@ def doc_distinct_grams(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
     """``(id, __grams)`` with each document's DISTINCT word ``n``-gram
-    shingles — the shared base of ``novelty_score`` and the
-    boilerplate template report.  Docs shorter than ``n`` tokens get
-    an empty array (kept, not dropped).
+    shingles (``dedup.shingle_array``) — the shared base of
+    ``novelty_score`` and the boilerplate template report.  Docs
+    shorter than ``n`` tokens get an empty array (kept, not dropped).
 
-    Two perf contracts live here so callers can't regress them
-    separately: (1) doc rows are hash-spread before gram construction
-    (a small input file count would otherwise serialize the expensive
-    narrow stage onto one core), and (2) the frame is lazily
-    ``persist()``-ed BEFORE any explode — Catalyst collapses the gram
-    projection into Generate, which re-evaluates the whole
-    transform/slice array once per EMITTED row, an O(grams²) per-doc
-    blowup (measured 4.6 s → 0.1 s at sf0.1).
-
-    Cache ownership: the returned frame is ``persist()``-ed and the
-    CALLER owns its release — the cache is part of the caller's final
-    plan (novelty_score's short-doc left join re-reads it), so it
-    cannot be dropped here.  Call ``.unpersist()`` on the returned
-    frame after the terminal action when composing several gram-based
-    queries in one long-lived session; a leaked cache degrades to
-    LRU-evicted storage, never wrong answers.
+    Doc rows are hash-spread before gram construction: a small input
+    file count would otherwise serialize the expensive narrow stage
+    onto one core.
     """
-    toks = tokens(F.col(text_col))
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size(F.col("__tk")) - n),
-            lambda i: F.array_join(F.slice(F.col("__tk"), i + 1, n), " "),
-        )
-    )
     return (
         df.select(F.col(id_col), F.col(text_col))
         .repartition(F.col(id_col))
-        .select(F.col(id_col), toks.alias("__tk"))
-        .select(
-            id_col,
-            F.when(F.size(F.col("__tk")) >= n, grams).otherwise(
-                F.array().cast("array<string>")
-            ).alias("__grams"),
-        )
+        .select(F.col(id_col), shingle_array(F.col(text_col), n).alias("__grams"))
+        # warm medians at sf0.1 on 4 vCPUs: boilerplate_ngrams 0.80 s
+        # with the persist, 1.94 s without; novelty_scores 0.58 / 0.91 s
         .persist()
     )
 
@@ -871,63 +791,47 @@ def novelty_score(
     Cross-doc support counts distinct DOCS per gram (a gram repeated
     within one doc is that doc's own text, not cross-doc duplication).
     Docs shorter than ``n`` tokens emit ``n_grams = 0`` with NULL
-    fractions rather than dropping.
+    fractions rather than dropping.  ``id_col`` is a key: one output
+    row per input row.
 
     Scale shape: grams hash to int64 (``xxhash64`` JVM-intrinsic by
     default; ``"md5"`` for cross-engine oracle parity, same contract as
     the MinHash family) so the two shuffles (per-gram support window;
     per-doc fraction agg) move longs, not strings.  Within-doc
     ``array_distinct`` happens before explode — which both bounds
-    fan-out AND makes cross-doc support a plain ``count(*)`` window
-    over the gram hash (each doc contributes a gram at most once), so
-    there is no count_distinct and no join-back: the exploded gram
-    stream is derived exactly once.  The doc rows are hash-spread
-    before gram construction — the gram explosion is the expensive
-    narrow stage, and without the pre-spread a small input file count
-    serializes it onto a few cores (one 5000-row shuffle vs 10× wall
-    clock at sf0.1).  No all-pairs anything: cost is
+    fan-out AND makes cross-doc support a plain count window over the
+    gram hash (each doc contributes a gram at most once), so there is
+    no count_distinct and no join-back: ``explode_outer`` keeps a
+    gram-less doc as one NULL row, which counts nothing.  The doc rows
+    are hash-spread before gram construction — the gram explosion is
+    the expensive narrow stage, and without the pre-spread a small
+    input file count serializes it onto a few cores (one 5000-row
+    shuffle vs 10× wall clock at sf0.1).  No all-pairs anything: cost is
     corpus-gram-linear, the same envelope as word count.
     """
-    base = doc_distinct_grams(df, id_col, text_col, n)
-    if hash_fn == "xxhash64":
-        ghash = F.xxhash64(F.col("__g"))
-    elif hash_fn == "md5":
-        from .dedup import md5_hash64
-
-        ghash = md5_hash64(F.col("__g"))
-    else:
+    ghash = {"xxhash64": F.xxhash64, "md5": md5_hash64}.get(hash_fn)
+    if ghash is None:
         raise ValueError(f"unknown hash_fn: {hash_fn!r}")
-    exploded = base.select(
-        id_col, F.explode("__grams").alias("__g")
-    ).select(id_col, ghash.alias("__h"))
-    # per-doc-distinct grams => count(*) over the hash IS the distinct
-    # doc support; one window shuffle replaces count_distinct + join
-    support_w = Window.partitionBy("__h")
+    hashes = doc_distinct_grams(df, id_col, text_col, n).select(
+        id_col, F.explode_outer(F.transform("__grams", lambda g: ghash(g))).alias("__h")
+    )
+    # per-doc-distinct grams => count over the hash IS the distinct doc
+    # support; one window shuffle replaces count_distinct + join
     per_doc = (
-        exploded.withColumn("__docs", F.count("*").over(support_w))
+        hashes.withColumn("__docs", F.count("__h").over(Window.partitionBy("__h")))
         .groupBy(id_col)
         .agg(
-            F.count("*").cast("bigint").alias("n_grams"),
-            F.sum(F.when(F.col("__docs") >= 2, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_dup_grams"),
+            F.count("__h").alias("n_grams"),
+            F.count(F.when(F.col("__docs") >= 2, 1)).alias("n_dup_grams"),
         )
     )
-    # left join so short docs (no grams) stay present with n_grams 0
-    return (
-        base.select(id_col)
-        .join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_grams"), F.lit(0).cast("bigint")).alias("n_grams"),
-            F.coalesce(F.col("n_dup_grams"), F.lit(0).cast("bigint")).alias(
-                "n_dup_grams"
-            ),
-            F.when(
-                F.coalesce(F.col("n_grams"), F.lit(0)) > 0,
-                F.col("n_dup_grams") / F.col("n_grams"),
-            ).alias("dup_gram_frac"),
-        )
+    return per_doc.select(
+        id_col,
+        "n_grams",
+        "n_dup_grams",
+        F.when(F.col("n_grams") > 0, F.col("n_dup_grams") / F.col("n_grams")).alias(
+            "dup_gram_frac"
+        ),
     )
 
 
@@ -1005,40 +909,29 @@ def hashed_bow(
     identical on any engine/rerun (the same contract as the sampling
     family).  Output: ``(id, indices array<int>, values array<bigint>)``
     with indices ascending; docs with no tokens get empty arrays.
+    ``id_col`` is a key: one output row per input row.
 
-    Scale shape: explode → one (doc, index) hash aggregate (map-side
-    combine) → per-doc sorted collect (bounded by dim entries per doc).
+    Scale shape: explode_outer (a token-less doc keeps one NULL row) →
+    one (doc, index) hash aggregate (map-side combine) → per-doc sorted
+    collect (bounded by dim entries per doc; the NULL row collects
+    nothing).
     """
-    from .dedup import md5_hash64
-
-    toks = tokens(F.col(text_col))
     idx = (md5_hash64(F.col("__t"), seed) % dim).cast("int")
     per_idx = (
-        df.select(F.col(id_col), F.explode(toks).alias("__t"))
+        df.select(F.col(id_col), F.explode_outer(tokens(F.col(text_col))).alias("__t"))
         .select(id_col, idx.alias("__i"))
         .groupBy(id_col, "__i")
-        .agg(F.count("*").cast("bigint").alias("__c"))
+        .agg(F.count("__i").alias("__c"))
     )
     packed = per_idx.groupBy(id_col).agg(
         F.array_sort(
-            F.collect_list(F.struct(F.col("__i"), F.col("__c")))
+            F.collect_list(F.when(F.col("__c") > 0, F.struct("__i", "__c")))
         ).alias("__p")
     )
-    out = packed.select(
+    return packed.select(
         id_col,
         F.transform(F.col("__p"), lambda x: x["__i"]).alias("indices"),
         F.transform(F.col("__p"), lambda x: x["__c"]).alias("values"),
-    )
-    empty_i = F.array().cast("array<int>")
-    empty_v = F.array().cast("array<bigint>")
-    return (
-        df.select(id_col)
-        .join(out, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("indices"), empty_i).alias("indices"),
-            F.coalesce(F.col("values"), empty_v).alias("values"),
-        )
     )
 
 
@@ -1052,48 +945,39 @@ def tail_token_coverage(
     that carry tail vocabulary; tracking tail coverage before/after a
     curation pass shows what the pipeline is erasing.
 
-    Scale shape: distinct (doc, token) pairs once (explode +
-    array_distinct before the explode bounds fan-out), token df as one
-    hash aggregate over the pairs, a window on the token re-annotates
-    each pair with its df (no join-back), one per-doc aggregate.
-    All-integer arithmetic; the output fraction is a single exact
-    IEEE division (bigint/bigint), deterministic on any engine.
+    Scale shape: distinct (doc, token) pairs once (explode_outer +
+    array_distinct before the explode bounds fan-out; a token-less doc
+    keeps one NULL row), a window on the token annotates each pair with
+    its df (no join-back), one per-doc aggregate.  All-integer
+    arithmetic; the output fraction is a single exact IEEE division
+    (bigint/bigint), deterministic on any engine.
 
     Output: ``(id, n_distinct_tokens, n_tail_tokens, tail_frac)`` for
-    every input row; token-less docs carry zeros and NULL tail_frac.
+    every input row (``id_col`` is a key); token-less docs carry zeros
+    and NULL tail_frac.
     """
-    toks = F.array_distinct(
-        tokens(F.col(text_col))
-    )
-    pairs = df.select(F.col(id_col), F.explode(toks).alias("__t"))
-    # per-doc-distinct tokens => count(*) over the token IS its df
-    df_w = Window.partitionBy("__t")
+    toks = F.array_distinct(tokens(F.col(text_col)))
+    pairs = df.select(F.col(id_col), F.explode_outer(toks).alias("__t"))
+    # per-doc-distinct tokens => the count over the token IS its df
+    # (0 on the NULL row of a token-less doc)
     per_doc = (
-        pairs.withColumn("__df", F.count("*").over(df_w))
+        pairs.withColumn("__df", F.count("__t").over(Window.partitionBy("__t")))
         .groupBy(id_col)
         .agg(
-            F.count("*").cast("bigint").alias("n_distinct_tokens"),
-            F.sum(
-                F.when(F.col("__df") <= max_tail_df, 1).otherwise(0)
-            ).cast("bigint").alias("n_tail_tokens"),
-        )
-    )
-    return (
-        df.select(id_col)
-        .join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_distinct_tokens"), F.lit(0).cast("bigint")).alias(
-                "n_distinct_tokens"
-            ),
-            F.coalesce(F.col("n_tail_tokens"), F.lit(0).cast("bigint")).alias(
+            F.count("__t").alias("n_distinct_tokens"),
+            F.count(F.when(F.col("__df").between(1, max_tail_df), 1)).alias(
                 "n_tail_tokens"
             ),
-            F.when(
-                F.coalesce(F.col("n_distinct_tokens"), F.lit(0)) > 0,
-                F.col("n_tail_tokens") / F.col("n_distinct_tokens"),
-            ).alias("tail_frac"),
         )
+    )
+    return per_doc.select(
+        id_col,
+        "n_distinct_tokens",
+        "n_tail_tokens",
+        F.when(
+            F.col("n_distinct_tokens") > 0,
+            F.col("n_tail_tokens") / F.col("n_distinct_tokens"),
+        ).alias("tail_frac"),
     )
 
 
@@ -1187,13 +1071,8 @@ def gopher_rules(
     )
 
     # the one exchange: most frequent (non-distinct) word 2-gram per doc
-    last = F.size("__nt") - 1
-    idx = F.when(last >= 1, F.sequence(F.lit(1), last)).otherwise(
-        F.array().cast("array<int>")
-    )
-    bigrams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice("__nt", i, 2)))
     top2 = (
-        scalars.select(id_col, F.explode(bigrams).alias("__g"))
+        scalars.select(id_col, F.explode(bigrams(F.col("__nt"))).alias("__g"))
         .groupBy(id_col, "__g")
         .agg(F.count("*").alias("__c"))
         .groupBy(id_col)
@@ -1258,29 +1137,20 @@ def ppl_buckets(
     Determinism: bucket boundaries are INTEGER rank arithmetic
     (rn·3 ≤ n, rn·3 ≤ 2n) over the total order (score desc, id asc) —
     no quantile interpolation, no float thresholds, so any engine
-    reproduces the exact same split.  One window shuffle on the group
-    key; rows-between not needed (row_number + per-group count).
+    reproduces the exact same split.  One read of the input and one
+    window shuffle on the group key: NULL scores sort last, so the
+    scored rows hold ranks 1..n with n = count(score).
     """
-    scored = df.filter(F.col(score_col).isNotNull())
-    w = Window.partitionBy(group_col).orderBy(
-        F.desc(score_col), F.asc(id_col)
+    w = Window.partitionBy(group_col).orderBy(F.desc(score_col), F.asc(id_col))
+    rn = F.row_number().over(w)
+    n = F.count(score_col).over(Window.partitionBy(group_col))
+    return df.withColumn(
+        "ppl_bucket",
+        F.when(F.col(score_col).isNull(), F.lit("unscored"))
+        .when(rn * 3 <= n, F.lit("head"))
+        .when(rn * 3 <= n * 2, F.lit("middle"))
+        .otherwise(F.lit("tail")),
     )
-    cnt = Window.partitionBy(group_col)
-    bucketed = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .withColumn("__n", F.count("*").over(cnt))
-        .withColumn(
-            "ppl_bucket",
-            F.when(F.col("__rn") * 3 <= F.col("__n"), F.lit("head"))
-            .when(F.col("__rn") * 3 <= F.col("__n") * 2, F.lit("middle"))
-            .otherwise(F.lit("tail")),
-        )
-        .drop("__rn", "__n")
-    )
-    rest = df.filter(F.col(score_col).isNull()).withColumn(
-        "ppl_bucket", F.lit("unscored")
-    )
-    return bucketed.unionByName(rest)
 
 
 C4_BLOCKLIST = ("javascript", "lorem ipsum", "cookie")

@@ -338,18 +338,22 @@ def _merge(
     )
 
 
-def _merge_rollup(cur, batch: DataFrame, keys: list[str], **aggs) -> DataFrame:
-    """``history.merge_rollups`` of the stored table and the batch; the
-    first batch merges into an empty table of its columns.  A stored
-    table reads back with every column nullable and a re-summed count
-    is nullable, so a first batch stored as it came (``count("*")`` and
-    literal keys are not nullable) would change the table schema — a
+def _empty_stored(df: DataFrame) -> DataFrame:
+    """An empty table of ``df``'s columns as a stored table reads back:
+    every column nullable.  A ``merge_fn`` merges a first batch into it,
+    so the first commit stores the schema every later merge produces;
+    a first batch stored as it came (``count("*")`` or a ``coalesce`` is
+    not nullable, a bare ``sum`` is) would change the table schema — a
     ``metaData`` action — on its first merge."""
-    if cur is None:
-        cur = batch.sparkSession.createDataFrame(
-            [], T.StructType([T.StructField(f.name, f.dataType) for f in batch.schema])
-        )
-    return merge_rollups([cur, batch], keys, **aggs)
+    return df.sparkSession.createDataFrame(
+        [], T.StructType([T.StructField(f.name, f.dataType) for f in df.schema])
+    )
+
+
+def _merge_rollup(cur, batch: DataFrame, keys: list[str], **aggs) -> DataFrame:
+    """``history.merge_rollups`` of the stored table (``_empty_stored``
+    on the first batch) and the batch."""
+    return merge_rollups([_empty_stored(batch) if cur is None else cur, batch], keys, **aggs)
 
 
 def read_maintained_table(spark, path: str):
@@ -896,7 +900,7 @@ def _scd2_merge(
     )
 
     if cur is None:
-        return scd2_from_events(obs, key_col, ts_col, attr_cols)
+        cur = _empty_stored(scd2_from_events(obs, key_col, ts_col, attr_cols))
     affected = obs.select(key_col).distinct()
     open_iv = cur.filter(F.col("is_current")).join(
         affected, key_col, "left_semi"
@@ -1469,7 +1473,7 @@ def apply_experiment_units_batch(
 
     def merge_fn(cur: "DataFrame | None", batch: DataFrame) -> DataFrame:
         if cur is None:
-            return batch
+            cur = _empty_stored(batch)
         c = cur.select(
             "user_id",
             F.col("x").alias("cx"),

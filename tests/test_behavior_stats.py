@@ -337,7 +337,7 @@ def test_novelty_score_hand_computed(spark):
     from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import textstats
 
     df = spark.createDataFrame(
-        [(1, "a b c d e"), (2, "a b c d x"), (3, "z z z"), (4, "q w")],
+        [(1, "a b c d e"), (2, "a b c d x"), (3, "z z z"), (4, "q w"), (5, "?!")],
         "doc_id long, text string",
     )
     for hash_fn in ("xxhash64", "md5"):
@@ -352,7 +352,8 @@ def test_novelty_score_hand_computed(spark):
         assert got[2] == (3, 2, 2 / 3)
         assert got[3] == (1, 0, 0.0)
         # shorter than n tokens: present with zero grams, NULL fraction
-        assert got[4] == (0, 0, None)
+        # (two such docs share the NULL key of the support window)
+        assert got[4] == got[5] == (0, 0, None)
 
 
 def test_novelty_score_within_doc_repeat_not_cross_doc(spark):
@@ -482,6 +483,7 @@ def test_tail_token_coverage_hand_example(spark):
             (2, "common rare2"),
             (3, "common"),
             (4, ""),
+            (5, "?!"),
         ],
         "doc_id long, text string",
     )
@@ -491,7 +493,9 @@ def test_tail_token_coverage_hand_example(spark):
     assert (out[1]["n_distinct_tokens"], out[1]["n_tail_tokens"]) == (2, 1)
     assert out[1]["tail_frac"] == 0.5
     assert (out[3]["n_distinct_tokens"], out[3]["n_tail_tokens"]) == (1, 0)
-    assert out[4]["n_distinct_tokens"] == 0 and out[4]["tail_frac"] is None
+    for empty in (4, 5):  # both on the NULL key of the df window
+        assert (out[empty]["n_distinct_tokens"], out[empty]["n_tail_tokens"]) == (0, 0)
+        assert out[empty]["tail_frac"] is None
 
 
 def test_centroid_outliers_flags_far_vector(spark):

@@ -1,6 +1,8 @@
 """Smoke tests for the driver contract (full oracle comparison lives in
 tools/check_oracle.py, driven at sf0.01)."""
 
+import pytest
+
 import __spark_entry__ as entry
 
 
@@ -82,3 +84,30 @@ def test_lsh_prefilter_flag_gates_candidate_trim(spark, sf_dir, monkeypatch):
         entry.set_lsh_prefilter(False)
 
     assert gate == bench and len(gate) > 0
+
+
+@pytest.fixture(scope="module")
+def edge_sf_dir(sf_dir, tmp_path_factory):
+    """``sf_dir`` plus an empty and a punctuation-only document."""
+    from tools import edge_docs
+
+    dst = str(tmp_path_factory.mktemp("edge") / "sf")
+    edge_docs.main(sf_dir, dst)
+    return dst
+
+
+@pytest.mark.parametrize("name", ["span_corruption", "overlapping_chunks"])
+def test_token_less_docs_match_the_oracle(spark, edge_sf_dir, monkeypatch, name):
+    """A doc that normalizes to '' keeps one row with empty text and
+    zero counts, in the engine and in its DuckDB oracle, bit-exactly."""
+    duckdb = pytest.importorskip("duckdb")
+    from tools import check_oracle
+
+    monkeypatch.setattr(check_oracle, "EXACT", True)
+    sdf = entry.queries()[name](spark, edge_sf_dir)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{edge_sf_dir}/documents.parquet'")
+    res = con.execute(entry.oracle_sql()[name])
+    got = check_oracle.canon([tuple(r) for r in sdf.collect()], sdf.columns)
+    want = check_oracle.canon(res.fetchall(), [d[0] for d in res.description])
+    assert got == want

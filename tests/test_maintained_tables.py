@@ -264,22 +264,24 @@ def test_rollup_keeps_its_column_order_across_batches(spark, tmp_path):
 
 
 def test_summed_snapshots_commit_their_schema_once(spark, tmp_path):
-    """The maintainers that re-sum their table (rollup, drift counts,
-    count-min) store the first batch with the schema every later merge
-    produces, so only the first commit carries a ``metaData`` action."""
+    """The maintainers that merge into their stored table (rollup,
+    drift counts, count-min, both SCD2 folds, experiment units) store
+    the first batch with the schema every later merge produces, so only
+    the first commit carries a ``metaData`` action."""
+    summed = ("rollup", "drift_counts", "cms")
+    names = (*summed, "scd2", "scd2_changes", "experiment_units")
     with_meta = {}
-    for name in ("rollup", "drift_counts", "cms"):
+    for name in names:
         path = tmp_path / name
-        for b in range(3):
+        # the other three stored a flipped schema at v1 only
+        for b in range(3 if name in summed else 2):
             _MAINTAINERS[name](spark, b, str(path))
         with_meta[name] = [
             log.name
             for log in sorted((path / "_delta_log").glob("*.json"))
             if any("metaData" in json.loads(ln) for ln in log.read_text().splitlines())
         ]
-    assert with_meta == {
-        name: ["00000000000000000000.json"] for name in ("rollup", "drift_counts", "cms")
-    }
+    assert with_meta == {name: ["00000000000000000000.json"] for name in names}
 
 
 def test_compaction_of_a_maintained_table_is_data_identical(spark, tmp_path):

@@ -870,3 +870,96 @@ def test_cumulative_channel_windows_over_preaggregates(spark, sf_dir):
     assert "HashAggregate" in p.split("Window")[1]
     assert "FullOuter" in p
     assert "CartesianProduct" not in p
+
+
+def _tiny_docs(spark):
+    return spark.createDataFrame(
+        [(1, "en", "a b c d a b", 1.5), (2, "en", "a b x", None), (3, "de", "", 0.5),
+         (4, "en", "?!", 2.0)],
+        "doc_id long, lang string, text string, score double",
+    )
+
+
+@pytest.mark.parametrize(
+    "name", ["novelty_score", "tail_token_coverage", "hashed_bow", "ppl_buckets"]
+)
+def test_textstats_per_doc_operators_read_their_input_once(spark, name):
+    """No join back onto the input for token-less docs (they keep a row
+    through ``explode_outer``), and ``ppl_buckets`` is one window rather
+    than a union of two filtered reads: the analyzed plan has one leaf."""
+    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import (
+        textstats,
+    )
+
+    calls = {
+        "novelty_score": lambda d: textstats.novelty_score(d, "doc_id", "text", n=2),
+        "tail_token_coverage": lambda d: textstats.tail_token_coverage(d, "doc_id", "text"),
+        "hashed_bow": lambda d: textstats.hashed_bow(d, "doc_id", "text", dim=8),
+        "ppl_buckets": lambda d: textstats.ppl_buckets(d, "lang", "score", "doc_id"),
+    }
+    out = calls[name](_tiny_docs(spark))
+    assert out._jdf.queryExecution().analyzed().collectLeaves().size() == 1
+
+
+@pytest.mark.parametrize(
+    "name", ["unigram_logprob", "tfidf_top_terms", "distinctive_terms", "bigram_pmi"]
+)
+def test_text_operators_without_a_measured_persist_cache_nothing(spark, name):
+    """These operators read one grouped frame more than once without a
+    persist, so running them leaves no cached RDD behind."""
+    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import (
+        textstats,
+    )
+
+    calls = {
+        "unigram_logprob": lambda d: textstats.unigram_logprob(d, "doc_id", "text"),
+        "tfidf_top_terms": lambda d: textstats.tfidf_top_terms(d, "doc_id", "text"),
+        "distinctive_terms": lambda d: textstats.distinctive_terms(
+            d, "lang", "text", min_count=1
+        ),
+        "bigram_pmi": lambda d: textstats.bigram_pmi(d, "text", min_count=1),
+    }
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    assert calls[name](_tiny_docs(spark)).collect()
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+
+
+def test_textstats_builds_bigrams_through_dedup_and_persists_where_measured():
+    """AST scan of ``textstats.py`` and ``sampling.py``: no function
+    hand-builds adjacent pairs (a ``sequence`` fed to ``transform``, or
+    ``zip_with`` over ``slice``s, as calls or in SQL strings) —
+    ``dedup.bigrams`` is the one builder; and ``textstats.py`` calls
+    ``.persist()`` only where dropping it was measured to cost time."""
+    import ast
+    import pathlib
+
+    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import (
+        sampling,
+        textstats,
+    )
+
+    def used(fn, name):
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Call):
+                f = node.func
+                if (f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)) == name:
+                    return True
+            if isinstance(node, ast.Constant) and f"{name}(" in str(node.value):
+                return True
+        return False
+
+    hand_built, persists = [], []
+    for mod in (textstats, sampling):
+        src = pathlib.Path(mod.__file__)
+        for fn in ast.parse(src.read_text(), filename=str(src)).body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            if (used(fn, "sequence") and used(fn, "transform")) or (
+                used(fn, "zip_with") and used(fn, "slice")
+            ):
+                hand_built.append(fn.name)
+            if mod is textstats and used(fn, "persist"):
+                persists.append(fn.name)
+    assert hand_built == []
+    assert persists == ["bpe_merge_steps", "doc_distinct_grams"]
