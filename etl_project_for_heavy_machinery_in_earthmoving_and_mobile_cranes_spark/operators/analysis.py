@@ -44,12 +44,12 @@ def group_share(
     return g
 
 
-def group_share_pre_agg(g: DataFrame, key: str, amount_col: str = "amount") -> DataFrame:
-    """Shares over an already-grouped table (one row per key)."""
+def group_share_pre_agg(g: DataFrame, key: str) -> DataFrame:
+    """Shares of ``amount`` over an already-grouped table (one row per key)."""
     w = Window.partitionBy()
     return g.withColumn(
         "amount_prop",
-        F.col(amount_col).cast("double") / F.sum(amount_col).over(w).cast("double") * 100,
+        F.col("amount").cast("double") / F.sum("amount").over(w).cast("double") * 100,
     )
 
 
@@ -57,16 +57,15 @@ def fold_others(
     shares: DataFrame,
     key: str,
     threshold: float = 20.0,
-    prop_col: str = "amount_prop",
 ) -> DataFrame:
-    """W1 (prog.py:622-630): ascending cumulative share; keys whose running
-    cumulative share stays under ``threshold`` fold into 'OTHERS', then
-    re-aggregate.  One window over the grouped (small) table."""
+    """W1 (prog.py:622-630): ascending cumulative ``amount_prop``; keys
+    whose running cumulative share stays under ``threshold`` fold into
+    'OTHERS', then re-aggregate.  One window over the grouped (small) table."""
     w = (
-        Window.orderBy(F.col(prop_col).asc(), F.col(key).asc())
+        Window.orderBy(F.col("amount_prop").asc(), F.col(key).asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    folded = shares.withColumn("__cum", F.sum(prop_col).over(w)).withColumn(
+    folded = shares.withColumn("__cum", F.sum("amount_prop").over(w)).withColumn(
         key, F.when(F.col("__cum") < threshold, "OTHERS").otherwise(F.col(key))
     )
     value_cols = [c for c in shares.columns if c != key]
@@ -81,22 +80,20 @@ def _report_rank(key: str) -> Column:
     )
 
 
-def report_order(df: DataFrame, key: str, amount_col: str = "amount") -> DataFrame:
+def report_order(df: DataFrame, key: str) -> DataFrame:
     """O4: OTHERS then UNKNOWN forced to the bottom, rest by amount desc."""
-    return df.orderBy(_report_rank(key), F.col(amount_col).desc())
+    return df.orderBy(_report_rank(key), F.col("amount").desc())
 
 
-def report_position(
-    df: DataFrame, key: str, amount_col: str = "amount", pos_col: str = "report_pos"
-) -> DataFrame:
-    """O4 ordering materialized as a 1-based position column — for
+def report_position(df: DataFrame, key: str, amount_col: str = "amount") -> DataFrame:
+    """O4 ordering materialized as a 1-based ``report_pos`` column — for
     order-insensitive compare layers (the driver gate canonicalizes row
     order, so ORDER BY alone is unobservable there).  Deterministic
     tie-break: report rank, amount desc, key asc.  Single-partition
     window: only ever applied to the final report table (10¹–10² rows
     after W1 folding), never to fact-sized data."""
     w = Window.orderBy(_report_rank(key), F.col(amount_col).desc(), F.col(key).asc())
-    return df.withColumn(pos_col, F.row_number().over(w))
+    return df.withColumn("report_pos", F.row_number().over(w))
 
 
 def top_k(df: DataFrame, order_col: str, k: int = 3) -> DataFrame:
@@ -251,8 +248,6 @@ def multi_grain_report(
     dims: Sequence[str],
     grouping_sets: Sequence[Sequence[str]],
     aggs: Sequence[Column],
-    all_label: str = "ALL",
-    null_label: str = "UNKNOWN",
 ) -> DataFrame:
     """SURVEY §2.11 nice-to-have (VERDICT r10 #6): the key-players
     tables at MULTIPLE granularities in one pass — GROUP BY GROUPING
@@ -265,8 +260,8 @@ def multi_grain_report(
     and a single exchange, strictly better than the union-of-N-scans
     a report module would otherwise run.
 
-    Disambiguation contract: an output dim is ``all_label`` where the
-    grouping set rolled it up and ``null_label`` where the DATA value
+    Disambiguation contract: an output dim is ``'ALL'`` where the
+    grouping set rolled it up and ``'UNKNOWN'`` where the DATA value
     was genuinely NULL — distinguished with GROUPING(dim), never by
     testing the dim for NULL (a NULL data value and a rolled-up level
     are different facts; conflating them is the classic rollup bug).
@@ -283,8 +278,8 @@ def multi_grain_report(
     sel = []
     for d in dims:
         sel.append(
-            F.when(F.col(f"__g_{d}") == 1, F.lit(all_label))
-            .otherwise(F.coalesce(F.col(d), F.lit(null_label)))
+            F.when(F.col(f"__g_{d}") == 1, F.lit("ALL"))
+            .otherwise(F.coalesce(F.col(d), F.lit("UNKNOWN")))
             .alias(d)
         )
     grain = F.concat(*[F.col(f"__g_{d}").cast("string") for d in dims]).alias(

@@ -37,13 +37,13 @@ def span_corruption(
     text_col: str,
     mask_rate: float = 0.15,
     seed: int = 0,
-    sentinel: str = "<extra_id>",
 ) -> DataFrame:
     """Mask ~``mask_rate`` of normalized tokens per document: token i of
     doc d is masked iff md5-bucket(seed, d, i) < rate — deterministic,
     position-independent Bernoulli.  Returns the corrupted text, the
     masked tokens (space-joined, in order — the denoising target), and
-    audit counts.
+    audit counts.  A masked token reads ``<extra_id>`` in the corrupted
+    text.
 
     The boolean mask array is MATERIALIZED as a projected column before
     the three outputs derive from it, so each token's md5 evaluates
@@ -60,7 +60,7 @@ def span_corruption(
     corrupted = F.array_join(
         F.zip_with(
             F.col("__t"), F.col("__m"),
-            lambda x, m: F.when(m, sentinel).otherwise(x),
+            lambda x, m: F.when(m, "<extra_id>").otherwise(x),
         ),
         " ",
     )

@@ -215,10 +215,6 @@ def linear_attribution(
     convert_type: str,
     touch_types: "Sequence[str]",
     window_seconds: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
 ) -> DataFrame:
     """Linear multi-touch attribution: every qualifying touch (same
     user, within ``window_seconds`` at-or-before the conversion) gets
@@ -226,7 +222,9 @@ def linear_attribution(
     counterpart of last-touch (which the as-of join implements).
     Conversions with no qualifying touch attribute nothing.
 
-    Returns one row per (conversion, touch) with the credit share,
+    ``events`` has the event-log columns ``user_id``, ``ts``,
+    ``event_id``, ``event_type`` and ``value``.  Returns one row per
+    (conversion, touch) with the credit share,
     plus the per-conversion touch count — callers aggregate credits by
     touch/channel downstream.
 
@@ -238,16 +236,16 @@ def linear_attribution(
     rides the join's user clustering? No: it re-keys on the
     conversion, the minimal second exchange for exact splitting.
     """
-    u, t = F.col(user_col), F.col(ts_col)
+    u, t = F.col("user_id"), F.col("ts")
     conv = events.filter(F.col("event_type") == convert_type).select(
         u.alias("__cu"),
-        F.col(id_col).alias("conversion_id"),
+        F.col("event_id").alias("conversion_id"),
         t.alias("__cts"),
-        F.col(value_col).alias("__cv"),
+        F.col("value").alias("__cv"),
     )
     touches = events.filter(F.col("event_type").isin(list(touch_types))).select(
         u.alias("__tu"),
-        F.col(id_col).alias("touch_id"),
+        F.col("event_id").alias("touch_id"),
         F.col("event_type").alias("touch_type"),
         t.alias("__tts"),
     )
@@ -262,7 +260,7 @@ def linear_attribution(
     n = F.count("*").over(w)
     return pairs.select(
         "conversion_id",
-        F.col("__cu").alias(user_col),
+        F.col("__cu").alias("user_id"),
         "touch_id",
         "touch_type",
         n.cast("bigint").alias("n_touches"),
@@ -270,12 +268,7 @@ def linear_attribution(
     )
 
 
-def active_user_counts(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    window_days: int = 7,
-) -> DataFrame:
+def active_user_counts(events: DataFrame, window_days: int = 7) -> DataFrame:
     """DAU + trailing-window active users (WAU for window_days=7) per
     observed day — the product-analytics staple, with the distinct
     count done RIGHT at scale: COUNT(DISTINCT) over a sliding range
@@ -293,7 +286,7 @@ def active_user_counts(
     days beyond the observed range are clipped (no phantom trailing
     days).  The day spine rides a broadcast scalar min/max aggregate.
     """
-    u, d = F.col(user_col), F.to_date(F.col(ts_col)).alias("__d")
+    u, d = F.col("user_id"), F.to_date(F.col("ts")).alias("__d")
     pairs = events.filter(u.isNotNull()).select(u.alias("__u"), d).distinct()
     dau = pairs.groupBy("__d").agg(
         F.count_distinct("__u").cast("bigint").alias("dau")
@@ -326,6 +319,9 @@ def active_user_counts(
     )
 
 
+_START, _NULL = "__start__", "__null__"
+
+
 def markov_attribution(
     df: DataFrame,
     user_col: str,
@@ -333,9 +329,6 @@ def markov_attribution(
     type_col: str,
     conv_value: str,
     steps: int = 8,
-    start_state: str = "__start__",
-    null_state: str = "__null__",
-    none_key: str = "__none__",
 ) -> DataFrame:
     """Markov removal-effect attribution (Anderl et al.'s data-driven
     attribution; the absorbing-chain alternative to last-touch/linear):
@@ -360,8 +353,9 @@ def markov_attribution(
     is |variants|·|states| rows per step, trivially broadcastable, and
     the unrolled plan never touches the event data again.
 
-    Returns one row per channel: k-step conversion mass of the full
-    chain and the removal chain, the removal effect
+    The chain's start and null absorber are the states ``__start__``
+    and ``__null__``.  Returns one row per channel: k-step conversion
+    mass of the full chain and the removal chain, the removal effect
     1 − conv_removed/conv_full, and each channel's normalized share.
     """
     w = Window.partitionBy(user_col).orderBy(*[F.col(c) for c in order_cols])
@@ -375,7 +369,7 @@ def markov_attribution(
     kw = Window.partitionBy(user_col).orderBy(*[F.col(c) for c in order_cols])
     seq = kept.select(
         F.col(user_col).alias("__u"),
-        F.coalesce(F.lag(type_col).over(kw), F.lit(start_state)).alias("src"),
+        F.coalesce(F.lag(type_col).over(kw), F.lit(_START)).alias("src"),
         F.col(type_col).alias("dst"),
         F.struct(*[F.col(c) for c in order_cols]).alias("__o"),
     )
@@ -385,7 +379,7 @@ def markov_attribution(
         F.max((F.col("dst") == conv_value).cast("int")).alias("__conv"),
     )
     terminal = per_user.filter(F.col("__conv") == 0).select(
-        F.col("__last").alias("src"), F.lit(null_state).alias("dst")
+        F.col("__last").alias("src"), F.lit(_NULL).alias("dst")
     )
     counts = inner.unionByName(terminal).groupBy("src", "dst").count()
     totals = counts.groupBy("src").agg(F.sum("count").alias("__t"))
@@ -403,7 +397,7 @@ def markov_attribution(
     rows = probs.collect()
     trans = [(r["src"], r["dst"], float(r["p"])) for r in rows]
     channels = sorted(
-        {d for _, d, _ in trans if d not in (conv_value, null_state)}
+        {d for _, d, _ in trans if d not in (conv_value, _NULL)}
     )
 
     def k_step_conv(removed: "str | None") -> float:
@@ -411,12 +405,12 @@ def markov_attribution(
         for s, d, p in trans:
             if removed is not None and s == removed:
                 continue
-            j = null_state if (removed is not None and d == removed) else d
+            j = _NULL if (removed is not None and d == removed) else d
             cells[(s, j)] = cells.get((s, j), 0.0) + p
         mat: dict[str, list] = {}
         for (s, j), p in sorted(cells.items()):
             mat.setdefault(s, []).append((j, p))
-        mass = {start_state: 1.0}
+        mass = {_START: 1.0}
         conv_acc = 0.0
         for _ in range(steps):
             nxt: dict[str, float] = {}
@@ -425,7 +419,7 @@ def markov_attribution(
                     nxt[j] = nxt.get(j, 0.0) + mass[s] * p
             conv_acc += nxt.get(conv_value, 0.0)
             nxt.pop(conv_value, None)  # absorbing: mass leaves the chain
-            nxt.pop(null_state, None)
+            nxt.pop(_NULL, None)
             mass = nxt
         return conv_acc
 

@@ -64,27 +64,19 @@ def shingle_array(text: Column, n: int = 3) -> Column:
     )
 
 
-def shingle_rows(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, out_col: str = "__sh"
-) -> DataFrame:
-    """(id, shingle) rows: one explode of ``shingle_array`` per doc."""
+def shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
+    """(id, __sh) rows: one explode of ``shingle_array`` per doc."""
     return df.select(
-        F.col(id_col), F.explode(shingle_array(F.col(text_col), n)).alias(out_col)
+        F.col(id_col), F.explode(shingle_array(F.col(text_col), n)).alias("__sh")
     )
 
 
-def md5_hash64(col: Column, seed: int = 0) -> Column:
-    """Deterministic 32-bit-range hash as BIGINT via md5 prefix."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{seed}:"), col).cast("binary")), 1, 8), 16, 10
-    ).cast("bigint")
-
-
 def md5_hash_family(col: Column, i: int) -> Column:
-    """i-th independent 32-bit hash.  One md5 digest yields FOUR 32-bit
-    hashes (128 bits / 4 hex-8 chunks), so k families cost ceil(k/4)
-    md5 evaluations per row instead of k — the md5 is the hot-path cost
-    in minhash signatures."""
+    """i-th independent 32-bit hash as BIGINT: hex characters
+    ``8·(i mod 4)+1 .. +8`` of ``md5(f"{i // 4}:" || col)``.  One md5
+    digest yields FOUR 32-bit hashes (128 bits / 4 hex-8 chunks), so k
+    families cost ceil(k/4) md5 evaluations per row instead of k — the
+    md5 is the hot-path cost in minhash signatures."""
     seed, part = divmod(i, 4)
     return F.conv(
         F.substring(
@@ -95,18 +87,22 @@ def md5_hash_family(col: Column, i: int) -> Column:
     ).cast("bigint")
 
 
+def md5_hash64(col: Column, seed: int = 0) -> Column:
+    """Deterministic 32-bit-range hash as BIGINT: the first 8 hex
+    characters of ``md5(f"{seed}:" || col)``, i.e. family ``4·seed``."""
+    return md5_hash_family(col, 4 * seed)
+
+
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
 
 
-def dedup_exact(
-    df: DataFrame, id_col: str, text_col: str, normalized: bool = True
-) -> DataFrame:
-    """Keep one row per (normalized) text — the smallest id wins.
-    Single hash-aggregate shuffle on the text key; at scale, group on
-    ``md5(text)`` instead of the full text to shrink shuffle width."""
-    key = normalize_for_dedup(F.col(text_col)) if normalized else F.col(text_col)
+def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Keep one row per normalized text — the smallest id wins.
+    One window exchange keyed by ``md5`` of the normalized text (a
+    narrow key instead of the full text)."""
+    key = normalize_for_dedup(F.col(text_col))
     w = Window.partitionBy(F.md5(key)).orderBy(F.col(id_col).asc())
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -148,9 +144,14 @@ def minhash_signatures(
       the 100 TB path when signatures only need to agree with
       THIS engine's runs.  Same banding/collision mechanics.
     """
-    sh = df.select(
+    # keep docs with at least ``shingle_n`` words, i.e. a non-empty
+    # shingle array, tested on the input text: a filter on ``__sh`` is
+    # pushed below its projection and runs the shingle regex twice
+    word = "[a-z0-9]+"
+    has_gram = F.lower(F.col(text_col)).rlike(f"{word}(?:[^a-z0-9]+{word}){{{shingle_n - 1}}}")
+    sh = df.filter(has_gram).select(
         F.col(id_col), shingle_array(F.col(text_col), shingle_n).alias("__sh")
-    ).filter(F.size("__sh") > 0)
+    )
     if hash_fn == "xxhash64":
         mh = [
             F.array_min(F.transform("__sh", lambda g: F.xxhash64(F.lit(i), g)))
@@ -454,7 +455,6 @@ def ngram_jaccard_pairs(
     id_col: str,
     text_col: str,
     shingle_n: int = 3,
-    min_jaccard: float = 0.0,
     max_df: int | None = None,
 ) -> DataFrame:
     """Jaccard on xxhash64 shingle keys (a 64-bit collision can inflate it).
@@ -481,16 +481,13 @@ def ngram_jaccard_pairs(
     merge their postings — the standard fingerprinting trade every
     minhash/LSH stage here already makes, and the oracle gate proves
     exactness on the test corpora."""
-    out = _shared_shingle_pairs(df, id_col, text_col, shingle_n, max_df).select(
+    return _shared_shingle_pairs(df, id_col, text_col, shingle_n, max_df).select(
         "id_a",
         "id_b",
         (F.col("__common") / (F.col("__sza") + F.col("__szb") - F.col("__common"))).alias(
             "jaccard"
         ),
     )
-    if min_jaccard > 0:
-        out = out.filter(F.col("jaccard") >= min_jaccard)
-    return out
 
 
 def containment_pairs(
@@ -664,7 +661,6 @@ def decontaminate(
     id_col: str,
     text_col: str,
     n: int = 13,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: find corpus docs sharing any word
     n-gram with a benchmark/eval set (the GPT-3-style 13-gram overlap
@@ -674,15 +670,12 @@ def decontaminate(
 
     Scale: benchmark gram sets are tiny next to a 100 TB corpus, so the
     distinct-gram side broadcasts and the scan stays shuffle-free on the
-    corpus side (set ``broadcast_benchmark=False`` to shuffle-join on
-    the gram key for very large eval suites).  Corpus grams are never
-    materialized beyond the streamed explode."""
+    corpus side.  Corpus grams are never materialized beyond the
+    streamed explode."""
     c = shingle_rows(corpus, id_col, text_col, n)
     b = shingle_rows(benchmark, id_col, text_col, n).select("__sh").distinct()
-    if broadcast_benchmark:
-        b = F.broadcast(b)
     return (
-        c.join(b, "__sh")
+        c.join(F.broadcast(b), "__sh")
         .groupBy(id_col)
         .agg(F.count("*").alias("n_overlapping"))
     )
@@ -695,7 +688,6 @@ def contamination_fraction(
     text_col: str,
     n: int = 8,
     threshold: float = 0.7,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Thresholded overlap decontamination (the PaLM/GPT-3 family
     rule): a corpus doc is contaminated when at least ``threshold`` of
@@ -715,9 +707,7 @@ def contamination_fraction(
     """
     c = shingle_rows(corpus, id_col, text_col, n).distinct()
     b = shingle_rows(benchmark, id_col, text_col, n).select("__sh").distinct()
-    if broadcast_benchmark:
-        b = F.broadcast(b)
-    hits = c.join(b, "__sh", "left_semi").groupBy(id_col).agg(
+    hits = c.join(F.broadcast(b), "__sh", "left_semi").groupBy(id_col).agg(
         F.count("*").cast("bigint").alias("n_overlapping")
     )
     sizes = c.groupBy(id_col).agg(F.count("*").cast("bigint").alias("n_grams"))
@@ -893,8 +883,6 @@ def positional_gram_hashes(
     id_col: str,
     text_col: str,
     k: int,
-    base: int = WINNOW_BASE,
-    mod: int = WINNOW_MOD,
     seeds: tuple[int, ...] = (0,),
 ) -> DataFrame:
     """Positional word-k-gram Rabin-Karp rolling hashes: one row per
@@ -916,19 +904,19 @@ def positional_gram_hashes(
         F.col(id_col),
         (F.col("__p0") + 1).cast("bigint").alias("pos"),
         *[
-            (md5_hash64(F.col("__w"), seed=s) % F.lit(mod)).alias(f"__wh{s}")
+            (md5_hash64(F.col("__w"), seed=s) % F.lit(WINNOW_MOD)).alias(f"__wh{s}")
             for s in seeds
         ],
     )
     wspec = Window.partitionBy(id_col).orderBy("pos")
-    pows = [pow(base, k - 1 - i, mod) for i in range(k)]
+    pows = [pow(WINNOW_BASE, k - 1 - i, WINNOW_MOD) for i in range(k)]
     out = words
     for s in seeds:
-        acc: Column = (F.col(f"__wh{s}") * F.lit(pows[0])) % F.lit(mod)
+        acc: Column = (F.col(f"__wh{s}") * F.lit(pows[0])) % F.lit(WINNOW_MOD)
         for i in range(1, k):
             acc = (
-                acc + (F.lead(f"__wh{s}", i).over(wspec) * F.lit(pows[i])) % F.lit(mod)
-            ) % F.lit(mod)
+                acc + (F.lead(f"__wh{s}", i).over(wspec) * F.lit(pows[i])) % F.lit(WINNOW_MOD)
+            ) % F.lit(WINNOW_MOD)
         out = out.withColumn(f"gh{s}", acc)
     return (
         # lead() past the last gram is NULL -> the whole polynomial is
@@ -945,8 +933,6 @@ def rolling_fingerprints(
     text_col: str,
     k: int = 4,
     window: int = 4,
-    base: int = WINNOW_BASE,
-    mod: int = WINNOW_MOD,
 ) -> DataFrame:
     """Winnowing document fingerprints (the Schleimer/Wilkerson/Aiken
     MOSS scheme, trailing-window variant): per-word md5 hashes roll
@@ -965,7 +951,7 @@ def rolling_fingerprints(
     the document id; everything else is a narrow projection.  See
     ``positional_gram_hashes`` for the overflow-safe BIGINT polynomial.
     """
-    grams = positional_gram_hashes(df, id_col, text_col, k, base=base, mod=mod)
+    grams = positional_gram_hashes(df, id_col, text_col, k)
     wspec = Window.partitionBy(id_col).orderBy("pos")
     wmin = F.min("gh0").over(wspec.rowsBetween(-(window - 1), 0))
     return (
@@ -980,13 +966,10 @@ def duplicate_spans(
     id_col: str,
     text_col: str,
     k: int = 8,
-    min_docs: int = 2,
-    base: int = WINNOW_BASE,
-    mod: int = WINNOW_MOD,
 ) -> DataFrame:
     """Exact duplicate-substring spans across documents — the
     substring-level dedup pass (find every word-k-gram that occurs
-    verbatim in >= ``min_docs`` DISTINCT documents, then merge
+    verbatim in at least two DISTINCT documents, then merge
     overlapping duplicated grams into maximal spans per document).
     This is the span-removal primitive for training corpora: unlike
     doc-level MinHash it catches boilerplate paragraphs embedded in
@@ -1008,13 +991,11 @@ def duplicate_spans(
     need to shuffle the gram STRINGS, which is what keeps the shuffle
     payload at 24 bytes/gram at the 100 TB design point.
     """
-    grams = positional_gram_hashes(
-        df, id_col, text_col, k, base=base, mod=mod, seeds=(0, 1)
-    )
+    grams = positional_gram_hashes(df, id_col, text_col, k, seeds=(0, 1))
     dup = (
         grams.groupBy("gh0", "gh1")
         .agg(F.count_distinct(F.col(id_col)).alias("__nd"))
-        .filter(F.col("__nd") >= min_docs)
+        .filter(F.col("__nd") >= 2)
         .select("gh0", "gh1")
     )
     hits = grams.join(dup, ["gh0", "gh1"], "left_semi")
@@ -1047,9 +1028,6 @@ def strip_duplicate_spans(
     id_col: str,
     text_col: str,
     k: int = 8,
-    min_docs: int = 2,
-    base: int = WINNOW_BASE,
-    mod: int = WINNOW_MOD,
 ) -> DataFrame:
     """Exact duplicate-substring REMOVAL — the second half of the
     substring-dedup pass: every word position covered by a duplicated
@@ -1072,16 +1050,14 @@ def strip_duplicate_spans(
     — all clustered on the id, so the corpus crosses the wire a
     constant number of times regardless of duplication rate.
     """
-    grams = positional_gram_hashes(
-        df, id_col, text_col, k, base=base, mod=mod, seeds=(0, 1)
-    )
+    grams = positional_gram_hashes(df, id_col, text_col, k, seeds=(0, 1))
     keepers = (
         grams.groupBy("gh0", "gh1")
         .agg(
             F.count_distinct(F.col(id_col)).alias("__nd"),
             F.min(F.col(id_col)).alias("__keeper"),
         )
-        .filter(F.col("__nd") >= min_docs)
+        .filter(F.col("__nd") >= 2)
         .select("gh0", "gh1", "__keeper")
     )
     hits = grams.join(keepers, ["gh0", "gh1"]).filter(

@@ -474,15 +474,14 @@ def multiarm_ztest(
     arm_col: str,
     conv_col: str,
     n_arms: int,
-    control: int = 0,
-    tau2: float = 1e-4,
 ) -> DataFrame:
     """Pairwise-vs-control readout for an A/B/n experiment: one row
     per TREATMENT arm with the pooled-variance two-proportion z
-    statistic against the control arm AND the mSPRT always-valid
-    p-value of the same comparison (the anytime-p this repo's
-    scorecard queries already feed to ``bh_fdr``; a fixed-horizon
-    normal p would need erf, which neither engine exposes).
+    statistic against control arm 0 AND the mSPRT always-valid
+    p-value (mixture variance 1e-4) of the same comparison (the
+    anytime-p this repo's scorecard queries already feed to
+    ``bh_fdr``; a fixed-horizon normal p would need erf, which neither
+    engine exposes).
 
     One hash aggregate to per-arm counts (k rows), the control row
     broadcast back — no second scan of ``per_unit``.  Arm values
@@ -490,8 +489,6 @@ def multiarm_ztest(
     Exact integer counts; rates/z/Λ are fixed-operand-order doubles
     the oracle replays.  Columns: arm, n0, x0, n, x, p0, p, lift, z,
     p_always_valid."""
-    if not 0 <= control < n_arms:
-        raise ValueError(f"control arm {control} outside 0..{n_arms - 1}")
     arms = per_unit.groupBy(arm_col).agg(
         F.count("*").alias("n"), F.sum(conv_col).alias("x")
     )
@@ -513,11 +510,11 @@ def multiarm_ztest(
         "x",
     )
     ctrl = F.broadcast(
-        guarded.filter(F.col("arm") == control).select(
+        guarded.filter(F.col("arm") == 0).select(
             F.col("n").alias("n0"), F.col("x").alias("x0")
         )
     )
-    t = guarded.filter(F.col("arm") != control).crossJoin(ctrl)
+    t = guarded.filter(F.col("arm") != 0).crossJoin(ctrl)
     p0 = F.col("x0") / F.col("n0")
     p = F.col("x") / F.col("n")
     pooled = (F.col("x0") + F.col("x")) / (F.col("n0") + F.col("n"))
@@ -528,7 +525,7 @@ def multiarm_ztest(
     )
     lift = p - p0
     se = F.sqrt(v)
-    t2 = F.lit(float(tau2))
+    t2 = F.lit(1e-4)
     lam = F.sqrt(v / (v + t2)) * F.exp(
         lift * lift * t2 / (F.lit(2.0) * v * (v + t2))
     )
@@ -551,9 +548,6 @@ def multiarm_readout(
     arm_col: str,
     conv_col: str,
     n_arms: int,
-    control: int = 0,
-    tau2: float = 1e-4,
-    alpha: float = 0.05,
 ) -> DataFrame:
     """The full A/B/n scorecard (VERDICT r8 #3): pairwise-vs-control
     z + anytime-p per treatment arm (``multiarm_ztest``), then
@@ -561,11 +555,7 @@ def multiarm_readout(
     (``bh_fdr``) — test many arms, control the false discovery rate.
     Adds (rank, m, bh_threshold, rejected) to each comparison row."""
     return bh_fdr(
-        multiarm_ztest(
-            per_unit, arm_col, conv_col, n_arms, control=control, tau2=tau2
-        ),
-        "p_always_valid",
-        alpha=alpha,
+        multiarm_ztest(per_unit, arm_col, conv_col, n_arms), "p_always_valid"
     )
 
 

@@ -23,7 +23,6 @@ def convert_usd_to_cny(
     df: DataFrame,
     fx: DataFrame,
     date_col: str = "date",
-    cols: tuple[str, ...] = ("price_in_usd", "amount_in_usd"),
 ) -> DataFrame:
     d = F.to_date(F.col(date_col))
     # rename fx keys: the fact table itself has a `month` column (yyyymm)
@@ -37,7 +36,7 @@ def convert_usd_to_cny(
         on=(F.col("__y") == F.col("__fx_y")) & (F.col("__m") == F.col("__fx_m")),
         how="left",
     )
-    for c in cols:
+    for c in ("price_in_usd", "amount_in_usd"):
         joined = joined.withColumn(
             c.replace("_usd", "_cny"), F.col(c) * F.col("usd_cny_rate")
         )

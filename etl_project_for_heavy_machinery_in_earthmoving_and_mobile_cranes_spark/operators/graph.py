@@ -24,14 +24,11 @@ from pyspark.sql import functions as F
 
 def pagerank(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 2,
     damping: float = 0.85,
-    materialize: bool = True,
     broadcast_ranks: bool = False,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge list:
+    """Fixed-iteration PageRank over a directed ``(src, dst)`` edge list:
 
         r_{t+1}(v) = (1-d)/N + d * sum_{u->v} r_t(u) / outdeg(u)
 
@@ -52,9 +49,9 @@ def pagerank(
     map-side-combined by the partial aggregation; for power-law graphs
     cap super-nodes upstream like ``triangle_enumerate`` does.
 
-    ``materialize`` (default True) lazily checkpoints the iteration
-    invariants — edge list, vertex set, out-degrees — so each is
-    computed ONCE instead of once per unrolled iteration leg (the
+    The iteration invariants — edge list, vertex set, out-degrees —
+    are lazily checkpointed, so each is computed ONCE instead of once
+    per unrolled iteration leg (the
     standard persist-the-graph discipline of iterative algorithms;
     without it the edge-list derivation re-executes ~2x per iteration
     and the plan tree grows multiplicatively).  Lazy checkpoints run
@@ -75,16 +72,14 @@ def pagerank(
     # NULL endpoints can never receive or contribute mass (joins skip
     # them) but WOULD otherwise surface as a phantom NULL vertex in the
     # output — drop them up front
-    e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d")).dropna()
-    if materialize:
-        e = e.localCheckpoint(eager=False)
+    e = edges.select(F.col("src").alias("__s"), F.col("dst").alias("__d")).dropna()
+    e = e.localCheckpoint(eager=False)
     verts = (
         e.select(F.col("__s").alias("v"))
         .unionAll(e.select(F.col("__d").alias("v")))
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    if materialize:
-        verts = verts.localCheckpoint(eager=False)
     n1 = verts.agg(F.count("*").alias("__n"))
     verts_n = verts.crossJoin(F.broadcast(n1))
     outdeg = e.groupBy("__s").agg(F.count("*").alias("__deg"))
@@ -93,9 +88,7 @@ def pagerank(
     # edges annotated with their source's out-degree are an iteration
     # INVARIANT — join once outside the loop (and checkpoint it) so
     # each unrolled iteration pays one join (edges x ranks), not two
-    e_deg = e.join(outdeg, "__s")
-    if materialize:
-        e_deg = e_deg.localCheckpoint(eager=False)
+    e_deg = e.join(outdeg, "__s").localCheckpoint(eager=False)
     ranks = verts_n.select("v", (F.lit(1.0) / F.col("__n")).alias("rank"))
     base = 1.0 - damping
     for _ in range(iterations):
@@ -170,19 +163,13 @@ def triangle_enumerate(
     )
 
 
-def negative_edges(
-    edges: DataFrame,
-    k: int = 2,
-    src: str = "id_a",
-    dst: str = "id_b",
-    seed: int = 0,
-) -> DataFrame:
+def negative_edges(edges: DataFrame, k: int = 2) -> DataFrame:
     """Deterministic negative sampling for link-prediction training:
     for every node appearing in the (canonically ordered, undirected)
-    edge list, ``k`` candidate partners drawn by md5 hash over a dense
-    node index, minus real edges and self-pairs — the non-edge half of
-    every graph-embedding / GNN training batch, reproducible across
-    runs and engines (no RNG state; the hash family is the repo's
+    ``(id_a, id_b)`` edge list, ``k`` candidate partners drawn by md5
+    hash over a dense node index, minus real edges and self-pairs — the
+    non-edge half of every graph-embedding / GNN training batch,
+    reproducible across runs and engines (no RNG state; the hash family is the repo's
     ``md5_hash64`` convention, replayable in SQL).
 
     Scale shape: the node universe is |V|-sized (a global-ordered dense
@@ -196,7 +183,7 @@ def negative_edges(
     """
     from .dedup import md5_hash64
 
-    e = edges.select(F.col(src).alias("__u"), F.col(dst).alias("__v"))
+    e = edges.select(F.col("id_a").alias("__u"), F.col("id_b").alias("__v"))
     nodes = (
         e.select(F.col("__u").alias("__n"))
         .unionAll(e.select(F.col("__v").alias("__n")))
@@ -213,8 +200,7 @@ def negative_edges(
                 F.array(*[
                     (
                         md5_hash64(
-                            F.concat_ws(":", F.col("__n").cast("string"), F.lit(str(i))),
-                            seed=seed,
+                            F.concat_ws(":", F.col("__n").cast("string"), F.lit(str(i)))
                         )
                         % F.col("__nv")
                     ).cast("int")
@@ -242,20 +228,18 @@ def negative_edges(
     )
 
 
-def clustering_coefficients(
-    edges: DataFrame, src: str = "id_a", dst: str = "id_b"
-) -> DataFrame:
+def clustering_coefficients(edges: DataFrame) -> DataFrame:
     """Local clustering coefficient per node over a canonically-ordered
-    undirected edge list: cc(v) = 2·tri(v) / (deg(v)·(deg(v)−1)) — how
-    clique-like each neighborhood is (dup-cluster quality, community
-    cohesion, basket-graph analysis).  Nodes of degree < 2 score 0.
+    undirected ``(id_a, id_b)`` edge list: cc(v) = 2·tri(v) /
+    (deg(v)·(deg(v)−1)) — how clique-like each neighborhood is
+    (dup-cluster quality, community cohesion, basket-graph analysis).  Nodes of degree < 2 score 0.
 
     Scale shape: degrees are one hash aggregate over the edge list;
     per-node triangle counts come from ``triangle_enumerate`` (two hash
     joins, wedge-bounded) with each triangle credited to its three
     corners via a narrow explode — no new join shapes beyond the
     triangle pass.  Returns (node, degree, triangles, cc)."""
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    e = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))

@@ -31,16 +31,12 @@ def append_history(hist: DataFrame, batch: DataFrame) -> DataFrame:
     return hist.unionByName(batch)
 
 
-def year_slice(
-    df: DataFrame, date_col: str, year: int, fmt: str | None = None
-) -> DataFrame:
-    """F3: partition-prunable year filter.  ``fmt`` parses string dates
-    (e.g. the reference's 'yyyy/MM/dd'); date/timestamp columns pass
+def year_slice(df: DataFrame, date_col: str, year: int) -> DataFrame:
+    """F3: partition-prunable year filter.  String dates parse as ISO
+    or as the reference's 'yyyy/MM/dd'; date/timestamp columns pass
     through untouched."""
     c = F.col(date_col)
-    if fmt is not None:
-        c = F.to_date(c, fmt)
-    elif dict(df.dtypes).get(date_col) == "string":
+    if dict(df.dtypes).get(date_col) == "string":
         c = F.coalesce(F.to_date(c), F.to_date(c, "yyyy/MM/dd"))
     return df.filter(F.year(c) == year)
 

@@ -51,11 +51,11 @@ def blocked_candidates(
     left: DataFrame,
     right: DataFrame,
     block_cols: list[str],
-    suffixes: tuple[str, str] = ("_l", "_r"),
     max_block: "int | None" = 1000,
 ) -> DataFrame:
     """Candidate pairs via equi join on the blocking key(s).  All
-    non-block columns are suffixed; block columns keep one copy.
+    non-block columns are suffixed ``_l`` / ``_r``; block columns keep
+    one copy.
 
     ``max_block`` bounds each side's rows admitted per block — the
     skew guard: one hot block (a default name suffix, a null-ish
@@ -69,7 +69,7 @@ def blocked_candidates(
     results an explicit under-approximation on over-full blocks — the
     same contract as ``lsh_similar_pairs(max_bucket)`` /
     ``band_join(max_per_group)``."""
-    ls, rs = suffixes
+    ls, rs = "_l", "_r"
     lren = left.select(
         *[F.col(c) for c in block_cols],
         *[F.col(c).alias(f"{c}{ls}") for c in left.columns if c not in block_cols],
@@ -95,7 +95,6 @@ def multi_blocked_candidates(
     right: DataFrame,
     passes: "list[list[tuple[Column, Column]]]",
     id_cols: tuple[str, str],
-    suffixes: tuple[str, str] = ("_l", "_r"),
     max_block: "int | None" = 1000,
 ) -> DataFrame:
     """Multi-pass blocking union — the standard recall/cost shape for
@@ -128,7 +127,7 @@ def multi_blocked_candidates(
       materialized once per surviving pair, never per raw candidate.
     """
     lid, rid = id_cols
-    ls, rs = suffixes
+    ls, rs = "_l", "_r"
     parts = []
     for exprs in passes:
         bk = [f"__bk{j}" for j in range(len(exprs))]

@@ -60,7 +60,6 @@ def fake_decode(content: bytes, mime: str) -> list[float]:
 def extract_features(
     media: DataFrame,
     decoder: Callable[[bytes, str], list[float]] = fake_decode,
-    batch_hint: int = 256,
 ) -> DataFrame:
     """mapInPandas feature extraction: Arrow-batched, one Python worker
     per partition; repartition upstream so a batch of media fits in
@@ -105,16 +104,12 @@ def fake_resize(content: bytes, mime: str, width: int, height: int) -> bytes:
     return (seed * (n // len(seed) + 1))[:n]
 
 
-def resize_images(
-    media: DataFrame,
-    width: int,
-    height: int,
-    resizer: Callable[[bytes, str, int, int], bytes] = fake_resize,
-) -> DataFrame:
+def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     """mapInPandas image resize.  Only ``kind == 'image'`` rows enter the
     Python stage (the filter is JVM-side, before any Arrow transfer);
     output carries the new dims as typed columns.  A real deployment
-    swaps ``resizer`` for PIL/libvips; the Spark plumbing is identical."""
+    swaps ``fake_resize`` for PIL/libvips; the Spark plumbing is
+    identical."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -124,7 +119,7 @@ def resize_images(
                     "kind": pdf["kind"],
                     "mime": pdf["mime"],
                     "content": [
-                        resizer(c, m, width, height)
+                        fake_resize(c, m, width, height)
                         for c, m in zip(pdf["content"], pdf["mime"])
                     ],
                     "width": width,
@@ -545,13 +540,12 @@ DHASH_SCHEMA = T.StructType(
 )
 
 
-def image_dhash(media: DataFrame, grid: int = 8) -> DataFrame:
-    """Perceptual difference-hash over REAL decoded pixels: sample a
-    grid×grid grayscale matrix by nearest-neighbor (sx = x·w // grid),
-    emit one bit per horizontal gradient (gray[y][x] > gray[y][x+1]),
-    packed little-endian at position y·(grid−1)+x — 56 bits at the
-    default 8×8 grid, safely inside BIGINT.  Encoding-invariant: the
-    same pixels as PPM or BMP hash identically, so cross-format
+def image_dhash(media: DataFrame) -> DataFrame:
+    """Perceptual difference-hash over REAL decoded pixels: sample an
+    8×8 grayscale matrix by nearest-neighbor (sx = x·w // 8), emit one
+    bit per horizontal gradient (gray[y][x] > gray[y][x+1]), packed
+    little-endian at position y·7+x — 56 bits, safely inside BIGINT.
+    Encoding-invariant: the same pixels as PPM or BMP hash identically, so cross-format
     re-encodes dedup exactly, and near-identical images land within a
     few hamming bits (pair with dedup.hamming64).
 
@@ -564,6 +558,7 @@ def image_dhash(media: DataFrame, grid: int = 8) -> DataFrame:
 
     def one(content: bytes) -> int:
         _fmt, w, h, px = decode_image_pixels(content)
+        grid = 8
         bits = 0
         for y in range(grid):
             sy = (y * h) // grid
@@ -593,20 +588,19 @@ def image_dhash(media: DataFrame, grid: int = 8) -> DataFrame:
     )
 
 
-def image_near_dup_pairs(
-    media: DataFrame,
-    bands: int = 4,
-    band_bits: int = 14,
-    max_hamming: int = 3,
-    grid: int = 8,
-) -> DataFrame:
+# dHash banding of ``image_near_dup_pairs``: 4 bands of 14 bits, pairs
+# kept at hamming distance <= 3
+_BANDS, _BAND_BITS, _MAX_HAMMING = 4, 14, 3
+
+
+def image_near_dup_pairs(media: DataFrame) -> DataFrame:
     """Perceptual near-duplicate image pairs: dHash (the one decode
     boundary) → banded hamming LSH → exact hamming verify.  Catches
     same-picture-different-container duplicates (and mild edits) that
     byte-level exact dedup can never see.
 
     Recall contract: a pair at hamming distance d differs in at most d
-    bands, so with ``bands > max_hamming`` every qualifying pair shares
+    bands, so with more bands than the hamming cut every qualifying pair shares
     at least one identical band (pigeonhole) — recall-exact for
     d ≤ bands−1, the same argument as MinHash banding.
 
@@ -619,8 +613,8 @@ def image_near_dup_pairs(
     LSH path)."""
     from .dedup import hamming64
 
-    mask = (1 << band_bits) - 1
-    h = image_dhash(media, grid=grid)
+    mask = (1 << _BAND_BITS) - 1
+    h = image_dhash(media)
     bd = h.select(
         "media_id",
         "dhash",
@@ -630,11 +624,11 @@ def image_near_dup_pairs(
                     F.struct(
                         F.lit(b).alias("b"),
                         (
-                            F.shiftright(F.col("dhash"), b * band_bits)
+                            F.shiftright(F.col("dhash"), b * _BAND_BITS)
                             .bitwiseAND(F.lit(mask))
                         ).alias("v"),
                     )
-                    for b in range(bands)
+                    for b in range(_BANDS)
                 ]
             )
         ).alias("__bd"),
@@ -653,6 +647,6 @@ def image_near_dup_pairs(
     )
     return (
         cand.withColumn("hamming", hamming64(F.col("__ha"), F.col("__hb")))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= _MAX_HAMMING)
         .select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
     )

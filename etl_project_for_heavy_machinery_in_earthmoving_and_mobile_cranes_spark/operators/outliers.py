@@ -25,10 +25,10 @@ def mark_outliers(
     lo: float = 0.8,
     hi: float = 1.2,
     unknown_if=None,
-    out_col: str = "outliers",
     unknown_label: str = "UNKNOWN",
 ) -> DataFrame:
-    """Label each row 'yes' / 'no' / ``unknown_label`` vs its group median.
+    """Label each row 'yes' / 'no' / ``unknown_label`` vs its group
+    median, in column ``outliers``.
 
     ``unknown_if``: optional Column marking rows that cannot be judged
     (reference: model unknown, capacity unknown, or used machine).
@@ -51,7 +51,7 @@ def mark_outliers(
     )
     if unknown_if is not None:
         verdict = F.when(unknown_if, unknown_label).otherwise(verdict)
-    return out.withColumn(out_col, verdict).drop("__med")
+    return out.withColumn("outliers", verdict).drop("__med")
 
 
 def iqr_outliers(
@@ -100,17 +100,19 @@ def iqr_outliers(
     )
 
 
+# robust-z cut (Iglewicz-Hoban) and the MAD-to-sigma scale
+_MAD_K, _MAD_CONSISTENCY = 3.5, 1.4826
+
+
 def mad_outliers(
     df: DataFrame,
     keys: Sequence[str],
     value_col: str,
-    k: float = 3.5,
-    consistency: float = 1.4826,
 ) -> DataFrame:
     """Per-group robust-z outliers via Median Absolute Deviation.
 
     MAD = median(|x − median(x)|); a row is an outlier when
-    ``|x − med| > k · consistency · MAD`` (1.4826 scales MAD to σ under
+    ``|x − med| > 3.5 · 1.4826 · MAD`` (1.4826 scales MAD to σ under
     normality; k=3.5 is the textbook Iglewicz-Hoban cut).  Unlike the
     reference's fixed ±20 %-of-median rule (mark_outliers,
     `data_processing_program_20240520.py:287-316`), the threshold adapts
@@ -140,7 +142,7 @@ def mad_outliers(
             F.first("mad").alias("mad"),
             F.count("*").alias("n"),
             F.count(
-                F.when(F.abs(v - F.col("med")) > k * consistency * F.col("mad"), 1)
+                F.when(F.abs(v - F.col("med")) > _MAD_K * _MAD_CONSISTENCY * F.col("mad"), 1)
             ).alias("n_outliers"),
         )
     )
@@ -153,12 +155,12 @@ def winsorize(
     lo: float = 0.05,
     hi: float = 0.95,
     round_bounds: int | None = None,
-    out_col: str | None = None,
 ) -> DataFrame:
     """Clip ``val`` to its per-group [lo, hi] exact percentiles
-    (winsorization) — the robust-mean companion of the IQR/MAD outlier
-    markers: instead of flagging tails, pin them to the fence so
-    downstream means aren't tail-dominated.
+    (winsorization), in column ``{val}_wins`` — the robust-mean
+    companion of the IQR/MAD outlier markers: instead of flagging
+    tails, pin them to the fence so downstream means aren't
+    tail-dominated.
 
     ``round_bounds`` rounds the fences before clipping; cross-engine
     interpolated percentiles agree to ~4dp, so oracle-checked pipelines
@@ -183,7 +185,7 @@ def winsorize(
         )
     out = df.join(F.broadcast(b), list(keys))
     return out.withColumn(
-        out_col or f"{val}_wins",
+        f"{val}_wins",
         F.least(F.greatest(v, F.col("_w_lo")), F.col("_w_hi")),
     )
 

@@ -403,11 +403,10 @@ def k_anonymize(
     df: DataFrame,
     quasi_cols: "Sequence[str]",
     k: int,
-    other: str = "OTHER",
 ) -> DataFrame:
     """k-anonymity suppression for data release: any combination of
     quasi-identifier values shared by fewer than ``k`` rows is folded
-    into the ``other`` sentinel (all quasi columns at once — partial
+    into the ``'OTHER'`` sentinel (all quasi columns at once — partial
     generalization hierarchies are the caller's concern).  After the
     fold every surviving ORIGINAL group has >= k members.  The OTHER
     bucket aggregates every rare combination; if the corpus has fewer
@@ -441,7 +440,7 @@ def k_anonymize(
     out = df.join(F.broadcast(small), cond, "left")
     for c in quasi_cols:
         out = out.withColumn(
-            c, F.when(F.col("__fold"), F.lit(other)).otherwise(F.col(c))
+            c, F.when(F.col("__fold"), F.lit("OTHER")).otherwise(F.col(c))
         )
     return out.drop("__fold", *[f"__q_{c}" for c in quasi_cols])
 
@@ -475,9 +474,8 @@ def guarded_m1_join(
     left: DataFrame,
     right: DataFrame,
     on: "Sequence[str] | str",
-    how: str = "left",
 ) -> DataFrame:
-    """Equi join that ENFORCES the right side is unique on the join key
+    """Left equi join that ENFORCES the right side is unique on the join key
     (an m:1 join): any duplicate right-side key raises at execution
     time, instead of silently fanning out rows and double-counting
     every downstream aggregate — the single most common silent-wrong
@@ -513,7 +511,7 @@ def guarded_m1_join(
         right.join(F.broadcast(dup), keys)
         .withColumn(guard_key, guarded)
     )
-    return left.join(checked, keys, how).drop("__kn")
+    return left.join(checked, keys, "left").drop("__kn")
 
 
 def categorical_drift(
@@ -521,11 +519,10 @@ def categorical_drift(
     group_col: str,
     cat_col: str,
     baseline: str,
-    alpha: float = 0.5,
 ) -> DataFrame:
     """Distribution drift over a CATEGORICAL column (category values
     are the bins): PSI + Jensen-Shannon per group vs the baseline
-    group with the same add-alpha smoothing as the numeric form — the
+    group with add-0.5 smoothing (the numeric form's default) — the
     mix monitor for label/language/source composition where equi-width
     bins make no sense.
 
@@ -553,10 +550,10 @@ def categorical_drift(
     totals = full.groupBy("__g").agg(
         F.sum("__c").alias("__tot"), F.count("*").alias("__ncat")
     )
-    smooth_tot = F.col("__tot") + F.lit(alpha) * F.col("__ncat")
+    smooth_tot = F.col("__tot") + F.lit(0.5) * F.col("__ncat")
     props = full.join(totals, "__g").select(
         "__g", "__c_val", "__tot",
-        ((F.col("__c") + F.lit(alpha)) / smooth_tot).alias("__p"),
+        ((F.col("__c") + F.lit(0.5)) / smooth_tot).alias("__p"),
     )
     base = props.filter(F.col("__g") == baseline).select(
         "__c_val", F.col("__p").alias("__q")

@@ -108,38 +108,31 @@ def band_join(
     return lx.join(rx, on=cond & band, how=how).drop("__b")
 
 
-def infer_unknown_models(
-    df: DataFrame,
-    brand: str = "brand",
-    type_col: str = "type",
-    model: str = "model",
-    capacity: str = "capacity",
-    tol: float = 0.05,
-) -> DataFrame:
-    """J5 end-to-end: fill NULL models from same-brand/type rows with a
-    capacity within ±tol.  Winner = smallest |capacity delta|, then model
-    asc (deterministic; reference takes first-iterated row).
+def infer_unknown_models(df: DataFrame) -> DataFrame:
+    """J5 end-to-end: fill NULL ``model`` from same-``brand``/``type``
+    rows with a ``capacity`` within ±5 %.  Winner = smallest
+    |capacity delta|, then model asc (deterministic; reference takes first-iterated row).
 
     Shape: one window over (brand, type) collects the group's distinct
     known (capacity, model) pairs; each inferable row filters them to
     its band and takes the minimum (|delta|, model).  The window's
     exchange is the only shuffle — no self-join, no join back.
     """
-    cap, mdl = F.col(capacity), F.col(model)
+    cap, mdl = F.col("capacity"), F.col("model")
     known = F.collect_set(
         F.when(mdl.isNotNull() & cap.isNotNull(), F.struct(cap.alias("c"), mdl.alias("m")))
-    ).over(Window.partitionBy(brand, type_col))
-    in_band = F.filter(known, lambda k: k["c"].between(cap * (1 - tol), cap * (1 + tol)))
+    ).over(Window.partitionBy("brand", "type"))
+    in_band = F.filter(known, lambda k: k["c"].between(cap * 0.95, cap * 1.05))
     best = F.array_min(
         F.transform(in_band, lambda k: F.struct(F.abs(k["c"] - cap).alias("d"), k["m"].alias("m")))
     )["m"]
     inferable = (
-        mdl.isNull() & F.col(brand).isNotNull() & F.col(type_col).isNotNull() & cap.isNotNull()
+        mdl.isNull() & F.col("brand").isNotNull() & F.col("type").isNotNull() & cap.isNotNull()
     )
     return (
         df.withColumn("__inferred_model", F.when(inferable, best))
         .withColumn("__model_inferred", mdl.isNull() & F.col("__inferred_model").isNotNull())
-        .withColumn(model, F.coalesce(mdl, F.col("__inferred_model")))
+        .withColumn("model", F.coalesce(mdl, F.col("__inferred_model")))
         .drop("__inferred_model")
     )
 
@@ -152,7 +145,6 @@ def interval_overlap_join(
     r_start: str,
     r_end: str,
     grain_seconds: int = 3600,
-    equi_keys: Sequence[str] = (),
 ) -> DataFrame:
     """Inner join of two interval tables on overlap of half-open
     intervals [start, end): ``l_start < r_end AND r_start < l_end``.
@@ -161,7 +153,7 @@ def interval_overlap_join(
     and unpartitionable.  The scale shape bins both sides into fixed
     time buckets of ``grain_seconds``: each interval explodes into the
     buckets it touches, the join becomes an equi join on
-    (equi_keys…, bucket), and the exact overlap predicate runs as a
+    the bucket, and the exact overlap predicate runs as a
     residual filter.  Shuffled rows = |intervals| ·
     avg-buckets-per-interval; pick the grain near the typical interval
     length to keep that factor ~2.
@@ -208,7 +200,7 @@ def interval_overlap_join(
 
     lb = bucketed(left, l_start, l_end)
     rb = bucketed(right, r_start, r_end)
-    joined = lb.join(rb, [*equi_keys, "_io_bucket"]).filter(
+    joined = lb.join(rb, "_io_bucket").filter(
         (F.col(l_start) < F.col(r_end)) & (F.col(r_start) < F.col(l_end))
     )
     return joined.filter(

@@ -82,12 +82,11 @@ def shuffle_rank(
     key_col: str,
     seed: int = 0,
     n_buckets: int = 1024,
-    rank_col: str = "shuffle_rank",
 ) -> DataFrame:
     """Deterministic global shuffle order with an explicit 1-based rank —
     the train-order randomization step of a corpus pipeline, as a pure
     function of the key (reruns, backfills, and other engines produce
-    the identical order).
+    the identical order), in column ``shuffle_rank``.
 
     A naive ``row_number() OVER (ORDER BY hash)`` is a single-partition
     sort — the classic global-window scale trap.  This is the two-pass
@@ -123,7 +122,7 @@ def shuffle_rank(
     ).select("__sb", "__off")
     return (
         ranked.join(F.broadcast(offsets), "__sb")
-        .withColumn(rank_col, (F.col("__off") + F.col("__in_rank")).cast("bigint"))
+        .withColumn("shuffle_rank", (F.col("__off") + F.col("__in_rank")).cast("bigint"))
         .drop("__sb", "__in_rank", "__off")
     )
 
@@ -259,10 +258,9 @@ def weighted_sample_topk(
     key_col: str,
     weight_col: str,
     k: int,
-    seed: int = 0,
-    score_col: str = "score",
 ) -> DataFrame:
-    """Weighted sampling without replacement (Efraimidis–Spirakis A-ES).
+    """Weighted sampling without replacement (Efraimidis–Spirakis A-ES),
+    with the sampling key in column ``score``.
 
     Each row draws a deterministic uniform u∈(0,1) from its key; the k
     rows with the largest ``u^(1/w)`` — equivalently largest
@@ -278,11 +276,11 @@ def weighted_sample_topk(
     to 12 dp so libm ln() last-ulp differences can't reorder engines,
     and the key breaks residual ties.
     """
-    u = (hash_bucket(F.col(key_col), seed) + F.lit(0.5)) / F.lit(float(_BUCKETS))
+    u = (hash_bucket(F.col(key_col)) + F.lit(0.5)) / F.lit(float(_BUCKETS))
     score = F.round(F.log(u) / F.col(weight_col), 12)
     return (
-        df.withColumn(score_col, score)
-        .orderBy(F.col(score_col).desc(), F.col(key_col).asc())
+        df.withColumn("score", score)
+        .orderBy(F.col("score").desc(), F.col(key_col).asc())
         .limit(k)
     )
 
@@ -294,7 +292,6 @@ def epoch_replicate(
     epochs: dict[str, float],
     default_epochs: float = 1.0,
     seed: int = 0,
-    copy_col: str = "copy",
 ) -> DataFrame:
     """Epoch-weighted corpus replication — the "N epochs per source"
     data-mixture recipe (2 epochs of the curated source, 0.3 of the
@@ -329,7 +326,7 @@ def epoch_replicate(
     copies = F.when(
         n >= 1, F.sequence(F.lit(1), n)
     ).otherwise(F.array().cast("array<int>"))
-    return df.withColumn(copy_col, F.explode(copies))
+    return df.withColumn("copy", F.explode(copies))
 
 
 def balanced_sample(
@@ -368,7 +365,6 @@ def target_mix_sample(
     stratum_col: str,
     key_col: str,
     target_shares: "dict[str, float]",
-    seed: int = 0,
 ) -> DataFrame:
     """Downsample strata to hit an EXPLICIT target mixture (the
     complement of ``temperature_mix``, which only flattens): given
@@ -411,19 +407,11 @@ def target_mix_sample(
         F.broadcast(rates), F.col(stratum_col) == F.col("__s"), "inner"
     )
     cut = (F.col("__rate") * F.lit(float(_BUCKETS))).cast("bigint")
-    kept = out.filter(hash_bucket(F.col(key_col), seed) < cut)
+    kept = out.filter(hash_bucket(F.col(key_col)) < cut)
     return kept.drop("__s", "__rate")
 
 
-def per_group_cap(
-    df: DataFrame,
-    group_col: str,
-    key_col: str,
-    cap: int,
-    seed: int = 0,
-    approx_prefilter: bool = False,
-    slack: float = 4.0,
-) -> DataFrame:
+def per_group_cap(df: DataFrame, group_col: str, key_col: str, cap: int) -> DataFrame:
     """Cap every group at ``cap`` rows, selection deterministic in the
     key — the per-domain document limit of web-corpus curation (one
     domain may not dominate the training mix no matter how large its
@@ -437,63 +425,13 @@ def per_group_cap(
 
     Scale shape: one window shuffle on the group key.  Group skew is
     the caveat — a giant domain sorts its whole partition to rank it.
-    ``approx_prefilter=True`` is the two-phase rank for that case:
-    phase 1 counts rows per group (a map-side-combined agg whose
-    output is |groups|-sized) and keeps only rows whose hash bucket
-    falls under ``_BUCKETS · cap · slack / n_g`` — sound because kept-
-    set membership depends ONLY on the bucket order, so as long as a
-    group still has ≥ min(cap, n_g) surviving rows, its top-``cap`` by
-    (bucket, key) is unchanged.  Groups where the uniform-hash tail
-    leaves fewer survivors than that (probability ≈ Chernoff tail at
-    ``slack``=4, i.e. negligible, but never assumed) are detected by a
-    per-group recount and re-ranked UNFILTERED, so the result is
-    bit-identical to the one-phase path on every input.  The window
-    then sorts O(cap·slack) rows per giant group instead of n_g.
     """
-    order = (hash_bucket(F.col(key_col), seed), F.col(key_col))
-    w = Window.partitionBy(group_col).orderBy(*order)
-    ranked_cap = (
-        lambda part: part.withColumn("__rk", F.row_number().over(w))
+    w = Window.partitionBy(group_col).orderBy(hash_bucket(F.col(key_col)), F.col(key_col))
+    return (
+        df.withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") <= cap)
         .drop("__rk")
     )
-    if not approx_prefilter:
-        return ranked_cap(df)
-
-    bucket = hash_bucket(F.col(key_col), seed)
-    counts = df.groupBy(group_col).agg(F.count("*").alias("__n"))
-    thr = F.when(F.col("__n") <= F.lit(cap), F.lit(_BUCKETS)).otherwise(
-        F.least(
-            F.lit(_BUCKETS),
-            F.ceil(F.lit(float(_BUCKETS) * cap * slack) / F.col("__n")).cast(
-                "bigint"
-            ),
-        )
-    )
-    thr_tab = counts.select(group_col, thr.alias("__thr"), F.col("__n"))
-    # read twice (survivor recount + the safe-path rank): a deliberate
-    # second scan rather than a persist — the input is typically a
-    # pruned parquet scan, far cheaper than the giant-group sort this
-    # path exists to avoid, and it keeps the operator cache-free (no
-    # ownership contract for callers to honor)
-    pruned = df.join(F.broadcast(thr_tab), group_col).filter(
-        bucket < F.col("__thr")
-    )
-    # soundness check: a group is safe iff it kept >= min(cap, n) rows
-    survivors = pruned.groupBy(group_col).agg(F.count("*").alias("__s"))
-    unsafe = (
-        counts.join(survivors, group_col, "left")
-        .filter(
-            F.coalesce(F.col("__s"), F.lit(0))
-            < F.least(F.lit(cap), F.col("__n"))
-        )
-        .select(group_col)
-    )
-    safe_part = pruned.join(F.broadcast(unsafe), group_col, "left_anti").drop(
-        "__thr", "__n"
-    )
-    rescue_part = df.join(F.broadcast(unsafe), group_col, "left_semi")
-    return ranked_cap(safe_part.unionByName(rescue_part))
 
 
 def dsir_importance(
@@ -502,7 +440,6 @@ def dsir_importance(
     text_col: str,
     target_col: str,
     dim: int = 256,
-    seed: int = 0,
 ) -> DataFrame:
     """Data Selection with Importance Resampling (DSIR, Xie et al.
     2023): score every document by how target-like its hashed n-gram
@@ -539,7 +476,7 @@ def dsir_importance(
         )
         .select(id_col, "__tgt", F.explode_outer(bigrams(F.col("__tk"))).alias("__g"))
         .select(
-            id_col, "__tgt", (md5_hash64(F.col("__g"), seed) % dim).cast("int").alias("__b")
+            id_col, "__tgt", (md5_hash64(F.col("__g")) % dim).cast("int").alias("__b")
         )
         .groupBy(id_col, "__tgt", "__b")
         .agg(F.count("__b").alias("__c"))

@@ -17,7 +17,7 @@ tractable; for pathological single-key logs pre-split by day first.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -26,9 +26,8 @@ def sessionize(
     entity_col: str,
     ts_col: str,
     gap_seconds: int = 1800,
-    session_col: str = "session_seq",
 ) -> DataFrame:
-    """Add ``session_col``: 1-based session sequence number per entity.
+    """Add ``session_seq``: 1-based session sequence number per entity.
 
     A row opens a new session when it is the entity's first event or
     arrives more than ``gap_seconds`` after the previous event
@@ -43,7 +42,7 @@ def sessionize(
     ).cast("int")
     # cumulative sum of session-open flags = session sequence number
     return df.withColumn(
-        session_col,
+        "session_seq",
         F.sum(new_session).over(w.rowsBetween(Window.unboundedPreceding, 0)),
     )
 

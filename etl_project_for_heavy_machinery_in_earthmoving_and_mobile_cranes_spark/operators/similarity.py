@@ -33,6 +33,12 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# MLlib KMeans settings of the trained quantizers
+_TRAIN_SEED = 7
+_TRAIN_ITERS = 8
+# decimal type the per-dim embedding sums accumulate in
+_DEC = "decimal(18,8)"
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -196,29 +202,20 @@ def brute_force_knn(
     return _cosine_knn(c.crossJoin(F.broadcast(q)), k)
 
 
-def near_dup_pairs(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
+def near_dup_pairs(corpus: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥
     threshold).  Brute-force baseline; at scale swap the self cross join
     for the SRP-bucketed candidate join in ``lsh_knn`` (same scoring)."""
-    a = _side(corpus, id_col, vec_col, "id_a", "a")
-    b = _side(corpus, id_col, vec_col, "id_b", "b")
+    a = _side(corpus, "vec_id", "embedding", "id_a", "a")
+    b = _side(corpus, "vec_id", "embedding", "id_b", "b")
     return _pairs_at_least(a.join(b, on=F.col("id_a") < F.col("id_b")), threshold)
 
 
 def near_dup_pairs_bucketed(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    centroids: list[list[float]],
     threshold: float = 0.95,
-    centroids: list[list[float]] | None = None,
-    n_cells: int = 16,
     nprobe: int = 2,
-    seed: int = 7,
     max_cell: int | None = None,
     return_drop_stats: bool = False,
 ):
@@ -242,8 +239,7 @@ def near_dup_pairs_bucketed(
     ``drops`` is a lazy (cell, width) DataFrame of exactly the cells
     the cap excluded (empty frame when uncapped); count/log it and
     re-train the quantizer with more cells if it is non-trivial."""
-    if centroids is None:
-        centroids = train_ivf_centroids(corpus, vec_col, n_cells=n_cells, seed=seed)
+    id_col, vec_col = "vec_id", "embedding"
     cells = assign_cells(
         corpus.select(F.col(id_col), F.col(vec_col)), vec_col, centroids,
         nprobe=nprobe,
@@ -283,15 +279,13 @@ def near_dup_pairs_bucketed(
 def ann_union_knn(
     corpus: DataFrame,
     queries: DataFrame,
+    centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
     num_planes: int = 3,
     dim: int = 64,
     seed: int = 13,
-    centroids: list[list[float]] | None = None,
-    n_cells: int = 8,
-    ivf_seed: int = 11,
     nprobe: int = 2,
 ) -> DataFrame:
     """Multi-retriever ANN with exact verification — the registered
@@ -311,8 +305,6 @@ def ann_union_knn(
     AFTERWARDS (``_attach``) for the one exact scoring pass per
     distinct candidate.  Previously both 64-dim vectors rode the dedup
     exchange (~70× wider rows at candidate-mass count)."""
-    if centroids is None:
-        centroids = det_centroids(ivf_seed, n_cells, dim)
     planes = [_det_plane(seed, i, dim) for i in range(num_planes)]
     cb = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -433,24 +425,18 @@ def train_ivf_centroids(
     corpus: DataFrame,
     vec_col: str = "embedding",
     n_cells: int = 16,
-    seed: int = 7,
-    max_iter: int = 8,
-    sample_fraction: float = 1.0,
+    seed: int = _TRAIN_SEED,
 ) -> list[list[float]]:
-    """K-means coarse quantizer.  At 100 TB train on a sample (k-means
-    centroids converge on a tiny uniform sample of the corpus); the
-    returned centroids are plain floats — broadcast as literals, no
-    model object shipped to executors."""
+    """K-means coarse quantizer.  The returned centroids are plain
+    floats — broadcast as literals, no model object shipped to
+    executors."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    train = corpus
-    if sample_fraction < 1.0:
-        train = train.sample(fraction=sample_fraction, seed=seed)
-    feats = train.select(
+    feats = corpus.select(
         array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
     )
-    model = KMeans(k=n_cells, seed=seed, maxIter=max_iter).fit(feats)
+    model = KMeans(k=n_cells, seed=seed, maxIter=_TRAIN_ITERS).fit(feats)
     return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
@@ -511,21 +497,17 @@ def _ivf_candidates(
 def ivf_knn(
     corpus: DataFrame,
     queries: DataFrame,
+    centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    n_cells: int = 16,
     nprobe: int = 2,
-    seed: int = 7,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF ANN: corpus rows live in their nearest cell; each query
     probes its ``nprobe`` nearest cells.  The candidate join is an equi
     hash join on cell id — |corpus|·nprobe/n_cells comparisons per
     query instead of |corpus|.  Recall is tuned by nprobe;
     nprobe=n_cells degenerates to exact search."""
-    if centroids is None:
-        centroids = train_ivf_centroids(corpus, vec_col, n_cells=n_cells, seed=seed)
     return _cosine_knn(
         _ivf_candidates(corpus, queries, id_col, vec_col, centroids, nprobe), k
     )
@@ -541,31 +523,25 @@ def train_pq_codebooks(
     vec_col: str = "embedding",
     m: int = 8,
     k: int = 16,
-    seed: int = 7,
-    max_iter: int = 8,
-    sample_fraction: float = 1.0,
 ) -> list[list[list[float]]]:
     """Train ``m`` per-subspace k-means codebooks (k centroids each of
-    dim d/m).  Like the IVF quantizer: train on a sample, return plain
-    floats that compile into literal expressions — no model objects on
-    executors.  m*ceil(log2 k) bits replace d floats per vector; the
-    compressed codes are what a 100 TB corpus keeps hot."""
+    dim d/m).  Like the IVF quantizer: return plain floats that compile
+    into literal expressions — no model objects on executors.
+    m*ceil(log2 k) bits replace d floats per vector; the compressed
+    codes are what a 100 TB corpus keeps hot."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    train = corpus
-    if sample_fraction < 1.0:
-        train = train.sample(fraction=sample_fraction, seed=seed)
-    dim = len(train.select(vec_col).first()[0])
+    dim = len(corpus.select(vec_col).first()[0])
     sub = dim // m
     books = []
     unit = l2_normalize(F.col(vec_col))
-    train = train.select(unit.alias("__v")).persist()
+    train = corpus.select(unit.alias("__v")).persist()
     for s in range(m):
         feats = train.select(
             array_to_vector(F.slice("__v", s * sub + 1, sub)).alias("features")
         )
-        model = KMeans(k=k, seed=seed + s, maxIter=max_iter).fit(feats)
+        model = KMeans(k=k, seed=_TRAIN_SEED + s, maxIter=_TRAIN_ITERS).fit(feats)
         books.append([[float(x) for x in c] for c in model.clusterCenters()])
     train.unpersist()
     return books
@@ -608,7 +584,6 @@ def ivf_pq_knn(
     nprobe: int = 4,
     m: int = 8,
     n_codes: int = 16,
-    seed: int = 7,
     centroids: list[list[float]] | None = None,
     codebooks: list[list[list[float]]] | None = None,
 ) -> DataFrame:
@@ -634,13 +609,9 @@ def ivf_pq_knn(
         l2_normalize(F.col(vec_col)).alias("__qv"),
     )
     if centroids is None:
-        centroids = train_ivf_centroids(
-            unit_corpus, "__cv", n_cells=n_cells, seed=seed
-        )
+        centroids = train_ivf_centroids(unit_corpus, "__cv", n_cells)
     if codebooks is None:
-        codebooks = train_pq_codebooks(
-            unit_corpus, "__cv", m=m, k=n_codes, seed=seed
-        )
+        codebooks = train_pq_codebooks(unit_corpus, "__cv", m=m, k=n_codes)
     sub = len(codebooks[0][0])
     cb = assign_cells(
         pq_encode(unit_corpus, "__cv", codebooks).select(
@@ -687,8 +658,6 @@ def assign_to_nearest(
     df: DataFrame,
     vec_col: str,
     centroids: list[tuple[int, list[float]]],
-    id_out: str = "cluster_id",
-    sim_out: str = "cosine_sim",
 ) -> DataFrame:
     """One k-means assignment step (Lloyd E-step): attach the id of the
     cosine-nearest centroid to every row, ties broken by smallest
@@ -718,20 +687,18 @@ def assign_to_nearest(
     best = F.element_at(F.array_sort(F.array(*structs)), 1)
     return (
         with_norm.withColumn("__best", best)
-        .withColumn(id_out, F.col("__best.cid"))
-        .withColumn(sim_out, F.col("__best.s"))
+        .withColumn("cluster_id", F.col("__best.cid"))
+        .withColumn("cosine_sim", F.col("__best.s"))
         .drop("__vnorm", "__best")
     )
 
 
 def semantic_dedup(
     df: DataFrame,
+    centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
-    n_cells: int = 16,
     tau: float = 0.97,
-    seed: int = 7,
     max_cell: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style embedding-space deduplication (Abbas et al. 2023,
@@ -751,9 +718,9 @@ def semantic_dedup(
     100 TB): the candidate self-join is an equi hash join on cell id —
     cost sum(|cell|^2) instead of N^2 — and cell assignment is the
     shuffle-free literal-argmax map pass from ``assign_cells`` (no
-    model broadcast, no crossJoin).  Centroids train on a tiny sample
-    (``train_ivf_centroids``); more cells => smaller cells => cheaper
-    pairs at a small recall cost, the same dial SemDeDup exposes.
+    model broadcast, no crossJoin).  More cells => smaller cells =>
+    cheaper pairs at a small recall cost, the same dial SemDeDup
+    exposes.
     ``max_cell`` mirrors ``lsh_similar_pairs(max_bucket=...)`` /
     ``ngram_jaccard_pairs(max_df=...)``: cells larger than the cap skip
     pairwise comparison entirely (all rows kept) — a giant cell means
@@ -765,8 +732,6 @@ def semantic_dedup(
     at all (single-process pandas, prog.py) — this operator is part of
     the training-data surface layered on top of its query semantics.
     """
-    if centroids is None:
-        centroids = train_ivf_centroids(df, vec_col, n_cells=n_cells, seed=seed)
     cells = assign_cells(
         df.select(F.col(id_col), F.col(vec_col)), vec_col, centroids, nprobe=1
     )
@@ -795,15 +760,13 @@ def semantic_dedup(
 def hard_negative_mining(
     corpus: DataFrame,
     queries: DataFrame,
+    centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
     lo: float = 0.2,
     hi: float = 0.4,
-    n_cells: int = 16,
     nprobe: int = 2,
-    seed: int = 7,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for every anchor,
     the top-k most-similar corpus vectors whose cosine falls in
@@ -818,8 +781,6 @@ def hard_negative_mining(
     candidates per anchor.  Never an all-pairs scan; centroids are plan
     literals (no model broadcast).
     """
-    if centroids is None:
-        centroids = train_ivf_centroids(corpus, vec_col, n_cells=n_cells, seed=seed)
     return _cosine_knn(
         _ivf_candidates(corpus, queries, id_col, vec_col, centroids, nprobe),
         k,
@@ -831,7 +792,6 @@ def embedding_dim_stats(
     df: DataFrame,
     vec_col: str,
     group_cols: tuple[str, ...] = (),
-    dec: str = "decimal(18,8)",
 ) -> DataFrame:
     """Per-dimension embedding statistics (count, mean, std) — the
     embedding-QC pass that catches dead dimensions (std ~ 0), biased
@@ -849,7 +809,7 @@ def embedding_dim_stats(
     """
     gcols = [F.col(c) for c in group_cols]
     ex = df.select(*gcols, F.posexplode(F.col(vec_col)).alias("dim", "__v"))
-    vdec = F.col("__v").cast(dec)
+    vdec = F.col("__v").cast(_DEC)
     agg = ex.groupBy(*gcols, F.col("dim")).agg(
         F.count("*").alias("n"),
         F.sum(vdec).alias("__s"),
@@ -909,7 +869,6 @@ def centroid_drift(
     split_col: str,
     split_a,
     split_b,
-    dec: str = "decimal(18,8)",
 ) -> DataFrame:
     """Embedding-distribution drift between two slices (snapshots,
     model versions, time windows): per group, the cosine similarity of
@@ -933,7 +892,7 @@ def centroid_drift(
         F.when(sc == split_a, F.lit("a")).otherwise(F.lit("b")).alias("__s"),
         F.posexplode(F.col(vec_col)).alias("__dim", "__v"),
     )
-    vdec = F.col("__v").cast(dec)
+    vdec = F.col("__v").cast(_DEC)
     agg = ex.groupBy("__g", "__s", "__dim").agg(
         F.count("*").alias("__n"), F.sum(vdec).alias("__sum")
     )
@@ -973,7 +932,6 @@ def random_projection(
     out_dim: int,
     dim: int,
     seed: int = 7,
-    round_to: int | None = 6,
 ) -> DataFrame:
     """Johnson-Lindenstrauss random projection: reduce ``dim``-d
     embeddings to ``out_dim`` components with md5-deterministic
@@ -995,10 +953,7 @@ def random_projection(
     for i in range(out_dim):
         p = _det_plane(seed + 9000, i, dim)
         plane = F.array(*[F.lit(x * scale) for x in p])
-        c = dot(F.col(vec_col), plane)
-        if round_to is not None:
-            c = _floor_round(c, round_to)
-        cols.append(c.alias(f"rp_{i}"))
+        cols.append(_floor_round(dot(F.col(vec_col), plane)).alias(f"rp_{i}"))
     return df.select(*cols)
 
 
@@ -1008,7 +963,6 @@ def centroid_outliers(
     vec_col: str,
     group_col: str,
     threshold: float = 0.5,
-    dec: str = "decimal(38,18)",
 ) -> DataFrame:
     """Label-consistency audit in embedding space: each vector's cosine
     to its OWN group's centroid, flagged when it falls under
@@ -1044,7 +998,7 @@ def centroid_outliers(
         ex.groupBy("__g", "__dim")
         .agg(
             F.count("*").alias("__n"),
-            F.sum(F.col("__v").cast("double").cast(dec)).alias("__sum"),
+            F.sum(F.col("__v").cast("double").cast("decimal(38,18)")).alias("__sum"),
         )
         .select(
             "__g",
@@ -1191,10 +1145,8 @@ def ann_int8_pruned(
     queries: DataFrame,
     id_col: str,
     vec_col: str,
+    centroids: list[list[float]],
     k: int = 5,
-    centroids: list[list[float]] | None = None,
-    n_cells: int = 8,
-    ivf_seed: int = 11,
     nprobe: int = 2,
 ) -> DataFrame:
     """The COMPOSED int8 path ``ann_int8``'s docstring specifies: IVF
@@ -1211,8 +1163,6 @@ def ann_int8_pruned(
     Corpus rows carry one home cell, queries probe ``nprobe`` cells, so
     a (query, corpus) pair joins at most once — no dedup pass needed.
     """
-    if centroids is None:
-        centroids = train_ivf_centroids(corpus, vec_col, n_cells=n_cells, seed=ivf_seed)
     cc = assign_cells(
         corpus.select(F.col(id_col), F.col(vec_col)), vec_col, centroids, nprobe=1
     )
@@ -1312,8 +1262,6 @@ def kmeans_lloyd(
     vec_col: str,
     init_centroids: "list[tuple[int, list[float]]]",
     iters: int = 2,
-    decimals: int = 6,
-    dec: str = "decimal(18,8)",
 ) -> "tuple[DataFrame, list[tuple[int, list[float]]]]":
     """Distributed k-means (Lloyd's algorithm) for ``iters`` update
     rounds, returning the final assignment DataFrame and the final
@@ -1337,23 +1285,23 @@ def kmeans_lloyd(
     so callers persist ``df`` when iters > 1 (the registry query does).
 
     Engine-portable determinism (the repo's rounded-comparison
-    discipline): squared distances are floor-rounded at ``decimals``
+    discipline): squared distances are floor-rounded at 6 dp
     BEFORE the argmin and ties break on centroid id, so the winner is
     a comparison of identical doubles in every engine; M-step sums
     accumulate in DECIMAL (a binary float never sits on a decimal
     half-way point, so the quantization is deterministic), and each
-    updated component is floor-rounded at ``decimals`` — the next
+    updated component is floor-rounded at 6 dp — the next
     round's centroids are bit-identical everywhere.  Empty clusters
     keep their previous centroid.
     """
-    scale = float(10**decimals)
+    scale = 1e6
     cents = [(int(cid), [float(x) for x in c]) for cid, c in init_centroids]
     dim = len(cents[0][1])
 
     def assign(cur):
         structs = [
             F.struct(
-                _floor_round(_sq_dist(F.col(vec_col), c), decimals).alias("d"),
+                _floor_round(_sq_dist(F.col(vec_col), c)).alias("d"),
                 F.lit(int(cid)).alias("cid"),
             )
             for cid, c in cur
@@ -1367,7 +1315,7 @@ def kmeans_lloyd(
         )
         rows = (
             ex.groupBy("__cid", "__dim")
-            .agg(F.count("*").alias("__n"), F.sum(F.col("__v").cast(dec)).alias("__s"))
+            .agg(F.count("*").alias("__n"), F.sum(F.col("__v").cast(_DEC)).alias("__s"))
             .collect()
         )
         sums: dict = {}
@@ -1400,11 +1348,8 @@ def kmeans_lloyd(
 def margin_bitext_pairs(
     x: DataFrame,
     y: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 4,
     threshold: float = 1.05,
-    decimals: int = 6,
     centroids: list[list[float]] | None = None,
     nprobe: int = 2,
 ) -> DataFrame:
@@ -1437,7 +1382,7 @@ def margin_bitext_pairs(
     the floor-rounded margin.
 
     Returns (x_id, y_id, cosine, margin), margin ≥ threshold, both
-    rounded at ``decimals``; pairs are drawn from x's top-k list.
+    rounded at 6 dp; pairs are drawn from x's top-k list.
 
     Cache ownership: the returned plan holds the score matrix
     ``persist()``-ed (it feeds three consumers); the blocks are evicted
@@ -1445,6 +1390,7 @@ def margin_bitext_pairs(
     over many corpora calls ``spark.catalog.clearCache()`` between
     rounds.
     """
+    id_col, vec_col = "vec_id", "embedding"
     xs = x.select(
         F.col(id_col).alias("x_id"), l2_normalize(F.col(vec_col)).alias("__xv")
     )
@@ -1501,10 +1447,10 @@ def margin_bitext_pairs(
     return (
         fwd.join(ax, "x_id")
         .join(ay, "y_id")
-        .withColumn("margin", _floor_round(margin, decimals))
+        .withColumn("margin", _floor_round(margin))
         .filter(F.col("margin") >= threshold)
         .select(
-            "x_id", "y_id", _floor_round(F.col("__c"), decimals).alias("cosine"),
+            "x_id", "y_id", _floor_round(F.col("__c")).alias("cosine"),
             "margin",
         )
     )
@@ -1515,7 +1461,6 @@ def pca_power_iteration(
     vec_col: str = "embedding",
     dim: int = 64,
     iters: int = 4,
-    dec: str = "decimal(28,12)",
 ) -> DataFrame:
     """Top principal component of an embedding corpus by MATRIX-FREE
     power iteration — native linear algebra as DataFrame aggregates,
@@ -1549,7 +1494,7 @@ def pca_power_iteration(
     ``spark.catalog.clearCache()`` between rounds.
     """
     ex = df.select(F.posexplode(F.col(vec_col)).alias("dim", "__v"))
-    vdec = F.col("__v").cast(dec)
+    vdec = F.col("__v").cast("decimal(28,12)")
     stats = ex.groupBy("dim").agg(
         F.count("*").alias("n"),
         F.sum(vdec).alias("__s"),
@@ -1565,7 +1510,7 @@ def pca_power_iteration(
         F.transform(ordered, lambda s: s["m"]).alias("__m"),
         # variance per dim quantized to DECIMAL, then an exact sum:
         # total variance is order-free in any engine
-        F.sum((F.col("ex2") - F.col("m") * F.col("m")).cast(dec))
+        F.sum((F.col("ex2") - F.col("m") * F.col("m")).cast("decimal(28,12)"))
         .cast("double")
         .alias("total_var"),
     )
@@ -1592,7 +1537,7 @@ def pca_power_iteration(
             scored.select("__sc", F.posexplode("__c").alias("dim", "__cj"))
             .groupBy("dim")
             .agg(
-                F.sum((F.col("__sc") * F.col("__cj")).cast(dec))
+                F.sum((F.col("__sc") * F.col("__cj")).cast("decimal(28,12)"))
                 .cast("double")
                 .alias("u")
             )

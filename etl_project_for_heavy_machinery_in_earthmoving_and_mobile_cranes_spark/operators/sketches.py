@@ -22,11 +22,11 @@ def hll_distinct(col: str, rsd: float = 0.015) -> Column:
     return F.approx_count_distinct(col, rsd)
 
 
-def approx_quantiles(col: str, probs: list[float], accuracy: int = 10000) -> Column:
+def approx_quantiles(col: str, probs: list[float]) -> Column:
     """Greenwald-Khanna approximate quantiles as an array column.
-    Error is bounded by 1/accuracy of the rank."""
+    Error is bounded by 1/10000 of the rank."""
     return F.percentile_approx(
-        F.col(col), F.array(*[F.lit(p) for p in probs]), F.lit(accuracy)
+        F.col(col), F.array(*[F.lit(p) for p in probs]), F.lit(10000)
     )
 
 
@@ -35,20 +35,17 @@ def quantile_summary(
     group_cols: list[str],
     value_col: str,
     probs: tuple[float, ...] = (0.5, 0.9, 0.99),
-    accuracy: int = 10000,
 ) -> DataFrame:
     """Per-group approximate quantile vector in one pass."""
     out = df.groupBy(*group_cols).agg(
-        approx_quantiles(value_col, list(probs), accuracy).alias("__q")
+        approx_quantiles(value_col, list(probs)).alias("__q")
     )
     for i, p in enumerate(probs):
         out = out.withColumn(f"p{int(p * 100)}", F.col("__q")[i])
     return out.drop("__q")
 
 
-def cms_sketch(
-    col: str, eps: float = 0.001, confidence: float = 0.99, seed: int = 42
-) -> Column:
+def cms_sketch(col: str, eps: float = 0.001, confidence: float = 0.99) -> Column:
     """Count-min sketch aggregate for heavy-hitter frequency estimation.
 
     A depth×width counter grid (depth = ln(1/(1-confidence)), width =
@@ -57,7 +54,7 @@ def cms_sketch(
     but the sketch is a few KB per partition and one small merge,
     answering "how often does X occur" within eps·N overestimate.
     """
-    return F.count_min_sketch(col, F.lit(eps), F.lit(confidence), F.lit(seed))
+    return F.count_min_sketch(col, F.lit(eps), F.lit(confidence), F.lit(42))
 
 
 def cms_estimate(spark, sketch_bytes: bytes, items: list) -> dict:
@@ -90,7 +87,7 @@ HLL_B = 9  # 2^9 = 512 registers: ~4.6% relative standard error
 
 
 def hll_register_table(
-    df: DataFrame, group_col: str, key_col: str, b: int = HLL_B, seed: int = 0
+    df: DataFrame, group_col: str, key_col: str, b: int = HLL_B
 ) -> DataFrame:
     """Per-group HLL register table from a key column.
 
@@ -108,7 +105,7 @@ def hll_register_table(
 
     w_bits = 32 - b
     mask = (1 << w_bits) - 1
-    h = md5_hash64(F.col(key_col).cast("string"), seed)
+    h = md5_hash64(F.col(key_col).cast("string"))
     tagged = df.select(
         F.col(group_col), h.alias("__h")
     ).select(
@@ -267,14 +264,13 @@ def hll_intersection_estimate(
     df_a: DataFrame,
     df_b: DataFrame,
     key_col: str,
-    b: int = HLL_B,
 ) -> DataFrame:
     """Set algebra over portable HLL sketches: estimate |A|, |B|,
     |A∪B| (register max-merge — exact sketch of the union, not an
     approximation of one), and |A∩B| by inclusion–exclusion, plus the
     implied Jaccard.  The audience-overlap primitive: at 100 TB the
     two inputs never co-shuffle — each side folds to its own
-    2^b-register sketch and the merge is register arithmetic.
+    2^HLL_B-register sketch and the merge is register arithmetic.
 
     Inclusion–exclusion inherits the absolute error of three
     estimates, so the intersection's RELATIVE error degrades as the
@@ -287,10 +283,10 @@ def hll_intersection_estimate(
     Returns one row: (est_a, est_b, est_union, est_intersection,
     jaccard_est)."""
     ra = hll_register_table(
-        df_a.select(F.lit("a").alias("__set"), F.col(key_col)), "__set", key_col, b
+        df_a.select(F.lit("a").alias("__set"), F.col(key_col)), "__set", key_col
     )
     rb = hll_register_table(
-        df_b.select(F.lit("b").alias("__set"), F.col(key_col)), "__set", key_col, b
+        df_b.select(F.lit("b").alias("__set"), F.col(key_col)), "__set", key_col
     )
     ru = merge_hll_registers(
         [
@@ -299,7 +295,7 @@ def hll_intersection_estimate(
         ]
     )
     est = hll_estimate_from_registers(
-        ra.unionByName(rb).unionByName(ru), "__set", b
+        ra.unionByName(rb).unionByName(ru), "__set"
     )
     wide = est.groupBy().pivot("__set", ["a", "b", "u"]).sum("est_distinct")
     inter = F.col("a") + F.col("b") - F.col("u")

@@ -17,10 +17,9 @@ def salted_join(
     dim: DataFrame,
     key: str,
     num_salts: int = 16,
-    how: str = "inner",
     salt_source: str | None = None,
 ) -> DataFrame:
-    """Equi join robust to hot keys: the fact side gets a deterministic
+    """Inner equi join robust to hot keys: the fact side gets a deterministic
     salt in [0, num_salts); the dim side is replicated num_salts× so
     every (key, salt) bucket finds its dim row.  Hot fact keys spread
     over num_salts reducers instead of one.
@@ -38,7 +37,7 @@ def salted_join(
     d = dim.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1)))
     )
-    out = f.join(d, on=[key, "__salt"], how=how)
+    out = f.join(d, on=[key, "__salt"])
     return out.drop("__salt")
 
 

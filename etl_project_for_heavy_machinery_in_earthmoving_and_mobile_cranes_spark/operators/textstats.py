@@ -117,11 +117,11 @@ def redact_pii(col: Column) -> Column:
     return out
 
 
-def with_pii_redaction(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Adds per-kind PII hit counts and the redacted text.  The counts
-    are computed on the ORIGINAL text (before any placeholder rewrite)
-    so kinds don't interfere."""
-    c = F.col(text_col)
+def with_pii_redaction(df: DataFrame) -> DataFrame:
+    """Adds per-kind PII hit counts and the redaction of the ``text``
+    column.  The counts are computed on the ORIGINAL text (before any
+    placeholder rewrite) so kinds don't interfere."""
+    c = F.col("text")
     out = df
     for kind, pat, _ in PII_PATTERNS:
         out = out.withColumn(f"n_{kind}", F.regexp_count(c, F.lit(pat)))
@@ -495,12 +495,12 @@ def mean_word_len(col: Column) -> Column:
     )
 
 
-def quality_logit(col: Column, weights: dict[str, float] | None = None) -> Column:
+def quality_logit(col: Column) -> Column:
     """Linear quality score (the pre-sigmoid logit) over cheap JVM-side
     features.  Whole-stage-codegen'd expression — a 100 TB corpus scores
     in one map-only pass, which is exactly why production pipelines
     distill big quality models into linear scorers for the first pass."""
-    w = weights or QUALITY_LOGIT_WEIGHTS
+    w = QUALITY_LOGIT_WEIGHTS
     n_tok = token_count(col)
     feats = {
         "len_score": F.least(n_tok / F.lit(50.0), F.lit(1.0)),
@@ -518,13 +518,12 @@ def quality_logit(col: Column, weights: dict[str, float] | None = None) -> Colum
 def with_quality_logit(
     df: DataFrame,
     text_col: str = "text",
-    weights: dict[str, float] | None = None,
     threshold: float = 0.0,
 ) -> DataFrame:
     """Attach ``logit``, ``p_keep`` (sigmoid, 6 dp) and ``keep``
     (logit >= threshold — thresholded on the raw logit, not the rounded
     probability, so the decision boundary is exact)."""
-    z = quality_logit(F.col(text_col), weights)
+    z = quality_logit(F.col(text_col))
     return (
         df.withColumn("__z", z)
         .withColumn("p_keep", F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("__z"))), 6))
@@ -539,7 +538,6 @@ def quality_calibration(
     text_col: str,
     label_col: str,
     n_bins: int = 10,
-    weights: "dict[str, float] | None" = None,
 ) -> DataFrame:
     """Reliability table for the linear quality scorer: bin documents
     by predicted keep-probability and report, per bin, the observed
@@ -559,7 +557,7 @@ def quality_calibration(
     """
     if 1_000_000 % n_bins:
         raise ValueError("n_bins must divide 1e6 (the ppm grid)")
-    z = quality_logit(F.col(text_col), weights)
+    z = quality_logit(F.col(text_col))
     p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
     qp = F.floor(p * F.lit(1000000.0) + F.lit(0.5)).cast("bigint")
     rows = df.select(
@@ -897,7 +895,6 @@ def hashed_bow(
     id_col: str,
     text_col: str,
     dim: int = 128,
-    seed: int = 0,
 ) -> DataFrame:
     """Feature-hashing ("hashing trick") bag-of-words: each token maps
     to index ``md5(token) % dim``; per-doc counts aggregate per index —
@@ -916,7 +913,7 @@ def hashed_bow(
     collect (bounded by dim entries per doc; the NULL row collects
     nothing).
     """
-    idx = (md5_hash64(F.col("__t"), seed) % dim).cast("int")
+    idx = (md5_hash64(F.col("__t")) % dim).cast("int")
     per_idx = (
         df.select(F.col(id_col), F.explode_outer(tokens(F.col(text_col))).alias("__t"))
         .select(id_col, idx.alias("__i"))
@@ -1000,7 +997,6 @@ def gopher_rules(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    thresholds: "dict | None" = None,
 ) -> DataFrame:
     """Gopher quality-rule signals + keep decision per document (Rae et
     al. 2021): word count bounds, mean word length bounds, fraction of
@@ -1021,7 +1017,7 @@ def gopher_rules(
     per doc, joined back.  All ratios are exact-integer quotients
     rendered at 6 dp with the portable floor-round.
     """
-    t = {**GOPHER_THRESHOLDS, **(thresholds or {})}
+    t = GOPHER_THRESHOLDS
     raw = F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != "")
     norm = tokens(F.col(text_col))
     base = df.select(
@@ -1154,20 +1150,20 @@ def ppl_buckets(
 
 
 C4_BLOCKLIST = ("javascript", "lorem ipsum", "cookie")
+C4_MIN_WORDS = 5
+C4_MIN_KEPT_LINES = 3
 
 
 def c4_line_filters(
     df: DataFrame,
     id_col: str,
     lines_col: str,
-    min_words: int = 5,
-    blocklist: "tuple[str, ...]" = C4_BLOCKLIST,
-    min_kept_lines: int = 3,
 ) -> DataFrame:
     """C4-style line-level cleaning (Raffel et al. 2020 §2.2): keep a
     line only if it ends in terminal punctuation (``. ! ? "``), has at
-    least ``min_words`` whitespace words, and contains no blocklist
-    phrase; keep the DOCUMENT only if at least ``min_kept_lines`` lines
+    least ``C4_MIN_WORDS`` whitespace words, and contains no
+    ``C4_BLOCKLIST`` phrase; keep the DOCUMENT only if at least
+    ``C4_MIN_KEPT_LINES`` lines
     survive.  Reference scope note: the reference pipeline has no web
     cleaning stage (its corpus is structured listings,
     ``data_processing_program_20240520.py`` pre_processing), so this is
@@ -1187,7 +1183,7 @@ def c4_line_filters(
     the quality/dedup stages as one narrow DAG.
     """
     lines = F.col(lines_col)
-    block_arr = F.array(*[F.lit(b) for b in blocklist])
+    block_arr = F.array(*[F.lit(b) for b in C4_BLOCKLIST])
 
     def has_block(l):  # noqa: E741
         return F.exists(block_arr, lambda b: F.contains(F.lower(l), b))
@@ -1199,7 +1195,7 @@ def c4_line_filters(
         return F.size(F.filter(F.split(l, r"\s+"), lambda x: x != ""))
 
     keep_line = (
-        lambda l: ~has_block(l) & punct_ok(l) & (n_words(l) >= min_words)
+        lambda l: ~has_block(l) & punct_ok(l) & (n_words(l) >= C4_MIN_WORDS)
     )
     kept = F.filter(lines, keep_line)
     n_block = F.size(F.filter(lines, has_block))
@@ -1209,7 +1205,7 @@ def c4_line_filters(
     n_short = F.size(
         F.filter(
             lines,
-            lambda l: ~has_block(l) & punct_ok(l) & (n_words(l) < min_words),
+            lambda l: ~has_block(l) & punct_ok(l) & (n_words(l) < C4_MIN_WORDS),
         )
     )
     return df.select(
@@ -1219,7 +1215,7 @@ def c4_line_filters(
         n_block.cast("bigint").alias("n_blocklist"),
         n_nopunct.cast("bigint").alias("n_nopunct"),
         n_short.cast("bigint").alias("n_short"),
-        (F.size(kept) >= min_kept_lines).alias("keep"),
+        (F.size(kept) >= C4_MIN_KEPT_LINES).alias("keep"),
         F.array_join(kept, "\n").alias("clean_text"),
     )
 

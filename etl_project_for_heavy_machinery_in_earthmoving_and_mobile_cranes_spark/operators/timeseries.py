@@ -205,9 +205,9 @@ def ewma_bounded(
     value_col: str,
     alpha: float = 0.5,
     depth: int = 8,
-    out_col: str = "ewma",
 ) -> DataFrame:
-    """Bounded-lag exponentially weighted moving average per key.
+    """Bounded-lag exponentially weighted moving average per key, in
+    column ``ewma``.
 
     ``ewma = Σ αⁱ·lag(x,i) / Σ αⁱ`` over the last ``depth+1`` rows,
     normalized over the lags that actually exist so the head of each
@@ -232,7 +232,7 @@ def ewma_bounded(
         wgt = float(alpha**i)
         num = num + F.when(lag_i.isNotNull(), lag_i * wgt).otherwise(0.0)
         den = den + F.when(lag_i.isNotNull(), F.lit(wgt)).otherwise(0.0)
-    return df.withColumn(out_col, F.round(num / den, 4))
+    return df.withColumn("ewma", F.round(num / den, 4))
 
 
 def time_weighted_avg(
@@ -306,9 +306,9 @@ def rolling_median(
     order_cols,
     value_col: str,
     n_rows: int = 5,
-    out_col: str = "rmed",
 ) -> DataFrame:
-    """Exact rolling median over the trailing ``n_rows`` rows per key —
+    """Exact rolling median (column ``rmed``) over the trailing
+    ``n_rows`` rows per key —
     the robust-smoothing twin of a rolling mean (spike-immune).
 
     Spark's exact ``median`` cannot take a window frame
@@ -331,7 +331,7 @@ def rolling_median(
     med = F.when(n % 2 == 1, lo).otherwise(
         (F.element_at(arr, (n / 2).cast("int")) + F.element_at(arr, hi_i)) / 2
     )
-    return df.withColumn(out_col, F.round(med, 4))
+    return df.withColumn("rmed", F.round(med, 4))
 
 
 def seasonal_anomalies(
@@ -339,7 +339,6 @@ def seasonal_anomalies(
     ts_col: str,
     value_col: str,
     sigma: float = 3.0,
-    dec: str = "decimal(18,4)",
 ) -> DataFrame:
     """Seasonal-profile anomaly detection: the expected value for a
     timestamp is the mean over its (day-of-week, hour) calendar cell —
@@ -357,8 +356,8 @@ def seasonal_anomalies(
     DECIMAL (sum and sum-of-squares exact, so mean and variance are
     identical arithmetic on identical inputs in any engine); variance
     uses the E[x²]−E[x]² form clamped at 0 for the pure-roundoff
-    negatives.  The profile quantizes values to ``dec``'s scale (4 dp
-    by default) so the squared sums stay inside precision-38 decimals
+    negatives.  The profile quantizes values to 4 dp
+    (``decimal(18,4)``) so the squared sums stay inside precision-38 decimals
     in every engine — a documented, deterministic quantization, not
     float noise.  The cell MEAN is itself quantized to the same scale
     by pure integer arithmetic (round-half-up of s·10⁴/n, computed with
@@ -372,7 +371,7 @@ def seasonal_anomalies(
     for positives).  Rows with a NULL timestamp have no calendar cell
     and are dropped from the output (document or pre-filter them).
     """
-    vdec = F.col(value_col).cast(dec)
+    vdec = F.col(value_col).cast("decimal(18,4)")
     keyed = df.withColumn("__dow", F.dayofweek(F.col(ts_col))).withColumn(
         "__hr", F.hour(F.col(ts_col))
     )
@@ -513,7 +512,6 @@ def point_in_time_join(
     key_col: str,
     ts_col: str,
     attr_cols: list[str],
-    from_col: str = "valid_from",
 ) -> DataFrame:
     """Point-in-time (leakage-free) enrichment: each fact row gets the
     dimension attribute state that was valid AT its timestamp — the
@@ -539,7 +537,7 @@ def point_in_time_join(
     value never breaks the last-non-null carry."""
     dim_rows = intervals.select(
         F.col(key_col),
-        F.col(from_col).alias(ts_col),
+        F.col("valid_from").alias(ts_col),
         F.lit(0).alias("__is_fact"),
         F.struct(*[F.col(a) for a in attr_cols]).alias("__state"),
         *[F.lit(None).cast(facts.schema[c].dataType).alias(c)
@@ -572,7 +570,6 @@ def seasonal_decompose(
     series: DataFrame,
     ts_col: str,
     value_col: str,
-    period_col_fn=None,
     window: int = 3,
     exact_decimal: bool = False,
 ) -> DataFrame:
@@ -580,10 +577,9 @@ def seasonal_decompose(
     ``trend`` = centered moving average over ``2·window+1`` points
     (NULL at the edges where the window is incomplete — a partial
     average would bend the trend toward the interior), ``seasonal`` =
-    the per-period mean of the detrended residual (period defaults to
-    day-of-week), ``remainder`` = value − trend − seasonal.  The
-    classic anomaly/forecast preprocessing split, as three window/agg
-    passes over the (already aggregated) series — the series is
+    the per-day-of-week mean of the detrended residual, ``remainder`` =
+    value − trend − seasonal.  The classic anomaly/forecast
+    preprocessing split, as three window/agg passes over the (already aggregated) series — the series is
     |dates|-sized, so a single ORDER BY window is model-sized work, not
     a corpus-scale sort.
 
@@ -595,10 +591,7 @@ def seasonal_decompose(
     so every output double is bit-identical everywhere.
 
     Returns (ts, value, trend, seasonal, remainder)."""
-    period = (
-        period_col_fn(F.col(ts_col)) if period_col_fn is not None
-        else F.dayofweek(F.col(ts_col))
-    )
+    period = F.dayofweek(F.col(ts_col))
     w = Window.orderBy(ts_col).rowsBetween(-window, window)
     span = 2 * window + 1
     base = series.select(

@@ -127,11 +127,10 @@ def blocklist_audit(
     df: DataFrame,
     url_col: str,
     blocklist: DataFrame,
-    rule_col: str = "rule",
 ) -> DataFrame:
     """Tag every row with the blocklist rule its host falls under.
 
-    ``blocklist`` is a one-column (``rule_col``) dimension of lowercase
+    ``blocklist`` is a one-column (``rule``) dimension of lowercase
     domains; a row is blocked when ANY suffix of its host equals a rule,
     and ``matched_rule`` reports the most specific (longest) such rule.
     Returns the input columns plus ``host``, ``matched_rule``
@@ -147,7 +146,7 @@ def blocklist_audit(
         F.col(url_col).alias("__url"),
         F.explode(domain_suffixes(F.col("host"))).alias("__sfx"),
     )
-    rules = blocklist.select(F.col(rule_col).alias("__rule")).distinct()
+    rules = blocklist.select(F.col("rule").alias("__rule")).distinct()
     hits = (
         cand.join(F.broadcast(rules), cand["__sfx"] == rules["__rule"], "inner")
         .groupBy("__url")

@@ -53,11 +53,11 @@ ID = "shipment_id"
 # ---------------------------------------------------------------------------
 
 
-def coerce_and_derive(df: DataFrame, min_amount: float = 10000.0) -> DataFrame:
+def coerce_and_derive(df: DataFrame) -> DataFrame:
     # F1 FIRST, on the RAW price column: notebook cell 11 runs two
     # sequential keeps (amount >= 10k AND price >= 10k) BEFORE the unit
     # price is recomputed in cell 13.
-    keep = (F.col("amount_in_usd") >= min_amount) & (F.col("price_in_usd") >= min_amount)
+    keep = (F.col("amount_in_usd") >= 10000.0) & (F.col("price_in_usd") >= 10000.0)
     out = df.filter(keep)
     qty = F.col("qty").cast("double")
     weight = F.col("weight_in_kg").cast("double")
@@ -82,10 +82,14 @@ def coerce_and_derive(df: DataFrame, min_amount: float = 10000.0) -> DataFrame:
 
 
 def normalize(df: DataFrame) -> DataFrame:
-    out = df.withColumn(
-        "description2", T.normalize_text(F.col("product_description"), alias_brands=True)
-    ).withColumn("supplier2", T.normalize_text(F.col("supplier"), alias_brands=True))
-    return out.filter(T.irrelevant_keyword_filter(F.col("description2")))
+    text = {"description2": "product_description", "supplier2": "supplier"}
+    out = df.withColumns({c: T.normalize_text(F.col(src)) for c, src in text.items()})
+    # F2 before the brand aliasing: no irrelevant keyword occurs inside
+    # a canonical brand or across the space that prepends it, so the
+    # aliased and the plain text keep the same rows, and each alias
+    # reads the projected text instead of inlining its regex chain
+    out = out.filter(T.irrelevant_keyword_filter(F.col("description2")))
+    return out.withColumns({c: T.apply_brand_aliases(F.col(c)) for c in text})
 
 
 # ---------------------------------------------------------------------------
@@ -264,8 +268,8 @@ def capacity_from_text(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def infer_models(df: DataFrame, tol: float = 0.05) -> DataFrame:
-    out = RJ.infer_unknown_models(df, tol=tol)
+def infer_models(df: DataFrame) -> DataFrame:
+    out = RJ.infer_unknown_models(df)
     return out.withColumn(
         "remark", F.when(F.col("__model_inferred"), R_INFERRED).otherwise(F.col("remark"))
     ).drop("__model_inferred")
@@ -291,13 +295,13 @@ def mark_price_outliers(df: DataFrame) -> DataFrame:
     )
 
 
-def add_intervals(df: DataFrame, file_type: str = "excavator", width: int = 10) -> DataFrame:
+def add_intervals(df: DataFrame, file_type: str = "excavator") -> DataFrame:
     if file_type == "excavator":
         evaluate = F.coalesce(F.col("capacity"), F.col("unit_weight_in_ton"))
     else:
         evaluate = F.col("capacity")
     return df.withColumn(
-        "capacity_interval", L.load_interval(evaluate, width=width, kind=file_type)
+        "capacity_interval", L.load_interval(evaluate, kind=file_type)
     ).withColumn("type_interval", L.excavator_type_interval(evaluate))
 
 
@@ -330,14 +334,12 @@ def run_pipeline(
     regex_kb: DataFrame,
     fx_rates: DataFrame | None = None,
     file_type: str = "excavator",
-    min_amount: float = 10000.0,
-    interval_width: int = 10,
     datasource: str | None = None,
     strict_reference_compat: bool = False,
 ) -> DataFrame:
     """Full cleaning pipeline; returns the enriched DataFrame with typed
     NULLs (call ``render_export`` for the sentinel-rendered view)."""
-    df = coerce_and_derive(shipments, min_amount=min_amount)
+    df = coerce_and_derive(shipments)
     df = normalize(df)
     df = match_catalog(df, model_ref)
     df = label_cascades(df, file_type=file_type, strict_reference_compat=strict_reference_compat)
@@ -345,5 +347,5 @@ def run_pipeline(
     df = capacity_from_text(df)
     df = infer_models(df)
     df = mark_price_outliers(df)
-    df = add_intervals(df, file_type=file_type, width=interval_width)
+    df = add_intervals(df, file_type=file_type)
     return finalize(df, fx_rates, datasource)

@@ -3,7 +3,6 @@ from .readers import (  # noqa: F401
     read_jsonl,
     read_orc,
     read_parquet,
-    read_xlsx_as_df,
     write_csv,
     write_jsonl,
     write_orc,

@@ -386,11 +386,10 @@ def drain_changes(
     table: str,
     checkpoint_dir: str,
     foreach_batch,
-    starting_version: int = 0,
     max_commits_per_batch: "int | None" = None,
     max_runs: int = 10_000,
 ) -> int:
-    """Bounded-batch FULL drain of the change feed: loop
+    """Bounded-batch FULL drain of the change feed from version 0: loop
     ``trigger(availableNow=True)`` runs until the stream has consumed
     every commit up to the table's current version, honoring
     ``max_commits_per_batch`` per run.  The engine's availableNow
@@ -414,11 +413,7 @@ def drain_changes(
     spark.dataSource.register(DeltaCdfDataSource)
     runs = 0
     while runs < max_runs:
-        reader = (
-            spark.readStream.format("delta_cdf")
-            .option("path", table)
-            .option("startingVersion", starting_version)
-        )
+        reader = spark.readStream.format("delta_cdf").option("path", table)
         if max_commits_per_batch is not None:
             reader = reader.option("maxCommitsPerBatch", max_commits_per_batch)
         q = (

@@ -144,6 +144,8 @@ CHECKPOINT_INTERVAL = 10
 _WRITE_RETRIES = 16
 #: merge_touched re-runs its read-merge-write at most this many times
 _MERGE_RETRIES = 4
+# file size the small-file and incremental-cluster rewrites pack toward
+_TARGET_FILE_BYTES = 128 << 20
 
 
 def _log_path(table: str) -> str:
@@ -1167,9 +1169,9 @@ def rename_column(table: str, old: str, new: str) -> int:
     return base + 1
 
 
-def add_column(table: str, name: str, dtype: str, nullable: bool = True) -> int:
-    """ALTER TABLE ADD COLUMN — metadata-only on ANY table (mapping
-    not required: parquet schema projection already fills absent
+def add_column(table: str, name: str, dtype: str) -> int:
+    """ALTER TABLE ADD COLUMN (nullable) — metadata-only on ANY table
+    (mapping not required: parquet schema projection already fills absent
     columns with NULL on read, so appending a field to the committed
     schema is enough).  On a mapping-enabled table the new field mints
     a fresh physical name and column id, so re-adding a previously
@@ -1189,7 +1191,7 @@ def add_column(table: str, name: str, dtype: str, nullable: bool = True) -> int:
         maxid = int(conf.get(_CM_MAXID, "0")) + 1
         md = {_CM_ID: maxid, _CM_PHYS: f"col-{uuid.uuid4().hex}"}
         conf_updates = {_CM_MAXID: str(maxid)}
-    fields = list(schema.fields) + [StructField(name, dt, nullable, md)]
+    fields = list(schema.fields) + [StructField(name, dt, True, md)]
     actions = [
         _commit_info("ADD COLUMN", {"column": name, "type": dtype}),
         {
@@ -2594,11 +2596,11 @@ def read_changes(
     )
 
 
-def generate_symlink_manifest(table: str, version: "int | None" = None) -> list[str]:
+def generate_symlink_manifest(table: str) -> list[str]:
     """GENERATE symlink_format_manifest — real Delta's interop bridge
     for engines that cannot replay a Delta log (Presto/Trino/Athena/
     Hive): text manifests under ``_symlink_format_manifest/`` listing
-    the ABSOLUTE data-file paths of the pinned snapshot, one manifest
+    the ABSOLUTE data-file paths of the latest snapshot, one manifest
     per partition directory on partitioned tables (so the external
     engine's partition pruning still works), a single root manifest
     otherwise.  The external reader sees exactly the committed
@@ -2616,7 +2618,7 @@ def generate_symlink_manifest(table: str, version: "int | None" = None) -> list[
     regenerate after commits.  Stale partition manifests from a
     previous generation are removed.  Returns the manifest file paths
     written."""
-    live, meta, v, _ = _read_actions(table, upto=version)
+    live, meta, _, _ = _read_actions(table)
     dvd = [p for p, a in live.items() if _dv_of(a)]
     if dvd:
         raise ValueError(
@@ -3032,10 +3034,9 @@ def clone_table(
     source: str,
     target: str,
     version: int | None = None,
-    timestamp_ms: int | None = None,
 ) -> int:
     """SHALLOW CLONE: fork ``source`` (at its latest version, or a
-    pinned ``version`` / ``timestamp_ms``) into a NEW table at
+    pinned ``version``) into a NEW table at
     ``target`` without copying a byte of data — the clone's version-0
     commit re-references the source snapshot's data files by ABSOLUTE
     path (``read_delta``'s ``os.path.join(table, p)`` resolves an
@@ -3056,10 +3057,6 @@ def clone_table(
     Partitioned sources are refused: their partition values live in
     Hive path segments resolved against the table root, which cannot
     span two roots.  Returns the clone's version (always 0)."""
-    if version is not None and timestamp_ms is not None:
-        raise ValueError("pass at most one of version / timestamp_ms")
-    if timestamp_ms is not None:
-        version = version_at_timestamp(source, timestamp_ms)
     src_proto: dict = {}
     live, meta, base, _ = _read_actions(source, upto=version, proto_out=src_proto)
     pcols = meta.get("partitionColumns") or []
@@ -3115,12 +3112,8 @@ def clone_table(
     return 0
 
 
-def restore_table(
-    table: str,
-    version: int | None = None,
-    timestamp_ms: int | None = None,
-) -> int:
-    """RESTORE TABLE ... TO VERSION/TIMESTAMP AS OF — roll the LIVE
+def restore_table(table: str, version: int) -> int:
+    """RESTORE TABLE ... TO VERSION AS OF — roll the LIVE
     snapshot back to an earlier version as a NEW commit (metadata-only:
     no data files move; the commit re-adds the target version's file
     set and removes the current one).  History is preserved — the bad
@@ -3136,10 +3129,6 @@ def restore_table(
     Schema and configuration roll back WITH the data (the target
     version's metaData is re-committed) so a post-restore reader sees
     exactly the old table.  Returns the committed version."""
-    if (version is None) == (timestamp_ms is None):
-        raise ValueError("pass exactly one of version / timestamp_ms")
-    if timestamp_ms is not None:
-        version = version_at_timestamp(table, timestamp_ms)
     committed = _list_versions(table)
     if version not in committed:
         # _read_actions(upto=v) would silently clamp a too-high (or
@@ -3388,7 +3377,6 @@ def optimize_where(
     spark: SparkSession,
     table: str,
     predicate: "tuple | list",
-    n_files: int = 1,
     min_files: int = 2,
 ) -> "int | None":
     """Partition-scoped OPTIMIZE (real Delta's ``OPTIMIZE t WHERE``):
@@ -3446,7 +3434,7 @@ def optimize_where(
     snapshot = _read_with_dv(spark, table, scoped, schema, pcols)
     _, bucket = _layout(meta)
     if bucket is None:
-        snapshot = snapshot.repartition(max(n_files, 1), *pcols)
+        snapshot = snapshot.repartition(1, *pcols)
     adds = _stage_files(snapshot, table, base + 1, pcols, bucket, l2p=_l2p_of(meta))
     return _commit_layout_rewrite(
         spark,
@@ -3530,8 +3518,7 @@ def reorg_purge_dv(
 def optimize_small_files(
     spark: SparkSession,
     table: str,
-    target_bytes: int = 128 << 20,
-    min_files: int = 2,
+    target_bytes: int = _TARGET_FILE_BYTES,
 ) -> "int | None":
     """INCREMENTAL small-file compaction — the streaming-ingest
     counterpart of ``compact``: bin-pack ONLY the live files smaller
@@ -3556,7 +3543,7 @@ def optimize_small_files(
     the Hive layout.  Snapshot pinned at read; a concurrent commit
     aborts the optimize (stale remove set), same contract as
     ``compact``.  Returns the committed version, or None when fewer
-    than ``min_files`` files qualify (nothing worth packing)."""
+    than two files qualify (nothing worth packing)."""
     live, meta, base, _ = _read_actions(table, writer=True)
     pcols = meta.get("partitionColumns") or []
     if pcols:
@@ -3568,7 +3555,7 @@ def optimize_small_files(
     small = {
         p: a for p, a in live.items() if a.get("size", 0) < target_bytes
     }
-    if len(small) < max(2, min_files):
+    if len(small) < 2:
         return None
     # deletion vectors apply (and are PURGED by the rewrite — the
     # packed files carry no dv tag, the old sidecars age out of live)
@@ -3597,7 +3584,6 @@ def optimize_zorder(
     col_a: str,
     col_b: str,
     n_files: int = 32,
-    bits: int = 16,
 ) -> int:
     """OPTIMIZE ZORDER BY (col_a, col_b): rewrite the CURRENT snapshot
     Morton-ordered (operators.layout.morton_code) into ``n_files``
@@ -3619,7 +3605,7 @@ def optimize_zorder(
     Z-ordering ON a partition column is rejected — partition pruning
     already owns that column.
 
-    Both columns are min/max-NORMALIZED into the full ``bits`` range
+    Both columns are min/max-NORMALIZED into the full 16-bit range
     before interleaving (what real OPTIMIZE ZORDER's range-id mapping
     does): raw-value interleaving gives a narrow-range column only its
     few low bit positions, so a wide-range partner dominates the sort
@@ -3631,6 +3617,7 @@ def optimize_zorder(
 
     from ..operators.layout import morton_code
 
+    bits = 16  # Morton bits per column
     live, meta, base, _ = _read_actions(table, writer=True)
     pcols = meta.get("partitionColumns") or []
     if col_a in pcols or col_b in pcols:
@@ -3971,7 +3958,6 @@ def optimize_cluster_incremental(
     spark: SparkSession,
     table: str,
     cols: list[str],
-    target_bytes: int = 128 << 20,
     min_files: int = 2,
     n_files: "int | None" = None,
 ) -> "int | None":
@@ -4029,7 +4015,7 @@ def optimize_cluster_incremental(
     df = _read_with_dv(spark, table, fresh, _schema_of(meta), [])
     if n_files is None:
         total = sum(a.get("size", 0) for a in fresh.values())
-        n_files = max(1, -(-total // max(1, target_bytes)))
+        n_files = max(1, -(-total // _TARGET_FILE_BYTES))
     ordered = df.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)
     adds = _stage_files(ordered, table, base + 1, [], l2p=_l2p_of(meta))
     for a in adds:

@@ -6,9 +6,8 @@ Every table the engine persists is a Delta table written through
 are the layout writers).  This module reads and writes the formats at
 the edge: Parquet files, CSV with explicit schemas, JSON lines, ORC,
 the Hive-bucketed catalog table and footer-only statistics.  xlsx
-exists only at the ingestion edge (reference S1/S2 read xlsx) via a
-pandas conversion on the driver — xlsx files are small dims/batches by
-nature, never the 100 TB fact path.
+exists only at the ingestion edge (reference S1/S2 read xlsx), through
+the ``xlsx`` data source (``sources/xlsx_datasource``).
 """
 from __future__ import annotations
 
@@ -16,68 +15,38 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def read_parquet(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.parquet(path)
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.parquet(path)
 
 
 def read_csv(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    header: bool = True,
-    mode: str = "PERMISSIVE",
 ) -> DataFrame:
-    """Explicit schema always (SURVEY §1.3: no inferred schemas);
-    PERMISSIVE + columnNameOfCorruptRecord preserves bad rows for the
-    validation stage instead of failing the job."""
+    """Explicit schema always (SURVEY §1.3: no inferred schemas), with
+    a header line; PERMISSIVE + columnNameOfCorruptRecord preserves bad
+    rows for the validation stage instead of failing the job."""
     return (
         spark.read.schema(schema)
-        .option("header", header)
-        .option("mode", mode)
+        .option("header", True)
+        .option("mode", "PERMISSIVE")
         .csv(path)
     )
-
-
-def read_xlsx_as_df(
-    spark: SparkSession,
-    path: str,
-    sheet_name: str | int = 0,
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """S1/S2 edge converter: xlsx → pandas → Spark.  Driver-side by
-    design — xlsx inputs are small batch extracts (10³ rows in the
-    reference); big data arrives as Parquet/CSV."""
-    try:
-        import pandas as pd
-
-        pdf = pd.read_excel(path, sheet_name=sheet_name)
-    except ImportError as e:  # pragma: no cover - openpyxl not installed
-        raise NotImplementedError(
-            "xlsx ingestion needs pandas+openpyxl on the driver"
-        ) from e
-    if schema is not None:
-        return spark.createDataFrame(pdf, schema=schema)
-    return spark.createDataFrame(pdf)
 
 
 def write_parquet(
     df: DataFrame,
     path: str,
     partition_by: tuple[str, ...] = (),
-    mode: str = "overwrite",
     compression: str | None = None,
 ) -> None:
-    """``compression``: parquet codec override ("zstd", "snappy",
-    "gzip", "none"); default None keeps the session codec.  At 100 TB
+    """Overwrites ``path``.  ``compression``: parquet codec override
+    ("zstd", "snappy", "gzip", "none"); default None keeps the session codec.  At 100 TB
     the codec is a first-order storage/scan-cost knob — zstd typically
     reads smaller AND decompresses faster than gzip; text-heavy corpus
     tables compress several-fold."""
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if compression:
         w = w.option("compression", compression)
     if partition_by:
@@ -89,36 +58,22 @@ def read_jsonl(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    mode: str = "PERMISSIVE",
 ) -> DataFrame:
-    """JSON-lines source (the lingua franca of LLM training corpora).
-    Explicit schema: schema inference would scan the full 100 TB input
-    once before the real job even starts."""
-    return spark.read.schema(schema).option("mode", mode).json(path)
+    """JSON-lines source (the lingua franca of LLM training corpora),
+    PERMISSIVE.  Explicit schema: schema inference would scan the full
+    100 TB input once before the real job even starts."""
+    return spark.read.schema(schema).option("mode", "PERMISSIVE").json(path)
 
 
-def write_csv(
-    df: DataFrame,
-    path: str,
-    header: bool = True,
-    partition_by: tuple[str, ...] = (),
-    mode: str = "overwrite",
-) -> None:
-    """CSV export at the edge (header on by default; engine-canonical
-    format stays parquet).  Compression off so downstream line tools work."""
-    w = df.write.mode(mode).option("header", header)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    """CSV export at the edge, with a header line, overwriting ``path``
+    (engine-canonical format stays parquet).  Compression off so
+    downstream line tools work."""
+    df.write.mode("overwrite").option("header", True).csv(path)
 
 
-def write_jsonl(
-    df: DataFrame, path: str, partition_by: tuple[str, ...] = (), mode: str = "overwrite"
-) -> None:
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.json(path)
+def write_jsonl(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").json(path)
 
 
 def read_orc(
@@ -138,9 +93,8 @@ def write_orc(
     df: DataFrame,
     path: str,
     partition_by: tuple[str, ...] = (),
-    mode: str = "overwrite",
 ) -> None:
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.orc(path)
@@ -152,9 +106,8 @@ def write_bucketed_table(
     bucket_cols: "list[str]",
     num_buckets: int = 32,
     sort_cols: "list[str] | None" = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Persist a Hive-bucketed (optionally sorted) managed table —
+    """Persist (overwrite) a Hive-bucketed (optionally sorted) managed table —
     the co-located-join primitive: two tables bucketed on the same
     keys with the same bucket count join WITHOUT any shuffle (each
     task reads bucket i of both sides), and bucket-sorted data skips
@@ -168,7 +121,7 @@ def write_bucketed_table(
     Spark's Murmur3 — stable across Spark versions but engine-
     specific, which is why bucketed layout is a performance contract,
     not a data-exchange format."""
-    w = df.write.format("parquet").mode(mode).bucketBy(num_buckets, *bucket_cols)
+    w = df.write.format("parquet").mode("overwrite").bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)

@@ -3,11 +3,10 @@
     spark.dataSource.register(XlsxDataSource)
     spark.read.format("xlsx").schema(ddl).load("/data/*.xlsx")
 
-Replaces the driver-side edge converter (`readers.read_xlsx_as_df`) for
-multi-file extracts: one input partition PER FILE, so a directory of
-country-month customs workbooks (the reference's batch unit,
-`Data_processing_process_earthmoving_and_crane.ipynb` cell 4) scans in
-parallel across executors.  The cell parser is the stdlib-only
+The one xlsx reader, built for multi-file extracts: one input partition
+PER FILE, so a directory of country-month customs workbooks (the
+reference's batch unit, `Data_processing_process_earthmoving_and_crane.ipynb`
+cell 4) scans in parallel across executors.  The cell parser is the stdlib-only
 ``xlsx_lite`` module, so executors need no extra packages.
 
 Scale notes: xlsx is the INGEST edge, not the storage format — the

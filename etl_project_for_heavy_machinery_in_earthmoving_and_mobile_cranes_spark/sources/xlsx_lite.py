@@ -69,9 +69,9 @@ def read_xlsx_rows(path: str, sheet: int = 1) -> list[list]:
     return [r + [None] * (width - len(r)) for r in out]
 
 
-def read_xlsx_records(path: str, sheet: int = 1) -> list[dict]:
-    """Rows as dicts keyed by the header row."""
-    rows = read_xlsx_rows(path, sheet)
+def read_xlsx_records(path: str) -> list[dict]:
+    """Rows of the first sheet as dicts keyed by the header row."""
+    rows = read_xlsx_rows(path)
     if not rows:
         return []
     header = [str(h) if h is not None else f"col_{i}" for i, h in enumerate(rows[0])]
@@ -129,7 +129,7 @@ def _esc(s: str) -> str:
     )
 
 
-def write_xlsx_rows(path: str, rows: list[list], sheet_name: str = "Sheet1") -> None:
+def write_xlsx_rows(path: str, rows: list[list]) -> None:
     """Write rows (header included by the caller) as a minimal valid
     xlsx.  Inverse of ``read_xlsx_rows`` for the export edge and test
     fixtures; not a styling/formula engine."""

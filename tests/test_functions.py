@@ -64,6 +64,18 @@ def test_irrelevant_filter(spark):
     assert one(spark, keep, "WHEEL LOADER") is False
 
 
+def test_irrelevant_keywords_never_match_a_prepended_brand():
+    """The pipeline applies F2 before the brand aliasing, which equals F2
+    after it only while no irrelevant keyword occurs inside a canonical
+    brand or across the space that joins a brand to the text (whatever
+    text follows, a keyword whose head ends that joint would match)."""
+    for canon in {c for _, c, _ in T.BRAND_ALIASES}:
+        joint = canon + " "
+        for kw in T.IRRELEVANT_KEYWORDS:
+            assert kw not in canon, (kw, canon)
+            assert not any(joint.endswith(kw[:i]) for i in range(1, len(kw) + 1)), (kw, canon)
+
+
 def test_new_or_used(spark):
     c = L.new_or_used(F.col("s"))
     assert one(spark, c, "USED EXCAVATOR") == "used"

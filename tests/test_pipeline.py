@@ -161,6 +161,64 @@ def test_analysis_reports(spark):
     assert top3[0]["amount"] >= top3[1]["amount"] >= top3[2]["amount"]
 
 
+# (ref_idx, brand, model, capacity, type, hp): cranes whose catalog type
+# is known (GROVE) or left to the C2 rules, and a 0-capacity model
+CRANE_REF_ROWS = [
+    (1, "GROVE", "GMK5250L", 250.0, "WHEELED CRANE", None),
+    (2, "TADANO", "GR1000EX", 100.0, None, None),
+    (3, "XCMG", "QY25K", 25.0, None, None),
+    (4, "ZOOMLION", "ZTC60", 6.0, None, None),
+    (5, "SANY", "SCC8000", 0.0, None, None),
+]
+
+# shipment_id → (description, expected type, expected capacity_interval)
+CRANE_ROWS = {
+    31: ("GROVE GMK5250L ALL TERRAIN CRANE", "WHEELED CRANE", "250-260T"),
+    # crawler + telescopic overrides even a known catalog type
+    32: ("GROVE GMK5250L CRAWLER TELESCOPIC CRANE", "CRAWLER CRANE (TELESCOPIC_BOOM)", "250-260T"),
+    33: ("TADANO GR1000EX ROUGH TERRAIN CRANE", "ROUGH-TERRAIN CRANE", "100-110T"),
+    34: ("XCMG QY25K TRUCK CRANE ON TIRES", "WHEELED CRANE", "20-30T"),
+    35: ("ZOOMLION ZTC60 CRAWLER CRANE", "CRAWLER CRANE", "<10T"),
+    36: ("SANY SCC8000 CRAWLER CRANE", "CRAWLER CRANE", "UNKNOWN"),
+    # no capacity: a crane is never binned by its unit weight (30 t)
+    37: ("USED MOBILE CRANE", "UNKNOWN", "UNKNOWN"),
+}
+
+
+def test_crane_file_type(spark):
+    """The crane path of the notebook (file_type='crane'): C2 crane-type
+    rules and C5 crane load intervals, which bin the capacity alone —
+    '<10T' below 10 t, 'UNKNOWN' for a missing or 0 capacity."""
+    shipments = spark.createDataFrame(
+        [
+            tuple(
+                fixtures._row(sid, 202407, desc, "PT ALAT BERAT", "1", 300000.0, "2024/07/15", "30000")[c]
+                for c in fixtures.SHIPMENT_COLUMNS
+            )
+            for sid, (desc, _, _) in CRANE_ROWS.items()
+        ],
+        SHIPMENTS_SCHEMA,
+    )
+
+    def export(file_type):
+        out = pipeline.run_pipeline(
+            shipments,
+            spark.createDataFrame(CRANE_REF_ROWS, MODEL_REF_SCHEMA),
+            spark.createDataFrame([], REGEX_KB_SCHEMA),
+            file_type=file_type,
+        )
+        return {r["shipment_id"]: r for r in pipeline.render_export(out).collect()}
+
+    crane = export("crane")
+    got = {sid: (r["type"], r["capacity_interval"]) for sid, r in crane.items()}
+    assert got == {sid: (t, i) for sid, (_, t, i) in CRANE_ROWS.items()}
+    # the excavator path bins the same rows by unit weight when the
+    # capacity is missing, and by its own '<5T' / '5-10T' bands
+    excavator = export("excavator")
+    assert excavator[37]["capacity_interval"] == "30-40T"
+    assert excavator[35]["capacity_interval"] == "5-10T"
+
+
 def test_reference_golden_snapshot_shape():
     """The committed parity snapshot the driver hashes against: 832
     rows (the golden May-Jul slice), the exact projection

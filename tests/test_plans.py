@@ -760,6 +760,43 @@ def test_minhash_signatures_are_one_row_per_doc_projection(spark, hash_fn):
     assert "Exchange" not in p
     assert "Generate" not in p
     assert "Aggregate" not in p
+    # the shingle regex runs once per doc: no filter on the shingle
+    # array is pushed below the projection that builds it
+    opt = df._jdf.queryExecution().optimizedPlan().toString()
+    assert opt.count("regexp_extract_all") == 1
+
+
+def test_pipeline_normalizes_text_once(spark):
+    """Each text column is normalized in one projection and the brand
+    aliases read that column: inlined into each of their ~15 references
+    (and into the F2 filter pushed below them) the three-regex chain
+    made 272 ``regexp_replace`` in the optimized plan."""
+    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark import fixtures
+    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.plans import (
+        pipeline,
+    )
+
+    out = pipeline.render_export(
+        pipeline.run_pipeline(
+            fixtures.shipments_df(spark),
+            fixtures.model_ref_df(spark),
+            fixtures.regex_kb_df(spark),
+            fixtures.fx_rates_df(spark),
+        )
+    )
+    qe = out._jdf.queryExecution()
+    assert qe.optimizedPlan().toString().count("regexp_replace") <= 6
+    # the default plan string elides the fields of wide projections:
+    # count every expression, 3 per text column, 3 in the pushed-down
+    # F2 filter and 2 model de-spacings
+    key = "spark.sql.debug.maxToStringFields"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        full = qe.optimizedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert full.count("regexp_replace") == 11
 
 
 def test_embedding_registry_no_all_pairs(spark, sf_dir):

@@ -265,12 +265,12 @@ def test_ivf_knn_recall_and_exact_degeneration(spark):
     assert len(er) == 15
 
     cents = similarity.train_ivf_centroids(emb, n_cells=8, seed=7)
-    approx = similarity.ivf_knn(emb, q, k=3, n_cells=8, nprobe=3, centroids=cents)
+    approx = similarity.ivf_knn(emb, q, k=3, nprobe=3, centroids=cents)
     ar = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     assert len(er & ar) >= 8  # decent recall probing 3/8 cells
 
     # nprobe = n_cells searches every cell -> exact result
-    full = similarity.ivf_knn(emb, q, k=3, n_cells=8, nprobe=8, centroids=cents)
+    full = similarity.ivf_knn(emb, q, k=3, nprobe=8, centroids=cents)
     fr = {(r.query_id, r.neighbor_id) for r in full.collect()}
     assert fr == er
 
@@ -479,46 +479,6 @@ def test_round4_plan_contracts(spark):
     # final join-back of per-doc scores to the input may legitimately
     # shuffle — both sides are corpus-sized)
     assert "BroadcastHashJoin" in dsir_plan
-
-
-def test_per_group_cap_approx_prefilter_equivalent_and_pruned(spark):
-    """Two-phase rank for giant groups (VERDICT r4 #4): with
-    approx_prefilter the result is BIT-IDENTICAL to the one-phase path
-    (the survivor recount rescues any group the uniform-hash tail
-    under-fills), and the window's input is pruned by the broadcast
-    bucket-threshold filter instead of sorting the whole giant group."""
-    from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.operators import sampling
-
-    # one giant group (5000 rows), two normal ones, one below the cap
-    rows = (
-        [(i, "giant") for i in range(5000)]
-        + [(10_000 + i, "mid") for i in range(40)]
-        + [(20_000 + i, "mid2") for i in range(25)]
-        + [(30_000 + i, "tiny") for i in range(3)]
-    )
-    df = spark.createDataFrame(rows, "k long, g string")
-
-    base = {(r["g"], r["k"]) for r in sampling.per_group_cap(df, "g", "k", 10).collect()}
-    fast = sampling.per_group_cap(df, "g", "k", 10, approx_prefilter=True)
-    # plan BEFORE the action: post-execution AQE prints initial+final
-    # plans and every node would count twice
-    plan = fast._jdf.queryExecution().executedPlan().toString()
-    got = {(r["g"], r["k"]) for r in fast.collect()}
-    assert got == base
-    assert sum(1 for g, _ in got if g == "giant") == 10
-    assert sum(1 for g, _ in got if g == "tiny") == 3  # below-cap group intact
-
-    # the bucket-threshold prune sits under the window as a broadcast
-    # join + filter; the window itself still runs exactly once per rank
-    assert "__thr" in plan and "BroadcastHashJoin" in plan
-    assert plan.count("Window [") == 1
-
-    # slack so tight that giant groups under-fill: the rescue path must
-    # still return the exact answer (soundness never rests on the tail)
-    tight = sampling.per_group_cap(
-        df, "g", "k", 10, approx_prefilter=True, slack=0.000001
-    )
-    assert {(r["g"], r["k"]) for r in tight.collect()} == base
 
 
 def test_mixture_budget_caps_and_satisfies(spark):

@@ -1,6 +1,6 @@
 """Source/sink tests (S1-S5): csv with explicit schema, parquet
-round-trip with partitioning, xlsx edge converter (skip-gated — the
-codec is an optional driver-side dependency)."""
+round-trip with partitioning, the stdlib xlsx reader/writer and the
+``xlsx`` data source."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -35,31 +35,6 @@ def test_parquet_roundtrip_partitioned(spark, tmp_path):
     assert set(back.columns) == {"id", "name", "amount"}
     # partition pruning: only one directory read for name='a'
     assert back.filter("name = 'a'").count() == 1
-
-
-def test_xlsx_edge_converter(spark, tmp_path):
-    openpyxl = pytest.importorskip("openpyxl")  # noqa: F841 - optional codec
-    import pandas as pd
-
-    p = tmp_path / "in.xlsx"
-    pd.DataFrame({"id": [1, 2], "name": ["x", "y"], "amount": [1.5, 2.5]}).to_excel(
-        p, index=False
-    )
-    df = sources.read_xlsx_as_df(spark, str(p), schema=SCHEMA)
-    assert df.count() == 2
-
-
-def test_xlsx_raises_clean_error_without_codec(spark, tmp_path):
-    try:
-        import openpyxl  # noqa: F401
-
-        pytest.skip("openpyxl installed; error path not reachable")
-    except ImportError:
-        pass
-    p = tmp_path / "missing.xlsx"
-    p.write_bytes(b"PK\x03\x04fake")
-    with pytest.raises((NotImplementedError, Exception)):
-        sources.read_xlsx_as_df(spark, str(p))
 
 
 def test_jsonl_roundtrip(spark, tmp_path):
